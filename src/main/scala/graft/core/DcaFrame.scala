@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
+import graft.operators.CacheTracker
 import Shape.Shape
 
 /** A batch of records with an N-dimensional, order-significant, dense
@@ -53,8 +54,8 @@ final case class DcaFrame(
     * the result rides on the parent's staged cache but does NOT own it —
     * its [[unpersist]] must not release a cache the parent and sibling
     * frames still depend on. Only the constructing frame
-    * ([[DcaFrame.fromDF]]/[[mask]]) or [[DcaFrame.releaseStaging]]
-    * releases staging.
+    * ([[DcaFrame.fromDF]]/[[mask]]) or the session sweep
+    * (`CacheTracker.release`) releases staging.
     */
   private def derived(df: DataFrame = df, shape: Shape = shape,
       arrayCols: Vector[String] = arrayCols,
@@ -565,15 +566,10 @@ final case class DcaFrame(
     * [[persist]] of the view itself. Neither this frame NOR any frame
     * derived from it may be used after release — downstream jobs would
     * re-execute the range shuffle with fresh sampled bounds and could
-    * silently mis-index. The staged cache is also deregistered from the
-    * session registry, so [[DcaFrame.releaseStaging]] won't double-free
-    * it.
+    * silently mis-index.
     */
   def unpersist(): DcaFrame = {
-    staging.foreach { st =>
-      DcaFrame.deregisterStaging(df.sparkSession, st)
-      st.unpersist()
-    }
+    staging.foreach(CacheTracker.free)
     copy(df = df.unpersist(), staging = None)
   }
 
@@ -648,56 +644,6 @@ final case class DcaFrame(
 
 object DcaFrame {
   def idxColNames(ndim: Int): Vector[String] = (0 until ndim).map(i => s"__idx$i").toVector
-
-  // Session-scoped registry of live dense-index staging caches, so a
-  // long-lived session (Bench/Verify) can release everything between
-  // rounds instead of accumulating one cache per constructed frame.
-  // NOTE this is a bounded-until-release leak, not a weak cache: the
-  // registered DataFrames strongly reference their SparkSession (the
-  // map key), so entries are reclaimed only by releaseStaging /
-  // unpersist — the WeakHashMap merely avoids pinning sessions that
-  // never registered anything. Long-lived sessions constructing many
-  // frames must call releaseStaging (Bench/Verify do) or unpersist
-  // each constructed frame.
-  private val liveStaging =
-    new java.util.WeakHashMap[SparkSession, java.util.ArrayList[DataFrame]]()
-
-  private def registerStaging(s: SparkSession, d: DataFrame): Unit =
-    liveStaging.synchronized {
-      var l = liveStaging.get(s)
-      if (l == null) { l = new java.util.ArrayList[DataFrame](); liveStaging.put(s, l) }
-      l.add(d)
-    }
-
-  /** Remove one staged frame from the session registry (identity
-    * match) — called by [[DcaFrame.unpersist]] so an individually
-    * released cache is not double-freed by [[releaseStaging]] and its
-    * plan reference does not accumulate for the session's lifetime.
-    */
-  private[core] def deregisterStaging(s: SparkSession, d: DataFrame): Unit =
-    liveStaging.synchronized {
-      val l = liveStaging.get(s)
-      if (l != null) {
-        var i = 0
-        while (i < l.size) { if (l.get(i) eq d) { l.remove(i); i = l.size } else i += 1 }
-      }
-    }
-
-  /** Unpersist every staging cache created by [[fromDF]]/[[mask]] in
-    * this session. Frames constructed before the release must be
-    * discarded (their dense indices are only stable against the cached
-    * materialization); rebuild them afterwards.
-    *
-    * @return number of caches released
-    */
-  def releaseStaging(s: SparkSession): Int = liveStaging.synchronized {
-    val l = liveStaging.remove(s)
-    if (l == null) 0
-    else {
-      l.forEach(_.unpersist())
-      l.size
-    }
-  }
 
   /** Construct from an (already ordered-by sortCols) DataFrame, adding a
     * dense 1-D index. Ordering is established by a range-repartition +
@@ -782,9 +728,9 @@ object DcaFrame {
     * downstream job see ONE materialization (a re-executed range
     * shuffle could re-sample different partition bounds and silently
     * mis-index). This staged cache is the frame's ONLY cache — it is
-    * returned as a handle, carried on [[DcaFrame.staging]], registered
-    * per session, and released via [[DcaFrame.unpersist]] or
-    * [[DcaFrame.releaseStaging]].
+    * returned as a handle, carried on [[DcaFrame.staging]], pinned
+    * through `CacheTracker`, and released via [[DcaFrame.unpersist]] or
+    * the session sweep.
     *
     * @return (indexed frame with `__idx0` prepended, total row count,
     *         staged Dataset backing the indexed view)
@@ -794,8 +740,7 @@ object DcaFrame {
     val sorted =
       if (sortCols.isEmpty) df
       else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
-    val staged = sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerStaging(df.sparkSession, staged)
+    val staged = CacheTracker.persist(sorted)
     val withMid = staged.select(
       monotonically_increasing_id().as("__graft_mid") +: df.columns.map(col).toSeq: _*)
     val counts = withMid

@@ -273,6 +273,8 @@ object AsOfJoin {
     val reserved = Seq("__k", "__t", "__tag", "__rv", "__rt", "__s")
     require(leftCols.intersect(reserved).isEmpty, s"left uses reserved columns")
     val rawCols = rightRaw.columns.toSeq.filterNot(c => c == rightKey || c == rightTime)
+    require(rawCols.intersect(reserved).isEmpty,
+      s"right uses reserved columns ${rawCols.intersect(reserved)} (rename them first)")
     require(rawCols.intersect(leftCols).isEmpty,
       s"right columns ${rawCols.intersect(leftCols)} clash with left columns " +
         "(project the right side first)")

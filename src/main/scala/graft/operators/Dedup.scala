@@ -83,15 +83,6 @@ object Dedup {
     docs.select(col(idCol).as("__id"), explode(col(shinglesCol)).as("__s"))
       .select(col("__id"), hashFn(col("__s")).as("__h"))
 
-  /** MinHash signatures as k flat columns `__m0..__m{k-1}`: explode →
-    * hash once → single hash-aggregate with k codegen'd min()s. One
-    * shuffle on the doc id; columnar the whole way — the plan that
-    * survives 100 TB (the shingle table is the only wide thing and it
-    * is never shuffled by text).
-    */
-  def signatureCols(docs: DataFrame, idCol: String, shinglesCol: String, k: Int): DataFrame =
-    signatureColsFromHashes(shingleHashTable(docs, idCol, shinglesCol), k)
-
   /** Signatures from a pre-staged (__id, __h raw-hash) table. */
   def signatureColsFromHashes(hashed: DataFrame, k: Int): DataFrame = {
     val folded = pmod(col("__h"), lit(P))
@@ -138,21 +129,6 @@ object Dedup {
     Some(sig)
   }
 
-  /** LSH candidate pairs from signatures: split into `bands` bands of
-    * `rows` values, hash each band, bucket-join within (band, hash).
-    *
-    * For threshold t, miss probability per true pair is
-    * (1 - t^rows)^bands — with rows=2, bands=64 a j=0.4 pair is missed
-    * w.p. ~1.4e-5. Candidates are verified exactly downstream, so FPs
-    * are free (just extra verify work) and recall is the only tunable.
-    *
-    * @param docs (id, shingles) — shingles as array<string>
-    */
-  def lshCandidates(docs: DataFrame, idCol: String, shinglesCol: String,
-                    bands: Int, rows: Int): DataFrame =
-    lshCandidatesFromHashes(shingleHashTable(docs, idCol, shinglesCol), bands, rows)
-
-  /** Candidates from a pre-staged (__id, __h) shingle-hash table. */
   /** Band-bucket table (__id, band, bh) of a shingle-hash table — the
     * LSH index rows themselves. At scale this is the PERSISTED artifact
     * an incremental pipeline maintains: append the new batch's rows,
@@ -205,13 +181,21 @@ object Dedup {
       .distinct()
   }
 
+  /** LSH candidate pairs from a pre-staged (__id, __h) shingle-hash
+    * table: split the signatures into `bands` bands of `rows` values,
+    * hash each band, bucket-join within (band, hash).
+    *
+    * For threshold t, miss probability per true pair is
+    * (1 - t^rows)^bands — with rows=2, bands=64 a j=0.4 pair is missed
+    * w.p. ~1.4e-5. Candidates are verified exactly downstream, so FPs
+    * are free (just extra verify work) and recall is the only tunable.
+    */
   def lshCandidatesFromHashes(hashed: DataFrame, bands: Int, rows: Int): DataFrame = {
-    // the band table feeds BOTH self-join sides; localCheckpoint, not
-    // persist (r14): each side would also re-ANALYZE the k-column
+    // the band table feeds BOTH self-join sides; truncated, not
+    // persisted (r14): each side would also re-ANALYZE the k-column
     // signature aggregation lineage — the leaf hands both a bounded
-    // (id×bands × three longs) table. Tracked for session release.
-    pairsFromBuckets(CacheTracker.track(bandBuckets(hashed, bands, rows)
-      .localCheckpoint()))
+    // (id×bands × three longs) table
+    pairsFromBuckets(CacheTracker.truncate(bandBuckets(hashed, bands, rows)))
   }
 
   // ---- LSH banding auto-tuner ------------------------------------------
@@ -264,7 +248,7 @@ object Dedup {
     // stage the hash table across the per-geometry measurements — but
     // only own (and later release) the cache if the CALLER had not
     // already persisted it: unpersisting a caller-staged frame would
-    // evict shared session state (same ownership rule as release())
+    // evict shared session state
     val callerOwned =
       hashed.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val staged = if (callerOwned) hashed
@@ -315,9 +299,8 @@ object Dedup {
     // The shingle table feeds signature generation once and the verify
     // join twice: stage it. Locally a memory/disk cache; at 100 TB the
     // same role is played by writing the shingle table to parquet once.
-    val shingled = CacheTracker.track(
-      docs.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val shingled = CacheTracker.persist(
+      docs.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh")))
     nearDupPairsFromShingles(shingled, idCol, "__sh", bands, rows, thresholdNum, thresholdDen)
   }
 
@@ -369,22 +352,18 @@ object Dedup {
                                   thresholdNum: Int = 2, thresholdDen: Int = 5,
                                   stagedShingles: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     // each shingle frame has 2-3 consumers (banding, union for verify,
-    // final anti-join) — callers that can manage lifecycle should pass
-    // session-staged frames (Staged.cached) so the blocks are RELEASED
-    // with the session; the self-contained default persists with no
-    // release path (bounded: two frames per invocation)
+    // final anti-join) — staged callers pass session-staged frames
+    // (Staged.cached); the self-contained default pins two frames per
+    // invocation under the session lifecycle
     val (cSh, iSh) = stagedShingles.getOrElse {
-      (CacheTracker.track(corpus.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-       CacheTracker.track(incoming.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+      (CacheTracker.persist(corpus.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))),
+       CacheTracker.persist(incoming.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))))
     }
     val cB = bandBuckets(shingleHashTable(cSh, idCol, "__sh"), bands, rows)
     // three join-side consumers (corpus probe + in-batch self-join):
-    // localCheckpoint so the explode + signature aggregation runs AND
-    // plans once (a persist still re-analyzes the lineage per side)
-    val iB = CacheTracker.track(bandBuckets(shingleHashTable(iSh, idCol, "__sh"), bands, rows)
-      .localCheckpoint())
+    // truncated so the explode + signature aggregation runs AND plans
+    // once (a persist still re-analyzes the lineage per side)
+    val iB = CacheTracker.truncate(bandBuckets(shingleHashTable(iSh, idCol, "__sh"), bands, rows))
     // probe the corpus index: equi-join on (band, bh), corpus id on the
     // doc_a side (always the smaller id under the contract)
     val crossCand = iB.as("i")
@@ -493,11 +472,9 @@ object Dedup {
     val cB = spark.read.parquet(s"$path/buckets")
     val cH = spark.read.parquet(s"$path/hashes")
     // batch-shingle frame has two consumers (banding, survivor list);
-    // self-contained persist with no release path, same bounded-per-
-    // invocation convention as incrementalNearDupSurvivors' default
-    val iSh = CacheTracker.track(incoming.select(col(idCol).as("__id"),
-      TextOps.shingles(col(textCol), shingleN).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // pinned per invocation like incrementalNearDupSurvivors' default
+    val iSh = CacheTracker.persist(incoming.select(col(idCol).as("__id"),
+      TextOps.shingles(col(textCol), shingleN).as("__sh")))
     // ONE aggregation pass over the exploded shingle hashes yields BOTH
     // the band signatures and the verify hash set per doc (r15 —
     // before, the band table and the set table each re-exploded and
@@ -506,9 +483,8 @@ object Dedup {
     // materialization barriers on the probe path instead of one).
     // Bounded per invocation: id × (bands·rows longs + hash set) —
     // the same rows the two previous checkpoints pinned combined.
-    val sigSet = CacheTracker.track(
-      signatureAndSetCols(shingleHashTable(iSh, "__id", "__sh"), bands * rows)
-        .localCheckpoint())
+    val sigSet = CacheTracker.truncate(
+      signatureAndSetCols(shingleHashTable(iSh, "__id", "__sh"), bands * rows))
     // band rows re-derive from the leaf per consumer (three join
     // sides): a cheap columnar explode, no aggregation behind it
     val iB = bandsFromSignatures(sigSet, bands, rows)
@@ -583,9 +559,8 @@ object Dedup {
     // The re-analysis the checkpoint saved is bounded (~57 KB for
     // mm10's 24-hash projection) and the contracted prefix table below
     // keeps its leaf. Tracked for session release.
-    val asSet = CacheTracker.track(
-      shingled.withColumn(shinglesCol, array_distinct(col(shinglesCol)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val asSet = CacheTracker.persist(
+      shingled.withColumn(shinglesCol, array_distinct(col(shinglesCol))))
     verifyJaccard(ngramJaccardCandidates(asSet, idCol, shinglesCol, num, den),
       asSet, idCol, shinglesCol, num, den)
   }
@@ -599,8 +574,7 @@ object Dedup {
     // callers (d5) pass an already-cached prefix and double-caching a
     // cached frame would waste executor memory
     jaccardCandidatesFromPrefix(
-      CacheTracker.track(buildJaccardPrefix(shingled, idCol, shinglesCol, num, den)
-        .localCheckpoint()),
+      CacheTracker.truncate(buildJaccardPrefix(shingled, idCol, shinglesCol, num, den)),
       num, den)
 
   /** The rarest-first PREFIX table of [[ngramJaccardCandidates]]
@@ -697,8 +671,8 @@ object Dedup {
     // and sets twice); staged callers (d22) persist their own copies
     val ix0 = buildContainmentIndex(shingled, idCol, shinglesCol)
     containmentPairsFromIndex(ContainmentIndex(
-      CacheTracker.track(ix0.sets.localCheckpoint()),
-      CacheTracker.track(ix0.sorted.localCheckpoint())),
+      CacheTracker.truncate(ix0.sets),
+      CacheTracker.truncate(ix0.sorted)),
       num, den)
   }
 
@@ -767,78 +741,6 @@ object Dedup {
 
   // ---- Transitive dedup clusters ---------------------------------------
 
-  /** Lineage-truncation strategy for the iterative operators: reliable
-    * cluster-storage `checkpoint()` when a `checkpointDir` is given
-    * (production — survives executor loss, lineage-free restart from
-    * storage), `localCheckpoint()` otherwise (executor-memory blocks,
-    * no replay on executor loss — the measured-fastest local/bench
-    * trade; PROBES.md).
-    */
-  private def truncator(like: DataFrame, checkpointDir: Option[String])
-      : DataFrame => DataFrame = checkpointDir match {
-    case Some(dir) =>
-      val sc = like.sparkSession.sparkContext
-      // `setCheckpointDir` is PROCESS-GLOBAL session state (and every
-      // call appends a fresh UUID subdir). Set it only when unset; if
-      // the session already points somewhere ELSE, refuse instead of
-      // silently clobbering the other caller's setting — two operators
-      // racing with different dirs would interleave their file-sets
-      // and outlive the operator that set them. One dir per session.
-      val want = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
-      }
-      sc.getCheckpointDir match {
-        case None => sc.setCheckpointDir(dir)
-        case Some(cur) =>
-          // current value is want/<uuid> (setCheckpointDir appends one)
-          val curBase = new org.apache.hadoop.fs.Path(cur).getParent
-          require(curBase == want,
-            s"session checkpoint dir is already $curBase; refusing to " +
-              s"clobber it with $want — use one checkpointDir per session")
-      }
-      df => df.checkpoint(eager = true)
-    case None =>
-      df => df.localCheckpoint(eager = true)
-  }
-
-  /** Release the storage behind a frame produced by the iterative
-    * operators. `Dataset.unpersist` alone is NOT enough: it only
-    * uncaches CacheManager entries, while a checkpoint frame's blocks
-    * are owned by its underlying RDD — so this also unpersists the RDD
-    * when the frame IS a checkpoint leaf (root plan is the
-    * `LogicalRDD`; deliberately root-only, so a frame whose plan merely
-    * READS other checkpoint leaves can never free blocks it does not
-    * own). No-op on plain frames.
-    *
-    * Reliable `checkpoint()` file-sets are DELETED here too:
-    * `ContextCleaner` only removes them when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
-    * false), so a long production run would otherwise accumulate one
-    * file-set per round, unbounded, under the checkpoint dir.
-    *
-    * DESTROY semantics — this is permanent: a checkpoint leaf has no
-    * lineage to replay, so after release the frame's ONLY copy is gone
-    * and any in-flight query over it fails with block-/file-not-found
-    * rather than recomputing. Call it only on owned, end-of-life
-    * frames (superseded rounds, the returned result at teardown) —
-    * never on a frame another query may still read.
-    */
-  def release(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-        lr.rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          try p.getFileSystem(
-            df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-          catch { case _: java.io.IOException => () } // best-effort cleanup
-        }
-      case _ => ()
-    }
-  }
-
   /** Connected components over a near-dup pair graph: every document
     * labeled with the MINIMUM doc id reachable through pair edges —
     * the step that turns pairwise matches into actual dedup decisions
@@ -855,25 +757,20 @@ object Dedup {
     * near-dup graphs (cliques and short chains) is small; for
     * adversarial long-path graphs switch to alternating star
     * contraction (O(log n) rounds) — same join/agg building blocks.
-    * Labels/edges are persisted per round and released on the next.
+    * Labels/edges are truncated per round ([[CacheTracker.truncate]])
+    * and freed on the next.
     *
     * @param pairs (doc_a, doc_b) — one row per undirected edge
-    * @param checkpointDir when set, every per-round lineage truncation
-    *        uses reliable `checkpoint()` to this cluster-storage path
-    *        instead of `localCheckpoint()` — the production mode that
-    *        survives executor loss
     * @return (id, rep) for every vertex that appears in `pairs`;
     *         rep = min id of its component. The returned frame is a
-    *         MATERIALIZED checkpoint leaf (its iterative lineage is
-    *         already released) — the caller owns it and must free it
-    *         with [[release]] when done (plain `unpersist()` does not
-    *         touch checkpoint blocks; the query path stages it under
-    *         the session lifecycle).
+    *         MATERIALIZED truncated leaf (its iterative lineage is
+    *         already freed), pinned under the session lifecycle: free
+    *         it early with [[CacheTracker.free]] or leave it to the
+    *         session sweep.
     * @throws IllegalStateException if maxIter rounds don't converge
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val trunc = truncator(pairs, checkpointDir)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    import CacheTracker.{free, truncate => trunc}
     val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
     // checkpoint (not just persist) the edge table: a persisted frame
     // still CARRIES its full logical plan (here: the whole upstream
@@ -901,34 +798,25 @@ object Dedup {
         .groupBy("id").agg(min("rep").as("rep")))
       val changed = next.as("n").join(labels.as("o"), col("n.id") === col("o.id"))
         .filter(col("n.rep") =!= col("o.rep")).count()
-      release(labels) // next is materialized + compared; prev round's blocks die now
+      free(labels) // next is materialized + compared; prev round's blocks die now
       labels = next
       converged = changed == 0
       it += 1
     }
-    release(edges)
+    free(edges)
     if (!converged) {
-      release(labels) // don't leak the last round's blocks on the throw path
+      free(labels) // don't leak the last round's blocks on the throw path
       throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds " +
           "(diameter exceeds budget — use connectedComponentsStar, whose " +
           "round count is logarithmic in component size)")
     }
-    // NOTE the fault-tolerance trade of the default local mode, here
-    // and in the loop above: localCheckpoint blocks live in executor
-    // storage only — lose an executor and the frame is gone (a query
-    // over it throws; the operator must be re-run), there is NO lineage
-    // replay. That is the right local/bench trade (driver-side plan
-    // analysis was the measured bottleneck — PROBES.md); a long-lived
-    // production job passes `checkpointDir` to switch every truncation
-    // in this operator to reliable cluster-storage checkpoint().
     labels
   }
 
   /** Connected components via ALTERNATING STAR CONTRACTION — same
     * contract as [[connectedComponents]] (same input/output schema,
-    * materialized checkpoint-leaf result freed via [[release]], same
-    * `checkpointDir` reliable mode, min-id representative) but with round count
+    * pinned truncated-leaf result, min-id representative) but with round count
     * logarithmic in component size instead of linear in diameter, so it
     * is the variant to use when the pair graph can contain long chains
     * (adversarial near-dup graphs; transitive key-collision chains).
@@ -944,14 +832,13 @@ object Dedup {
     *
     * Scale shape per round: one groupBy + one join over the EDGE table
     * (id pairs only, payload-free), map-side combinable; lineage is
-    * localCheckpoint-truncated every few rounds like the label loop.
+    * truncated every round like the label loop.
     * Self-loops are dropped each round so the edge table shrinks as
     * components contract.
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50,
-                              checkpointDir: Option[String] = None): DataFrame = {
+  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val trunc = truncator(pairs, checkpointDir)
+    import CacheTracker.{free, truncate => trunc}
     // initial checkpoint: same reason as in [[connectedComponents]] —
     // and here it is CRITICAL, because each star round references the
     // previous round's frame ~6 times (bidir union + two star joins +
@@ -1002,12 +889,12 @@ object Dedup {
       // NOW rather than waiting on driver GC to trigger ContextCleaner
       // (under slow/absent GC the transient residency could otherwise
       // exceed the few-copies-of-the-initial-edge-set bound).
-      release(edges)
+      free(edges)
       edges = next
       it += 1
     }
     if (!converged) {
-      release(edges)
+      free(edges)
       vertices.unpersist()
       throw new IllegalStateException(
         s"connectedComponentsStar: no fixpoint after $maxIter rounds")
@@ -1018,7 +905,7 @@ object Dedup {
     val labels = trunc(vertices
       .join(edges.select(col("src").as("id"), col("dst").as("rep")), Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
-    release(edges)
+    free(edges)
     vertices.unpersist()
     labels
   }
@@ -1047,13 +934,12 @@ object Dedup {
         "trailing code bits would silently never be banded")
     val bands = planes / rowsPerBand
     // both self-join sides consume the banded table and signCode is
-    // the planes×dims fold per row — localCheckpoint: persist alone
-    // left each side re-analyzing the fold's expression tree (d4
-    // planned ~110 KB, measured r14)
-    val banded = CacheTracker.track(Similarity.bandExplode(
+    // the planes×dims fold per row — truncated: persist alone left
+    // each side re-analyzing the fold's expression tree (d4 planned
+    // ~110 KB, measured r14)
+    val banded = CacheTracker.truncate(Similarity.bandExplode(
       vecs.withColumn("__code", Similarity.signCode(col(vecCol), dims, planes)),
-      "__code", bands, rowsPerBand, Seq(idCol))
-      .localCheckpoint())
+      "__code", bands, rowsPerBand, Seq(idCol)))
     val cands = banded.select(col(idCol).as("doc_a"), col("band"), col("bits"))
       .join(banded.select(col(idCol).as("doc_b"), col("band"), col("bits")), Seq("band", "bits"))
       .filter(col("doc_a") < col("doc_b"))

@@ -49,21 +49,16 @@ object GraphRank {
     // the edge list is read 2× per iteration plus twice at setup —
     // stage it once (at 100 TB recomputing the upstream edge
     // aggregation per reference would dominate the iterations); both
-    // frames stay cached for the returned lazy plan, session teardown
-    // (or the caller) cleans up
-    // localCheckpoint, not persist (r14): every iteration re-analyzes
-    // the edge lineage (for t15 that is the URL-extraction expression
-    // tree — a ~50 KB plan measured before truncation); the checkpoint
-    // hands the loop leaves. Tracked so session release frees the
-    // leaf blocks (plain persist had no release path here at all).
-    val e = CacheTracker.track(
+    // frames stay pinned for the returned lazy plan until the session
+    // sweep. Truncated, not persisted (r14): every iteration would
+    // re-analyze the edge lineage (for t15 that is the URL-extraction
+    // expression tree — a ~50 KB plan measured before truncation).
+    val e = CacheTracker.truncate(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w"))
-      .localCheckpoint())
-    val nodes = CacheTracker.track(
+        col(wCol).cast("long").as("w")))
+    val nodes = CacheTracker.truncate(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .localCheckpoint())
+        .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count() // one scalar job; the only driver-side value
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     val teleport = (dampDen - dampNum) * scale / (dampDen * n)

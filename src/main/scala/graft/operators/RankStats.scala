@@ -109,8 +109,7 @@ object RankStats {
     // near-fact-sized. At 100 TB the opted-in case is the materialized
     // histogram table a rank service would keep anyway.
     val histC = if (persistHist)
-      graft.operators.CacheTracker.track(
-        hist.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      CacheTracker.persist(hist)
     else hist
     val withIn = histC.withColumn("__cumIn", sum("cnt").over(inWin))
     val totals = histC

@@ -68,8 +68,7 @@ object SemDedup {
     // is the expensive projection — persist so it computes once.
     // Self-contained bounded-per-invocation persist, same convention as
     // indexedNearDupSurvivors' batch-shingle frame.
-    val m = CacheTracker.track(qn.join(assign, idCol)
-      .localCheckpoint())
+    val m = CacheTracker.truncate(qn.join(assign, idCol))
 
     val a = m.select(col(idCol), col("__qv").as("qa"), col("__n2").as("na"),
       col("cluster"), col("dist").as("da"))

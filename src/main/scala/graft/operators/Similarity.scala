@@ -593,10 +593,9 @@ object Similarity {
     // vectors re-attach AFTER dedup via two keyed corpus joins (each
     // shuffles the corpus once, not the candidate fanout).
     // both band-explode sides consume the coded table, and signCode is
-    // the planes×dims fold per row — persist so it computes once
+    // the planes×dims fold per row — truncate so it computes once
     // (bounded per invocation: id + planes-bit code)
-    val slim = CacheTracker.track(coded.select(col(idCol), col("__code"))
-      .localCheckpoint())
+    val slim = CacheTracker.truncate(coded.select(col(idCol), col("__code")))
     val left = bandExplode(slim.select(col(idCol).as("qid"), col("__code")),
       "__code", bands, rowsPerBand, Seq("qid"))
     val right = bandExplode(slim, "__code", bands, rowsPerBand, Seq(idCol))

@@ -48,11 +48,10 @@ object EventQueries {
         // spine) — persist the narrow projection so the scan +
         // timestamp normalization run once (r13's multi-consumer
         // persist discipline)
-        val ev = graft.operators.CacheTracker.track(
+        val ev = graft.operators.CacheTracker.persist(
           Relational.eventsRaw(s, dir)
             .select(col("event_type"), col("ts"), col("event_id"))
-            .withColumn("bkt", expr(s"ts div ${BktNs}L"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .withColumn("bkt", expr(s"ts div ${BktNs}L")))
         val wIn = Window.partitionBy("event_type", "bkt").orderBy("ts", "event_id")
         val lagged = ev.withColumn("prev", lag("ts", 1).over(wIn))
         val lastPer = ev.groupBy("event_type", "bkt")

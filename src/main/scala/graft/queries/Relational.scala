@@ -1647,10 +1647,9 @@ object Relational {
         // r14 audit's q67 deferral). Part-NDV-bounded (dimension-sized),
         // persisted and tracked for the session release sweep; AQE
         // still picks the join strategy from its actual shuffle size.
-        val supp = graft.operators.CacheTracker.track(baskets
+        val supp = graft.operators.CacheTracker.persist(baskets
           .select(explode(col("parts")).as("pk"))
-          .groupBy("pk").agg(count(lit(1)).as("c"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .groupBy("pk").agg(count(lit(1)).as("c")))
         val pairs = baskets
           .select(explode(expr(
             // all ordered pairs (pa < pb) of the sorted basket

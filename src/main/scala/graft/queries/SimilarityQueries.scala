@@ -622,8 +622,7 @@ object SimilarityQueries {
           val ix = graft.operators.ProductQuant.buildIvfPqIndex(
             emb, dims = Dims, nCells = NCells, m = PqM, ks = PqKs,
             iters = PqIters)
-          ix.copy(indexed = ix.indexed.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          ix.copy(indexed = graft.operators.CacheTracker.persist(ix.indexed))
         }
         graft.operators.ProductQuant
           .probeIvfPq(index, emb, queries, K, nProbe = NProbe, candC = PqC)
@@ -850,8 +849,7 @@ object SimilarityQueries {
         val index = Staged.cachedAny(s, s"sim3ivf:$dir") {
           val ix = Similarity.buildIvfCells(emb, nCells = NCells,
             refineIters = 0)
-          ix.copy(cells = ix.cells.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          ix.copy(cells = graft.operators.CacheTracker.persist(ix.cells))
         }
         Similarity.probeIvfCells(index, queries, K, nProbe = NProbe)
           .orderBy("qid", "rank")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.DcaFrame
-import graft.operators.TextOps
+import graft.operators.{CacheTracker, TextOps}
 import graft.sources.GraftIO
 import QueryDef.{table, cents}
 
@@ -19,21 +19,6 @@ import QueryDef.{table, cents}
   * recompute it per consumer).
   */
 object Staged {
-  // keyed by session IDENTITY so a new session can never be served a
-  // dead session's frames (plain hash keys could collide). Note the
-  // cached values reference their session, so entries are NOT
-  // GC-reclaimed before the driver exits — the leak is bounded (a few
-  // small frames per session) and accepted for correctness.
-  private val perSession =
-    new java.util.WeakHashMap[SparkSession, TrieMap[String, Any]]()
-
-  private def cacheFor(s: SparkSession): TrieMap[String, Any] =
-    perSession.synchronized {
-      var m = perSession.get(s)
-      if (m == null) { m = TrieMap.empty[String, Any]; perSession.put(s, m) }
-      m
-    }
-
   /** Nanoseconds spent inside OUTERMOST staged builds since process
     * start. Bench reads the delta around each query to bill staging
     * first-touch separately from the query's own compute — the
@@ -97,7 +82,7 @@ object Staged {
     */
   private def staged[A](s: SparkSession, key: String)(build: => A): A = {
     accessLog.add(key)
-    cacheFor(s).getOrElseUpdate(key, {
+    CacheTracker.memo(s, key) {
       val d0: Int = buildDepth.get()
       buildDepth.set(d0 + 1)
       val savedChild: Long = childNanos.get()
@@ -119,7 +104,7 @@ object Staged {
           if (d0 == 0) { stagingNanos.addAndGet(dt); () }
         }
       }
-    }).asInstanceOf[A]
+    }
   }
 
   /** lineitem as a 1-D DcaFrame ordered by (l_orderkey, l_linenumber),
@@ -170,18 +155,16 @@ object Staged {
     staged(s, s"evedges:$dir") {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("ts", "event_id")
-      // localCheckpoint (r14): the recursion replays this ≤|types|²
-      // table per iteration — a persist still re-analyzes the full
-      // scan+window lineage each round; the checkpoint hands the loop
-      // a leaf (released via Dedup.release like every staged entry)
-      Relational.eventsRaw(s, dir)
+      // truncated (r14): the recursion replays this ≤|types|² table per
+      // iteration, and a persist would still re-analyze the full
+      // scan+window lineage each round
+      CacheTracker.truncate(Relational.eventsRaw(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .withColumn("prev_type", lag("event_type", 1).over(w))
         .filter(col("prev_type").isNotNull &&
           col("prev_type") =!= col("event_type"))
         .groupBy(col("prev_type").as("src"), col("event_type").as("dst"))
-        .agg(expr("CAST(1000000000 DIV count(1) AS BIGINT)").as("cost"))
-        .localCheckpoint()
+        .agg(expr("CAST(1000000000 DIV count(1) AS BIGINT)").as("cost")))
     }
 
   /** Per-customer order aggregate (o_custkey, spend_c, n_orders) — the
@@ -191,19 +174,17 @@ object Staged {
     */
   def custSpendAgg(s: SparkSession, dir: String): DataFrame =
     staged(s, s"custspend:$dir") {
-      table(s, dir, "orders")
+      CacheTracker.persist(table(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(sum(cents(col("o_totalprice"))).as("spend_c"),
-          count(lit(1)).as("n_orders"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+          count(lit(1)).as("n_orders")))
     }
 
   /** documents 3-gram shingle table (doc_id, __sh), persisted. */
   def docShingles(s: SparkSession, dir: String): DataFrame =
     staged(s, s"sh:$dir") {
-      table(s, dir, "documents")
-        .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      CacheTracker.persist(table(s, dir, "documents")
+        .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh")))
     }
 
   /** MinHash-LSH verified near-dup pair table (doc_a, doc_b, jacc_pct)
@@ -213,22 +194,17 @@ object Staged {
     */
   def docNearDupPairs(s: SparkSession, dir: String): DataFrame =
     staged(s, s"ndpairs:$dir") {
-      // localCheckpoint, NOT persist (r14): a persist caches the rows
-      // but every consumer still re-ANALYZES the full minhash/verify
+      // truncated, NOT persisted (r14): a persist caches the rows but
+      // every consumer still re-ANALYZES the full minhash/verify
       // lineage — d19's self-join over this table planned a ~430 KB
       // tree (measured via ExplainDump), so driver planning dominated
-      // its wall time. The checkpoint truncates consumers to a leaf;
-      // release() frees the leaf's RDD blocks (Dedup.release).
-      graft.operators.Dedup.nearDupPairsFromShingles(
+      // its wall time. Truncation hands consumers a leaf.
+      CacheTracker.truncate(graft.operators.Dedup.nearDupPairsFromShingles(
           docShingles(s, dir), "doc_id", "__sh",
-          hashed = Some(docShingleHashes(s, dir)))
-        .localCheckpoint()
+          hashed = Some(docShingleHashes(s, dir))))
     }
 
-  /** Connected components over [[docNearDupPairs]] (id, rep) — the
-    * operator returns an owned persisted frame; staging it hands the
-    * release to the session lifecycle ([[release]]).
-    */
+  /** Connected components over [[docNearDupPairs]] (id, rep). */
   def docDupComponents(s: SparkSession, dir: String): DataFrame =
     staged(s, s"ndcomp:$dir") {
       graft.operators.Dedup.connectedComponents(docNearDupPairs(s, dir))
@@ -245,8 +221,7 @@ object Staged {
     * edges covering all its members, so the incremental vertex set
     * equals the full graph's and min-id reps converge to the same
     * labels — d30 proves it by sharing d6's from-scratch closure
-    * oracle verbatim. Both CC frames are owned checkpoint leaves —
-    * staged, so the session lifecycle releases them.
+    * oracle verbatim.
     */
   def incrementalDupComponents(s: SparkSession, dir: String): DataFrame =
     staged(s, s"ndcompinc:$dir") {
@@ -259,7 +234,7 @@ object Staged {
       val newPairs = pairs.filter(isNew(col("doc_a")) || isNew(col("doc_b")))
       val inc = graft.operators.Dedup.connectedComponents(
         starEdges.union(newPairs))
-      graft.operators.Dedup.release(labels0)
+      CacheTracker.free(labels0)
       inc
     }
 
@@ -282,33 +257,29 @@ object Staged {
     }
 
   /** Star-contraction connected components over [[docNearDupPairs]] —
-    * the O(log n)-round fallback path, staged so repeated bench passes
-    * don't accumulate checkpointed label frames.
+    * the O(log n)-round fallback path.
     */
   def docDupComponentsStar(s: SparkSession, dir: String): DataFrame =
     staged(s, s"ndcompstar:$dir") {
       graft.operators.Dedup.connectedComponentsStar(docNearDupPairs(s, dir))
     }
 
-  /** Generic session-scoped staged DataFrame: persisted on first
-    * build, released with the session lifecycle ([[release]]) like
-    * every named entry — for query-specific intermediates (fixtures,
-    * per-query derived tables) that would otherwise persist inside an
-    * operator with no release path.
+  /** Generic session-scoped staged DataFrame, persisted on first
+    * build — for query-specific intermediates (fixtures, per-query
+    * derived tables) that would otherwise persist inside an operator
+    * with no release path.
     */
   def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    staged(s, key)(build.persist(StorageLevel.MEMORY_AND_DISK))
+    staged(s, key)(CacheTracker.persist(build))
 
-  /** [[cached]] with LINEAGE TRUNCATION: for staged intermediates whose
-    * plan is heavy (wide aggregation trees, long pipelines) a plain
-    * persist still makes every consumer re-analyze the full lineage —
-    * localCheckpoint materializes eagerly AND hands consumers a leaf.
-    * Released by [[release]] (Dedup.release frees checkpoint-leaf RDD
-    * blocks). Use for bounded tables only: the checkpoint pins the
-    * rows in executor storage.
+  /** [[cached]] with LINEAGE TRUNCATION ([[CacheTracker.truncate]]): for
+    * staged intermediates whose plan is heavy (wide aggregation trees,
+    * long pipelines) a plain persist still makes every consumer
+    * re-analyze the full lineage. Use for bounded tables only: a local
+    * checkpoint pins the rows in executor storage.
     */
   def checkpointed(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    staged(s, key)(build.localCheckpoint())
+    staged(s, key)(CacheTracker.truncate(build))
 
   /** Memoized disk-artifact path: the builder writes its files once
     * per (session, key) and returns the path; later calls reuse the
@@ -318,22 +289,13 @@ object Staged {
   def cachedPath(s: SparkSession, key: String)(build: => String): String =
     staged(s, key)(build)
 
-  /** Memoizer for operator results that arrive ALREADY persisted /
-    * checkpoint-leafed under a caller-owns-release contract (e.g.
-    * [[graft.operators.Dedup.connectedComponents]]): memoized WITHOUT
-    * re-persisting (persist with a second level would throw) and freed
-    * by [[release]] via `Dedup.release` like every entry — so repeated
-    * bench/determinism runs don't leak localCheckpoint executor blocks.
-    */
-  def cachedOwned(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    staged(s, key)(build)
-
-  /** Generic memoized staged value for composite index artifacts
-    * (e.g. [[graft.operators.ProductQuant.IvfPqIndex]]: driver-side
-    * codebooks + an encoded-corpus frame). DataFrames nested anywhere
-    * in the case-class/tuple structure are force-materialized at build
-    * and unpersisted by [[release]] like direct entries; the builder
-    * is responsible for persisting frames it wants cached.
+  /** Generic memoized staged value: composite index artifacts (e.g.
+    * [[graft.operators.ProductQuant.IvfPqIndex]]: driver-side codebooks
+    * + an encoded-corpus frame) and operator results that arrive
+    * already pinned (e.g. [[graft.operators.Dedup.connectedComponents]]).
+    * Pinned frames nested anywhere in the case-class/tuple structure
+    * are force-materialized at build; the build block pins every frame it
+    * wants cached through [[CacheTracker]], which frees it on release.
     */
   def cachedAny[A](s: SparkSession, key: String)(build: => A): A =
     staged(s, key)(build)
@@ -341,15 +303,15 @@ object Staged {
   /** BPE training over the corpus vocab (6 merge rounds) — consumed by
     * BOTH t28 (the merge table) and t29 (segment-count tokenization):
     * one staged train instead of two identical 6-round driver loops.
-    * The final segmentation frame arrives persisted from Bpe.train;
-    * force() materializes it at build and [[release]] unpersists it
-    * through the tuple walk.
+    * The final segmentation frame arrives cached from Bpe.train and is
+    * tracked for release.
     */
   def bpeTrained(s: SparkSession, dir: String):
       (Seq[graft.operators.Bpe.Merge], DataFrame) =
     staged(s, s"bpe6:$dir") {
-      graft.operators.Bpe.train(
+      val (merges, seg) = graft.operators.Bpe.train(
         graft.operators.Bpe.corpusVocab(table(s, dir, "documents"), "text"), 6)
+      (merges, CacheTracker.track(seg))
     }
 
   /** documents overlapping k-word window hash table (__id, __i, __h),
@@ -360,9 +322,8 @@ object Staged {
   def substrGrams(s: SparkSession, dir: String, k: Int): DataFrame =
     staged(s, s"sgrams:$dir:$k") {
       graft.functions.VectorExpressions.register(s)
-      graft.operators.Dedup.windowHashTable(
-          table(s, dir, "documents"), "doc_id", "text", k)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      CacheTracker.persist(graft.operators.Dedup.windowHashTable(
+          table(s, dir, "documents"), "doc_id", "text", k))
     }
 
   /** documents word-token table (doc_id, term) — one row per non-empty
@@ -371,10 +332,9 @@ object Staged {
     */
   def docTerms(s: SparkSession, dir: String): DataFrame =
     staged(s, s"terms:$dir") {
-      table(s, dir, "documents")
+      CacheTracker.persist(table(s, dir, "documents")
         .select(col("doc_id"), explode(TextOps.words(col("text"))).as("term"))
-        .filter(length(col("term")) > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .filter(length(col("term")) > 0))
     }
 
   /** exploded shingle-hash table (__id, __h) shared by MinHash AND
@@ -382,8 +342,8 @@ object Staged {
     */
   def docShingleHashes(s: SparkSession, dir: String): DataFrame =
     staged(s, s"shh:$dir") {
-      graft.operators.Dedup.shingleHashTable(docShingles(s, dir), "doc_id", "__sh")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      CacheTracker.persist(
+        graft.operators.Dedup.shingleHashTable(docShingles(s, dir), "doc_id", "__sh"))
     }
 
   /** shingle-hash table under the engine-portable 60-bit hash
@@ -393,9 +353,8 @@ object Staged {
   def docShingleHashesPortable(s: SparkSession, dir: String): DataFrame =
     staged(s, s"shhp:$dir") {
       graft.functions.VectorExpressions.register(s)
-      graft.operators.Dedup.shingleHashTable(docShingles(s, dir), "doc_id", "__sh",
-          graft.operators.Dedup.portableHash60)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      CacheTracker.persist(graft.operators.Dedup.shingleHashTable(
+        docShingles(s, dir), "doc_id", "__sh", graft.operators.Dedup.portableHash60))
     }
 
   /** (__id, __sim) 60-bit SimHash sketch table, persisted — one row
@@ -407,12 +366,10 @@ object Staged {
     */
   def docSimhash60(s: SparkSession, dir: String): DataFrame =
     staged(s, s"sim60:$dir") {
-      // localCheckpoint (r14): the 60 per-bit vote aggregations give
-      // this table a plan four consumers would each re-analyze —
-      // truncate to a leaf like docNearDupPairs
-      graft.operators.Dedup
-        .simhashColsFromHashes(docShingleHashesPortable(s, dir), 60)
-        .localCheckpoint()
+      // truncated (r14): the 60 per-bit vote aggregations give this
+      // table a plan four consumers would each re-analyze
+      CacheTracker.truncate(graft.operators.Dedup
+        .simhashColsFromHashes(docShingleHashesPortable(s, dir), 60))
     }
 
   /** lineitem + orders staged ONCE per (session, dir) as 8-bucket
@@ -510,30 +467,10 @@ object Staged {
       (s.table(s"li_bkt_$tag"), s.table(s"ord_bkt_$tag"))
     }
 
-  /** Release every staged artifact for this session: the memoized
-    * frames/tables above AND all dense-index staging caches created by
-    * `DcaFrame.fromDF`/`mask` (the per-constructed-frame caches that
-    * would otherwise accumulate for the life of a Bench/Verify
-    * session). Memoized entries are evicted, so the next access
-    * rebuilds from the source tables — stale frames are never served
-    * against a released cache.
+  /** Release every staged artifact of this session: the session sweep
+    * [[CacheTracker.release]], which evicts the memo and frees every
+    * pinned frame together — the next access rebuilds from the source
+    * tables, so a released frame is never served.
     */
-  def release(s: SparkSession): Unit = {
-    perSession.synchronized {
-      val m = perSession.remove(s)
-      def rel(v: Any): Unit = v match {
-        // Dedup.release subsumes unpersist AND frees checkpoint-leaf
-        // blocks (the CC label frames), which unpersist alone misses
-        case d: DataFrame => graft.operators.Dedup.release(d)
-        case f: DcaFrame  => f.unpersist(); () // before Product
-        case p: Product   => p.productIterator.foreach(rel)
-        case _            => ()
-      }
-      if (m != null) m.values.foreach(rel)
-    }
-    DcaFrame.releaseStaging(s)
-    // operator/query-internal persists registered via CacheTracker —
-    // frames with no other release path (r13 ADVICE)
-    graft.operators.CacheTracker.release(s)
-  }
+  def release(s: SparkSession): Unit = CacheTracker.release(s)
 }

@@ -771,13 +771,11 @@ object TextQueries {
       (s, dir) => {
         val words = table(s, dir, "documents")
           .select(col("doc_id"), split(col("text"), " ").as("w"))
-        val bg = words.select(col("doc_id"),
+        val bg = graft.operators.CacheTracker.persist(words.select(col("doc_id"),
           explode(expr(
             "transform(sequence(0, size(w) - 2), i -> struct(w[i] AS w1, w[i+1] AS w2))"))
             .as("b"))
-          .select(col("doc_id"), col("b.w1"), col("b.w2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.operators.CacheTracker.track(bg)
+          .select(col("doc_id"), col("b.w1"), col("b.w2")))
         val cnt = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
         val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
         bg.join(cnt, Seq("w1", "w2")).join(c1, Seq("w1"))
@@ -818,12 +816,11 @@ object TextQueries {
         // base feeds TWO consumers (cutoff histogram, final admission)
         // — persist the narrow projection so the corpus is scanned and
         // tokenized once
-        val base = graft.operators.CacheTracker.track(
+        val base = graft.operators.CacheTracker.persist(
           table(s, dir, "documents")
             .select(col("doc_id"), col("source"),
               TextOps.tokenCount(col("text")).as("n_tokens"),
-              TextOps.knuthMix(col("doc_id")).as("h"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              TextOps.knuthMix(col("doc_id")).as("h")))
         // knuthMix's domain is [0, p) by construction — pinned bounds
         // skip the histogram's min/max probe pass
         val hist = graft.operators.RankStats.cumulativeHistogram(
@@ -869,13 +866,12 @@ object TextQueries {
         val width = 1000000007L / 4096 + 1
         // base feeds TWO consumers (bucket spine, final cumulative) —
         // persist the narrow projection; tracked for session release
-        val base = graft.operators.CacheTracker.track(
+        val base = graft.operators.CacheTracker.persist(
           table(s, dir, "documents")
             .select(col("doc_id"), col("source"),
               TextOps.tokenCount(col("text")).as("n_tokens"),
               TextOps.knuthMix(col("doc_id")).as("h"))
-            .withColumn("bkt", expr(s"h DIV ${width}L"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .withColumn("bkt", expr(s"h DIV ${width}L")))
         val off = base.groupBy("source", "bkt").agg(sum("n_tokens").as("__btot"))
           .withColumn("__off", coalesce(sum("__btot").over(
             Window.partitionBy("source").orderBy("bkt")

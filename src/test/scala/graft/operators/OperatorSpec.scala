@@ -319,18 +319,24 @@ class DedupSpec extends SparkTestBase {
       sampled.candidates * 4 < full.candidates * 2)
   }
 
-  // ---- reliable checkpointDir mode (the production fault-tolerance
-  // path: survives executor loss via cluster-storage checkpoint()) ----
+  // ---- reliable mode (the production fault-tolerance path): with a
+  // session checkpoint dir, CacheTracker.truncate writes reliable
+  // checkpoint files that survive executor loss ----
 
-  private lazy val ckptDir =
-    java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-
-  private def ckptFiles(): Seq[java.nio.file.Path] = {
+  private def ckptFiles(root: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(ckptDir)
-    val s = java.nio.file.Files.walk(root)
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
     finally s.close()
+  }
+
+  /** Run `body` with the shared session in reliable mode under a fresh
+    * checkpoint dir (restored afterwards, so later suites truncate
+    * locally); `body` gets the dir to count files under.
+    */
+  private def reliably[A](body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+    org.apache.spark.graft.SessionCheckpointDir.withDir(spark.sparkContext, dir)(body(dir))
   }
 
   private val ccExpected = Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
@@ -339,38 +345,43 @@ class DedupSpec extends SparkTestBase {
   private def ccPairs = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L),
     (10L, 11L), (11L, 12L), (10L, 12L), (21L, 20L)).toDF("doc_a", "doc_b")
 
+  private def reliableCc(cc: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+    reliably { dir =>
+      val got = cc(ccPairs)
+      val rows = got.as[(Long, Long)].collect().toSet
+      // the result is a reliable checkpoint leaf: its file-set must
+      // exist while the frame is alive...
+      assert(ckptFiles(dir).nonEmpty, "no reliable checkpoint files were written")
+      CacheTracker.free(got)
+      // ...and free() must delete it (plus every superseded round's —
+      // ContextCleaner won't, cleanCheckpoints defaults to false)
+      assert(ckptFiles(dir).isEmpty,
+        s"free() left checkpoint files behind: ${ckptFiles(dir).take(3)}")
+      assert(rows == ccExpected)
+    }
+
   test("connectedComponents reliable checkpointDir mode: same labels, real files, cleaned on release") {
-    val got = Dedup.connectedComponents(ccPairs, checkpointDir = Some(ckptDir))
-    val rows = got.as[(Long, Long)].collect().toSet
-    // the result is a reliable checkpoint leaf: its file-set must exist
-    // while the frame is alive...
-    assert(ckptFiles().nonEmpty, "no reliable checkpoint files were written")
-    Dedup.release(got)
-    // ...and release() must delete it (plus every superseded round's —
-    // ContextCleaner won't, cleanCheckpoints defaults to false)
-    assert(ckptFiles().isEmpty,
-      s"release() left checkpoint files behind: ${ckptFiles().take(3)}")
-    assert(rows == ccExpected)
+    reliableCc(Dedup.connectedComponents(_))
   }
 
   test("connectedComponentsStar reliable checkpointDir mode: same labels, files cleaned") {
-    val got = Dedup.connectedComponentsStar(ccPairs, checkpointDir = Some(ckptDir))
-    val rows = got.as[(Long, Long)].collect().toSet
-    assert(ckptFiles().nonEmpty)
-    Dedup.release(got)
-    assert(ckptFiles().isEmpty)
-    assert(rows == ccExpected)
+    reliableCc(Dedup.connectedComponentsStar(_))
   }
 
-  test("reliable mode refuses to clobber a different session checkpoint dir") {
-    // the session dir was pinned under ckptDir by the specs above; a
-    // different dir must throw, not silently redirect the whole session
-    val other = java.nio.file.Files.createTempDirectory("graft-ckpt-other-").toString
-    // ensure the session dir is actually set (spec ordering safety)
-    Dedup.release(Dedup.connectedComponents(ccPairs, checkpointDir = Some(ckptDir)))
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(ccPairs, checkpointDir = Some(other))
+  test("nearDupPairs band table truncates reliably under a session checkpoint dir") {
+    val d = docs(1L -> base, 2L -> nearDup, 3L -> unrelated, 4L -> (unrelated + " tail"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val local = pairs(Dedup.nearDupPairs(d, "text", "doc_id"))
+    assert(local.contains(1L -> 2L))
+    reliably { dir =>
+      assert(pairs(Dedup.nearDupPairs(d, "text", "doc_id")) == local)
+      assert(ckptFiles(dir).nonEmpty, "the band table wrote no reliable checkpoint files")
+      CacheTracker.release(spark)
+      assert(ckptFiles(dir).isEmpty,
+        s"release() left checkpoint files behind: ${ckptFiles(dir).take(3)}")
     }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "session dir was not restored")
   }
 
   test("chunkDedup dedups repeats WITHIN one document too") {
@@ -1578,6 +1589,22 @@ class AsOfJoinSpec extends SparkTestBase {
           Seq("ok", "total"), inner = inner, toleranceUs = tol)),
         s"nearestAgg mismatch inner=$inner tol=$tol")
     }
+  }
+
+  test("agg variants reject a right column with a reserved name (__s)") {
+    // forwardAgg derives its own __s sort column on the union: a right
+    // column of that name would be silently overwritten before the
+    // aggs read it, so every agg variant must refuse it up front
+    val left = Seq((1L, 10L, "a")).toDF("k", "t", "ev")
+    val rightRaw = Seq((1L, 5L, 100L)).toDF("rk", "rt", "__s")
+    val aggs = Seq("v" -> max(col("__s")))
+    def rejects(join: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](join)
+      assert(e.getMessage.contains("reserved"), e.getMessage)
+    }
+    rejects(AsOfJoin.backwardAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))
+    rejects(AsOfJoin.forwardAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))
+    rejects(AsOfJoin.nearestAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))
   }
 
   test("agg variants plan ONE exchange for the whole join (no right pre-agg shuffle)") {
