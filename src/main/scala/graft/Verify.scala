@@ -1,38 +1,42 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *   sbt "runMain graft.Verify <sfDir> <outDir> [query ...]"
+  * Trailing names restrict the dump, and oracle_sql.json, to those
+  * queries.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [query ...]")
+    val names = Harness.checked(args.toSeq.drop(2))
+    val spark = Harness.session()
+    dump(spark, args(0), args(1), names)
+    spark.stop()
+  }
+
+  /** Dump `names` (every registered query when empty) under `outDir`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, names: Seq[String]): Unit = {
+    val queries = Harness.queries(names)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    queries.foreach { name =>
+      // a query that fails must leave no result behind: a previous
+      // run's parquet would otherwise reach the oracle compare
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.parquet(out.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes quotes, backslashes and ALL control chars: a tab or
+    // CR in an oracle's SQL must not break the compare's json.load
+    val json = new ObjectMapper().writeValueAsString(
+      SparkEntry.oracleSql.filter(kv => queries.contains(kv._1)).asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.queries.Staged.release(spark)
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Cumulative work counters captured by [[WorkMetricsListener]].
@@ -42,6 +43,23 @@ final case class WorkSnap(
       s""""mem_spill":$memSpill,"disk_spill":$diskSpill,"input_bytes":$inputBytes}"""
 }
 
+/** One completed stage: wall seconds (-1 when Spark recorded no
+  * submission or completion time), tasks, executor CPU and bytes.
+  */
+final case class StageRecord(
+    stageId: Int,
+    wallSec: Double,
+    tasks: Int,
+    cpuNanos: Long,
+    inputBytes: Long,
+    shuffleRead: Long,
+    shuffleWrite: Long,
+    name: String) {
+  def line: String =
+    f"[stage $stageId%3d] $wallSec%6.2fs tasks=$tasks%4d cpu=${cpuNanos / 1e9}%6.2fs " +
+      f"input=$inputBytes%10d shufR=$shuffleRead%9d shufW=$shuffleWrite%9d  ${name.take(60)}"
+}
+
 /** Accumulates deterministic per-task work metrics so the bench can report
   * WHAT a query did (tasks scheduled, bytes shuffled/scanned/spilled) next
   * to how long it took. Wall-clock on this sandbox drifts ±40% with host
@@ -58,6 +76,7 @@ final class WorkMetricsListener extends SparkListener {
   private val memSp = new LongAdder
   private val diskSp = new LongAdder
   private val input = new LongAdder
+  private val stages = new ConcurrentLinkedQueue[StageRecord]
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val m = te.taskMetrics
@@ -70,6 +89,24 @@ final class WorkMetricsListener extends SparkListener {
       input.add(m.inputMetrics.bytesRead)
     }
   }
+
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    val si = sc.stageInfo
+    val m = si.taskMetrics
+    if (m != null) {
+      val wall = (for (a <- si.submissionTime; b <- si.completionTime) yield (b - a) / 1e3)
+        .getOrElse(-1.0)
+      stages.add(StageRecord(si.stageId, wall, si.numTasks, m.executorCpuTime,
+        m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, si.name))
+    }
+  }
+
+  /** Stages completed since the previous call, oldest first. Call after
+    * [[snapshotAfterDrain]] so every event up to the snapshot is in.
+    */
+  def takeStages(): Seq[StageRecord] =
+    Iterator.continually(stages.poll()).takeWhile(_ != null).toList
 
   /** Drain pending listener events, then snapshot the running totals. */
   def snapshotAfterDrain(spark: SparkSession): WorkSnap = {

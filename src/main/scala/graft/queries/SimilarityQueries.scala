@@ -606,7 +606,7 @@ object SimilarityQueries {
     // oracle replays coarse assignment, PQ training, encoding, probed
     // ADC, and exact re-rank bit-for-bit. Measured recall@10 vs sim1
     // at this config: 0.73 (sf0.01) / 0.80 (sf0.1); nProbe=8 lifts to
-    // 0.77/0.87 (tools.LshSweep sweeps it). At these corpus sizes the
+    // 0.77/0.87 (PROBES.md, round close 2026-08-13). At these corpus sizes the
     // fixed costs (bootstrap + training) dominate the saved scan —
     // the fusion pays where the ADC scan is the bound, i.e. at scale.
     "sim6_ivfpq_ann" -> QueryDef(

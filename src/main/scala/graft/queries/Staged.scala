@@ -197,7 +197,7 @@ object Staged {
       // truncated, NOT persisted (r14): a persist caches the rows but
       // every consumer still re-ANALYZES the full minhash/verify
       // lineage — d19's self-join over this table planned a ~430 KB
-      // tree (measured via ExplainDump), so driver planning dominated
+      // tree (measured from its formatted plan), so driver planning dominated
       // its wall time. Truncation hands consumers a leaf.
       CacheTracker.truncate(graft.operators.Dedup.nearDupPairsFromShingles(
           docShingles(s, dir), "doc_id", "__sh",

@@ -6,22 +6,19 @@
 // varies) could pass that gate by luck and flake later. This tool
 // makes partition-sensitivity a measured property.
 //
-//   sbt "runMain graft.tools.DeterminismCheck [sfDir] [name ...]"
+//   sbt "runMain graft.tools.DeterminismCheck [--sf=DIR] [--cpus=N] [name ...]"
 package graft.tools
 
 object DeterminismCheck {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val only = args.drop(1).toSet
-    val spark = graft.GraftSession.builder("local[8]", "8").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
+    val a = graft.Harness.parse(args.toSeq, "/root/testdata/sf0.001")
+    val names = graft.Harness.queries(a.names)
+    val spark = graft.Harness.session(a.cpus)
 
     // canonical form mirrors the driver's compare: sort columns by
     // name, then sort row strings — multiset equality up to order
     def canon(name: String): String = {
-      val df0 = graft.SparkEntry.queries(name)(spark, dir)
+      val df0 = graft.SparkEntry.queries(name)(spark, a.sfDir)
       val df = df0.select(df0.columns.sorted.map(org.apache.spark.sql.functions.col): _*)
       df.collect().map(_.toString).sorted.mkString("\n")
     }

@@ -18,11 +18,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)", "upper('x')")
-      .write.format("noop").mode("overwrite").save()
+    val spark = graft.Harness.session()
+    graft.Harness.warmUp(spark, dirs.head)
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

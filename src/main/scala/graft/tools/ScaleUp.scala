@@ -34,9 +34,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "target/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val OFF = 1000000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val cIdx = spark.range(copies.toLong).withColumnRenamed("id", "__c")
 

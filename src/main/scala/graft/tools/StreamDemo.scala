@@ -18,8 +18,7 @@ import org.apache.spark.sql.types._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.GraftSession.builder("local[4]", "4").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     // file streaming source needs an explicit schema (ts = micros NTZ)
     val schema = StructType(Seq(

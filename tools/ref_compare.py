@@ -7,8 +7,7 @@ single process. This times the SAME structural ops — boolean-mask
 filter + dense re-index, reshape, strided slice, gather — in pure numpy
 on the sf0.1 lineitem batch (600k rows), to put our BENCH numbers in
 context. Run the Spark side with:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.tools.BenchSome \
-    dca_s7_mask dca_s2_reshape dca_s6_slice dca_s8_gather"
+  sbt "runMain graft.Bench dca_s7_mask dca_s2_reshape dca_s6_slice dca_s8_gather"
 """
 import time
 import numpy as np
