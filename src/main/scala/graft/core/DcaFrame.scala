@@ -1,7 +1,11 @@
 package graft.core
 
+import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRowWithSchema}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.operators.CacheTracker
@@ -20,6 +24,12 @@ import Shape.Shape
   * zipWithIndex (two light jobs), never a single-partition window, so
   * it survives 100-TB inputs (SURVEY §7.5.1).
   *
+  * A 1-D frame built by [[DcaFrame.fromDF]] or [[mask]] carries the
+  * [[DcaFrame.Staging]] handle of its staged sort cache, which knows the
+  * dense-index range each cached partition holds. A slice or int index
+  * of such a frame reads only the cached partitions its index range
+  * overlaps, so its cost follows the window, not the frame.
+  *
   * Static fields (constant across the batch, untouched by every op —
   * `array_dataclass.py:192-198`) live in [[statics]].
   */
@@ -28,7 +38,7 @@ final case class DcaFrame(
     shape: Shape,
     arrayCols: Vector[String],
     statics: Map[String, Any] = Map.empty,
-    staging: Option[DataFrame] = None) {
+    staging: Option[DcaFrame.Staging] = None) {
 
   def ndim: Int = shape.length
   def size: Long = Shape.size(shape)
@@ -70,11 +80,20 @@ final case class DcaFrame(
       (0 until ndim).map(i => idx(i) * lit(st(i))).reduce(_ + _)
     }
 
-  /** Sorted driver-side materialization (small data / tests only). */
+  /** Row-major driver-side materialization (small data / tests only):
+    * one collect of `__idx*` + payload, ordered on the driver by the
+    * linear index — a collect holds every row on the driver anyway, so
+    * a distributed sort would only add a sampling job and a shuffle.
+    */
   def collectOrdered(): Array[Row] = {
-    val ordered = df.orderBy(idxCols.map(col): _*)
-    ordered.select(arrayCols.map(col): _*).collect()
+    val payload = payloadSchema
+    val st = Shape.strides(shape)
+    df.select((idxCols ++ arrayCols).map(col): _*).collect()
+      .sortBy(r => st.indices.map(i => r.getLong(i) * st(i)).sum)
+      .map(r => new GenericRowWithSchema(r.toSeq.drop(ndim).toArray, payload): Row)
   }
+
+  private def payloadSchema: StructType = StructType(arrayCols.map(n => df.schema(n)).toArray)
 
   /** Driver-local eager short-circuit (the toy-scale fast path,
     * BASELINE.md's honest-comparison gap): materialize the payload
@@ -88,7 +107,6 @@ final case class DcaFrame(
     require(size <= maxRows,
       s"collectLocal refused: $size rows > maxRows $maxRows — " +
         "the distributed plans are the scale path")
-    val payloadSchema = StructType(arrayCols.map(n => df.schema(n)).toArray)
     LocalDca(collectOrdered().toVector, payloadSchema, shape, statics)
   }
 
@@ -208,10 +226,23 @@ final case class DcaFrame(
     * [[gatherAxis]] on its output axis AFTER the basic items — numpy's
     * single-advanced-index semantics (`p[idx_arr, 2:5]` ==
     * `p[:, 2:5][idx_arr]`).
+    *
+    * On a staged 1-D frame (one carrying [[staging]]) a slice or int
+    * item reads only the cached partitions that overlap its index
+    * range, and within each only the positions in range; the predicate
+    * and remap below then run unchanged over those rows.
     */
   def apply(items: Indexing.Ix*): DcaFrame = {
     val resolved = Indexing.resolve(items, shape)
-    var cur = df
+    var cur = staging.filter(_ => ndim == 1).flatMap { st =>
+      resolved.collectFirst {
+        case (_, Indexing.Resolved.Int(i)) => st.window(df.schema, i, i)
+        case (_, Indexing.Resolved.Slice(start, step, len)) =>
+          val last = start + (len - 1) * step
+          if (len == 0) st.window(df.schema, 0L, -1L)
+          else st.window(df.schema, math.min(start, last), math.max(start, last))
+      }
+    }.getOrElse(df)
     var axis = 0          // input axis being consumed
     var outPos = 0        // output axis position
     val outCols = Vector.newBuilder[(String, Column)]
@@ -566,10 +597,11 @@ final case class DcaFrame(
     * [[persist]] of the view itself. Neither this frame NOR any frame
     * derived from it may be used after release — downstream jobs would
     * re-execute the range shuffle with fresh sampled bounds and could
-    * silently mis-index.
+    * silently mis-index. Windows cut by [[apply]] read the cache
+    * directly, so they die with it too.
     */
   def unpersist(): DcaFrame = {
-    staging.foreach(CacheTracker.free)
+    staging.foreach(s => CacheTracker.free(s.frame))
     copy(df = df.unpersist(), staging = None)
   }
 
@@ -644,6 +676,45 @@ final case class DcaFrame(
 
 object DcaFrame {
   def idxColNames(ndim: Int): Vector[String] = (0 until ndim).map(i => s"__idx$i").toVector
+
+  /** The staged sort cache behind a [[fromDF]]/[[DcaFrame.mask]] frame:
+    * the persisted sorted `frame` and the dense-index range of each of
+    * its cached partitions — partition p holds indices
+    * `[offsets(p), offsets(p + 1))`, in cache order.
+    */
+  final class Staging(val frame: DataFrame, val offsets: Vector[Long]) {
+    private lazy val cached = frame.queryExecution.toRdd
+
+    /** Rows `lo..hi` (inclusive; empty when `hi < lo`) of the indexed
+      * view whose schema is `view` (`__idx0`, then columns of `frame`),
+      * read from only the cached partitions that overlap the range and,
+      * within each, only the positions in range. A lazy leaf whose
+      * statistics carry the window's exact row count: building it runs
+      * no job and pins nothing; it reads the staged cache, so it dies
+      * with [[DcaFrame.unpersist]] / the session sweep like any view.
+      */
+    def window(view: StructType, lo: Long, hi: Long): DataFrame = {
+      val kept = (0 until offsets.length - 1)
+        .filter(p => offsets(p) <= hi && offsets(p + 1) > lo && offsets(p + 1) > offsets(p))
+      val starts = kept.map(offsets).toArray
+      val keptSet = kept.toSet
+      val ords = view.fieldNames.tail.map(frame.schema.fieldIndex)
+      val types = ords.map(frame.schema(_).dataType)
+      val rows = PartitionPruningRDD.create(cached, keptSet).mapPartitionsWithIndex { (i, it) =>
+        var pos = starts(i)
+        while (pos < lo && it.hasNext) { it.next(); pos += 1 }
+        it.takeWhile(_ => pos <= hi).map { r =>
+          val out = new GenericInternalRow(ords.length + 1)
+          out.setLong(0, pos)
+          var k = 0
+          while (k < ords.length) { out.update(k + 1, r.get(ords(k), types(k))); k += 1 }
+          pos += 1
+          out: InternalRow
+        }
+      }
+      GraftSqlBridge.sizedRddFrame(frame.sparkSession, view, rows, math.max(0L, hi - lo + 1))
+    }
+  }
 
   /** Construct from an (already ordered-by sortCols) DataFrame, adding a
     * dense 1-D index. Ordering is established by a range-repartition +
@@ -728,14 +799,14 @@ object DcaFrame {
     * downstream job see ONE materialization (a re-executed range
     * shuffle could re-sample different partition bounds and silently
     * mis-index). This staged cache is the frame's ONLY cache — it is
-    * returned as a handle, carried on [[DcaFrame.staging]], pinned
-    * through `CacheTracker`, and released via [[DcaFrame.unpersist]] or
-    * the session sweep.
+    * returned as a [[Staging]] handle with the per-partition offsets,
+    * carried on [[DcaFrame.staging]], pinned through `CacheTracker`, and
+    * released via [[DcaFrame.unpersist]] or the session sweep.
     *
     * @return (indexed frame with `__idx0` prepended, total row count,
-    *         staged Dataset backing the indexed view)
+    *         staging handle of the cache backing the indexed view)
     */
-  private[core] def denseIndex(df: DataFrame, sortCols: Seq[Column]): (DataFrame, Long, DataFrame) = {
+  private[core] def denseIndex(df: DataFrame, sortCols: Seq[Column]): (DataFrame, Long, Staging) = {
     require(!df.columns.contains("__graft_mid"), "__graft_mid is a reserved column name")
     val sorted =
       if (sortCols.isEmpty) df
@@ -748,16 +819,15 @@ object DcaFrame {
       .groupBy("__pid").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val nPart = if (counts.isEmpty) 0 else counts.keys.max + 1
-    val offsets = new Array[Long](nPart)
-    var acc = 0L
-    for (p <- 0 until nPart) { offsets(p) = acc; acc += counts.getOrElse(p, 0L) }
+    // offsets(p) = first index of partition p; offsets(nPart) = total
+    val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toVector
     val offCol =
       if (nPart == 0) lit(0L)
-      else element_at(typedlit(offsets.toSeq), shiftright(col("__graft_mid"), 33).cast("int") + 1)
+      else element_at(typedlit(offsets.init), shiftright(col("__graft_mid"), 33).cast("int") + 1)
     val indexed = withMid.select(
       (offCol + col("__graft_mid").bitwiseAND(lit((1L << 33) - 1))).cast(LongType).as("__idx0")
         +: df.columns.map(col).toSeq: _*)
-    (indexed, acc, staged)
+    (indexed, offsets.last, new Staging(staged, offsets))
   }
 
   /** Stack k same-shape frames along a NEW axis (M1, `ops.py:90-106`):

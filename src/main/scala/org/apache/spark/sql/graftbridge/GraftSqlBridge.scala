@@ -1,8 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** The ONE access point this library takes into Spark's `private[sql]`
   * surface: constructing a DataFrame from a custom [[LogicalPlan]]
@@ -15,4 +21,19 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 object GraftSqlBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
+
+  /** A leaf DataFrame over `rdd` (rows laid out as `schema`) that
+    * reports `rowCount` as its exact statistics, so the optimizer sizes
+    * it like a local relation (joins on it plan as broadcasts) instead
+    * of the default unknown-size RDD estimate. Building it runs no job.
+    */
+  def sizedRddFrame(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+                    rdd: RDD[InternalRow], rowCount: Long): DataFrame = {
+    val session = spark.asInstanceOf[ClassicSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(output) * rowCount,
+      rowCount = Some(BigInt(rowCount)))
+    ofRows(session, LogicalRDD(output, rdd)(session, Some(stats)))
+  }
 }

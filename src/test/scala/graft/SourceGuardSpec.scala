@@ -18,6 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    count, confs and warm-up cannot drift between entry points, and
   *    `WorkMetricsListener` is the only listener, so every per-query and
   *    per-stage counter comes from one place.
+  *  - Spark's private SQL surface (the classic session and Dataset,
+  *    `Dataset.ofRows`, `LogicalRDD` construction) is reached only
+  *    through `GraftSqlBridge`, so that dependency stays in one file.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private def sources: Seq[java.io.File] = {
@@ -62,5 +65,10 @@ class SourceGuardSpec extends AnyFunSuite {
   test("WorkMetricsListener is the only SparkListener registered") {
     guard("""addSparkListener\(""".r, Set("WorkMetrics.scala"),
       "collect task and stage counters through graft.WorkMetricsListener")
+  }
+
+  test("Spark's private SQL surface is reached only through GraftSqlBridge") {
+    guard("""sql\.classic\b|Dataset\.ofRows\(|LogicalRDD\(""".r, Set("GraftSqlBridge.scala"),
+      "add the call to org.apache.spark.sql.graftbridge.GraftSqlBridge and use it from there")
   }
 }

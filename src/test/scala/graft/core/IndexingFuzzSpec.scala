@@ -21,6 +21,10 @@ import scala.util.Random
   * the fixed oracle grids in RaySliceSpec / dca_s8c-s8f). Seeded RNG:
   * failures reproduce; the driver-level resolver fuzz at 1000+ cases
   * per property lives in IndexingPropSpec.
+  *
+  * Every 1-D expression also runs over two STAGED twins of the same
+  * rows — a `fromDF` frame cached in 4 partitions and a `mask` frame —
+  * whose slices and ints read only the cached partitions they overlap.
   */
 class IndexingFuzzSpec extends SparkTestBase {
 
@@ -32,6 +36,21 @@ class IndexingFuzzSpec extends SparkTestBase {
     val flat = DcaFrame.fromLocal(spark,
       (0L until n).map(i => Row(i.toDouble)), payloadSchema)
     if (shape == Vector(n)) flat else flat.reshapeTo(shape)
+  }
+
+  /** Staged twins of the 1-D `linFrame(Vector(n))`: an unsorted
+    * `fromDF` keeps `spark.range`'s 4 partitions (empty ones included
+    * when n < 4), and a `mask` that keeps the even ids of 2n rows.
+    */
+  private def stagedTwins(n: Long): Seq[(String, DcaFrame)] = {
+    val fromDF = DcaFrame.fromDF(
+      spark.range(0, n, 1, 4).select(col("id").cast(DoubleType).as("x")), Nil)
+    assert(fromDF.staging.get.frame.rdd.getNumPartitions == 4)
+    val base = DcaFrame.fromDF(spark.range(0, 2 * n, 1, 4)
+      .select(col("id"), (col("id") / 2).as("x")), Seq(col("id")))
+    val masked = base.mask(col("id") % 2 === 0)
+    base.unpersist() // the mask frame reads only its own staged cache
+    Seq("fromDF" -> fromDF, "mask" -> masked)
   }
 
   // ---- independent local model ------------------------------------
@@ -148,6 +167,12 @@ class IndexingFuzzSpec extends SparkTestBase {
         s"shape=$shape items=$items: got shape ${got.shape}, want $wantShape")
       assert(collectCells(got) == wantCells,
         s"shape=$shape items=$items: cell mismatch")
+      if (ndim == 1) stagedTwins(shape.head).foreach { case (kind, t) =>
+        val g = t.apply(items: _*)
+        assert(g.shape == wantShape, s"$kind shape=$shape items=$items: got shape ${g.shape}")
+        assert(collectCells(g) == wantCells, s"$kind shape=$shape items=$items: cell mismatch")
+        t.unpersist()
+      }
       executed += 1
     }
   }
