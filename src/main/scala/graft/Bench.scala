@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.queries.Staged
 
@@ -15,7 +17,9 @@ import graft.queries.Staged
 object Bench {
   /** One query in one pass. `net` excludes the staged first-touch billed
     * to `staging` and is NaN when the query failed; `staged` lists the
-    * staged keys it accessed (hit or build).
+    * staged keys it accessed (hit or build). `compiles` and `compileMs`
+    * are the classes codegen compiled in the timed region and their
+    * compile time (JVM-wide counters; a warm pass should compile none).
     */
   final case class Record(
       name: String,
@@ -23,7 +27,9 @@ object Bench {
       staging: Double,
       work: WorkSnap,
       stages: Seq[StageRecord],
-      staged: Seq[String]) {
+      staged: Seq[String],
+      compiles: Long,
+      compileMs: Double) {
     def failed: Boolean = net.isNaN
 
     def line: String =
@@ -31,8 +37,17 @@ object Bench {
        else f"[bench] $name%-20s ${net}%8.2f s" +
          (if (staging > 0.0005) f" (+ ${staging}%.2f s staging)" else "")) +
         f"  [tasks=${work.tasks} shufR=${work.shuffleRead} shufW=${work.shuffleWrite}" +
-        f" input=${work.inputBytes} spill=${work.memSpill}/${work.diskSpill}]"
+        f" input=${work.inputBytes} spill=${work.memSpill}/${work.diskSpill}" +
+        f" compiles=$compiles compile=$compileMs%.1f ms]"
+
+    /** The artifact's per-query entry: the work counters plus codegen. */
+    def json: String =
+      work.json.stripSuffix("}") + f""","compiles":$compiles,"compile_ms":$compileMs%.1f}"""
   }
+
+  /** Classes codegen has compiled in this JVM, and their compile ms. */
+  private def codegenTotals(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
 
   /** One pass over the queries, plus each staged key's build seconds. */
   final case class Pass(records: Seq[Record], staging: Map[String, Double])
@@ -77,6 +92,7 @@ object Bench {
         val snap0 = wm.snapshotAfterDrain(spark) // untimed: bus drain sits outside t0
         wm.takeStages()
         val st0 = Staged.stagingNanos.get()
+        val (n0, ms0) = codegenTotals()
         val t0 = System.nanoTime()
         // noop sink: materializes EVERY output column (count() would let
         // Catalyst prune payload expressions and under-measure); fn is
@@ -91,9 +107,11 @@ object Bench {
         // round-11 sim6/t51 adjudication problem, now explicit per row
         val staging = (Staged.stagingNanos.get() - st0) / 1e9
         val elapsed = (System.nanoTime() - t0) / 1e9 - staging
+        val (n1, ms1) = codegenTotals()
         val work = wm.snapshotAfterDrain(spark) - snap0
         val rec = Record(name, if (failed) Double.NaN else elapsed, staging, work,
-          wm.takeStages(), Iterator.continually(Staged.accessLog.poll()).takeWhile(_ != null).toList)
+          wm.takeStages(), Iterator.continually(Staged.accessLog.poll()).takeWhile(_ != null).toList,
+          n1 - n0, ms1 - ms0)
         println(rec.line)
         rec.stages.foreach(s => println(s.line))
         rec
@@ -159,11 +177,14 @@ object Bench {
     // deterministic work metrics from the LAST pass (passes agree on the
     // plan-shape fields; metrics_unstable lists any query where they did
     // not — identical code should report [] there, making plan changes
-    // adjudicable under host drift where seconds are not)
-    val passMetrics = passes.map(_.records.map(r => r.name -> r.work).toMap)
-    val lastM = passMetrics.last
-    val metricsJson = obj(names.filter(lastM.contains).map(k => k -> lastM(k).json))
-    val unstable = strs(names.filter(k => passMetrics.exists(m => !m(k).closeTo(passMetrics.head(k)))))
+    // adjudicable under host drift where seconds are not). The codegen
+    // fields ride along but stay out of that comparison: the first pass
+    // compiles and a warm one should not.
+    val passRecords = passes.map(_.records.map(r => r.name -> r).toMap)
+    val lastR = passRecords.last
+    val metricsJson = obj(names.filter(lastR.contains).map(k => k -> lastR(k).json))
+    val unstable = strs(names.filter(k =>
+      passRecords.exists(m => !m(k).work.closeTo(passRecords.head(k).work))))
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"staging":$stg,"staging_total":$stagingTotal,"staging_consumers":$stgConsumers,"staging_consumers_failed":$stgConsumersFailed,"staging_orphaned":$orphaned,"metrics":$metricsJson,"metrics_unstable":$unstable,"errors":$errs,"runs":${passes.size},"sf":"${a.sfDir}"}"""
     println(line)
     // Self-contained artifact: the stdout line is captured by the driver

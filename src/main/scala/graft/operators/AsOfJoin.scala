@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, First, Last}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** Backward as-of join — an operator Spark lacks natively (SURVEY §2.6
   * joins row): for each left row, attach the LATEST right row whose time
@@ -159,7 +161,11 @@ object AsOfJoin {
   // Contract: each agg must IGNORE NULLS over its right-side input
   // columns (max/min/sum/avg/count(col) — not count(*)/count(lit)),
   // because left rows that share a (key, time) group with right rows
-  // enter the window group carrying nulls in the right columns.
+  // enter the window group carrying nulls in the right columns. Each
+  // agg must also be ORDER-INSENSITIVE: right rows of one (key, time)
+  // group reach the group window in no defined order, so first/last/
+  // collect_list would answer with whichever row the shuffle delivered
+  // first. Those three are rejected up front (tagAndUnionRaw).
 
   /** [[backward]] with the right side aggregated per (key, time) on the
     * join's own shuffle. `aggs` are (outputName, aggregateColumn) over
@@ -278,6 +284,14 @@ object AsOfJoin {
     require(rawCols.intersect(leftCols).isEmpty,
       s"right columns ${rawCols.intersect(leftCols)} clash with left columns " +
         "(project the right side first)")
+    def orderSensitive(agg: Column): Boolean = GraftSqlBridge.resolvedAgg(rightRaw, agg).exists {
+      case _: First | _: Last | _: CollectList => true
+      case _ => false
+    }
+    val unordered = aggs.collect { case (n, c) if orderSensitive(c) => n }
+    require(unordered.isEmpty,
+      s"aggs ${unordered.mkString(", ")} are order-sensitive (first/last/collect_list): " +
+        "right rows of a (key, time) group have no order")
     val l = left
       .withColumn("__k", col(leftKey)).withColumn("__t", col(leftTime))
       .withColumn("__tag", lit(1))

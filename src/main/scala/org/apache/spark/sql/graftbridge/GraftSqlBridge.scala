@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -36,4 +37,12 @@ object GraftSqlBridge {
       rowCount = Some(BigInt(rowCount)))
     ofRows(session, LogicalRDD(output, rdd)(session, Some(stats)))
   }
+
+  /** The aggregate column `agg` as a Catalyst expression resolved
+    * against `df`'s columns, for checks that inspect what a caller
+    * passed: function names are looked up, so `first(x)` is a `First`
+    * node. Analysis only; no job runs.
+    */
+  def resolvedAgg(df: DataFrame, agg: Column): Expression =
+    df.agg(agg).queryExecution.analyzed.expressions.last
 }

@@ -63,6 +63,19 @@ class HarnessSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(s7.net >= 0.0)
   }
 
+  test("a named Bench run's second pass compiles no classes") {
+    val a = Harness.parse(Seq(s"--sf=$sf", "q1_agg"), "unused")
+    val wm = WorkMetricsListener.install(spark)
+    val passes = try Bench.measure(spark, wm, a, runs = 2)
+      finally spark.sparkContext.removeSparkListener(wm)
+    val Seq(cold, warm) = passes.map(_.records.head)
+    assert(!cold.failed && !warm.failed)
+    assert(warm.compiles == 0 && warm.compileMs == 0.0, warm.line)
+    // printed in the counter line and written to the artifact entry
+    assert(warm.line.contains("compiles=0 compile=0.0 ms"), warm.line)
+    assert(warm.json.endsWith(""","compiles":0,"compile_ms":0.0}"""), warm.json)
+  }
+
   test("Verify drops a stale result of a failing query, and names restrict oracle_sql.json") {
     val out = Files.createTempDirectory("verify_out").toString
     val noTables = Files.createTempDirectory("no_tables").toString

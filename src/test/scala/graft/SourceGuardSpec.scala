@@ -18,6 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    count, confs and warm-up cannot drift between entry points, and
   *    `WorkMetricsListener` is the only listener, so every per-query and
   *    per-stage counter comes from one place.
+  *  - Session confs: `.config("spark.…")` is spelled only in
+  *    `GraftSession`, so every engine session carries the same confs;
+  *    the JVM-wide codegen cache in particular is sized by whichever
+  *    session compiles first.
   *  - Spark's private SQL surface (the classic session and Dataset,
   *    `Dataset.ofRows`, `LogicalRDD` construction) is reached only
   *    through `GraftSqlBridge`, so that dependency stays in one file.
@@ -60,6 +64,11 @@ class SourceGuardSpec extends AnyFunSuite {
   test("sessions are built only through Harness") {
     guard("""GraftSession\.builder\(""".r, Set("GraftSession.scala", "Harness.scala"),
       "get the session from graft.Harness.session")
+  }
+
+  test("session confs are set only in GraftSession") {
+    guard("""\.config\("spark\.""".r, Set("GraftSession.scala"),
+      "add the conf to graft.GraftSession.builder")
   }
 
   test("WorkMetricsListener is the only SparkListener registered") {

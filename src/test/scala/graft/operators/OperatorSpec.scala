@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import graft.core.SparkTestBase
 
@@ -1605,6 +1605,26 @@ class AsOfJoinSpec extends SparkTestBase {
     rejects(AsOfJoin.backwardAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))
     rejects(AsOfJoin.forwardAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))
     rejects(AsOfJoin.nearestAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))
+  }
+
+  test("agg variants reject order-sensitive aggregates (first, last, collect_list)") {
+    // right rows of one (key, time) group reach the group window in no
+    // defined order: an order-sensitive agg would answer with whichever
+    // row the shuffle delivered first, so every agg variant refuses it,
+    // also when it sits inside a larger expression
+    val left = Seq((1L, 10L, "a")).toDF("k", "t", "ev")
+    val rightRaw = Seq((1L, 5L, 100L), (1L, 5L, 200L)).toDF("rk", "rt", "v")
+    val joins = Seq[Seq[(String, Column)] => Any](
+      AsOfJoin.backwardAgg(left, rightRaw, "k", "rk", "t", "rt", _),
+      AsOfJoin.forwardAgg(left, rightRaw, "k", "rk", "t", "rt", _),
+      AsOfJoin.nearestAgg(left, rightRaw, "k", "rk", "t", "rt", _))
+    for (bad <- Seq(first(col("v")), last(col("v"), ignoreNulls = true),
+        size(collect_list(col("v"))) + 1); join <- joins) {
+      val e = intercept[IllegalArgumentException](join(Seq("m" -> max(col("v")), "bad" -> bad)))
+      assert(e.getMessage.contains("order-sensitive") && e.getMessage.contains("aggs bad "), e.getMessage)
+    }
+    // order-insensitive aggs still join
+    joins.foreach(join => join(Seq("m" -> max(col("v")), "n" -> count(col("v")))))
   }
 
   test("agg variants plan ONE exchange for the whole join (no right pre-agg shuffle)") {
