@@ -28,7 +28,8 @@ import Shape.Shape
   * [[DcaFrame.Staging]] handle of its staged sort cache, which knows the
   * dense-index range each cached partition holds. A slice or int index
   * of such a frame reads only the cached partitions its index range
-  * overlaps, so its cost follows the window, not the frame.
+  * overlaps, so its cost follows the window, not the frame; a 1-D slice
+  * carries a borrowed view of the same cache, so it slices the same way.
   *
   * Static fields (constant across the batch, untouched by every op —
   * `array_dataclass.py:192-198`) live in [[statics]].
@@ -60,12 +61,10 @@ final case class DcaFrame(
   def idxCols: Vector[String] = DcaFrame.idxColNames(ndim)
   private def idx(i: Int): Column = col(s"__idx$i")
 
-  /** Copy for DERIVED views (reshape/slice/gather/mapField/zip/...):
-    * the result rides on the parent's staged cache but does NOT own it —
-    * its [[unpersist]] must not release a cache the parent and sibling
-    * frames still depend on. Only the constructing frame
-    * ([[DcaFrame.fromDF]]/[[mask]]) or the session sweep
-    * (`CacheTracker.release`) releases staging.
+  /** Copy for DERIVED frames (reshape/gather/mapField/zip/...): the
+    * result rides on the parent's staged cache but carries no handle to
+    * it, so later indexing takes the general path. Only a 1-D slice of a
+    * staged frame keeps a (borrowed) handle — see [[apply]].
     */
   private def derived(df: DataFrame = df, shape: Shape = shape,
       arrayCols: Vector[String] = arrayCols,
@@ -228,21 +227,25 @@ final case class DcaFrame(
     * `p[:, 2:5][idx_arr]`).
     *
     * On a staged 1-D frame (one carrying [[staging]]) a slice or int
-    * item reads only the cached partitions that overlap its index
-    * range, and within each only the positions in range; the predicate
-    * and remap below then run unchanged over those rows.
+    * item is served by the staged view alone, like numpy's basic
+    * slicing returns a view: [[DcaFrame.Staging.window]] reads only
+    * the cached partitions its positions overlap and emits the output
+    * index itself, so no predicate or remap over per-call bounds
+    * reaches codegen and a new window compiles no new class. A result
+    * that is one 1-D slice carries the composed view as its own
+    * (borrowed) [[staging]], so slices of slices, `p[i]` of a window and
+    * [[iterFirstDim]] stay on this path.
     */
   def apply(items: Indexing.Ix*): DcaFrame = {
     val resolved = Indexing.resolve(items, shape)
-    var cur = staging.filter(_ => ndim == 1).flatMap { st =>
+    // (view, output length) when the staged view serves the one real item
+    val viewed = staging.filter(_ => ndim == 1).flatMap { st =>
       resolved.collectFirst {
-        case (_, Indexing.Resolved.Int(i)) => st.window(df.schema, i, i)
-        case (_, Indexing.Resolved.Slice(start, step, len)) =>
-          val last = start + (len - 1) * step
-          if (len == 0) st.window(df.schema, 0L, -1L)
-          else st.window(df.schema, math.min(start, last), math.max(start, last))
+        case (_, Indexing.Resolved.Int(i))                  => (st.view(i, 1L), 1L)
+        case (_, Indexing.Resolved.Slice(start, step, len)) => (st.view(start, step), len)
       }
-    }.getOrElse(df)
+    }
+    var cur = viewed.fold(df) { case (v, len) => v.window(df.schema, len) }
     var axis = 0          // input axis being consumed
     var outPos = 0        // output axis position
     val outCols = Vector.newBuilder[(String, Column)]
@@ -252,12 +255,16 @@ final case class DcaFrame(
         outCols += ((s"__oidx$outPos", lit(0L)))
         outPos += 1
       case (_, Indexing.Resolved.Int(i)) =>
-        cur = cur.filter(col(s"__idx$axis") === lit(i))
+        if (viewed.isEmpty) cur = cur.filter(col(s"__idx$axis") === lit(i))
         axis += 1
       case (_, Indexing.Resolved.Gather(idxs)) =>
         // pass the axis through untouched here; gather applies below
         outCols += ((s"__oidx$outPos", col(s"__idx$axis")))
         gathers += ((outPos, idxs))
+        axis += 1
+        outPos += 1
+      case (_, Indexing.Resolved.Slice(_, _, _)) if viewed.isDefined =>
+        outCols += ((s"__oidx$outPos", col(s"__idx$axis")))
         axis += 1
         outPos += 1
       case (_, Indexing.Resolved.Slice(start, step, newLen)) =>
@@ -275,10 +282,16 @@ final case class DcaFrame(
     }
     // shape BEFORE the gathers apply: gather axes keep their full dim
     val interShape = Indexing.resultShape(resolved, gatherKeepsDim = true)
-    val sel = outCols.result().map { case (n, c) => c.as(n) } ++ arrayCols.map(col)
-    val out = cur.select(sel: _*)
-    val fin = interShape.indices.foldLeft(out)((d, i) => d.withColumnRenamed(s"__oidx$i", s"__idx$i"))
-    val basic = derived(df = fin, shape = interShape)
+    val basic = viewed match {
+      // one 1-D slice: the window is the result, its view the result's staging
+      case Some((v, _)) if resolved.size == 1 && interShape.length == 1 =>
+        copy(df = cur, shape = interShape, staging = Some(v))
+      case _ =>
+        val sel = outCols.result().map { case (n, c) => c.as(n) } ++ arrayCols.map(col)
+        val out = cur.select(sel: _*)
+        val fin = interShape.indices.foldLeft(out)((d, i) => d.withColumnRenamed(s"__oidx$i", s"__idx$i"))
+        derived(df = fin, shape = interShape)
+    }
     val gs = gathers.result()
     // numpy multi-advanced-index semantics: the index arrays broadcast
     // together and are applied DIAGONALLY (p[[a,b],[c,d]] picks
@@ -592,16 +605,16 @@ final case class DcaFrame(
     copy(df = df.persist(level))
 
   /** Release this frame's backing caches: the staged dense-index sort
-    * (created by [[DcaFrame.fromDF]]/[[mask]] — only those CONSTRUCTING
-    * frames carry it; derived views do not own it) plus any explicit
-    * [[persist]] of the view itself. Neither this frame NOR any frame
-    * derived from it may be used after release — downstream jobs would
-    * re-execute the range shuffle with fresh sampled bounds and could
-    * silently mis-index. Windows cut by [[apply]] read the cache
-    * directly, so they die with it too.
+    * when this frame owns it (the frame [[DcaFrame.fromDF]]/[[mask]]
+    * built; a slice of it only borrows the cache, and freeing the slice
+    * frees nothing of it) plus any explicit [[persist]] of this frame.
+    * After the owner's release neither it NOR any frame derived from it
+    * may be used — downstream jobs would re-execute the range shuffle
+    * with fresh sampled bounds and could silently mis-index. Windows
+    * cut by [[apply]] read the cache directly, so they die with it too.
     */
   def unpersist(): DcaFrame = {
-    staging.foreach(s => CacheTracker.free(s.frame))
+    staging.filter(_.owned).foreach(s => CacheTracker.free(s.frame))
     copy(df = df.unpersist(), staging = None)
   }
 
@@ -677,42 +690,64 @@ final case class DcaFrame(
 object DcaFrame {
   def idxColNames(ndim: Int): Vector[String] = (0 until ndim).map(i => s"__idx$i").toVector
 
-  /** The staged sort cache behind a [[fromDF]]/[[DcaFrame.mask]] frame:
-    * the persisted sorted `frame` and the dense-index range of each of
-    * its cached partitions — partition p holds indices
-    * `[offsets(p), offsets(p + 1))`, in cache order.
+  /** The staged sort cache behind a [[fromDF]]/[[DcaFrame.mask]] frame,
+    * seen as an affine view: element `k` of the view is the cached row
+    * at dense position `first + k * step`. `frame` is the persisted
+    * sorted frame and `offsets` the dense-position range of each cached
+    * partition — partition p holds positions `[offsets(p), offsets(p + 1))`,
+    * in cache order. The constructing frame's handle is the identity
+    * view (`first = 0, step = 1`) and [[owned]]: only it frees the
+    * cache. [[view]] composes a slice into a borrowed handle over the
+    * same cache, the way a numpy slice is an offset and stride over the
+    * same buffer.
     */
-  final class Staging(val frame: DataFrame, val offsets: Vector[Long]) {
+  final class Staging(val frame: DataFrame, val offsets: Vector[Long],
+      val first: Long = 0L, val step: Long = 1L, val owned: Boolean = true) {
     private lazy val cached = frame.queryExecution.toRdd
 
-    /** Rows `lo..hi` (inclusive; empty when `hi < lo`) of the indexed
-      * view whose schema is `view` (`__idx0`, then columns of `frame`),
-      * read from only the cached partitions that overlap the range and,
-      * within each, only the positions in range. A lazy leaf whose
-      * statistics carry the window's exact row count: building it runs
-      * no job and pins nothing; it reads the staged cache, so it dies
-      * with [[DcaFrame.unpersist]] / the session sweep like any view.
+    /** Element `k` of the result is element `start + k * s` of this
+      * view; borrowed, so freeing it frees nothing.
       */
-    def window(view: StructType, lo: Long, hi: Long): DataFrame = {
+    def view(start: Long, s: Long): Staging =
+      new Staging(frame, offsets, first + start * step, step * s, owned = false)
+
+    /** The first `len` elements of this view as a frame whose schema is
+      * `schema` (`__idx0`, then columns of `frame`), read from only the
+      * cached partitions that overlap their positions and, within each,
+      * only the positions in range and on the step; `__idx0` is the
+      * element number `(pos - first) / step`. No per-call value enters
+      * a generated expression. A lazy leaf whose statistics carry the
+      * exact row count `len`: building it runs no job and pins nothing;
+      * it reads the staged cache, so it dies with the owner's
+      * [[DcaFrame.unpersist]] / the session sweep like any view.
+      */
+    def window(schema: StructType, len: Long): DataFrame = {
+      val (f, s) = (first, step) // locals: the task closure must not capture the handle
+      val last = f + (len - 1) * s
+      val (lo, hi) = if (len <= 0) (0L, -1L) else (math.min(f, last), math.max(f, last))
       val kept = (0 until offsets.length - 1)
         .filter(p => offsets(p) <= hi && offsets(p + 1) > lo && offsets(p + 1) > offsets(p))
       val starts = kept.map(offsets).toArray
       val keptSet = kept.toSet
-      val ords = view.fieldNames.tail.map(frame.schema.fieldIndex)
+      val ords = schema.fieldNames.tail.map(frame.schema.fieldIndex)
       val types = ords.map(frame.schema(_).dataType)
       val rows = PartitionPruningRDD.create(cached, keptSet).mapPartitionsWithIndex { (i, it) =>
         var pos = starts(i)
         while (pos < lo && it.hasNext) { it.next(); pos += 1 }
-        it.takeWhile(_ => pos <= hi).map { r =>
-          val out = new GenericInternalRow(ords.length + 1)
-          out.setLong(0, pos)
-          var k = 0
-          while (k < ords.length) { out.update(k + 1, r.get(ords(k), types(k))); k += 1 }
+        it.takeWhile(_ => pos <= hi).flatMap { r =>
+          val off = pos - f
           pos += 1
-          out: InternalRow
+          if (off % s != 0) None
+          else {
+            val out = new GenericInternalRow(ords.length + 1)
+            out.setLong(0, off / s)
+            var k = 0
+            while (k < ords.length) { out.update(k + 1, r.get(ords(k), types(k))); k += 1 }
+            Some(out: InternalRow)
+          }
         }
       }
-      GraftSqlBridge.sizedRddFrame(frame.sparkSession, view, rows, math.max(0L, hi - lo + 1))
+      GraftSqlBridge.sizedRddFrame(frame.sparkSession, schema, rows, math.max(0L, len))
     }
   }
 

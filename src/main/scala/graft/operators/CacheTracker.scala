@@ -4,6 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of session-lived storage: every frame that outlives
@@ -42,6 +44,9 @@ import org.apache.spark.storage.StorageLevel
   * every still-registered frame in one step, so a memoized frame is
   * never served after its blocks are gone; the next memo access
   * rebuilds. `Staged.release` reaches the same sweep.
+  *
+  * '''Observe.''' [[pinnedBytes]] reads how many bytes the session's
+  * registered frames hold in block storage now.
   *
   * Registrations are STRONG references keyed by session identity, and
   * the sweep is the only cleanup — there is no GC fallback (r15: a
@@ -116,6 +121,35 @@ object CacheTracker {
     */
   def memo[A](s: SparkSession, key: String)(build: => A): A =
     pinned(s).memo.getOrElseUpdate(key, build).asInstanceOf[A]
+
+  /** Bytes the session's registered frames hold in block storage,
+    * memory plus disk: the storage info of each frame's cache RDD (a
+    * persisted frame) or leaf RDD (a truncated one). Reliable
+    * checkpoint files live outside block storage and are not counted;
+    * a frame pinned but not yet materialized counts 0. Drains the
+    * listener bus first, so blocks written by finished jobs are counted;
+    * runs no job.
+    */
+  def pinnedBytes(s: SparkSession): Long = {
+    org.apache.spark.graft.BusFlush.drain(s.sparkContext)
+    val p = sessions.synchronized(sessions.get(s))
+    val ids =
+      if (p == null) Set.empty[Int]
+      else p.frames.synchronized(p.frames.toArray(Array.empty[DataFrame])).flatMap(storedRdd).toSet
+    s.sparkContext.getRDDStorageInfo.filter(i => ids(i.id)).map(i => i.memSize + i.diskSize).sum
+  }
+
+  /** The RDD whose blocks hold `df`: a fresh plan over its logical
+    * plan sees the cache as it is now (the frame's own plan may predate
+    * its persist).
+    */
+  private def storedRdd(df: DataFrame): Option[Int] =
+    GraftSqlBridge.ofRows(df.sparkSession, df.queryExecution.logical).queryExecution.withCachedData match {
+      case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+        Some(m.cacheBuilder.cachedColumnBuffers.id)
+      case lr: LogicalRDD => Some(lr.rdd.id)
+      case _              => None
+    }
 
   /** The session sweep: evict the memo and free every pinned frame. */
   def release(s: SparkSession): Unit = {

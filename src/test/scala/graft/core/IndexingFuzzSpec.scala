@@ -25,6 +25,10 @@ import scala.util.Random
   * Every 1-D expression also runs over two STAGED twins of the same
   * rows — a `fromDF` frame cached in 4 partitions and a `mask` frame —
   * whose slices and ints read only the cached partitions they overlap.
+  * When it leaves a 1-D result, a second 1-D index expression is chained
+  * onto that result (slice of a slice, int of a slice, ± steps, empty
+  * slices: a staged slice is itself a view over the cache) and checked
+  * against the same chain on a `LocalDca` twin.
   */
 class IndexingFuzzSpec extends SparkTestBase {
 
@@ -119,7 +123,28 @@ class IndexingFuzzSpec extends SparkTestBase {
         r.getDouble(r.fieldIndex("x")).toLong)
     }.sortBy(_._1.mkString(","))
 
+  /** (coords, x) per element of a local result, row-major. */
+  private def localCells(l: LocalDca): Seq[(Vector[Long], Long)] = {
+    val strides = l.shape.scanRight(1L)(_ * _).tail
+    l.rows.zipWithIndex.map { case (r, k) =>
+      (l.shape.indices.map(a => k / strides(a) % l.shape(a)).toVector, r.getDouble(0).toLong)
+    }.sortBy(_._1.mkString(","))
+  }
+
   // ---- generators (seeded) ----------------------------------------
+
+  /** One 1-D index item for a chained case: an int (when the axis is
+    * non-empty) or a slice with ± step whose bounds may fall past both
+    * ends, so empty results occur.
+    */
+  private def genChained(rng: Random, d: Long): Indexing.Ix = {
+    import Indexing.Ix
+    if (d > 0 && rng.nextInt(3) == 0) Ix.I(rng.between(-d, d))
+    else {
+      val bound = () => if (rng.nextInt(4) == 0) None else Some(rng.between(-d - 2, d + 3))
+      Ix.S(bound(), bound(), (1L + rng.nextInt(3)) * (if (rng.nextBoolean()) 1L else -1L))
+    }
+  }
 
   private def genItems(rng: Random, shape: Vector[Long]): Seq[Indexing.Ix] = {
     import Indexing.Ix
@@ -154,6 +179,8 @@ class IndexingFuzzSpec extends SparkTestBase {
 
   test("fuzz: mixed index expressions match the dense local model (seeded, 60 cases)") {
     val rng = new Random(20260815L)
+    val chainRng = new Random(20261018L) // keeps the 60 first expressions as they were
+    val chainKinds = scala.collection.mutable.Set.empty[String]
     var executed = 0
     while (executed < 60) {
       val ndim = 1 + rng.nextInt(3)
@@ -167,13 +194,37 @@ class IndexingFuzzSpec extends SparkTestBase {
         s"shape=$shape items=$items: got shape ${got.shape}, want $wantShape")
       assert(collectCells(got) == wantCells,
         s"shape=$shape items=$items: cell mismatch")
-      if (ndim == 1) stagedTwins(shape.head).foreach { case (kind, t) =>
-        val g = t.apply(items: _*)
-        assert(g.shape == wantShape, s"$kind shape=$shape items=$items: got shape ${g.shape}")
-        assert(collectCells(g) == wantCells, s"$kind shape=$shape items=$items: cell mismatch")
-        t.unpersist()
+      if (ndim == 1) {
+        val chained =
+          if (wantShape.length == 1) Seq.fill(3)(genChained(chainRng, wantShape.head)) else Nil
+        val local = LocalDca(Vector.tabulate(shape.head.toInt)(i => Row(i.toDouble)),
+          payloadSchema, shape)(items: _*)
+        chained.foreach { ix =>
+          val outer = if (items.exists(_.isInstanceOf[Indexing.Ix.S])) "slice" else "other"
+          ix match {
+            case Indexing.Ix.S(_, _, st) =>
+              chainKinds += s"slice-of-$outer"
+              if (st < 0) chainKinds += "negative step"
+            case _ => chainKinds += s"int-of-$outer"
+          }
+          if (local(ix).size == 0) chainKinds += "empty"
+        }
+        stagedTwins(shape.head).foreach { case (kind, t) =>
+          val g = t.apply(items: _*)
+          assert(g.shape == wantShape, s"$kind shape=$shape items=$items: got shape ${g.shape}")
+          assert(collectCells(g) == wantCells, s"$kind shape=$shape items=$items: cell mismatch")
+          chained.foreach { ix =>
+            val (g2, want) = (g(ix), local(ix))
+            assert(g2.shape == want.shape, s"$kind items=$items then $ix: got shape ${g2.shape}")
+            assert(collectCells(g2) == localCells(want), s"$kind items=$items then $ix: cell mismatch")
+          }
+          t.unpersist()
+        }
       }
       executed += 1
+    }
+    Seq("slice-of-slice", "int-of-slice", "negative step", "empty").foreach { k =>
+      assert(chainKinds(k), s"no chained case of kind '$k' among $chainKinds")
     }
   }
 

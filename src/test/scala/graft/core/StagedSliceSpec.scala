@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -9,11 +10,13 @@ import Indexing.Ix
 
 /** Slices and int indexes of a STAGED 1-D frame (one built by `fromDF`
   * or `mask`) read only the cached partitions their index range
-  * overlaps. These cases pin the edges of that pruning — windows across
+  * overlaps, and a 1-D slice is itself a view over the same cache.
+  * These cases pin the edges of that pruning — windows across
   * partition boundaries, empty and negative-step slices, `p[i]`,
   * `iterFirstDim` — against a `LocalDca` twin of the same rows, and its
   * cost: one task for a window inside one partition, a broadcast join
-  * when two windows are zipped, nothing new pinned.
+  * when two windows are zipped, nothing new pinned, no class compiled
+  * per window. A view borrows the cache: only its owner frees it.
   */
 class StagedSliceSpec extends SparkTestBase {
   private val n = 1000L
@@ -121,5 +124,61 @@ class StagedSliceSpec extends SparkTestBase {
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("hashpartitioning"), plan)
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
+  }
+
+  test("windows at new offsets, their ±step slices and iterFirstDim compile no class") {
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val len = 60L
+    def win(s: Long) = staged(Ix.S(Some(s), Some(s + len)))
+    def run(f: DcaFrame): Unit = { f.collectOrdered(); () }
+    // warm-up: one window, one stride slice of it, and one p[i] (the
+    // 0-d shape iterFirstDim yields)
+    val w0 = win(7)
+    run(w0); run(w0(Ix.S(Some(1), None, 3))); run(w0(Ix.I(2)))
+    val before = compiles
+    (0 until 20).foreach { j =>
+      val w = win(40 + 45 * j) // 40..955: inside and across partitions
+      same(w, twin(Ix.S(Some(40 + 45 * j), Some(40 + 45 * j + len))), s"window $j")
+      run(w(Ix.S(Some(1), None, 3)))
+      run(w(Ix.S(None, None, -2)))
+    }
+    win(503).iterFirstDim().take(20).foreach(run)
+    val added = compiles - before
+    assert(added == 0, s"the sweep compiled $added classes: per-window values reach codegen")
+  }
+
+  test("a view borrows its owner's cache: only the owner frees it") {
+    def stored: Set[Int] = {
+      org.apache.spark.graft.BusFlush.drain(spark.sparkContext)
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    }
+    val before = stored
+    // the same rows as `staged` from a different plan: persisting an
+    // identical plan would share `staged`'s cache entry
+    val owner = DcaFrame.fromDF(
+      spark.range(0, n, 1, 2).select(col("id"), (col("id") * 10 + 7).as("v")), Seq(col("id")))
+    val mine = stored -- before
+    assert(mine.nonEmpty && owner.staging.get.owned)
+    val outer = Ix.S(Some(100), Some(700))
+    val inner = Ix.S(Some(450), Some(30), -3)
+    val w = owner(outer)
+    val ww = w(inner)
+    assert(w.staging.exists(!_.owned) && ww.staging.exists(!_.owned))
+    same(ww, twin(outer)(inner), "window of a window")
+    w.unpersist()
+    ww.unpersist()
+    assert(mine.subsetOf(stored), "unpersist on a view freed its owner's cache")
+    Seq(outer, inner, Ix.S(Some(999), None, -7)).foreach(ix => same(owner(ix), twin(ix), s"owner$ix"))
+    same(owner(Ix.I(-1)), twin(Ix.I(-1)), "owner[-1]")
+    // mask of a window owns a fresh cache of its own
+    val m = w.mask(col("v") % 3 === 1)
+    assert(m.staging.exists(_.owned) && !(m.staging.get.frame eq owner.staging.get.frame))
+    val masked = stored -- before -- mine
+    assert(masked.nonEmpty)
+    same(m, twin(outer).mask(_.getLong(1) % 3 == 1), "mask of a window")
+    m.unpersist()
+    assert((stored & masked).isEmpty && mine.subsetOf(stored))
+    owner.unpersist()
+    assert((stored & mine).isEmpty, "the owner's unpersist left its cache")
   }
 }

@@ -51,4 +51,18 @@ class CacheLifecycleSpec extends SparkTestBase {
       "the rebuilt frame must sit on a fresh staged cache")
     assert(rebuilt.size == li.size)
   }
+
+  test("pinnedBytes counts the session's materialized pins and drops to 0 on release") {
+    CacheTracker.release(spark)
+    assert(CacheTracker.pinnedBytes(spark) == 0L)
+    val cached = CacheTracker.persist(spark.range(0, 20000).selectExpr("id", "id * 3 AS v"))
+    assert(CacheTracker.pinnedBytes(spark) == 0L, "a persist that never ran holds no blocks")
+    assert(cached.count() == 20000L)
+    val persisted = CacheTracker.pinnedBytes(spark)
+    assert(persisted > 0L)
+    CacheTracker.truncate(spark.range(0, 20000).toDF("id"))
+    assert(CacheTracker.pinnedBytes(spark) > persisted, "a local checkpoint's blocks count too")
+    CacheTracker.release(spark)
+    assert(CacheTracker.pinnedBytes(spark) == 0L)
+  }
 }

@@ -111,7 +111,34 @@ class SkewJoinSpec extends SparkTestBase {
   * physical plan, not just hold by accident.
   */
 class PlanShapeSpec extends SparkTestBase {
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project,
+    Window => LWindow}
+  import org.apache.spark.sql.execution.LogicalRDD
+  import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
   private val sf = "/root/testdata/sf0.001"
+
+  /** The no-partitionBy windows in `plan` whose input is neither an
+    * Aggregate contraction nor a cached one. A persist/localCheckpoint
+    * on the contracted input substitutes an InMemoryRelation/LogicalRDD
+    * leaf for the Aggregate the detector would otherwise see (r14:
+    * q116's persisted histogram), so such a leaf counts — but only as
+    * the window's OWN input, reached through Project and Filter alone.
+    * A cached leaf further down (one side of a join, say; every staged
+    * DcaFrame window is a LogicalRDD leaf) bounds nothing.
+    */
+  private def windowsOverScan(plan: LogicalPlan): Seq[LWindow] = {
+    def cachedInput(p: LogicalPlan): Boolean = p match {
+      case _: InMemoryRelation | _: LogicalRDD => true
+      case Project(_, child)                   => cachedInput(child)
+      case Filter(_, child)                    => cachedInput(child)
+      case _                                   => false
+    }
+    plan.collect {
+      case w: LWindow if w.partitionSpec.isEmpty &&
+          w.child.collectFirst { case a: Aggregate => a }.isEmpty && !cachedInput(w.child) => w
+    }
+  }
 
   test("q38 stratified sample: the hash-threshold filter runs scan-side") {
     // static plan is the right surface here: DataFilters placement is
@@ -382,7 +409,6 @@ class PlanShapeSpec extends SparkTestBase {
     // substitutes InMemoryRelation/LogicalRDD into the optimized plan
     // and erases the Aggregate the backstop would otherwise see (r14:
     // q116's persisted histogram).
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     val allowed = Map(
       "q23b_rank_poorer" -> "distinct s_acctbal (bounded money domain; spec-guarded above)",
       "q101_skew_report" -> "counts-of-counts histogram (<= distinct multiplicities)",
@@ -396,31 +422,39 @@ class PlanShapeSpec extends SparkTestBase {
       "t51_calibration" -> "RankStats bucket totals (<= 4096)")
     val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val wins = fn(spark, sf).queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }
+        val plan = fn(spark, sf).queryExecution.optimizedPlan
+        val wins = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
         val unlisted =
           if (wins.nonEmpty && !allowed.contains(name)) Seq(s"$name:unaudited")
           else Nil
         // structural backstop for EVERY query (r15, ADVICE): an
         // allowlist entry exempts only the cached-contraction case its
-        // comment cites — a persist/localCheckpoint substituting an
-        // InMemoryRelation/LogicalRDD leaf for the Aggregate the
-        // detector would otherwise see. An allowlisted query whose
-        // no-partitionBy window sits directly over an uncached,
+        // comment cites (see windowsOverScan). An allowlisted query
+        // whose no-partitionBy window sits over an uncached,
         // unaggregated subtree has regressed to a fact-sized
         // single-task window and must still fail here.
-        val overScan = wins.collect {
-          case w if w.child.collectFirst { case a: Aggregate => a }.isEmpty &&
-              w.child.collectFirst {
-                case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
-                case l: org.apache.spark.sql.execution.LogicalRDD => l
-              }.isEmpty =>
-            s"$name:window-over-uncontracted-input"
-        }
+        val overScan = windowsOverScan(plan).map(_ => s"$name:window-over-uncontracted-input")
         unlisted ++ overScan
     }
     assert(offenders.isEmpty, s"single-task window stages in: $offenders")
+  }
+
+  test("window backstop: a cached leaf exempts only the window's own input") {
+    import org.apache.spark.sql.expressions.{Window => WSpec}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val leaf = spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 50L).map(org.apache.spark.sql.Row(_)), 2),
+      StructType(Seq(StructField("k", LongType))))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("r", row_number().over(WSpec.orderBy("k"))).queryExecution.optimizedPlan
+    assert(ranked(leaf).collectFirst { case l: LogicalRDD => l }.isDefined)
+    // the leaf through Project and Filter is the window's own input
+    assert(windowsOverScan(ranked(leaf.filter(col("k") > 3).select((col("k") * 2).as("k")))).isEmpty)
+    // a LogicalRDD on one side of a join with a raw scan bounds nothing
+    val joined = leaf.join(spark.range(0, 1000000).toDF("k"), "k")
+    assert(windowsOverScan(ranked(joined)).size == 1)
+    assert(windowsOverScan(ranked(spark.range(100).toDF("k"))).size == 1)
+    assert(windowsOverScan(ranked(leaf.groupBy("k").count())).isEmpty)
   }
 
   test("GLOBAL: no fact-sized window partitioned on a bounded low-NDV key") {
