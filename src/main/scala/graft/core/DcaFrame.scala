@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRowWithSchema}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.operators.CacheTracker
 import Shape.Shape
@@ -23,6 +24,13 @@ import Shape.Shape
   * op that needs a global re-index; it uses a per-partition-offset
   * zipWithIndex (two light jobs), never a single-partition window, so
   * it survives 100-TB inputs (SURVEY §7.5.1).
+  *
+  * Each operation is one pass over the fields, as the reference's is one
+  * numpy view or `tree_map`: a single projection that computes each
+  * output `__idx*` column under its final name, over at most one join —
+  * a broadcast local index table for integer-array gathers, the shared
+  * batch index for [[zipJoin]], a replicating range per axis for
+  * [[broadcastTo]].
   *
   * A 1-D frame built by [[DcaFrame.fromDF]] or [[mask]] carries the
   * [[DcaFrame.Staging]] handle of its staged sort cache, which knows the
@@ -134,12 +142,9 @@ final case class DcaFrame(
         val q = if (st(i) == 1L) col("__graft_lin") % lit(target(i))
                 else if (i == 0) expr(s"__graft_lin div ${st(i)}")
                 else expr(s"__graft_lin div ${st(i)}") % lit(target(i))
-        q.cast(LongType).as(s"__nidx$i")
+        q.cast(LongType).as(s"__idx$i")
       }
-      val kept = arrayCols.map(col)
-      val renamed = withLin.select(newIdx ++ kept: _*)
-      val fin = target.indices.foldLeft(renamed)((d, i) => d.withColumnRenamed(s"__nidx$i", s"__idx$i"))
-      derived(df = fin, shape = target)
+      derived(df = withLin.select(newIdx ++ arrayCols.map(col): _*), shape = target)
     }
   }
 
@@ -171,11 +176,9 @@ final case class DcaFrame(
       val dims = group.map(sizes)
       val strides = dims.scanRight(1L)(_ * _).tail
       group.zip(strides).map { case (n, st) => nameIdx(n) * lit(st) }
-        .reduce(_ + _).cast(LongType).as(s"__nidx$gi")
+        .reduce(_ + _).cast(LongType).as(s"__idx$gi")
     }
-    val out = df.select(newIdx ++ arrayCols.map(col): _*)
-    val fin = newShape.indices.foldLeft(out)((d, i) => d.withColumnRenamed(s"__nidx$i", s"__idx$i"))
-    derived(df = fin, shape = newShape)
+    derived(df = df.select(newIdx ++ arrayCols.map(col): _*), shape = newShape)
   }
 
   /** Expand the batch shape (dim-1/new-leading axes up), every payload
@@ -193,24 +196,17 @@ final case class DcaFrame(
     if (t == shape) this
     else {
       val spark = df.sparkSession
-      // old axis j (0-based in current shape) becomes target axis j+pad;
-      // rename back-to-front to avoid collisions
-      var cur = df
-      for (j <- (ndim - 1) to 0 by -1)
-        cur = cur.withColumnRenamed(s"__idx$j", s"__tidx${j + pad}")
-      for (i <- t.indices) {
-        val keepOld = i >= pad && padded(i) == t(i)
-        if (!keepOld) {
-          // old dim-1 constant column is replaced by the replicating range
-          if (i >= pad) cur = cur.drop(s"__tidx$i")
-          cur =
-            if (t(i) == 1L) cur.withColumn(s"__tidx$i", lit(0L))
-            else cur.crossJoin(broadcast(spark.range(t(i)).toDF(s"__tidx$i")))
-        }
+      // target axis i >= pad keeps old axis i - pad when its size is
+      // unchanged; any other axis of size n > 1 is a replicating range
+      def kept(i: Int) = i >= pad && padded(i) == t(i)
+      val ranges = t.indices.filter(i => !kept(i) && t(i) != 1L)
+      val crossed = ranges.foldLeft(df)((d, i) =>
+        d.crossJoin(broadcast(spark.range(t(i)).toDF(s"__tidx$i"))))
+      val newIdx = t.indices.map { i =>
+        (if (kept(i)) col(s"__idx${i - pad}") else if (t(i) == 1L) lit(0L) else col(s"__tidx$i"))
+          .as(s"__idx$i")
       }
-      val finalCols = t.indices.map(i => col(s"__tidx$i").cast(LongType).as(s"__idx$i")) ++
-        arrayCols.map(col)
-      derived(df = cur.select(finalCols: _*), shape = t)
+      derived(df = crossed.select(newIdx ++ arrayCols.map(col): _*), shape = t)
     }
   }
 
@@ -221,10 +217,9 @@ final case class DcaFrame(
   /** numpy indexing on the batch dims: int / slice / ellipsis /
     * newaxis / integer-array (`array_dataclass.py:382-390`,
     * `:1006-1035`). Basic items are narrow (predicates + index remap,
-    * no shuffle); an `Ix.A` integer-array item composes as a
-    * [[gatherAxis]] on its output axis AFTER the basic items — numpy's
-    * single-advanced-index semantics (`p[idx_arr, 2:5]` ==
-    * `p[:, 2:5][idx_arr]`).
+    * no shuffle); integer-array items gather on their output axes
+    * AFTER the basic items, as one [[gatherZip]] — numpy's
+    * advanced-index semantics (`p[idx_arr, 2:5]` == `p[:, 2:5][idx_arr]`).
     *
     * On a staged 1-D frame (one carrying [[staging]]) a slice or int
     * item is served by the staged view alone, like numpy's basic
@@ -248,23 +243,23 @@ final case class DcaFrame(
     var cur = viewed.fold(df) { case (v, len) => v.window(df.schema, len) }
     var axis = 0          // input axis being consumed
     var outPos = 0        // output axis position
-    val outCols = Vector.newBuilder[(String, Column)]
+    val outIdx = Vector.newBuilder[Column]
     val gathers = Vector.newBuilder[(Int, Vector[Long])] // (output axis, indices)
     resolved.foreach {
       case (_, Indexing.Resolved.New) =>
-        outCols += ((s"__oidx$outPos", lit(0L)))
+        outIdx += lit(0L).as(s"__idx$outPos")
         outPos += 1
       case (_, Indexing.Resolved.Int(i)) =>
         if (viewed.isEmpty) cur = cur.filter(col(s"__idx$axis") === lit(i))
         axis += 1
       case (_, Indexing.Resolved.Gather(idxs)) =>
         // pass the axis through untouched here; gather applies below
-        outCols += ((s"__oidx$outPos", col(s"__idx$axis")))
+        outIdx += col(s"__idx$axis").as(s"__idx$outPos")
         gathers += ((outPos, idxs))
         axis += 1
         outPos += 1
       case (_, Indexing.Resolved.Slice(_, _, _)) if viewed.isDefined =>
-        outCols += ((s"__oidx$outPos", col(s"__idx$axis")))
+        outIdx += col(s"__idx$axis").as(s"__idx$outPos")
         axis += 1
         outPos += 1
       case (_, Indexing.Resolved.Slice(start, step, newLen)) =>
@@ -276,7 +271,7 @@ final case class DcaFrame(
           off < lit(newLen * stepAbs))
         // integral div (exact over the full long range)
         val offSql = if (step > 0) s"(__idx$axis - $start)" else s"($start - __idx$axis)"
-        outCols += ((s"__oidx$outPos", expr(s"$offSql div $stepAbs").cast(LongType)))
+        outIdx += expr(s"$offSql div $stepAbs").cast(LongType).as(s"__idx$outPos")
         axis += 1
         outPos += 1
     }
@@ -287,10 +282,7 @@ final case class DcaFrame(
       case Some((v, _)) if resolved.size == 1 && interShape.length == 1 =>
         copy(df = cur, shape = interShape, staging = Some(v))
       case _ =>
-        val sel = outCols.result().map { case (n, c) => c.as(n) } ++ arrayCols.map(col)
-        val out = cur.select(sel: _*)
-        val fin = interShape.indices.foldLeft(out)((d, i) => d.withColumnRenamed(s"__oidx$i", s"__idx$i"))
-        derived(df = fin, shape = interShape)
+        derived(df = cur.select(outIdx.result() ++ arrayCols.map(col): _*), shape = interShape)
     }
     val gs = gathers.result()
     // numpy multi-advanced-index semantics: the index arrays broadcast
@@ -316,14 +308,7 @@ final case class DcaFrame(
           case (_, Indexing.Resolved.New)            => true
           case _                                     => false
         }
-      if (separated) basic.gatherZip(gs.map(_._1), gs.map(_._2), toFront = true)
-      else if (gs.size == 1) basic.gatherAxis(gs.head._2, gs.head._1)
-      else {
-        val positions = gs.map(_._1)
-        require(positions.zip(positions.tail).forall { case (a, b) => b == a + 1 },
-          s"internal: non-separated advanced indices must be adjacent, got $positions")
-        basic.gatherZip(positions, gs.map(_._2))
-      }
+      basic.gatherZip(gs.map(_._1), gs.map(_._2), toFront = separated)
     }
   }
 
@@ -342,7 +327,6 @@ final case class DcaFrame(
     */
   private def gatherZip(positions: Vector[Int], lists: Vector[Vector[Long]],
                         toFront: Boolean = false): DcaFrame = {
-    import org.apache.spark.sql.types.StructField
     val m = positions.length
     // numpy broadcast rule per dim: all non-1 lengths must agree (so
     // (0,) broadcasts with (1,) to (0,) — max() would wrongly reject it)
@@ -361,14 +345,13 @@ final case class DcaFrame(
           "(gatherZip requires resolved, in-bounds indices)"))
     }
     val expanded = lists.map(l => if (l.length == len) l else Vector.fill(len)(l.head))
-    ((0 until m).map(a => s"__src$a") :+ "__zpos").foreach { r =>
+    val tableCols = (0 until m).map(a => s"__src$a") :+ "__pos"
+    tableCols.foreach { r =>
       require(!df.columns.contains(r), s"$r is a reserved column name") }
-    val spark = df.sparkSession
-    val fields = (0 until m).map(a => StructField(s"__src$a", LongType)) :+
-      StructField("__zpos", LongType)
+    // a local relation, not an RDD: broadcasting it launches no job
     val rows = (0 until len).map(k => Row.fromSeq(expanded.map(_(k)) :+ k.toLong))
-    val idxDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), StructType(fields.toArray))
+    val idxDf = df.sparkSession.createDataFrame(rows.asJava,
+      StructType(tableCols.map(StructField(_, LongType, nullable = false))))
     val cond = positions.zipWithIndex
       .map { case (ax, a) => col(s"__idx$ax") === col(s"__src$a") }.reduce(_ && _)
     val joined = df.join(broadcast(idxDf), cond)
@@ -385,7 +368,7 @@ final case class DcaFrame(
     val keptBefore = kept.take(insertAt)
     val keptAfter = kept.drop(insertAt)
     val outIdx = keptBefore.zipWithIndex.map { case (ax, i) => col(s"__idx$ax").as(s"__idx$i") } ++
-      Seq(col("__zpos").as(s"__idx$insertAt")) ++
+      Seq(col("__pos").as(s"__idx$insertAt")) ++
       keptAfter.zipWithIndex.map { case (ax, i) => col(s"__idx$ax").as(s"__idx${insertAt + 1 + i}") }
     val newShape = (keptBefore.map(shape) :+ len.toLong) ++ keptAfter.map(shape)
     derived(df = joined.select(outIdx ++ arrayCols.map(col): _*), shape = newShape)
@@ -414,25 +397,17 @@ final case class DcaFrame(
     */
   def gather(indices: Seq[Long]): DcaFrame = gatherAxis(indices, 0)
 
-  /** Driver-side integer-array gather along any axis. */
+  /** Driver-side integer-array gather along any axis: the one-axis,
+    * in-place case of [[gatherZip]] after negative indices resolve, so
+    * `p.gatherAxis(idxs, ax)` plans exactly like `p[..., idxs, ...]`.
+    */
   def gatherAxis(indices: Seq[Long], axis: Int): DcaFrame = {
     require(ndim >= 1, "gather needs ndim >= 1")
-    Seq("__src", "__pos").foreach { r =>
-      require(!df.columns.contains(r), s"$r is a reserved column name") }
     val ax = Shape.toAbsoluteAxis(axis, ndim)
     val dim = shape(ax)
     indices.zipWithIndex.foreach { case (i, k) =>
       require(i >= -dim && i < dim, s"gather index $i (pos $k) out of bounds for dim $dim") }
-    val spark = df.sparkSession
-    val resolvedIdx = indices.map(i => if (i < 0) i + dim else i)
-    import spark.implicits._
-    val idxDf = resolvedIdx.zipWithIndex.map { case (src, pos) => (src, pos.toLong) }
-      .toDF("__src", "__pos")
-    val joined = df.join(broadcast(idxDf), col(s"__idx$ax") === col("__src"))
-      .drop(s"__idx$ax", "__src")
-      .withColumnRenamed("__pos", s"__idx$ax")
-    val newShape = shape.updated(ax, indices.length.toLong)
-    derived(df = joined.select(idxCols.map(col) ++ arrayCols.map(col): _*), shape = newShape)
+    gatherZip(Vector(ax), Vector(indices.map(i => if (i < 0) i + dim else i).toVector))
   }
 
   /** DISTRIBUTED integer-array gather along axis 0 (S8 at scale,
@@ -591,23 +566,17 @@ final case class DcaFrame(
   def asDataset[T: org.apache.spark.sql.Encoder]: org.apache.spark.sql.Dataset[T] =
     df.select(arrayCols.map(col): _*).as[T]
 
-  /** Ordered driver-side typed materialization (small data / tests). */
+  /** Ordered driver-side typed materialization (small data / tests):
+    * the rows of [[collectOrdered]], decoded through a local relation.
+    */
   def collectTyped[T: org.apache.spark.sql.Encoder](): Seq[T] =
-    df.orderBy(idxCols.map(col): _*).select(arrayCols.map(col): _*).as[T]
+    df.sparkSession.createDataFrame(collectOrdered().toSeq.asJava, payloadSchema).as[T]
       .collect().toSeq
 
-  /** Storage-placement analog of the reference's `.to(device)` (I6,
-    * `array_dataclass.py:565-581`): placement is the cluster's job; the
-    * user-controllable knob is the storage level.
-    */
-  def persist(level: org.apache.spark.storage.StorageLevel =
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DcaFrame =
-    copy(df = df.persist(level))
-
-  /** Release this frame's backing caches: the staged dense-index sort
-    * when this frame owns it (the frame [[DcaFrame.fromDF]]/[[mask]]
-    * built; a slice of it only borrows the cache, and freeing the slice
-    * frees nothing of it) plus any explicit [[persist]] of this frame.
+  /** Release the staged dense-index sort this frame owns (the frame
+    * [[DcaFrame.fromDF]]/[[mask]] built); a slice of it only borrows
+    * the cache, and freeing the slice frees nothing. Pinning is
+    * [[CacheTracker]]'s job, so this is the only cache a frame holds.
     * After the owner's release neither it NOR any frame derived from it
     * may be used — downstream jobs would re-execute the range shuffle
     * with fresh sampled bounds and could silently mis-index. Windows
@@ -615,7 +584,7 @@ final case class DcaFrame(
     */
   def unpersist(): DcaFrame = {
     staging.filter(_.owned).foreach(s => CacheTracker.free(s.frame))
-    copy(df = df.unpersist(), staging = None)
+    copy(staging = None)
   }
 
   // ---------------------------------------------------------------------
@@ -637,43 +606,23 @@ final case class DcaFrame(
     (selfB, otherB, joint)
   }
 
-  /** Zip two same-shape frames on the batch index (inner equi-join on
-    * `__idx*`) — the executed form of V2 arg alignment. Column clashes
-    * from `other` get `suffix`.
+  /** Zip `other`, whose shape extends this frame's (`other.shape` =
+    * `this.shape ++ extra`; equal shapes are `extra = ()`), on the
+    * shared leading batch index — the executed form of V2 arg alignment
+    * (`vectorization.py:246-300`): each self element is replicated
+    * across its arg element's `extra` dims. Inner equi-join on the
+    * shared `__idx*` prefix; the result has `other.shape` and carries
+    * `other`'s payload after this frame's, a clashing name suffixed.
     */
   def zipJoin(other: DcaFrame, suffix: String = "_r"): DcaFrame = {
-    require(other.shape == shape, s"zipJoin shapes differ: $shape vs ${other.shape}")
+    require(other.shape.take(ndim) == shape && other.ndim >= ndim,
+      s"zipJoin: ${other.shape} does not extend $shape")
     val rCols = other.arrayCols.map(n => if (arrayCols.contains(n)) n + suffix else n)
-    val rdf = other.arrayCols.zip(rCols).foldLeft(other.df) { case (d, (o, n)) =>
-      if (o == n) d else d.withColumnRenamed(o, n)
-    }
-    val joined = df.join(rdf, idxCols)
-    derived(df = joined, arrayCols = arrayCols ++ rCols, statics = statics ++ other.statics)
-  }
-
-  /** Zip a frame whose shape EXTENDS this one's (`other.shape` =
-    * `this.shape ++ extra`) on the shared leading index — the executed
-    * form of V2's extra-trailing-dims broadcast
-    * (`vectorization.py:246-300`): each self element is replicated
-    * across its arg element's `extra` dims. Equi-join on the shared
-    * `__idx*` prefix; the result carries other's full index (shape =
-    * `other.shape`).
-    */
-  def zipJoinPrefix(other: DcaFrame, suffix: String = "_r"): DcaFrame = {
-    require(other.shape.length >= ndim && other.shape.take(ndim) == shape,
-      s"zipJoinPrefix: ${other.shape} does not extend $shape")
-    if (other.ndim == ndim) zipJoin(other, suffix)
-    else {
-      val rCols = other.arrayCols.map(n => if (arrayCols.contains(n)) n + suffix else n)
-      val rdf = other.arrayCols.zip(rCols).foldLeft(other.df) { case (d, (o, n)) =>
-        if (o == n) d else d.withColumnRenamed(o, n)
-      }
-      val joined = df.join(rdf, idxCols) // shared prefix; right keeps __idx{ndim..}
-      val outCols = DcaFrame.idxColNames(other.ndim).map(col) ++
-        (arrayCols ++ rCols).map(col)
-      DcaFrame(joined.select(outCols: _*), other.shape,
-        arrayCols ++ rCols, statics ++ other.statics)
-    }
+    val rdf = other.df.select(other.idxCols.map(col) ++
+      other.arrayCols.zip(rCols).map { case (o, n) => col(o).as(n) }: _*)
+    val joined = df.join(rdf, idxCols) // the right side keeps __idx{ndim..}
+    derived(df = joined.select((other.idxCols ++ arrayCols ++ rCols).map(col): _*),
+      shape = other.shape, arrayCols = arrayCols ++ rCols, statics = statics ++ other.statics)
   }
 
   /** V2 end-to-end: align `other` per the reference's vectorize
@@ -683,7 +632,7 @@ final case class DcaFrame(
     */
   def vectorizeZip(other: DcaFrame, suffix: String = "_r"): DcaFrame = {
     val (selfB, otherB, _) = alignForVectorize(other)
-    selfB.zipJoinPrefix(otherB, suffix)
+    selfB.zipJoin(otherB, suffix)
   }
 }
 
@@ -877,20 +826,15 @@ object DcaFrame {
     require(frames.forall(_.arrayCols == frames.head.arrayCols),
       "stack field mismatch (schema equality check, ops.py:63-71)")
     val ax = Shape.toAbsoluteAxisInsert(axis, s0.length)
-    val ndimNew = s0.length + 1
     val tagged = frames.zipWithIndex.map { case (f, k) =>
-      // old axis j -> new axis (j < ax ? j : j+1); new axis ax = k
-      var d = f.df
-      for (j <- (s0.length - 1) to 0 by -1)
-        d = d.withColumnRenamed(s"__idx$j", s"__nidx${if (j < ax) j else j + 1}")
-      d.withColumn(s"__nidx$ax", lit(k.toLong))
+      // new axis ax = k; old axis j -> new axis (j < ax ? j : j+1)
+      val newIdx = (0 to s0.length).map { i =>
+        (if (i == ax) lit(k.toLong) else col(s"__idx${if (i < ax) i else i - 1}")).as(s"__idx$i")
+      }
+      f.df.select(newIdx ++ f.arrayCols.map(col): _*)
     }
-    val unioned = tagged.reduce(_ unionByName _)
     val newShape = (s0.take(ax) :+ frames.size.toLong) ++ s0.drop(ax)
-    val fin = (0 until ndimNew).foldLeft(unioned)((d, i) => d.withColumnRenamed(s"__nidx$i", s"__idx$i"))
-    DcaFrame(
-      fin.select(idxColNames(ndimNew).map(col) ++ frames.head.arrayCols.map(col): _*),
-      newShape, frames.head.arrayCols, frames.head.statics)
+    DcaFrame(tagged.reduce(_ unionByName _), newShape, frames.head.arrayCols, frames.head.statics)
   }
 
   /** Concatenate along an EXISTING axis (M2, `ops.py:109-121`):

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{DcaFrame, Indexing}
@@ -17,16 +17,6 @@ import QueryDef.{table, cents}
   * columns (dense, order-significant — SURVEY §1.1 row identity).
   */
 object DcaQueries {
-
-  /** lineitem as a 1-D DcaFrame with payload (keys + qty cents);
-    * staged once per session (see [[Staged]]).
-    */
-  private def liFrame(s: SparkSession, dir: String): DcaFrame =
-    Staged.liFrame(s, dir)
-  private def liFlagFrame(s: SparkSession, dir: String, flag: String): DcaFrame =
-    Staged.liFlagFrame(s, dir, flag)
-  private def liWideFrame(s: SparkSession, dir: String): DcaFrame =
-    Staged.liWideFrame(s, dir)
 
   // NO trailing orderBy: the output carries its __idx columns (order is
   // reconstructable and the gate compare is order-insensitive), and a
@@ -48,7 +38,7 @@ object DcaQueries {
 
     // S2: reshape = pure index arithmetic (narrow, no shuffle)
     "dca_s2_reshape" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)),
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)),
       Some(baseCte +
         """
           |SELECT rn // 4 AS __idx0, rn % 4 AS __idx1, l_orderkey, l_linenumber, qty_c
@@ -56,7 +46,7 @@ object DcaQueries {
 
     // S6: strided slice p[10:5000:7]
     "dca_s6_slice" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(Some(10), Some(5000), 7))),
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(Some(10), Some(5000), 7))),
       Some(baseCte +
         """
           |SELECT (rn - 10) // 7 AS __idx0, l_orderkey, l_linenumber, qty_c
@@ -64,7 +54,7 @@ object DcaQueries {
 
     // S6: negative-stride slice p[100:10:-3]
     "dca_s6_negstride" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(Some(100), Some(10), -3))),
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(Some(100), Some(10), -3))),
       Some(baseCte +
         """
           |SELECT (100 - rn) // 3 AS __idx0, l_orderkey, l_linenumber, qty_c
@@ -72,7 +62,7 @@ object DcaQueries {
 
     // S7: boolean mask + dense re-index (THE canonical filter)
     "dca_s7_mask" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir).mask(col("qty_c") >= 4800)),
+      (s, dir) => out(Staged.liFrame(s, dir).mask(col("qty_c") >= 4800)),
       Some(baseCte +
         """
           |SELECT row_number() OVER (ORDER BY rn) - 1 AS __idx0, l_orderkey, l_linenumber, qty_c
@@ -80,7 +70,7 @@ object DcaQueries {
 
     // S8: integer-array gather (order-preserving, repeats allowed)
     "dca_s8_gather" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir).gather(Seq(4999L, 0L, 4999L, 17L, 3000L))),
+      (s, dir) => out(Staged.liFrame(s, dir).gather(Seq(4999L, 0L, 4999L, 17L, 3000L))),
       Some(baseCte + """,
           |  g(pos, src) AS (VALUES (0, 4999), (1, 0), (2, 4999), (3, 17), (4, 3000))
           |SELECT CAST(g.pos AS BIGINT) AS __idx0, b.l_orderkey, b.l_linenumber, b.qty_c
@@ -92,7 +82,7 @@ object DcaQueries {
     // "array" scales with the data instead of living on the driver.
     "dca_s8b_gather_df" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir)
+        val f = Staged.liFrame(s, dir)
         val n = f.shape.head
         val ord = table(s, dir, "orders")
           .select(col("o_orderkey"),
@@ -115,7 +105,7 @@ object DcaQueries {
     // slice on axis 1 (numpy single-advanced-index semantics),
     // including a negative index and a repeat
     "dca_s8c_mixed_index" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
         .apply(Ix.A(Seq(7L, 3L, -1L, 1499L, 0L)), Ix.S(Some(1), Some(3)))),
       Some(baseCte + """,
           |  g(pos, src) AS (VALUES (0, 7), (1, 3), (2, 1499), (3, 1499), (4, 0))
@@ -131,7 +121,7 @@ object DcaQueries {
     // index on each axis and a repeated row. ONE composite-key
     // broadcast join — never sequential gathers (outer product).
     "dca_s8d_diag_gather" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
         .apply(Ix.A(Seq(7L, 3L, -1L, 1499L, 0L)), Ix.A(Seq(0L, 3L, 2L, -4L, 1L)))),
       Some(baseCte + """,
           |  g(pos, s0, s1) AS (VALUES
@@ -147,7 +137,7 @@ object DcaQueries {
     // indices and a repeat; result shape (1500, 6).
     "dca_s8e_gather_axis1" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
+        val f = Staged.liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
         val nat = table(s, dir, "nation").filter(col("n_nationkey") < 6)
           .select(col("n_nationkey"),
             ((col("n_nationkey") * 5 + 3) % 8 - 4).cast("long").as("src"))
@@ -171,7 +161,7 @@ object DcaQueries {
     // middle axis follows). Negative indices on both arrays and a
     // repeated row; still ONE composite-key broadcast join.
     "dca_s8f_sep_advanced" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(500, 4, 3)
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(500, 4, 3)
         .apply(Ix.A(Seq(7L, 3L, -1L, 499L, 0L)), Ix.All, Ix.A(Seq(0L, 2L, 1L, -3L, 1L)))),
       Some(baseCte + """,
           |  g(pos, s0, s2) AS (VALUES
@@ -188,7 +178,7 @@ object DcaQueries {
     // the right order.
     "dca_s9_iter" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
+        val f = Staged.liFrame(s, dir)(Ix.S(None, Some(6000))).reshape(1500, 4)
         val elems = f.iterFirstDim().slice(5, 8).toSeq
         out(DcaFrame.stack(elems))
       },
@@ -205,7 +195,7 @@ object DcaQueries {
     // codegen'd projection); rides the session-staged frame.
     "dca_s12_nested" -> QueryDef(
       (s, dir) => {
-        val lf = liFrame(s, dir)(Ix.S(None, Some(2000)))
+        val lf = Staged.liFrame(s, dir)(Ix.S(None, Some(2000)))
         val nested = DcaFrame(
           lf.df.select(col("__idx0"), col("l_orderkey"), col("l_linenumber"),
             struct(col("qty_c").as("q"), (col("qty_c") % 7).as("r")).as("item")),
@@ -223,8 +213,8 @@ object DcaQueries {
     // M1: stack along a NEW axis (union + axis tag, narrow)
     "dca_m1_stack" -> QueryDef(
       (s, dir) => {
-        val a = liFlagFrame(s, dir, "A")(Ix.S(None, Some(1000)))
-        val r = liFlagFrame(s, dir, "R")(Ix.S(None, Some(1000)))
+        val a = Staged.liFlagFrame(s, dir, "A")(Ix.S(None, Some(1000)))
+        val r = Staged.liFlagFrame(s, dir, "R")(Ix.S(None, Some(1000)))
         out(DcaFrame.stack(Seq(a, r)))
       },
       Some("""WITH a AS (SELECT row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS rn,
@@ -251,8 +241,8 @@ object DcaQueries {
     // for an interior-tag layout (m1 covers the axis-0 leading tag).
     "dca_m1b_stack_negaxis" -> QueryDef(
       (s, dir) => {
-        val a = liFlagFrame(s, dir, "A")(Ix.S(None, Some(1000))).reshape(500, 2)
-        val r = liFlagFrame(s, dir, "R")(Ix.S(None, Some(1000))).reshape(500, 2)
+        val a = Staged.liFlagFrame(s, dir, "A")(Ix.S(None, Some(1000))).reshape(500, 2)
+        val r = Staged.liFlagFrame(s, dir, "R")(Ix.S(None, Some(1000))).reshape(500, 2)
         out(DcaFrame.stack(Seq(a, r), axis = -1))
       },
       Some("""WITH a AS (SELECT row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS rn,
@@ -274,7 +264,7 @@ object DcaQueries {
     // M2: concat along the EXISTING axis (union + offset re-index)
     "dca_m2_concat" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir)
+        val f = Staged.liFrame(s, dir)
         val a = f(Ix.S(None, Some(500)))
         val b = f(Ix.S(Some(500), Some(1200)))
         val c = f(Ix.S(Some(1200), Some(1500)))
@@ -300,7 +290,7 @@ object DcaQueries {
 
     // S11: map_field — elementwise projection over every array column
     "dca_s11_mapfield" -> QueryDef(
-      (s, dir) => out(liWideFrame(s, dir)(Ix.S(None, Some(2000))).mapField(c => c * 2 + 1)),
+      (s, dir) => out(Staged.liWideFrame(s, dir)(Ix.S(None, Some(2000))).mapField(c => c * 2 + 1)),
       Some("""WITH base AS (
              |  SELECT row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS rn,
              |    CAST(round(l_quantity*100) AS BIGINT) AS qty_c,
@@ -312,7 +302,7 @@ object DcaQueries {
     // S3: einops reshape — "(h w) -> w h" transposes the (1500,4)
     // factorization; pure index arithmetic even though axes permute
     "dca_s3_einops" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(None, Some(6000)))
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(None, Some(6000)))
         .reshapeEinops("(h w) -> w h", "w" -> 4L)),
       Some(baseCte +
         """
@@ -321,7 +311,7 @@ object DcaQueries {
 
     // S13: replace — functional field update as projection
     "dca_s13_replace" -> QueryDef(
-      (s, dir) => out(liFrame(s, dir)(Ix.S(None, Some(1000)))
+      (s, dir) => out(Staged.liFrame(s, dir)(Ix.S(None, Some(1000)))
         .replaceField("qty_c", col("qty_c") * 10 + 7)),
       Some(baseCte +
         """
@@ -333,7 +323,7 @@ object DcaQueries {
     // reference's rules, then zipped on the batch index
     "dca_v1_vectorize" -> QueryDef(
       (s, dir) => {
-        val self = liFrame(s, dir)(Ix.S(None, Some(2000)))
+        val self = Staged.liFrame(s, dir)(Ix.S(None, Some(2000)))
         val factorDf = table(s, dir, "region")
           .agg(count(lit(1)).as("factor"))
         val arg = DcaFrame.fromDF(factorDf, Seq(col("factor")))
@@ -357,7 +347,7 @@ object DcaQueries {
     // prefix.
     "dca_v3_extradims" -> QueryDef(
       (s, dir) => {
-        val self = liFrame(s, dir)(Ix.S(None, Some(2000)))
+        val self = Staged.liFrame(s, dir)(Ix.S(None, Some(2000)))
         val arg = DcaFrame.fromDF(
           table(s, dir, "nation").filter(col("n_nationkey") < 3)
             .select(col("n_nationkey").cast("long").as("mult")),
@@ -451,7 +441,7 @@ object DcaQueries {
     // index (equi-join on __idx*); the shifted slice makes it a lead().
     "dca_v2_zip" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir)
+        val f = Staged.liFrame(s, dir)
         val cur = f(Ix.S(None, Some(2000)))
         val nxt = f(Ix.S(Some(1), Some(2001)))
         out(cur.zipJoin(nxt))
@@ -476,7 +466,7 @@ object DcaQueries {
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
         val path = s"target/dca_i4_$tag"
         Staged.cached(s, s"i4:$dir") {
-          liFrame(s, dir).saveParquet(path)
+          Staged.liFrame(s, dir).saveParquet(path)
           out(DcaFrame.loadParquet(s, path))
         }
       },
@@ -494,7 +484,7 @@ object DcaQueries {
     // struct shells preserved.
     "dca_v10_treemap" -> QueryDef(
       (s, dir) => {
-        val lf = liFrame(s, dir)(Ix.S(None, Some(1500)))
+        val lf = Staged.liFrame(s, dir)(Ix.S(None, Some(1500)))
         val nested = DcaFrame(
           lf.df.select(col("__idx0"), col("l_orderkey"),
             struct(col("qty_c").as("q"),
@@ -522,7 +512,7 @@ object DcaQueries {
     // boundary, like the reference's in-process as_np).
     "dca_i5_localview" -> QueryDef(
       (s, dir) => Staged.cached(s, s"i5:$dir") {
-        val lf = liFrame(s, dir)(Ix.S(None, Some(300)))
+        val lf = Staged.liFrame(s, dir)(Ix.S(None, Some(300)))
         val rows = lf.collectOrdered().toSeq
         val payloadSchema = org.apache.spark.sql.types.StructType(
           lf.df.schema.fields.filter(f => lf.arrayCols.contains(f.name)))
@@ -608,7 +598,7 @@ object DcaQueries {
     // cannot hash-match.
     "dca_s1_meta" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir)
+        val f = Staged.liFrame(s, dir)
         // scale-robust: trim to a multiple of 6, then a 2-D reshape —
         // every emitted number is count arithmetic the oracle replays
         val m = f.length - f.length % 6
@@ -633,7 +623,7 @@ object DcaQueries {
     // static that leaked into (or out of) the data path cannot match.
     "dca_v8_statics" -> QueryDef(
       (s, dir) => {
-        val f = liFrame(s, dir).replaceStatic("scale_c", 7L)
+        val f = Staged.liFrame(s, dir).replaceStatic("scale_c", 7L)
           .replaceStatic("scale_c", 9L) // S13's static half: last write wins
         val scale = f.statics("scale_c").asInstanceOf[Long]
         out(f(Ix.S(None, Some(2000)))

@@ -1922,7 +1922,7 @@ object Relational {
       (s, dir) => {
         val cutoff = "1996-01-01"
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = Staged.cachedPath(s, s"evo:$dir") {
+        val path = Staged.cachedAny(s, s"evo:$dir") {
           val p = s"target/orders_evo_$tag"
           val orders = table(s, dir, "orders")
           orders.filter(col("o_orderdate") < lit(cutoff))
@@ -2994,7 +2994,7 @@ object Relational {
     "q98_csv_quarantine" -> QueryDef(
       (s, dir) => {
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = Staged.cachedPath(s, s"csvq:$dir") {
+        val path = Staged.cachedAny(s, s"csvq:$dir") {
           val p = s"target/csv_quarantine_$tag"
           table(s, dir, "orders")
             .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),

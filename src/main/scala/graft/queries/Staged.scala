@@ -67,8 +67,6 @@ object Staged {
   private def force(v: Any): Unit = v match {
     case d: DataFrame =>
       if (d.storageLevel != StorageLevel.NONE) { d.count(); () }
-    case f: DcaFrame => // before Product: own cache path
-      if (f.df.storageLevel != StorageLevel.NONE) { f.df.count(); () }
     case p: Product => p.productIterator.foreach(force)
     case _ => ()
   }
@@ -107,41 +105,38 @@ object Staged {
     }
   }
 
-  /** lineitem as a 1-D DcaFrame ordered by (l_orderkey, l_linenumber),
-    * payload (keys + qty cents); persisted (inside fromDF) on first
-    * build.
+  /** A 1-D DcaFrame over the lineitem rows `rows` keeps, ordered by
+    * (l_orderkey, l_linenumber), staged under `key`; persisted (inside
+    * fromDF) on first build. Payload: the keys and qty cents, or with
+    * `price` qty and price cents.
     */
-  def liFrame(s: SparkSession, dir: String): DcaFrame =
-    staged(s, s"li:$dir") {
-      val df = table(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          cents(col("l_quantity")).as("qty_c"))
-      DcaFrame.fromDF(df, Seq(col("l_orderkey"), col("l_linenumber")))
+  private def lineitemFrame(s: SparkSession, dir: String, key: String,
+      rows: DataFrame => DataFrame = identity, price: Boolean = false): DcaFrame =
+    staged(s, key) {
+      val df = rows(table(s, dir, "lineitem"))
+        .select(Seq(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
+          cents(col("l_quantity")).as("qty_c")) ++
+          (if (price) Seq(cents(col("l_extendedprice")).as("price_c")) else Nil): _*)
+      DcaFrame.fromDF(df, Seq(col("l_orderkey"), col("l_linenumber")),
+        arrayCols = if (price) Seq("qty_c", "price_c") else Nil)
     }
+
+  /** lineitem as a 1-D DcaFrame: payload keys + qty cents. */
+  def liFrame(s: SparkSession, dir: String): DcaFrame =
+    lineitemFrame(s, dir, s"li:$dir")
 
   /** lineitem restricted to one return flag, same ordering/payload as
     * [[liFrame]] — staged per (dir, flag) so stack/concat queries reuse
     * the constructed frame instead of paying fromDF per invocation.
     */
   def liFlagFrame(s: SparkSession, dir: String, flag: String): DcaFrame =
-    staged(s, s"liflag:$dir:$flag") {
-      val df = table(s, dir, "lineitem").filter(col("l_returnflag") === flag)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          cents(col("l_quantity")).as("qty_c"))
-      DcaFrame.fromDF(df, Seq(col("l_orderkey"), col("l_linenumber")))
-    }
+    lineitemFrame(s, dir, s"liflag:$dir:$flag", _.filter(col("l_returnflag") === flag))
 
   /** lineitem frame with a two-column (qty, price) cents payload —
     * shared by the mapField family.
     */
   def liWideFrame(s: SparkSession, dir: String): DcaFrame =
-    staged(s, s"liwide:$dir") {
-      val df = table(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          cents(col("l_quantity")).as("qty_c"), cents(col("l_extendedprice")).as("price_c"))
-      DcaFrame.fromDF(df, Seq(col("l_orderkey"), col("l_linenumber")),
-        arrayCols = Seq("qty_c", "price_c"))
-    }
+    lineitemFrame(s, dir, s"liwide:$dir", price = true)
 
   /** Contracted event-transition graph (src, dst, cost): the full
     * scan + per-user window + groupBy contracts millions of
@@ -281,18 +276,11 @@ object Staged {
   def checkpointed(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     staged(s, key)(CacheTracker.truncate(build))
 
-  /** Memoized disk-artifact path: the builder writes its files once
-    * per (session, key) and returns the path; later calls reuse the
-    * on-disk artifact (nothing to unpersist — the next session
-    * overwrites).
-    */
-  def cachedPath(s: SparkSession, key: String)(build: => String): String =
-    staged(s, key)(build)
-
   /** Generic memoized staged value: composite index artifacts (e.g.
     * [[graft.operators.ProductQuant.IvfPqIndex]]: driver-side codebooks
-    * + an encoded-corpus frame) and operator results that arrive
-    * already pinned (e.g. [[graft.operators.Dedup.connectedComponents]]).
+    * + an encoded-corpus frame), operator results that arrive
+    * already pinned (e.g. [[graft.operators.Dedup.connectedComponents]])
+    * and the paths of disk artifacts a builder writes once per session.
     * Pinned frames nested anywhere in the case-class/tuple structure
     * are force-materialized at build; the build block pins every frame it
     * wants cached through [[CacheTracker]], which frees it on release.
@@ -372,15 +360,6 @@ object Staged {
         .simhashColsFromHashes(docShingleHashesPortable(s, dir), 60))
     }
 
-  /** lineitem + orders staged ONCE per (session, dir) as 8-bucket
-    * parquet TABLES on the order key ([[graft.sources.GraftIO
-    * .writeBucketed]]) — the warehouse pattern for recurring joins at
-    * 100 TB: pay one bucketed write, then every join over the pair
-    * reads co-located buckets and plans zero exchanges on the join
-    * key. Table names carry a dir tag so scales never collide. The
-    * tables are disk-backed (nothing to unpersist at release; the next
-    * session overwrites them).
-    */
   /** lineitem written ONCE per (session, dir) as a range-clustered
     * manifested table ([[graft.sources.GraftIO.writeWithManifest]] on
     * l_orderkey) under target/ — the data-skipping pattern: pay one
@@ -455,6 +434,15 @@ object Staged {
       (factPath, dimPath)
     }
 
+  /** lineitem + orders staged ONCE per (session, dir) as 8-bucket
+    * parquet TABLES on the order key ([[graft.sources.GraftIO
+    * .writeBucketed]]) — the warehouse pattern for recurring joins at
+    * 100 TB: pay one bucketed write, then every join over the pair
+    * reads co-located buckets and plans zero exchanges on the join
+    * key. Table names carry a dir tag so scales never collide. The
+    * tables are disk-backed (nothing to unpersist at release; the next
+    * session overwrites them).
+    */
   def bucketedLiOrd(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     staged(s, s"bkt:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

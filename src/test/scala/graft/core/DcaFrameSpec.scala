@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -207,6 +209,13 @@ class DcaFrameSpec extends SparkTestBase {
       assert(got.shape == Vector(len.toLong), s"shape for $a0 / $a1")
       assert(idxAndX(got).map(_._2) == want, s"values for $a0 / $a1")
     }
+    // the zipped index table is a local relation, so broadcasting it
+    // launches no job: the only RDD leaves are the fromLocal source's
+    def leaves(f: DcaFrame): Seq[LogicalPlan] = f.df.queryExecution.optimizedPlan.collectLeaves()
+    def rddIds(ls: Seq[LogicalPlan]): Set[Int] = ls.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val zipped = leaves(p(Ix.A(Seq(3L, 0L)), Ix.A(Seq(2L, -3L))))
+    assert(zipped.count(_.isInstanceOf[LocalRelation]) == 1, zipped)
+    assert(rddIds(zipped) == rddIds(leaves(p)), zipped)
     // an Int between two advanced indices vanishes -> still adjacent
     val q = points(24).reshape(4, 2, 3)
     val mid = q(Ix.A(Seq(1L, 3L)), Ix.I(1L), Ix.A(Seq(0L, 2L)))
@@ -383,6 +392,15 @@ class DcaFrameSpec extends SparkTestBase {
     assert(z.arrayCols == Vector("x", "y", "x_r", "y_r"))
     val rows = z.df.orderBy("__idx0").select("x", "x_r").collect().toSeq
     assert(rows.map(r => (r.getDouble(0), r.getDouble(1))) == Seq((0.0, 0.0), (1.0, 10.0), (2.0, 20.0)))
+    // zipJoin on a shape that extends this one's: each element meets its
+    // arg's trailing row
+    val zx = points(3).zipJoin(points(6).reshape(3, 2))
+    assert(zx.shape == Vector(3L, 2L) && zx.arrayCols == Vector("x", "y", "x_r", "y_r"))
+    assert(zx.df.orderBy(zx.idxCols.map(col): _*).select("x", "x_r").collect().toSeq
+      .map(r => (r.getDouble(0), r.getDouble(1))) ==
+      Seq((0.0, 0.0), (0.0, 1.0), (1.0, 2.0), (1.0, 3.0), (2.0, 4.0), (2.0, 5.0)))
+    // a shape that does not extend it still rejects
+    intercept[IllegalArgumentException](points(3).zipJoin(points(6).reshape(2, 3)))
   }
 
   test("mapRows: arbitrary scalar fn over payload (V1 general path)") {
