@@ -245,29 +245,21 @@ object VectorExpressions {
   }
 
   /** Register the graft native functions in the session's function
-    * registry so they are usable from `expr(...)` and SQL. Idempotent.
+    * registry so they are usable from `expr(...)` and SQL. Idempotent:
+    * a name already registered is left alone, so operators may call
+    * this per invocation.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      dotF32Builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sq_dist_i64"),
-      new ExpressionInfo(classOf[SqDistI64].getName, "sq_dist_i64"),
-      sqDistI64Builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      polyHashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("kmin_sketch"),
-      new ExpressionInfo(classOf[KMinSketch].getName, "kmin_sketch"),
-      KMinSketch.builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("topk_sketch"),
-      new ExpressionInfo(classOf[TopKSketch].getName, "topk_sketch"),
-      TopKSketch.builder)
+    val registry = spark.sessionState.functionRegistry
+    def add(name: String, cls: Class[_], builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.registerFunction(FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    add("dot_f32", classOf[DotF32], dotF32Builder)
+    add("sq_dist_i64", classOf[SqDistI64], sqDistI64Builder)
+    add("poly_hash", classOf[PolyHash], polyHashBuilder)
+    add("minhash_signature", classOf[MinHashSignature], MinHashSignature.builder)
+    add("kmin_sketch", classOf[KMinSketch], KMinSketch.builder)
+    add("topk_sketch", classOf[TopKSketch], TopKSketch.builder)
   }
 }
 
@@ -292,6 +284,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       FunctionIdentifier("poly_hash"),
       new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
       VectorExpressions.polyHashBuilder))
+    e.injectFunction((
+      FunctionIdentifier("minhash_signature"),
+      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
+      MinHashSignature.builder))
     e.injectFunction((
       FunctionIdentifier("kmin_sketch"),
       new ExpressionInfo(classOf[KMinSketch].getName, "kmin_sketch"),

@@ -3,11 +3,19 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.MinHashSignature
+
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH near-dup, SimHash near-dup. All distributed-first:
   * shuffles are on short keys (hashes / band buckets), never on full
   * document text; candidate generation is LSH (linear), with the exact
   * verification join only over candidates.
+  *
+  * MinHash signatures are per-document: the native `minhash_signature`
+  * kernel ([[graft.functions.MinHashSignature]], through [[signatures]])
+  * signs each row of a shingle table in one pass. Band rows are a narrow
+  * projection of that table, so [[nearDupPairs]] runs as one action and
+  * pins only its shingle table.
   */
 object Dedup {
 
@@ -40,133 +48,102 @@ object Dedup {
 
   // ---- MinHash + LSH ----------------------------------------------------
 
-  /** Prime modulus for the permutation hashes: fits 32 bits so
-    * a*h+b stays within Long.
-    */
-  private val P = 2147483647L
-  /** Deterministic permutation parameters (public LCG constants). */
-  private def aParam(i: Int): Long = 1L + 2L * ((1103515245L * i + 12345L) % (P / 4))
-  private def bParam(i: Int): Long = (6364136223846793005L * i + 1442695040888963407L) % P match {
-    case x if x < 0 => x + P
-    case x => x
-  }
-
   /** Permutation i's (a, b) and the modulus, read-only — the
     * d29 estimator oracle embeds them as SQL literals so the DuckDB
     * replay uses the EXACT permutation family.
     */
-  private[graft] def permParams(i: Int): (Long, Long) = (aParam(i), bParam(i))
-  private[graft] def permModulus: Long = P
+  private[graft] def permParams(i: Int): (Long, Long) = (MinHashSignature.a(i), MinHashSignature.b(i))
+  private[graft] def permModulus: Long = MinHashSignature.P
 
   /** Engine-portable 60-bit shingle hash: two independent polynomial
     * hashes packed as bits 0..29 (base 31 mod 1e9+7) and 30..59
     * (base 37 mod 1073741789) — reproducible in any SQL engine with
     * 64-bit integer arithmetic (the DuckDB oracle recomputes it
     * exactly), unlike xxhash64. Mixing is weaker than xxhash64; prefer
-    * [[shingleHashTable]]'s default in production and this one when
-    * cross-engine verification matters. Requires
-    * [[graft.functions.VectorExpressions.register]].
+    * the default family in production and this one (family
+    * "portable60" of [[signatures]]) when cross-engine verification
+    * matters. Requires [[graft.functions.VectorExpressions.register]].
     */
   def portableHash60(c: Column): Column =
     call_function("poly_hash", c) +
       call_function("poly_hash", c, lit(37L), lit(1073741789L)) * lit(1073741824L)
 
   /** Per-(doc, shingle) rows with the RAW hash of each shingle
-    * (default xxhash64). Hash each shingle string EXACTLY ONCE — the
-    * array-lambda formulation re-evaluated the hash under every
-    * permutation (k× work) because Catalyst does not CSE across lambda
-    * bodies. The same table feeds both MinHash and SimHash
-    * (stage/persist it when running both).
+    * (default xxhash64): the exploded table SimHash sketches from.
+    * Hash each shingle string EXACTLY ONCE — the array-lambda
+    * formulation re-evaluated the hash under every permutation (k×
+    * work) because Catalyst does not CSE across lambda bodies.
     */
   def shingleHashTable(docs: DataFrame, idCol: String, shinglesCol: String,
                        hashFn: Column => Column = xxhash64(_)): DataFrame =
     docs.select(col(idCol).as("__id"), explode(col(shinglesCol)).as("__s"))
       .select(col("__id"), hashFn(col("__s")).as("__h"))
 
-  /** Signatures from a pre-staged (__id, __h raw-hash) table. */
-  def signatureColsFromHashes(hashed: DataFrame, k: Int): DataFrame = {
-    val folded = pmod(col("__h"), lit(P))
-    val aggs = (0 until k).map { i =>
-      min(pmod(lit(aParam(i)) * folded + lit(bParam(i)), lit(P))).as(s"__m$i")
-    }
-    hashed.groupBy("__id").agg(aggs.head, aggs.tail: _*)
+  /** Per-document MinHash signatures (__id, __sig) of an (id, shingles)
+    * table: `__sig` is the array<bigint> of k permutation minima from
+    * the native [[graft.functions.MinHashSignature]] kernel — a narrow
+    * projection, no explode and no shuffle. A document with no shingle
+    * gets a NULL signature, so it has no band rows. `family` hashes the
+    * shingles: "xxhash64" (seed 42) or "portable60" ([[portableHash60]]).
+    */
+  def signatures(docs: DataFrame, idCol: String, shinglesCol: String, k: Int,
+                 family: String = "xxhash64"): DataFrame = {
+    graft.functions.VectorExpressions.register(docs.sparkSession)
+    docs.select(col(idCol).as("__id"),
+      call_function("minhash_signature", col(shinglesCol), lit(k), lit(family)).as("__sig"))
   }
 
-  /** Scala-side mirror of the Column signature path ([[signatureColsFromHashes]]
-    * over xxhash64 shingle hashes): the SAME seed-42 xxhash64 and the
-    * same (aParam, bParam, P) permutations, evaluated per row — for
-    * streaming operators that need a signature before any groupBy
-    * exists ([[graft.streaming.EventStream.nearDupCandidates]]).
-    * Returns None for docs with no shingles (the batch path drops them
-    * too: explode of an empty array yields no group). Spec-pinned
-    * equal to the Column path.
-    */
   /** Scala-side xxhash64 (seed 42) of one shingle — the SAME hash the
-    * Column path ([[shingleHashTable]]'s default) computes, for
-    * streaming rows that need a doc's hash SET before any groupBy
-    * exists ([[graft.streaming.EventStream.indexedNearDupAlerts]]).
+    * kernel's default family computes, for streaming rows that need a
+    * doc's hash SET before any frame exists
+    * ([[graft.streaming.EventStream.indexedNearDupAlerts]]).
     */
   def shingleHashLocal(s: String): Long =
     org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString(s),
       org.apache.spark.sql.types.StringType, 42L)
 
-  def minhashSignatureLocal(shingles: Iterable[String], k: Int): Option[Array[Long]] = {
-    if (shingles.isEmpty) return None
-    val sig = Array.fill(k)(Long.MaxValue)
-    shingles.foreach { s =>
-      val h0 = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType, 42L)
-      val f = java.lang.Math.floorMod(h0, P)
-      var i = 0
-      while (i < k) {
-        val v = java.lang.Math.floorMod(aParam(i) * f + bParam(i), P)
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
+  /** Scala-side twin of [[signatures]] for one document — the same
+    * seed-42 xxhash64 folded by the kernel's own loop
+    * ([[graft.functions.MinHashSignature.update]]) — for streaming
+    * operators that sign a row before any frame exists
+    * ([[graft.streaming.EventStream.nearDupCandidates]]). None for a
+    * document with no shingles, where the kernel yields NULL.
+    * Spec-pinned equal to the kernel.
+    */
+  def minhashSignatureLocal(shingles: Iterable[String], k: Int): Option[Array[Long]] =
+    if (shingles.isEmpty) None
+    else {
+      val sig = MinHashSignature.empty(k)
+      shingles.foreach(s => MinHashSignature.update(sig, shingleHashLocal(s)))
+      Some(sig)
     }
-    Some(sig)
-  }
 
-  /** Band-bucket table (__id, band, bh) of a shingle-hash table — the
-    * LSH index rows themselves. At scale this is the PERSISTED artifact
-    * an incremental pipeline maintains: append the new batch's rows,
-    * probe with an equi-join on the short (band, bh) key — see
-    * [[incrementalNearDupSurvivors]].
+  /** Band-bucket rows (__id, band, bh) of a signature table — the LSH
+    * index rows themselves: band j is the Murmur3 `hash` of signature
+    * entries j·rows .. j·rows+rows−1. At scale this is the PERSISTED
+    * artifact an incremental pipeline maintains ([[buildNearDupIndex]]);
+    * inline it is a narrow projection each consumer re-derives.
     */
-  def bandBuckets(hashed: DataFrame, bands: Int, rows: Int): DataFrame =
-    bandsFromSignatures(signatureColsFromHashes(hashed, bands * rows), bands, rows)
-
-  /** The band-explode half of [[bandBuckets]], over an already-built
-    * signature-columns table — so a caller that materializes signatures
-    * once (e.g. the fused probe table of [[indexedNearDupSurvivors]])
-    * can re-derive band rows per consumer with a cheap columnar explode
-    * instead of a second signature aggregation.
-    */
-  def bandsFromSignatures(sig: DataFrame, bands: Int, rows: Int): DataFrame = {
+  def bandBuckets(signed: DataFrame, bands: Int, rows: Int): DataFrame = {
     val bandStructs = (0 until bands).map { j =>
-      val bandCols = (0 until rows).map(r => col(s"__m${j * rows + r}"))
+      val bandCols = (0 until rows).map(r => col("__sig").getItem(j * rows + r))
       struct(lit(j).as("band"), hash(bandCols: _*).as("bh"))
     }
-    sig.select(col("__id"), explode(array(bandStructs: _*)).as("b"))
+    signed.filter(col("__sig").isNotNull)
+      .select(col("__id"), explode(array(bandStructs: _*)).as("b"))
       .select(col("__id"), col("b.band").as("band"), col("b.bh").as("bh"))
   }
 
-  /** [[signatureColsFromHashes]] PLUS the per-doc verify hash set
-    * (`__hs`, the distinct shingle hashes) in the SAME aggregation —
-    * one exchange and one pass over the exploded hash table where the
-    * signature and set consumers would otherwise each re-aggregate it.
-    * Set order is nondeterministic; every consumer uses order-free set
-    * arithmetic (array_intersect/size in [[verifyJaccard]]).
+  /** Per-document distinct shingle-HASH sets (__id, __hs) of an (id,
+    * shingles) table — the verify side of a persisted index; a document
+    * with no shingle gets no row. Order-free consumers only
+    * ([[verifyJaccard]]'s set arithmetic).
     */
-  def signatureAndSetCols(hashed: DataFrame, k: Int): DataFrame = {
-    val folded = pmod(col("__h"), lit(P))
-    val aggs = (0 until k).map { i =>
-      min(pmod(lit(aParam(i)) * folded + lit(bParam(i)), lit(P))).as(s"__m$i")
-    } :+ collect_set(col("__h")).as("__hs")
-    hashed.groupBy("__id").agg(aggs.head, aggs.tail: _*)
-  }
+  private def hashSets(docs: DataFrame, idCol: String, shinglesCol: String): DataFrame =
+    docs.filter(size(col(shinglesCol)) > 0)
+      .select(col(idCol).as("__id"),
+        array_distinct(transform(col(shinglesCol), s => xxhash64(s))).as("__hs"))
 
   /** Candidate pairs from a band-bucket table: self-join on (band, bh)
     * — the shuffle key is the short bucket id, and the join explodes
@@ -181,22 +158,28 @@ object Dedup {
       .distinct()
   }
 
-  /** LSH candidate pairs from a pre-staged (__id, __h) shingle-hash
-    * table: split the signatures into `bands` bands of `rows` values,
-    * hash each band, bucket-join within (band, hash).
+  /** LSH candidate pairs (doc_a < doc_b) from a [[signatures]] table
+    * with k ≥ bands·rows: split each signature into `bands` bands of
+    * `rows` values, hash each band, bucket-join within (band, hash).
+    * Both join sides re-derive the band rows from the signature table;
+    * nothing is pinned.
     *
     * For threshold t, miss probability per true pair is
     * (1 - t^rows)^bands — with rows=2, bands=64 a j=0.4 pair is missed
     * w.p. ~1.4e-5. Candidates are verified exactly downstream, so FPs
     * are free (just extra verify work) and recall is the only tunable.
     */
-  def lshCandidatesFromHashes(hashed: DataFrame, bands: Int, rows: Int): DataFrame = {
-    // the band table feeds BOTH self-join sides; truncated, not
-    // persisted (r14): each side would also re-ANALYZE the k-column
-    // signature aggregation lineage — the leaf hands both a bounded
-    // (id×bands × three longs) table
-    pairsFromBuckets(CacheTracker.truncate(bandBuckets(hashed, bands, rows)))
-  }
+  def lshCandidates(signed: DataFrame, bands: Int, rows: Int): DataFrame =
+    pairsFromBuckets(bandBuckets(signed, bands, rows))
+
+  /** [[lshCandidates]] from an exploded (__id, __h) [[shingleHashTable]]
+    * (default family): each document's hashes are collected and signed
+    * by the same kernel, so the candidates equal the per-document
+    * path's. For callers that hold only the exploded table.
+    */
+  def lshCandidatesFromHashes(hashed: DataFrame, bands: Int, rows: Int): DataFrame =
+    lshCandidates(signatures(hashed.groupBy("__id").agg(collect_list("__h").as("__hl")),
+      "__id", "__hl", bands * rows, "none"), bands, rows)
 
   // ---- LSH banding auto-tuner ------------------------------------------
 
@@ -211,19 +194,19 @@ object Dedup {
       recall: Double, impliedJ0: Double,
       recallOk: Boolean, withinBudget: Boolean)
 
-  /** Deterministic 1-in-`den` document sample of a (__id, __h)
-    * shingle-hash table: keeps a doc iff xxhash64(__id) mod den == 0 —
-    * stable across runs and partitionings, no RNG. Tune on the sample
+  /** Deterministic 1-in-`den` document sample of an `__id`-keyed table
+    * (e.g. [[signatures]]): keeps a doc iff xxhash64(__id) mod den == 0
+    * — stable across runs and partitionings, no RNG. Tune on the sample
     * at production scale; candidate volume extrapolates as den²
     * (collision RATE p is scale-free, pair count is n²·p/2).
     */
-  def deterministicDocSample(hashed: DataFrame, den: Int): DataFrame =
-    hashed.filter(pmod(xxhash64(col("__id")), lit(den.toLong)) === 0)
+  def deterministicDocSample(signed: DataFrame, den: Int): DataFrame =
+    signed.filter(pmod(xxhash64(col("__id")), lit(den.toLong)) === 0)
 
   /** j₀-driven banding auto-tuner — MEASUREMENT-based, not model-based:
     * for each candidate geometry (all splitting the same ~64-hash
     * signature budget by default), run the shipped candidate pipeline
-    * on `hashed` and count distinct candidates (count only — pairs are
+    * on `signed` and count distinct candidates (count only — pairs are
     * never materialized to the driver). At 100 TB run it on a
     * [[deterministicDocSample]]; the measured collision rate transfers
     * and expected full-corpus candidates = sample candidates × den².
@@ -234,6 +217,9 @@ object Dedup {
     * (candidate volume IS the verify-join cost). `head` is the
     * recommendation.
     *
+    * @param signed a [[signatures]] table whose k covers every
+    *        geometry's bands·rows (permutation i does not depend on k,
+    *        so each geometry bands a prefix of the same signature)
     * @param recallAt similarity at which recall must hold — the planted
     *        / expected true-dup similarity (e.g. 0.9), or the threshold
     *        itself for worst-case guarantees
@@ -241,22 +227,22 @@ object Dedup {
     *        corpus (divide the production budget by den² when tuning on
     *        a sample)
     */
-  def tuneBanding(hashed: DataFrame, candidateBudget: Long, recallAt: Double,
+  def tuneBanding(signed: DataFrame, candidateBudget: Long, recallAt: Double,
                   targetRecall: Double = 0.98,
                   geometries: Seq[(Int, Int)] = Seq((32, 2), (21, 3), (16, 4)))
       : Seq[BandingChoice] = {
-    // stage the hash table across the per-geometry measurements — but
+    // stage the signatures across the per-geometry measurements — but
     // only own (and later release) the cache if the CALLER had not
     // already persisted it: unpersisting a caller-staged frame would
     // evict shared session state
     val callerOwned =
-      hashed.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val staged = if (callerOwned) hashed
-      else hashed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDocs = staged.select("__id").distinct().count()
+      signed.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val staged = if (callerOwned) signed
+      else signed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nDocs = staged.filter(col("__sig").isNotNull).count()
     val allPairs = nDocs.toDouble * (nDocs - 1) / 2
     val choices = geometries.map { case (b, r) =>
-      val cand = lshCandidatesFromHashes(staged, b, r).count()
+      val cand = lshCandidates(staged, b, r).count()
       val recall = 1 - math.pow(1 - math.pow(recallAt, r), b)
       val p = if (allPairs > 0) cand / allPairs else 0.0
       val j0 = math.pow(1 - math.pow(1 - p, 1.0 / b), 1.0 / r)
@@ -286,9 +272,10 @@ object Dedup {
   }
 
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band →
-    * bucket-join → exact-verify.
-    */
-  /** Default bands=32 x rows=2 (k=64): a j=0.4 pair is missed w.p.
+    * bucket-join → exact-verify, as one action that pins only the
+    * shingle table (it feeds the signatures and both verify sides).
+    *
+    * Default bands=32 x rows=2 (k=64): a j=0.4 pair is missed w.p.
     * (1-0.16)^32 ≈ 0.4%, a j=0.9 near-dup w.p. ~3e-12; signature cost
     * is linear in k, so doubling bands only buys the last 0.4% at the
     * borderline — raise bands when the threshold or corpus demands it.
@@ -296,17 +283,14 @@ object Dedup {
   def nearDupPairs(docs: DataFrame, textCol: String, idCol: String,
                    shingleN: Int = 3, bands: Int = 32, rows: Int = 2,
                    thresholdNum: Int = 2, thresholdDen: Int = 5): DataFrame = {
-    // The shingle table feeds signature generation once and the verify
-    // join twice: stage it. Locally a memory/disk cache; at 100 TB the
-    // same role is played by writing the shingle table to parquet once.
+    // Locally a memory/disk cache; at 100 TB the same role is played by
+    // writing the shingle table to parquet once.
     val shingled = CacheTracker.persist(
       docs.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh")))
     nearDupPairsFromShingles(shingled, idCol, "__sh", bands, rows, thresholdNum, thresholdDen)
   }
 
-  /** Pipeline over a pre-staged (id, shingles) table; pass the staged
-    * shingle-HASH table too when SimHash shares the session (avoids
-    * re-exploding).
+  /** Pipeline over a pre-staged (id, shingles) table.
     *
     * Sizing at scale (measured, PROBES.md): candidate volume is
     * n²·p with p = 1−(1−j₀^rows)^bands fixed by the background
@@ -318,10 +302,8 @@ object Dedup {
     */
   def nearDupPairsFromShingles(shingled: DataFrame, idCol: String, shinglesCol: String,
                                bands: Int = 32, rows: Int = 2,
-                               thresholdNum: Int = 2, thresholdDen: Int = 5,
-                               hashed: Option[DataFrame] = None): DataFrame = {
-    val h = hashed.getOrElse(shingleHashTable(shingled, idCol, shinglesCol))
-    val cands = lshCandidatesFromHashes(h, bands, rows)
+                               thresholdNum: Int = 2, thresholdDen: Int = 5): DataFrame = {
+    val cands = lshCandidates(signatures(shingled, idCol, shinglesCol, bands * rows), bands, rows)
     verifyJaccard(cands, shingled, idCol, shinglesCol, thresholdNum, thresholdDen)
   }
 
@@ -351,19 +333,22 @@ object Dedup {
                                   shingleN: Int = 3, bands: Int = 32, rows: Int = 2,
                                   thresholdNum: Int = 2, thresholdDen: Int = 5,
                                   stagedShingles: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // each shingle frame has 2-3 consumers (banding, union for verify,
-    // final anti-join) — staged callers pass session-staged frames
-    // (Staged.cached); the self-contained default pins two frames per
-    // invocation under the session lifecycle
+    // each shingle frame has several consumers (banding, union for
+    // verify, final anti-join) — staged callers pass session-staged
+    // frames (Staged.cached); the self-contained default pins ONE frame
+    // per invocation, both sides tagged by `__in`, under the session
+    // lifecycle
     val (cSh, iSh) = stagedShingles.getOrElse {
-      (CacheTracker.persist(corpus.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))),
-       CacheTracker.persist(incoming.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh"))))
+      def shingled(df: DataFrame, in: Boolean) = df.select(col(idCol), lit(in).as("__in"),
+        TextOps.shingles(col(textCol), shingleN).as("__sh"))
+      val both = CacheTracker.persist(shingled(corpus, in = false).unionByName(shingled(incoming, in = true)))
+      (both.filter(!col("__in")).drop("__in"), both.filter(col("__in")).drop("__in"))
     }
-    val cB = bandBuckets(shingleHashTable(cSh, idCol, "__sh"), bands, rows)
-    // three join-side consumers (corpus probe + in-batch self-join):
-    // truncated so the explode + signature aggregation runs AND plans
-    // once (a persist still re-analyzes the lineage per side)
-    val iB = CacheTracker.truncate(bandBuckets(shingleHashTable(iSh, idCol, "__sh"), bands, rows))
+    // band rows are narrow projections of the staged shingles: the
+    // three incoming join sides (corpus probe + in-batch self-join)
+    // each re-derive theirs
+    val cB = bandBuckets(signatures(cSh, idCol, "__sh", bands * rows), bands, rows)
+    val iB = bandBuckets(signatures(iSh, idCol, "__sh", bands * rows), bands, rows)
     // probe the corpus index: equi-join on (band, bh), corpus id on the
     // doc_a side (always the smaller id under the contract)
     val crossCand = iB.as("i")
@@ -385,7 +370,7 @@ object Dedup {
     * pattern, text flavor): the corpus's band-bucket table (parquet,
     * PARTITIONED BY band — band-aligned file layout; a full probe
     * reads every band, a per-band maintenance job only its own)
-    * plus its shingle-HASH table for candidate verification. Corpus
+    * plus its shingle-HASH sets for candidate verification. Corpus
     * TEXT is never written and, after the build, never rescanned.
     */
   def buildNearDupIndex(corpus: DataFrame, path: String,
@@ -394,17 +379,24 @@ object Dedup {
     val sh = corpus.select(col(idCol).as("__id"),
       TextOps.shingles(col(textCol), shingleN).as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hashed = shingleHashTable(sh, "__id", "__sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bandBuckets(hashed, bands, rows)
+    writeIndex(bandBuckets(signatures(sh, "__id", "__sh", bands * rows), bands, rows),
+      hashSets(sh, "__id", "__sh"), path)
+    sh.unpersist()
+  }
+
+  /** Write a near-dup index: band rows partitioned by band, one file
+    * per band directory, and the per-document hash sets hashed by id —
+    * a layout set by the data, not by the partitioning of the input the
+    * rows were projected from (a merge compacts every band's fragments
+    * into one file).
+    */
+  private def writeIndex(buckets: DataFrame, sets: DataFrame, path: String): Unit = {
+    buckets.repartition(col("band"))
       .write.mode("overwrite").partitionBy("band").parquet(s"$path/buckets")
     // sets are PRE-GROUPED at build time: the probe's verify step reads
-    // (id, hash-set) rows directly instead of re-aggregating the whole
-    // corpus hash table on every batch
-    hashed.groupBy("__id").agg(collect_set("__h").as("__hs"))
-      .write.mode("overwrite").parquet(s"$path/hashes")
-    hashed.unpersist()
-    sh.unpersist()
+    // (id, hash-set) rows directly instead of re-hashing the corpus
+    // shingles on every batch
+    sets.repartition(col("__id")).write.mode("overwrite").parquet(s"$path/hashes")
   }
 
   /** Incremental index MAINTENANCE: merge a persisted
@@ -440,18 +432,16 @@ object Dedup {
     val sh = delta.select(col(idCol).as("__id"),
       TextOps.shingles(col(textCol), shingleN).as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hashed = shingleHashTable(sh, "__id", "__sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deltaIds = hashed.select("__id").distinct()
-    spark.read.parquet(s"$basePath/buckets")
-      .join(deltaIds, Seq("__id"), "left_anti")
-      .unionByName(bandBuckets(hashed, bands, rows))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$outPath/buckets")
-    spark.read.parquet(s"$basePath/hashes")
-      .join(deltaIds, Seq("__id"), "left_anti")
-      .unionByName(hashed.groupBy("__id").agg(collect_set("__h").as("__hs")))
-      .write.mode("overwrite").parquet(s"$outPath/hashes")
-    hashed.unpersist()
+    val sets = hashSets(sh, "__id", "__sh")
+    val deltaIds = sets.select("__id")
+    writeIndex(
+      spark.read.parquet(s"$basePath/buckets")
+        .join(deltaIds, Seq("__id"), "left_anti")
+        .unionByName(bandBuckets(signatures(sh, "__id", "__sh", bands * rows), bands, rows)),
+      spark.read.parquet(s"$basePath/hashes")
+        .join(deltaIds, Seq("__id"), "left_anti")
+        .unionByName(sets),
+      outPath)
     sh.unpersist()
   }
 
@@ -471,33 +461,20 @@ object Dedup {
                               thresholdNum: Int = 2, thresholdDen: Int = 5): DataFrame = {
     val cB = spark.read.parquet(s"$path/buckets")
     val cH = spark.read.parquet(s"$path/hashes")
-    // batch-shingle frame has two consumers (banding, survivor list);
-    // pinned per invocation like incrementalNearDupSurvivors' default
+    // the batch's shingles are the one frame pinned per invocation:
+    // its band rows (three join sides), its verify hash sets and the
+    // survivor list are all narrow projections of it
     val iSh = CacheTracker.persist(incoming.select(col(idCol).as("__id"),
       TextOps.shingles(col(textCol), shingleN).as("__sh")))
-    // ONE aggregation pass over the exploded shingle hashes yields BOTH
-    // the band signatures and the verify hash set per doc (r15 —
-    // before, the band table and the set table each re-exploded and
-    // re-aggregated the cached shingles AND each took its own eager
-    // checkpoint: two signature-class aggregations and two
-    // materialization barriers on the probe path instead of one).
-    // Bounded per invocation: id × (bands·rows longs + hash set) —
-    // the same rows the two previous checkpoints pinned combined.
-    val sigSet = CacheTracker.truncate(
-      signatureAndSetCols(shingleHashTable(iSh, "__id", "__sh"), bands * rows))
-    // band rows re-derive from the leaf per consumer (three join
-    // sides): a cheap columnar explode, no aggregation behind it
-    val iB = bandsFromSignatures(sigSet, bands, rows)
+    val iB = bandBuckets(signatures(iSh, "__id", "__sh", bands * rows), bands, rows)
     val crossCand = iB.as("i")
       .join(cB.as("c"), col("i.band") === col("c.band") && col("i.bh") === col("c.bh"))
       .select(col("c.__id").as("doc_a"), col("i.__id").as("doc_b"))
       .distinct()
     val inBatchCand = pairsFromBuckets(iB)
     // verify sets: corpus half straight off the index parquet (~KBs),
-    // incoming half a projection of the leaf — lazy union per consumer
-    // replaces the third aggregation + second checkpoint of the old
-    // shape
-    val allSets = cH.unionByName(sigSet.select(col("__id"), col("__hs")))
+    // incoming half a projection of the pinned shingles
+    val allSets = cH.unionByName(hashSets(iSh, "__id", "__sh"))
     val dropped = verifyJaccard(crossCand, allSets, "__id", "__hs",
         thresholdNum, thresholdDen)
       .select(col("doc_b").as("__id"))
@@ -1237,9 +1214,12 @@ object Dedup {
     * eval split. The production shape for "did benchmark text leak
     * into the training corpus": the eval side (a benchmark suite) is
     * tiny relative to the corpus, so its distinct gram set broadcasts
-    * and the training side never shuffles its grams at all — the only
-    * exchanges are the eval-side distinct and the per-doc count
-    * aggregations (both map-side combining, keyed by doc id).
+    * and the training side never shuffles its grams at all — one pass
+    * over the training grams, a left join against the broadcast set,
+    * counts every gram (n_grams; shingles is a distinct set) and the
+    * hits (n_overlap) in the same per-doc aggregation. The only
+    * exchanges are the eval-side distinct and that aggregation (both
+    * map-side combining, keyed by gram and doc id).
     *
     * `evalPred` selects the eval split. Output: (idCol, n_overlap,
     * n_grams, permille) for contaminated training docs only.
@@ -1249,16 +1229,11 @@ object Dedup {
     val sh = docs.select(col(idCol).as("__id"),
       explode(TextOps.shingles(col(textCol), n)).as("__s"))
     val ev = sh.filter(evalPred(col("__id"))).select("__s").distinct()
-    val tr = sh.filter(!evalPred(col("__id")))
-    // per-doc gram totals as a NARROW scan-side projection (shingles
-    // is a distinct set, so its size == the exploded row count) — no
-    // explode, no exchange on this branch
-    val totals = docs.filter(!evalPred(col(idCol)))
-      .select(col(idCol).as("__id"),
-        size(TextOps.shingles(col(textCol), n)).cast("long").as("n_grams"))
-    val overlap = tr.join(broadcast(ev), "__s")
-      .groupBy("__id").agg(count(lit(1)).as("n_overlap"))
-    overlap.join(totals, "__id")
+      .withColumn("__hit", lit(true))
+    sh.filter(!evalPred(col("__id")))
+      .join(broadcast(ev), Seq("__s"), "left")
+      .groupBy("__id").agg(count(col("__hit")).as("n_overlap"), count(lit(1)).as("n_grams"))
+      .filter(col("n_overlap") > 0)
       .select(col("__id").as(idCol), col("n_overlap"), col("n_grams"),
         expr("CAST((1000 * n_overlap) DIV n_grams AS BIGINT)").as("permille"))
   }

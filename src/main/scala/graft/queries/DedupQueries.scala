@@ -264,19 +264,19 @@ object DedupQueries {
     // engine-portable 60-bit poly hash (not xxhash64) so the oracle
     // replays the EXACT permutation family ((a·h+b) mod 2³¹−1,
     // constants embedded as literals); est_pct = 5·matches is exact
-    // integer. Scale: one extra narrow (id, hash) pass + a k-column
-    // min agg; the pair join touches only the qualifying pairs.
+    // integer. Scale: one narrow per-document signature pass (the
+    // native kernel, portable family); the pair join touches only the
+    // qualifying pairs. No trailing sort: rows compare as a multiset,
+    // and with no aggregate beneath it a global sort would only add a
+    // range-sampling job.
     "d29_jaccard_estimate" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val k = 20
-        val hashed = Dedup.shingleHashTable(
-          Staged.docShingles(s, dir), "doc_id", "__sh", Dedup.portableHash60)
-        val sig = Dedup.signatureColsFromHashes(hashed, k)
+        val sig = Dedup.signatures(Staged.docShingles(s, dir), "doc_id", "__sh", k, "portable60")
         val sa = sig.select(col("__id").as("doc_a") +:
-          (0 until k).map(i => col(s"__m$i").as(s"a$i")): _*)
+          (0 until k).map(i => col("__sig").getItem(i).as(s"a$i")): _*)
         val sb = sig.select(col("__id").as("doc_b") +:
-          (0 until k).map(i => col(s"__m$i").as(s"b$i")): _*)
+          (0 until k).map(i => col("__sig").getItem(i).as(s"b$i")): _*)
         val matches = (0 until k).map(i =>
           when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L)).reduce(_ + _)
         Staged.docNearDupPairs(s, dir)
@@ -284,7 +284,6 @@ object DedupQueries {
           .select(col("doc_a"), col("doc_b"), col("jacc_pct"),
             (matches * 5).as("est_pct"),
             (matches * 5 - col("jacc_pct")).as("err_pct"))
-          .orderBy("doc_a", "doc_b")
       },
       Some {
         val permValues = (0 until 20).map { i =>

@@ -195,8 +195,7 @@ object Staged {
       // tree (measured from its formatted plan), so driver planning dominated
       // its wall time. Truncation hands consumers a leaf.
       CacheTracker.truncate(graft.operators.Dedup.nearDupPairsFromShingles(
-          docShingles(s, dir), "doc_id", "__sh",
-          hashed = Some(docShingleHashes(s, dir))))
+          docShingles(s, dir), "doc_id", "__sh"))
     }
 
   /** Connected components over [[docNearDupPairs]] (id, rep). */
@@ -323,15 +322,6 @@ object Staged {
       CacheTracker.persist(table(s, dir, "documents")
         .select(col("doc_id"), explode(TextOps.words(col("text"))).as("term"))
         .filter(length(col("term")) > 0))
-    }
-
-  /** exploded shingle-hash table (__id, __h) shared by MinHash AND
-    * SimHash — hash each shingle once per session, not once per sketch.
-    */
-  def docShingleHashes(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"shh:$dir") {
-      CacheTracker.persist(
-        graft.operators.Dedup.shingleHashTable(docShingles(s, dir), "doc_id", "__sh"))
     }
 
   /** shingle-hash table under the engine-portable 60-bit hash

@@ -33,8 +33,8 @@ object ScaleProbe {
       val nVecs = QueryDef.table(spark, dir, "embeddings").count()
 
       // d2: MinHash-LSH near-dup (staged pipeline, d2's exact defaults)
-      val d2Cand = Dedup.lshCandidatesFromHashes(
-        Staged.docShingleHashes(spark, dir), bands = 32, rows = 2).count()
+      val signed = Dedup.signatures(Staged.docShingles(spark, dir), "doc_id", "__sh", k = 64)
+      val d2Cand = Dedup.lshCandidates(signed, bands = 32, rows = 2).count()
       val (d2Pairs, d2Wall) = timed(Staged.docNearDupPairs(spark, dir).count())
       out += s"""{"probe":"d2_minhash_lsh","dir":"$dir","rows":$nDocs,"candidates":$d2Cand,"pairs":$d2Pairs,"wall_sec":$d2Wall}"""
 
@@ -42,8 +42,7 @@ object ScaleProbe {
       // controls background-collision candidate volume at scale —
       // P(random pair collides) = 1-(1-j0^rows)^bands drops sharply
       // with rows, at the cost of recall near the threshold
-      val d2CandR3 = Dedup.lshCandidatesFromHashes(
-        Staged.docShingleHashes(spark, dir), bands = 21, rows = 3).count()
+      val d2CandR3 = Dedup.lshCandidates(signed, bands = 21, rows = 3).count()
       out += s"""{"probe":"d2_minhash_lsh_rows3","dir":"$dir","rows":$nDocs,"candidates":$d2CandR3}"""
 
       // d5: prefix-filter exact Jaccard at the d5 threshold (1/2)

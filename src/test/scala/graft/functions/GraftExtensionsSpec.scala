@@ -19,6 +19,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](VectorExpressions.dotF32Builder(Seq.empty))
     intercept[IllegalArgumentException](KMinSketch.builder(Seq.empty))
     intercept[IllegalArgumentException](TopKSketch.builder(Seq.empty))
+    intercept[IllegalArgumentException](MinHashSignature.builder(Seq.empty))
   }
 
   test("native sketch aggregates are callable from PLAIN SQL on a registered session") {

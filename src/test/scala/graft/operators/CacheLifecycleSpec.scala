@@ -17,26 +17,44 @@ class CacheLifecycleSpec extends SparkTestBase {
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** Run `body` and return what it pinned: the RDDs it added to the
+    * context's persistent set.
+    */
+  private def pinsOf[A](body: => A): (A, Set[Int]) = {
+    val before = persistentIds
+    val a = body
+    (a, persistentIds -- before)
+  }
+
   test("release frees every frame pinned in the session and evicts the memo") {
     CacheTracker.release(spark) // earlier suites may have staged liFrame already
     val before = persistentIds
     val key = s"li:$dir"
-    val li = Staged.liFrame(spark, dir)
+    val (li, liPins) = pinsOf(Staged.liFrame(spark, dir))
     assert(li.staging.isDefined)
+    assert(liPins.size == 1, s"liFrame should pin its sort cache only, saw $liPins")
     val base = "the quick brown fox jumps over the lazy dog and runs far away " * 5
     val docs = Seq(1L -> base, 2L -> base.replace("lazy", "sleepy"),
       3L -> "completely different content with no overlap whatsoever at all " * 5)
       .toDF("doc_id", "text")
-    // one persist (the shingle table) and one truncation (the band table)
-    val pairs = Dedup.nearDupPairs(docs, "text", "doc_id")
-    assert(pairs.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq == Seq(1L -> 2L))
-    val labels = Dedup.connectedComponents(pairs.select("doc_a", "doc_b"))
-    assert(labels.as[(Long, Long)].collect().toSet == Set(1L -> 1L, 2L -> 1L))
+    // nearDupPairs pins its shingle table and nothing else: the band
+    // rows are a projection of it
+    val (pairs, ndPins) = pinsOf {
+      val p = Dedup.nearDupPairs(docs, "text", "doc_id")
+      assert(p.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq == Seq(1L -> 2L))
+      p
+    }
+    assert(ndPins.size == 1, s"nearDupPairs should pin exactly one RDD, saw $ndPins")
+    // connectedComponents keeps its result; its edge table and earlier
+    // rounds are freed in-operator
+    val (_, ccPins) = pinsOf {
+      val labels = Dedup.connectedComponents(pairs.select("doc_a", "doc_b"))
+      assert(labels.as[(Long, Long)].collect().toSet == Set(1L -> 1L, 2L -> 1L))
+    }
+    assert(ccPins.size == 1, s"connectedComponents should pin its result only, saw $ccPins")
 
     val pinned = persistentIds -- before
-    // the staged sort cache, the shingle persist, the band table and
-    // the CC result (plus its edge table, already freed in-operator)
-    assert(pinned.size >= 4, s"expected at least 4 pinned RDDs, saw $pinned")
+    assert(pinned == liPins ++ ndPins ++ ccPins, s"expected 3 pinned RDDs, saw $pinned")
 
     CacheTracker.release(spark)
     val left = pinned.intersect(persistentIds)
@@ -64,5 +82,35 @@ class CacheLifecycleSpec extends SparkTestBase {
     assert(CacheTracker.pinnedBytes(spark) > persisted, "a local checkpoint's blocks count too")
     CacheTracker.release(spark)
     assert(CacheTracker.pinnedBytes(spark) == 0L)
+  }
+
+  test("each near-dup admission call pins exactly one frame until release") {
+    CacheTracker.release(spark)
+    val base = "the quick brown fox jumps over the lazy dog and runs far away " * 5
+    val corpus = Seq(1L -> base, 2L -> "an unrelated corpus article about rivers and weather " * 4)
+      .toDF("doc_id", "text")
+    def batch(id: Long) = Seq(id -> (base + " recrawl banner"),
+      (id + 1) -> s"a genuinely new piece of writing number $id about spacecraft telemetry " * 4)
+      .toDF("doc_id", "text")
+    val incoming = batch(10L)
+    def survivors(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().toSet
+    // a long-lived session accumulates one frame per batch until release
+    // (a repeated identical call shares the first call's cache entry)
+    val calls = Seq(10L, 20L).map(id => id -> pinsOf(survivors(
+      Dedup.incrementalNearDupSurvivors(corpus, batch(id), "text", "doc_id"))))
+    calls.foreach { case (id, (out, pins)) =>
+      assert(out == Set(id + 1))
+      assert(pins.size == 1, s"incrementalNearDupSurvivors should pin one frame per call, saw $pins")
+    }
+    val idx = java.nio.file.Files.createTempDirectory("graft-ndidx-").toString
+    val (_, buildPins) = pinsOf(Dedup.buildNearDupIndex(corpus, idx, "text", "doc_id"))
+    assert(buildPins.isEmpty, s"buildNearDupIndex left pins behind: $buildPins")
+    val (indexed, idxPins) = pinsOf(survivors(
+      Dedup.indexedNearDupSurvivors(spark, idx, incoming, "text", "doc_id")))
+    assert(indexed == Set(11L))
+    assert(idxPins.size == 1, s"indexedNearDupSurvivors should pin one frame per call, saw $idxPins")
+    val pinned = calls.flatMap(_._2._2).toSet ++ idxPins
+    CacheTracker.release(spark)
+    assert(pinned.intersect(persistentIds).isEmpty, "release left admission pins behind")
   }
 }

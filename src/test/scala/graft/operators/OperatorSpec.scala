@@ -226,22 +226,71 @@ class DedupSpec extends SparkTestBase {
     assert(out == Seq((1L, "a b", 1L, 0L), (2L, "", 1L, 0L)))
   }
 
-  test("minhashSignatureLocal + shinglesLocal mirror the Column path bit-for-bit") {
-    val texts = Seq(
-      (1L, base), (2L, nearDup), (3L, unrelated),
-      (4L, "a b"),         // shorter than shingle width: no signature
-      (5L, "x  y z w"))    // double space: empty token must match split semantics
+  /** Reference model of the signature kernel: the relational MinHash —
+    * explode every shingle into an (id, hash) row, shuffle by id and
+    * aggregate k `min` columns `__m0..` over the same permutations.
+    */
+  private def relationalMinHash(shingled: org.apache.spark.sql.DataFrame, k: Int,
+                                hashFn: Column => Column): org.apache.spark.sql.DataFrame = {
+    val p = Dedup.permModulus
+    val folded = pmod(col("__h"), lit(p))
+    val aggs = (0 until k).map { i =>
+      val (a, b) = Dedup.permParams(i)
+      min(pmod(lit(a) * folded + lit(b), lit(p))).as(s"__m$i")
+    }
+    Dedup.shingleHashTable(shingled, "doc_id", "__sh", hashFn)
+      .groupBy("__id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Three sides agree on `texts`, per hash family: the kernel
+    * ([[Dedup.signatures]]), the relational model and, for the default
+    * family, the per-row [[Dedup.minhashSignatureLocal]]. A document
+    * without shingles has no reference row, a NULL kernel signature
+    * and no local one. Band rows of the kernel equal the Murmur3 hash
+    * over the reference's signature columns, and the exploded-hash
+    * candidate path equals the per-document one.
+    */
+  private def assertSignatureParity(texts: Seq[(Long, String)], k: Int, rows: Int): Unit = {
+    graft.functions.VectorExpressions.register(spark)
     val d = texts.toDF("doc_id", "text")
       .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh"))
-    val k = 16
-    val colSig = Dedup.signatureColsFromHashes(
-        Dedup.shingleHashTable(d, "doc_id", "__sh"), k)
-      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong).toSeq).toMap
-    texts.foreach { case (id, t) =>
-      val local = Dedup.minhashSignatureLocal(TextOps.shinglesLocal(t, 3), k)
-      assert(local.map(_.toSeq) == colSig.get(id),
-        s"doc $id: local=$local column=${colSig.get(id)}")
+    val families = Seq[(String, Column => Column)](
+      "xxhash64" -> (c => xxhash64(c)), "portable60" -> Dedup.portableHash60)
+    families.foreach { case (family, hashFn) =>
+      val ref = relationalMinHash(d, k, hashFn)
+      val refSig = ref.collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong).toSeq).toMap
+      val signed = Dedup.signatures(d, "doc_id", "__sh", k, family)
+      val kernel = signed.collect()
+        .map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toMap
+      texts.foreach { case (id, t) =>
+        assert(kernel(id) == refSig.get(id),
+          s"$family doc $id: kernel=${kernel(id)} relational=${refSig.get(id)}")
+        if (family == "xxhash64") {
+          val local = Dedup.minhashSignatureLocal(TextOps.shinglesLocal(t, 3), k)
+          assert(local.map(_.toSeq) == refSig.get(id), s"doc $id: local=$local relational=${refSig.get(id)}")
+        }
+      }
+      val bands = k / rows
+      val refBands = ref.select(col("__id"), explode(array((0 until bands).map { j =>
+          struct(lit(j).as("band"),
+            hash((0 until rows).map(r => col(s"__m${j * rows + r}")): _*).as("bh"))
+        }: _*)).as("b"))
+        .select("__id", "b.band", "b.bh").as[(Long, Int, Int)].collect().toSet
+      val kernelBands = Dedup.bandBuckets(signed, bands, rows).as[(Long, Int, Int)].collect().toSet
+      assert(kernelBands == refBands, s"$family band rows differ")
     }
+    // the exploded-hash entry point signs through the same kernel
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toSet
+    assert(pairs(Dedup.lshCandidatesFromHashes(Dedup.shingleHashTable(d, "doc_id", "__sh"), k / rows, rows)) ==
+      pairs(Dedup.lshCandidates(Dedup.signatures(d, "doc_id", "__sh", k), k / rows, rows)))
+  }
+
+  test("minhashSignatureLocal + shinglesLocal mirror the Column path bit-for-bit") {
+    assertSignatureParity(Seq(
+      (1L, base), (2L, nearDup), (3L, unrelated),
+      (4L, "a b"),         // shorter than shingle width: no signature
+      (5L, "x  y z w")),   // double space: empty token must match split semantics
+      k = 16, rows = 2)
   }
 
   test("signature mirror property: random corpora, weird whitespace, unicode") {
@@ -258,25 +307,20 @@ class DedupSpec extends SparkTestBase {
     val adversarial = Seq(
       (100L, " leading space"), (101L, "trailing space "), (102L, "a  b   c d"),
       (103L, ""), (104L, "x"), (105L, "ü 漢 ü 漢 ü"))
-    val corpus = random ++ adversarial
-    val k = 8
-    val d = corpus.toDF("doc_id", "text")
-      .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh"))
-    val colSig = Dedup.signatureColsFromHashes(
-        Dedup.shingleHashTable(d, "doc_id", "__sh"), k)
-      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong).toSeq).toMap
-    corpus.foreach { case (id, t) =>
-      val local = Dedup.minhashSignatureLocal(TextOps.shinglesLocal(t, 3), k)
-      assert(local.map(_.toSeq) == colSig.get(id), s"divergence at doc $id: '$t'")
-    }
+    assertSignatureParity(random ++ adversarial, k = 8, rows = 4)
   }
+
+  /** Per-document k=64 signatures of the probe corpus (sf0.1
+    * documents, 5,000 docs): every default geometry bands a prefix.
+    */
+  private def sf01Signatures = Dedup.signatures(
+    graft.queries.Staged.docShingles(spark, "/root/testdata/sf0.1"), "doc_id", "__sh", k = 64)
 
   test("banding auto-tuner reproduces PROBES volumes and picks by recall-then-budget") {
     // the probe corpus (sf0.1 documents, 5,000 docs): PROBES.md measured
     // 3,871 candidates at (32 bands × 2 rows) and 792 at (21 × 3) — the
     // tuner must reproduce both from the same shipped pipeline
-    val hashed = graft.queries.Staged.docShingleHashes(spark, "/root/testdata/sf0.1")
-    val choices = Dedup.tuneBanding(hashed, candidateBudget = 1000L, recallAt = 0.9)
+    val choices = Dedup.tuneBanding(sf01Signatures, candidateBudget = 1000L, recallAt = 0.9)
     val byGeom = choices.map(c => (c.bands, c.rows) -> c).toMap
     assert(byGeom((32, 2)).candidates == 3871L, s"got ${byGeom((32, 2))}")
     assert(byGeom((21, 3)).candidates == 792L, s"got ${byGeom((21, 3))}")
@@ -296,17 +340,15 @@ class DedupSpec extends SparkTestBase {
     // demanding recall AT the 0.4 threshold itself: only (32, 2) reaches
     // 98% there (recall(21,3) = 0.75, recall(16,4) = 0.34), so it must
     // be recommended even though it blows the candidate budget
-    val hashed = graft.queries.Staged.docShingleHashes(spark, "/root/testdata/sf0.1")
-    val choices = Dedup.tuneBanding(hashed, candidateBudget = 1000L, recallAt = 0.4)
+    val choices = Dedup.tuneBanding(sf01Signatures, candidateBudget = 1000L, recallAt = 0.4)
     assert(choices.head.bands == 32 && choices.head.rows == 2)
     assert(choices.head.recallOk && !choices.head.withinBudget)
     assert(choices.tail.forall(!_.recallOk))
   }
 
   test("banding tuner on a deterministic half-sample estimates the same collision rate") {
-    val hashed = graft.queries.Staged.docShingleHashes(spark, "/root/testdata/sf0.1")
-    val half = Dedup.deterministicDocSample(hashed, den = 2)
-    val full = Dedup.tuneBanding(hashed, 1000L, recallAt = 0.9,
+    val half = Dedup.deterministicDocSample(sf01Signatures, den = 2)
+    val full = Dedup.tuneBanding(sf01Signatures, 1000L, recallAt = 0.9,
       geometries = Seq((32, 2))).head
     val sampled = Dedup.tuneBanding(half, 1000L, recallAt = 0.9,
       geometries = Seq((32, 2))).head
@@ -368,7 +410,9 @@ class DedupSpec extends SparkTestBase {
     reliableCc(Dedup.connectedComponentsStar(_))
   }
 
-  test("nearDupPairs band table truncates reliably under a session checkpoint dir") {
+  test("nearDupPairs writes no checkpoint files under a session checkpoint dir") {
+    // the band table is a projection of the pinned shingle table, so
+    // nothing is truncated: reliable mode has no files to write
     val d = docs(1L -> base, 2L -> nearDup, 3L -> unrelated, 4L -> (unrelated + " tail"))
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
@@ -376,10 +420,8 @@ class DedupSpec extends SparkTestBase {
     assert(local.contains(1L -> 2L))
     reliably { dir =>
       assert(pairs(Dedup.nearDupPairs(d, "text", "doc_id")) == local)
-      assert(ckptFiles(dir).nonEmpty, "the band table wrote no reliable checkpoint files")
+      assert(ckptFiles(dir).isEmpty, s"nearDupPairs wrote checkpoint files: ${ckptFiles(dir).take(3)}")
       CacheTracker.release(spark)
-      assert(ckptFiles(dir).isEmpty,
-        s"release() left checkpoint files behind: ${ckptFiles(dir).take(3)}")
     }
     assert(spark.sparkContext.getCheckpointDir.isEmpty, "session dir was not restored")
   }

@@ -860,8 +860,8 @@ class EventStreamSpec extends SparkTestBase {
     import graft.operators.{Dedup, TextOps}
     val docsDf = (batch1 ++ batch2).map(d => (d.docId, d.text)).toDF("doc_id", "text")
       .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh"))
-    val batch = Dedup.lshCandidatesFromHashes(
-        Dedup.shingleHashTable(docsDf, "doc_id", "__sh"), bands = 8, rows = 2)
+    val batch = Dedup.lshCandidates(
+        Dedup.signatures(docsDf, "doc_id", "__sh", k = 16), bands = 8, rows = 2)
       .as[(Long, Long)].collect().toSet
     assert(streamed == batch, s"stream/batch drift: streamed=$streamed batch=$batch")
     // the planted structure is present: 1~2, 1~4 (exact copy), 2~4
