@@ -89,9 +89,12 @@ object Dedup {
   def signatures(docs: DataFrame, idCol: String, shinglesCol: String, k: Int,
                  family: String = "xxhash64"): DataFrame = {
     graft.functions.VectorExpressions.register(docs.sparkSession)
-    docs.select(col(idCol).as("__id"),
-      call_function("minhash_signature", col(shinglesCol), lit(k), lit(family)).as("__sig"))
+    docs.select(col(idCol).as("__id"), signature(col(shinglesCol), k, family).as("__sig"))
   }
+
+  /** The kernel call of [[signatures]] (VectorExpressions registered). */
+  private def signature(shingles: Column, k: Int, family: String = "xxhash64"): Column =
+    call_function("minhash_signature", shingles, lit(k), lit(family))
 
   /** Scala-side xxhash64 (seed 42) of one shingle — the SAME hash the
     * kernel's default family computes, for streaming rows that need a
@@ -142,8 +145,11 @@ object Dedup {
     */
   private def hashSets(docs: DataFrame, idCol: String, shinglesCol: String): DataFrame =
     docs.filter(size(col(shinglesCol)) > 0)
-      .select(col(idCol).as("__id"),
-        array_distinct(transform(col(shinglesCol), s => xxhash64(s))).as("__hs"))
+      .select(col(idCol).as("__id"), hashSet(col(shinglesCol)).as("__hs"))
+
+  /** The distinct xxhash64 (seed 42) values of a shingle array. */
+  private def hashSet(shingles: Column): Column =
+    array_distinct(transform(shingles, s => xxhash64(s)))
 
   /** Candidate pairs from a band-bucket table: self-join on (band, bh)
     * — the shuffle key is the short bucket id, and the join explodes
@@ -461,20 +467,24 @@ object Dedup {
                               thresholdNum: Int = 2, thresholdDen: Int = 5): DataFrame = {
     val cB = spark.read.parquet(s"$path/buckets")
     val cH = spark.read.parquet(s"$path/hashes")
-    // the batch's shingles are the one frame pinned per invocation:
-    // its band rows (three join sides), its verify hash sets and the
-    // survivor list are all narrow projections of it
-    val iSh = CacheTracker.persist(incoming.select(col(idCol).as("__id"),
-      TextOps.shingles(col(textCol), shingleN).as("__sh")))
-    val iB = bandBuckets(signatures(iSh, "__id", "__sh", bands * rows), bands, rows)
+    // the one frame pinned per invocation is the batch's per-document
+    // row (__id, __sig, __hs; both NULL without shingles): band rows
+    // (three join sides), verify sets and the survivor list project it,
+    // so neither the kernel nor the hash transform re-runs per scan
+    graft.functions.VectorExpressions.register(spark)
+    val iDoc = CacheTracker.persist(incoming
+      .select(col(idCol).as("__id"), TextOps.shingles(col(textCol), shingleN).as("__sh"))
+      .select(col("__id"), signature(col("__sh"), bands * rows).as("__sig"),
+        when(size(col("__sh")) > 0, hashSet(col("__sh"))).as("__hs")))
+    val iB = bandBuckets(iDoc, bands, rows)
     val crossCand = iB.as("i")
       .join(cB.as("c"), col("i.band") === col("c.band") && col("i.bh") === col("c.bh"))
       .select(col("c.__id").as("doc_a"), col("i.__id").as("doc_b"))
       .distinct()
     val inBatchCand = pairsFromBuckets(iB)
     // verify sets: corpus half straight off the index parquet (~KBs),
-    // incoming half a projection of the pinned shingles
-    val allSets = cH.unionByName(hashSets(iSh, "__id", "__sh"))
+    // incoming half a projection of the pinned rows
+    val allSets = cH.unionByName(iDoc.filter(col("__hs").isNotNull).select("__id", "__hs"))
     val dropped = verifyJaccard(crossCand, allSets, "__id", "__hs",
         thresholdNum, thresholdDen)
       .select(col("doc_b").as("__id"))
@@ -482,7 +492,7 @@ object Dedup {
           thresholdNum, thresholdDen)
         .select(col("doc_b").as("__id")))
       .distinct()
-    iSh.select(col("__id").as(idCol))
+    iDoc.select(col("__id").as(idCol))
       .join(dropped.select(col("__id").as(idCol)), Seq(idCol), "left_anti")
   }
 
@@ -932,107 +942,36 @@ object Dedup {
 
   // ---- SimHash ----------------------------------------------------------
 
-  /** 64-bit SimHash over shingle hashes, materialized as a 64-char
-    * '0'/'1' string (bit j of each shingle's xxhash64 votes +1/-1;
-    * sign of the sum is bit j). String form keeps it engine-portable
-    * and makes hamming distance a cheap zip_with.
-    *
-    * Array-column form (small inputs / per-row use). The pipeline path
-    * ([[simhashPairs]]) uses the explode+aggregate plan instead — same
-    * math, hash computed once, codegen'd bit counting.
+  /** 64-bit SimHash sketches (__id, __sim: bigint) of an (__id, __h)
+    * [[shingleHashTable]]: bit j of each shingle hash votes +1 when set
+    * and −1 when clear, and bit j of the sketch is set iff the
+    * document's vote sum is > 0 (a tie leaves it clear). One row per
+    * document with at least one shingle. [[portableHash60]] values lie
+    * in [0, 2^60), so under that hash bits 60-63 always vote −1 and
+    * stay clear: the sketch is the 60-bit one a SQL engine recomputes.
     */
-  def simhashBits(shinglesCol: Column): Column = {
-    val hashes = transform(shinglesCol, s => xxhash64(s))
-    concat_ws("", (0 until 64).map { j =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(bitSetLit(h, j), 1L).otherwise(-1L))
-      when(vote > 0, "1").otherwise("0")
-    }: _*)
-  }
-
-  /** Test literal bit j (0..63) of long h. */
-  private def bitSetLit(h: Column, j: Int): Column =
-    if (j == 63) h < 0 else h.bitwiseAND(lit(1L << j)) =!= 0
-
-  /** SimHash per doc via explode → hash once → `bits` codegen'd sums. */
-  def simhashCols(docs: DataFrame, idCol: String, shinglesCol: String,
-                  bits: Int = 64): DataFrame =
-    simhashColsFromHashes(shingleHashTable(docs, idCol, shinglesCol), bits)
-
-  /** SimHash from a pre-staged (__id, __h) shingle-hash table.
-    * `bits` is the sketch width — 64 for xxhash64 input; 60 when the
-    * hashes come from [[portableHash60]].
-    */
-  def simhashColsFromHashes(hashed: DataFrame, bits: Int = 64): DataFrame = {
-    val aggs = (0 until bits).map { j =>
-      sum(when(bitSetLit(col("__h"), j), 1L).otherwise(-1L)).as(s"__v$j")
+  def simhashColsFromHashes(hashed: DataFrame): DataFrame = {
+    val aggs = (0 until 64).map { j =>
+      sum(when(shiftrightunsigned(col("__h"), j).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
+        .as(s"__v$j")
     }
     hashed.groupBy("__id").agg(aggs.head, aggs.tail: _*)
-      .select(col("__id"), concat((0 until bits).map(j =>
-        when(col(s"__v$j") > 0, "1").otherwise("0")): _*).as("__sim"))
+      .select(col("__id"), (0 until 64).map(j =>
+        when(col(s"__v$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ bitwiseOR _).as("__sim"))
   }
 
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingDist(a: Column, b: Column): Column =
-    size(filter(zip_with(split(a, ""), split(b, ""), (x, y) => x =!= y),
-      (x => x))).cast("long")
-
-  /** SimHash near-dup pairs: bucket by bit chunks — with
-    * `maxHamming + 1` chunks, a pair within the hamming budget shares
-    * at least one exact chunk (pigeonhole), so banding recall is 1.0;
-    * exact hamming verification then drops false candidates.
+  /** SimHash near-dup pairs (doc_a, doc_b, hamming) of a text column:
+    * shingles → [[shingleHashTable]] → [[simhashColsFromHashes]] →
+    * [[hammingPairsFromLongs]], so `maxHamming` is bounded as there
+    * (1..31). Nothing is persisted; at scale stage the sketch table (as
+    * `Staged.docSimhash60` does) and call [[hammingPairsFromLongs]].
     */
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    shingleN: Int = 3, maxHamming: Int = 3): DataFrame =
-    simhashPairsFromShingles(
-      docs.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh")),
-      idCol, "__sh", maxHamming)
-
-  /** Pipeline over a pre-staged (id, shingles) table; pass `hashed` to
-    * share the staged shingle-hash table with MinHash, or `sketches`
-    * (a (__id, __sim) table) to reuse a MATERIALIZED sketch table
-    * (`shingled`/`hashed` are then ignored). The sketch plan feeds FOUR
-    * consumers (both band-join sides and both post-distinct sketch
-    * re-joins), so without `sketches` the sketch aggregation re-runs
-    * per consumer — fine for one-shot/small calls; at scale build the
-    * sketch table once, persist or write it under YOUR lifecycle, and
-    * pass it here (the query path stages it via `Staged.docSimhash60`).
-    * This function deliberately persists nothing: a cache created at
-    * this layer would have no owner to release it.
-    */
-  def simhashPairsFromShingles(shingled: DataFrame, idCol: String, shinglesCol: String,
-                               maxHamming: Int = 3,
-                               hashed: Option[DataFrame] = None,
-                               bits: Int = 64,
-                               sketches: Option[DataFrame] = None): DataFrame = {
-    val nChunks = maxHamming + 1
-    val width = (bits + nChunks - 1) / nChunks
-    // guard supplied sketches against a width/bits mismatch (wrong-width
-    // sketches would band silently wrong): narrow per-row check, no job
-    val sh = sketches.map(_.select(col("__id"),
-        when(length(col("__sim")) === bits, col("__sim"))
-          .otherwise(raise_error(format_string(
-            s"sketch width %s != bits $bits", length(col("__sim")).cast("string"))))
-          .as("__sim")))
-      .getOrElse(hashed.map(simhashColsFromHashes(_, bits)).getOrElse(
-        simhashCols(shingled.select(col(idCol), col(shinglesCol).as("__sh")), idCol, "__sh", bits)))
-    // the candidate distinct() shuffles ONLY the (doc_a, doc_b) id pair
-    // — the 64-char sketch strings are re-joined afterwards (same shape
-    // as embedNearDupPairs), keeping the pair-dedup exchange narrow
-    val chunks = Similarity.bandExplode(sh, "__sim", nChunks, width, Seq("__id"))
-    val l = chunks.as("l")
-    val r = chunks.as("r")
-    val cand = l.join(r, col("l.band") === col("r.band") &&
-        col("l.bits") === col("r.bits") && col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("doc_a"), col("r.__id").as("doc_b"))
-      .distinct()
-    cand
-      .join(sh.select(col("__id").as("doc_a"), col("__sim").as("__sima")), "doc_a")
-      .join(sh.select(col("__id").as("doc_b"), col("__sim").as("__simb")), "doc_b")
-      .withColumn("hamming", hammingDist(col("__sima"), col("__simb")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-  }
+    hammingPairsFromLongs(simhashColsFromHashes(shingleHashTable(
+        docs.select(col(idCol), TextOps.shingles(col(textCol), shingleN).as("__sh")),
+        idCol, "__sh")),
+      "__id", "__sim", maxHamming)
 
   // ---- corpus-level chunk (paragraph) dedup -------------------------
 
@@ -1274,19 +1213,28 @@ object Dedup {
   }
 
   /** Near-dup pairs among 64-bit LONG sketches at Hamming distance <=
-    * `maxDist`, entirely in native codegen'd expressions: pigeonhole
-    * banding over `maxDist + 1` bit chunks extracted with shift/mask
-    * (even split, remainder bits on the last chunk — a pair within the
-    * budget shares at least one exact chunk, so banding recall is 1.0),
-    * then exact popcount verify `bit_count(a ^ b)` over candidates
-    * only. Sketch longs ride through the band join as 8-byte columns —
-    * cheaper than the string path's re-join, and nothing here falls
-    * out of whole-stage codegen (the bit-STRING path
-    * [[simhashPairsFromShingles]] stays for the 60-bit portable
-    * simhash, whose DuckDB oracle needs cross-engine bit strings).
+    * `maxDist`: the [[hammingCandidates]] of the sketches, verified by
+    * exact popcount `bit_count(a ^ b)` over candidates only. Every step
+    * is a native codegen'd expression.
     */
   def hammingPairsFromLongs(sketches: DataFrame, idCol: String, hashCol: String,
-                            maxDist: Int): DataFrame = {
+                            maxDist: Int): DataFrame =
+    hammingCandidates(sketches, idCol, hashCol, maxDist)
+      .withColumn("hamming", expr("bit_count(__ha ^ __hb)").cast("long"))
+      .filter(col("hamming") <= maxDist)
+      .select("doc_a", "doc_b", "hamming")
+
+  /** Candidate-pair stage of [[hammingPairsFromLongs]], exposed so
+    * sizing tools measure the SHIPPED pipeline rather than a copy:
+    * pigeonhole banding over `maxDist + 1` bit chunks extracted with
+    * shift/mask (even split, remainder bits on the last chunk — a pair
+    * within the budget shares at least one exact chunk, so banding
+    * recall is 1.0). Returns the distinct (doc_a < doc_b, __ha, __hb)
+    * rows: each pair carries both sketches as 8-byte columns, so the
+    * verify needs no re-join.
+    */
+  def hammingCandidates(sketches: DataFrame, idCol: String, hashCol: String,
+                        maxDist: Int): DataFrame = {
     require(maxDist >= 1 && maxDist <= 31, s"maxDist=$maxDist out of range")
     val nChunks = maxDist + 1
     val width = 64 / nChunks
@@ -1296,10 +1244,8 @@ object Dedup {
         explode(array((0 until nChunks).map { j =>
           val lo = j * width
           val w = if (j == nChunks - 1) 64 - lo else width
-          val bits =
-            if (w == 64) col("__h")
-            else shiftrightunsigned(col("__h"), lo).bitwiseAND(lit((1L << w) - 1L))
-          struct(lit(j).as("band"), bits.as("bits"))
+          struct(lit(j).as("band"),
+            shiftrightunsigned(col("__h"), lo).bitwiseAND(lit((1L << w) - 1L)).as("bits"))
         }: _*)).as("__b"))
       .select(col("__id"), col("__h"),
         col("__b.band").as("band"), col("__b.bits").as("bits"))
@@ -1310,9 +1256,6 @@ object Dedup {
       .select(col("l.__id").as("doc_a"), col("r.__id").as("doc_b"),
         col("l.__h").as("__ha"), col("r.__h").as("__hb"))
       .distinct()
-      .withColumn("hamming", expr("bit_count(__ha ^ __hb)").cast("long"))
-      .filter(col("hamming") <= maxDist)
-      .select("doc_a", "doc_b", "hamming")
   }
 
   /** Canonical-document selection per duplicate cluster: given CC

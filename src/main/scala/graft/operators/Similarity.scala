@@ -501,9 +501,10 @@ object Similarity {
 
   /** Explode a bit-string code column into one (band, bits) row per
     * band of `width` bits, keeping `keep` columns — the single home of
-    * the substr-banding idiom shared by [[lshTopK]],
-    * [[graft.operators.Dedup.embedNearDupPairs]] and the SimHash chunk
-    * banding.
+    * the substr-banding idiom shared by [[lshTopK]] and
+    * [[graft.operators.Dedup.embedNearDupPairs]]. SimHash sketches are
+    * BIGINTs and band by shift/mask in
+    * [[graft.operators.Dedup.hammingCandidates]].
     */
   private[operators] def bandExplode(df: DataFrame, codeCol: String,
                                      bands: Int, width: Int,

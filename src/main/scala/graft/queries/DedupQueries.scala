@@ -849,15 +849,16 @@ object DedupQueries {
              |SELECT ia AS doc_a, ib AS doc_b, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
              |FROM ex WHERE cos >= 0.98 ORDER BY 1, 2""".stripMargin)),
 
-    // SimHash near-dup pairs (hamming <= 3 over 60 bits, banded by
-    // 15-bit chunks; pigeonhole recall 1.0, exact hamming verify).
-    // Uses the engine-portable 60-bit polynomial shingle hash so the
-    // DuckDB oracle recomputes the sketches bit-for-bit and checks the
-    // full result (the banding itself needs no oracle mirror: recall
-    // is exactly 1 within the budget, so banded == all-pairs).
+    // SimHash near-dup pairs (hamming <= 3 over BIGINT sketches,
+    // banded by 16-bit chunks; pigeonhole recall 1.0, exact popcount
+    // verify). Uses the engine-portable 60-bit polynomial shingle hash
+    // so the DuckDB oracle recomputes the sketches bit-for-bit and
+    // checks the full result (the banding itself needs no oracle
+    // mirror: recall is exactly 1 within the budget, so banded ==
+    // all-pairs).
     "d3_simhash" -> QueryDef(
-      (s, dir) => Dedup.simhashPairsFromShingles(Staged.docShingles(s, dir), "doc_id", "__sh",
-          bits = 60, sketches = Some(Staged.docSimhash60(s, dir)))
+      (s, dir) => Dedup.hammingPairsFromLongs(Staged.docSimhash60(s, dir), "__id", "__sim",
+          maxDist = 3)
         .orderBy("doc_a", "doc_b"),
       Some(s"""WITH ${QueryDef.shingleCtes()},
              |h AS (SELECT doc_id,

@@ -23,7 +23,7 @@ object MultimodalQueries {
     * than re-rasterized per consumer (unstaged, the sf0.1 run measured
     * 38.7 s vs 5.7 s staged). Sketches stay 64-bit LONGS end to end:
     * banding and popcount verify are native codegen'd expressions
-    * (Dedup.hammingPairsFromLongs), no bit-string materialization.
+    * (Dedup.hammingPairsFromLongs, the Hamming join d3 shares).
     */
   private def mm9Pairs(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {

@@ -324,30 +324,20 @@ object Staged {
         .filter(length(col("term")) > 0))
     }
 
-  /** shingle-hash table under the engine-portable 60-bit hash
-    * ([[graft.operators.Dedup.portableHash60]]) — the variant whose
-    * sketches a DuckDB oracle can recompute bit-for-bit.
-    */
-  def docShingleHashesPortable(s: SparkSession, dir: String): DataFrame =
-    staged(s, s"shhp:$dir") {
-      graft.functions.VectorExpressions.register(s)
-      CacheTracker.persist(graft.operators.Dedup.shingleHashTable(
-        docShingles(s, dir), "doc_id", "__sh", graft.operators.Dedup.portableHash60))
-    }
-
-  /** (__id, __sim) 60-bit SimHash sketch table, persisted — one row
-    * per doc. The sketch aggregation feeds FOUR consumers in the
-    * pair pipeline (both band-join sides + both post-distinct sketch
-    * re-joins); materializing it once is the scale shape (at 100 TB
-    * you'd write this table, not re-aggregate the shingle hashes per
-    * consumer).
+  /** (__id, __sim) 64-bit SimHash sketch table under the engine-portable
+    * hash ([[graft.operators.Dedup.portableHash60]]), one row per doc —
+    * the sketches a DuckDB oracle recomputes bit-for-bit (bits 60-63
+    * are always clear). The per-shingle hash rows are consumed by the
+    * vote aggregation alone, so only the sketches are staged.
     */
   def docSimhash60(s: SparkSession, dir: String): DataFrame =
     staged(s, s"sim60:$dir") {
-      // truncated (r14): the 60 per-bit vote aggregations give this
-      // table a plan four consumers would each re-analyze
-      CacheTracker.truncate(graft.operators.Dedup
-        .simhashColsFromHashes(docShingleHashesPortable(s, dir), 60))
+      graft.functions.VectorExpressions.register(s)
+      // truncated (r14): the 64 per-bit vote aggregations give this
+      // table a plan both band-join sides would each re-analyze
+      CacheTracker.truncate(graft.operators.Dedup.simhashColsFromHashes(
+        graft.operators.Dedup.shingleHashTable(docShingles(s, dir), "doc_id", "__sh",
+          graft.operators.Dedup.portableHash60)))
     }
 
   /** lineitem written ONCE per (session, dir) as a range-clustered

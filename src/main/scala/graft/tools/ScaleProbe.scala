@@ -108,23 +108,13 @@ object ScaleProbe {
       out += s"""{"probe":"d15_bloom_membership","dir":"$dir","incoming":$d15In,"probe_pass":$bfProbe,"dups":$d15Dups,"wall_sec":$d15Wall}"""
 
       // mm9: phash near-dup — band candidates vs verified pairs over
-      // the real-decode sketch table (staged once, like the query). The
-      // 64-bit sketch `__h` splits into four 16-bit bands by shift/mask,
-      // the banding Dedup.hammingPairsFromLongs uses at maxDist = 3.
+      // the real-decode sketch table (staged once, like the query),
+      // counted by the candidate stage the query itself runs
       val mm9Sketches = graft.SparkEntry.queries("mm9_phash_neardup")
       val (mm9Pairs, mm9Wall) = timed(mm9Sketches(spark, dir).count())
-      val mm9Cand = {
-        val sk = Staged.cached(spark, s"mm9sketch:$dir")(
-          sys.error("staged by the query run above"))
-        val ch = sk.select(col("__id"), explode(array((0 until 4).map(j =>
-            struct(lit(j).as("band"),
-              shiftrightunsigned(col("__h"), j * 16).bitwiseAND(lit(0xFFFFL)).as("bits"))): _*)).as("__b"))
-          .select(col("__id"), col("__b.band"), col("__b.bits"))
-        ch.as("l").join(ch.as("r"),
-            col("l.band") === col("r.band") && col("l.bits") === col("r.bits")
-              && col("l.__id") < col("r.__id"))
-          .select(col("l.__id"), col("r.__id")).distinct().count()
-      }
+      val mm9Cand = Dedup.hammingCandidates(
+        Staged.cached(spark, s"mm9sketch:$dir")(sys.error("staged by the query run above")),
+        "__id", "__h", maxDist = 3).count()
       out += s"""{"probe":"mm9_phash_neardup","dir":"$dir","sketches":${nDocs * 2},"candidates":$mm9Cand,"pairs":$mm9Pairs,"wall_sec":$mm9Wall}"""
 
       Staged.release(spark)

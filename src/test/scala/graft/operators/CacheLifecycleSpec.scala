@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.{col, shiftrightunsigned}
+
 import graft.core.SparkTestBase
 import graft.queries.Staged
 
@@ -112,5 +114,39 @@ class CacheLifecycleSpec extends SparkTestBase {
     val pinned = calls.flatMap(_._2._2).toSet ++ idxPins
     CacheTracker.release(spark)
     assert(pinned.intersect(persistentIds).isEmpty, "release left admission pins behind")
+  }
+
+  test("a staged SimHash sketch table is the one frame it pins over the shingles") {
+    CacheTracker.release(spark)
+    val (_, shPins) = pinsOf(Staged.docShingles(spark, dir))
+    assert(shPins.size == 1, s"docShingles should pin one frame, saw $shPins")
+    // the per-shingle hash rows feed only the vote aggregation, so the
+    // sketch table is the only new pin
+    val (sims, simPins) = pinsOf(Staged.docSimhash60(spark, dir))
+    assert(simPins.size == 1, s"docSimhash60 should pin exactly one RDD, saw $simPins")
+    assert(sims.count() > 0)
+    assert(sims.filter(shiftrightunsigned(col("__sim"), 60) =!= 0L).isEmpty,
+      "portable-hash sketches must leave bits 60-63 clear")
+    CacheTracker.release(spark)
+    assert((shPins ++ simPins).intersect(persistentIds).isEmpty, "release left SimHash pins behind")
+  }
+
+  test("ngramJaccardPairs pins its set table and its prefix leaf per call") {
+    CacheTracker.release(spark)
+    val base = "the quick brown fox jumps over the lazy dog and runs far away " * 5
+    def shingled(id: Long) = Seq(id -> base, (id + 1) -> base.replace("lazy", "sleepy"),
+      (id + 2) -> s"completely different content number $id with no overlap at all " * 5)
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh"))
+    val calls = Seq(10L, 20L).map(id => id -> pinsOf(
+      Dedup.ngramJaccardPairs(shingled(id), "doc_id", "__sh", 2, 5)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq))
+    calls.foreach { case (id, (pairs, pins)) =>
+      assert(pairs == Seq(id -> (id + 1)))
+      assert(pins.size == 2, s"ngramJaccardPairs should pin its set table and prefix leaf, saw $pins")
+    }
+    val pinned = calls.flatMap(_._2._2).toSet
+    CacheTracker.release(spark)
+    assert(pinned.intersect(persistentIds).isEmpty, "release left n-gram Jaccard pins behind")
   }
 }

@@ -168,15 +168,22 @@ class DedupSpec extends SparkTestBase {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("simhash bits: 64 chars, deterministic") {
-    val d = docs(1L -> base)
-    val bits = d.select(Dedup.simhashBits(TextOps.shingles(col("text"), 3))).as[String].head()
-    assert(bits.length == 64 && bits.forall(c => c == '0' || c == '1'))
-  }
-
-  test("hamming distance on bit strings") {
-    val d = Seq(("1100", "1001")).toDF("a", "b")
-    assert(d.select(Dedup.hammingDist(col("a"), col("b"))).as[Long].head() == 2L)
+  test("simhash sketches: bit j set iff the vote on bit j is positive") {
+    def vote(hs: Seq[Long]): Long = (0 until 64).foldLeft(0L) { (acc, j) =>
+      if (hs.map(h => if (((h >>> j) & 1L) != 0) 1 else -1).sum > 0) acc | (1L << j) else acc
+    }
+    val rnd = new scala.util.Random(7)
+    val fixture = Map(
+      1L -> Seq(-1L, Long.MinValue, 3L),                           // negative hashes: bit 63
+      2L -> Seq(0x0F0F0F0F0F0F0F0FL, ~0x0F0F0F0F0F0F0F0FL),         // every vote tied
+      3L -> Seq.fill(9)(rnd.nextLong() >>> 4),                      // below 2^60
+      4L -> Seq.fill(25)(rnd.nextLong()))
+    val hashed = fixture.toSeq.flatMap { case (id, hs) => hs.map(id -> _) }.toDF("__id", "__h")
+    val got = Dedup.simhashColsFromHashes(hashed).as[(Long, Long)].collect().toMap
+    assert(got == fixture.map { case (id, hs) => id -> vote(hs) })
+    assert(got(1L) == (Long.MinValue | 3L))
+    assert(got(2L) == 0L, "a tied vote leaves its bit clear")
+    assert((got(3L) >>> 60) == 0L, "hashes below 2^60 leave bits 60-63 clear")
   }
 
   test("embedding near-dup: planted scaled/near copies found, far vectors skipped") {
@@ -539,9 +546,9 @@ class DedupSpec extends SparkTestBase {
     assert(got == model)
   }
 
-  test("hammingPairsFromLongs == the string-sketch pigeonhole path") {
-    // both formulations have banding recall 1.0 at the budget plus an
-    // exact verify, so their outputs must be identical pair-for-pair
+  test("hammingPairsFromLongs == all-pairs popcount") {
+    // pigeonhole banding has recall 1.0 at the budget and the verify is
+    // exact, so the output must equal the brute-force all-pairs join
     val rnd = new scala.util.Random(13)
     val base = (0L until 150L).map(i => (i, rnd.nextLong()))
     val planted = base.take(30).zipWithIndex.map { case ((i, h), k) =>
@@ -550,20 +557,17 @@ class DedupSpec extends SparkTestBase {
       (i + 1000L, bits.foldLeft(h)((acc, b) => acc ^ (1L << b)))
     }
     val all = base ++ planted
-    def bits64(h: Long): String =
-      (0 until 64).map(j => if (((h >>> j) & 1L) != 0) '1' else '0').mkString
-    val longDf = all.toDF("id", "h")
-    val strDf = all.map { case (i, h) => (i, bits64(h)) }.toDF("__id", "__sim")
-    val a = Dedup.hammingPairsFromLongs(longDf, "id", "h", maxDist = 3)
+    val got = Dedup.hammingPairsFromLongs(all.toDF("id", "h"), "id", "h", maxDist = 3)
       .as[(Long, Long, Long)].collect().sorted.toSeq
-    val b = Dedup.simhashPairsFromShingles(strDf, "__id", "__sim",
-        maxHamming = 3, sketches = Some(strDf))
-      .as[(Long, Long, Long)].collect().sorted.toSeq
-    assert(a == b)
-    assert(a.nonEmpty, "fixture must plant at least one qualifying pair")
+    val model = (for {
+      (a, ha) <- all; (b, hb) <- all if a < b
+      d = java.lang.Long.bitCount(ha ^ hb).toLong if d <= 3
+    } yield (a, b, d)).sorted
+    assert(got == model)
+    assert(got.nonEmpty, "fixture must plant at least one qualifying pair")
     // distances 1..3 planted -> paired; distance-4 twins absent
-    val dists = a.filter(p => p._2 == p._1 + 1000L).map(_._3).toSet
-    assert(dists.subsetOf(Set(1L, 2L, 3L)) && !a.exists(_._3 > 3))
+    val dists = got.filter(p => p._2 == p._1 + 1000L).map(_._3).toSet
+    assert(dists.subsetOf(Set(1L, 2L, 3L)) && !got.exists(_._3 > 3))
   }
 
   test("clusterCanonical: argmax score per cluster, smallest-id tie-break") {
