@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRowWithSchema}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructType}
 import scala.jdk.CollectionConverters._
 
+import graft.functions.{GatherPositions, Param}
 import graft.operators.CacheTracker
 import Shape.Shape
 
@@ -21,16 +22,23 @@ import Shape.Shape
   * `__idx0..__idxN: LongType`, because DataFrames are unordered.
   * Reshape / flatten / slice / newaxis are pure index arithmetic —
   * narrow transformations, no shuffle. Filter (boolean mask) is the one
-  * op that needs a global re-index; it uses a per-partition-offset
-  * zipWithIndex (two light jobs), never a single-partition window, so
-  * it survives 100-TB inputs (SURVEY §7.5.1).
+  * op that needs a global re-index; it uses per-partition offsets
+  * (zipWithIndex), never a single-partition window, so it survives
+  * 100-TB inputs (SURVEY §7.5.1).
   *
   * Each operation is one pass over the fields, as the reference's is one
   * numpy view or `tree_map`: a single projection that computes each
-  * output `__idx*` column under its final name, over at most one join —
-  * a broadcast local index table for integer-array gathers, the shared
-  * batch index for [[zipJoin]], a replicating range per axis for
-  * [[broadcastTo]].
+  * output `__idx*` column under its final name. A literal
+  * integer-array gather explodes each row to the positions its key is
+  * named at ([[graft.functions.GatherPositions]]) and [[broadcastTo]]
+  * explodes a literal `[0, n)` per expanded axis, so neither joins;
+  * only [[zipJoin]] (on the shared batch index) and the distributed
+  * [[gatherAxis]] (on the index frame's values) join. Shape constants —
+  * strides, dims, slice bounds, int indices, concat offsets — enter
+  * generated code as [[graft.functions.Param]]s, read from the
+  * compiled class's references, so an operation at a new shape reuses
+  * the class compiled for the last one, as a numpy view costs no
+  * compile.
   *
   * A 1-D frame built by [[DcaFrame.fromDF]] or [[mask]] carries the
   * [[DcaFrame.Staging]] handle of its staged sort cache, which knows the
@@ -79,12 +87,14 @@ final case class DcaFrame(
       statics: Map[String, Any] = statics): DcaFrame =
     DcaFrame(df, shape, arrayCols, statics, staging = None)
 
-  /** Linear (row-major) index expression over the current idx columns. */
+  /** Linear (row-major) index expression over the current idx columns;
+    * the strides are [[Param]]s (the last one is 1 for every shape).
+    */
   def linearIndex: Column =
     if (ndim == 0) lit(0L)
     else {
       val st = Shape.strides(shape)
-      (0 until ndim).map(i => idx(i) * lit(st(i))).reduce(_ + _)
+      (0 until ndim).map(i => if (i == ndim - 1) idx(i) else idx(i) * Param.col(st(i))).reduce(_ + _)
     }
 
   /** Row-major driver-side materialization (small data / tests only):
@@ -130,20 +140,13 @@ final case class DcaFrame(
     val target = Shape.resolveReshape(shape, to)
     if (target == shape) this
     else {
-      // integral `div` (not Column./, which is double division and
-      // loses exactness above 2^53 — the 100-TB contract needs the
-      // full long range); the linear index is materialized under a
-      // reserved name so expr() can reference it
+      // the linear index is computed once, under a reserved name, and
+      // split by `div` / `%` over Param strides and dims
       require(!df.columns.contains("__graft_lin"),
         "__graft_lin is a reserved column name")
       val withLin = df.withColumn("__graft_lin", linearIndex)
-      val st = Shape.strides(target)
-      val newIdx = target.indices.map { i =>
-        val q = if (st(i) == 1L) col("__graft_lin") % lit(target(i))
-                else if (i == 0) expr(s"__graft_lin div ${st(i)}")
-                else expr(s"__graft_lin div ${st(i)}") % lit(target(i))
-        q.cast(LongType).as(s"__idx$i")
-      }
+      val newIdx = DcaFrame.unravel(col("__graft_lin"), target)
+        .zipWithIndex.map { case (q, i) => q.as(s"__idx$i") }
       derived(df = withLin.select(newIdx ++ arrayCols.map(col): _*), shape = target)
     }
   }
@@ -162,28 +165,22 @@ final case class DcaFrame(
     val (sizes, newShape) = Einops.resolve(p, shape, axesLength.toMap)
     // per-name index expression from the left structure
     val nameIdx: Map[String, Column] = p.left.zipWithIndex.flatMap { case (group, gi) =>
-      val dims = group.map(sizes)
-      val strides = dims.scanRight(1L)(_ * _).tail
-      group.zip(strides).zip(dims).map { case ((n, st), d) =>
-        // integral div for exactness over the full long range
-        val q = if (st == 1L) idx(gi) % lit(d)
-                else expr(s"__idx$gi div $st") % lit(d)
-        n -> q
-      }
+      group.zip(DcaFrame.unravel(idx(gi), group.map(sizes).toVector))
     }.toMap
     // new group index = linearization of member indices
     val newIdx = p.right.zipWithIndex.map { case (group, gi) =>
-      val dims = group.map(sizes)
-      val strides = dims.scanRight(1L)(_ * _).tail
-      group.zip(strides).map { case (n, st) => nameIdx(n) * lit(st) }
-        .reduce(_ + _).cast(LongType).as(s"__idx$gi")
+      val strides = group.map(sizes).scanRight(1L)(_ * _).tail
+      group.zip(strides).zipWithIndex.map { case ((n, st), j) =>
+        if (j == group.size - 1) nameIdx(n) else nameIdx(n) * Param.col(st)
+      }.reduce(_ + _).as(s"__idx$gi")
     }
     derived(df = df.select(newIdx ++ arrayCols.map(col): _*), shape = newShape)
   }
 
   /** Expand the batch shape (dim-1/new-leading axes up), every payload
-    * row replicated — `crossJoin(range(n))` per expanded dim
-    * (`array_dataclass.py:375-380`).
+    * row replicated (`array_dataclass.py:375-380`): each expanded axis
+    * of size n explodes the literal array `[0, n)` into its index — a
+    * generator in the frame's own stage, no join.
     */
   def broadcastTo(target: Seq[Long]): DcaFrame = {
     val t = target.toVector
@@ -195,13 +192,12 @@ final case class DcaFrame(
     }
     if (t == shape) this
     else {
-      val spark = df.sparkSession
       // target axis i >= pad keeps old axis i - pad when its size is
-      // unchanged; any other axis of size n > 1 is a replicating range
+      // unchanged; any other axis of size n != 1 is a replicating range
       def kept(i: Int) = i >= pad && padded(i) == t(i)
       val ranges = t.indices.filter(i => !kept(i) && t(i) != 1L)
       val crossed = ranges.foldLeft(df)((d, i) =>
-        d.crossJoin(broadcast(spark.range(t(i)).toDF(s"__tidx$i"))))
+        d.select(col("*"), explode(typedlit((0L until t(i)).toArray)).as(s"__tidx$i")))
       val newIdx = t.indices.map { i =>
         (if (kept(i)) col(s"__idx${i - pad}") else if (t(i) == 1L) lit(0L) else col(s"__tidx$i"))
           .as(s"__idx$i")
@@ -250,7 +246,7 @@ final case class DcaFrame(
         outIdx += lit(0L).as(s"__idx$outPos")
         outPos += 1
       case (_, Indexing.Resolved.Int(i)) =>
-        if (viewed.isEmpty) cur = cur.filter(col(s"__idx$axis") === lit(i))
+        if (viewed.isEmpty) cur = cur.filter(col(s"__idx$axis") === Param.col(i))
         axis += 1
       case (_, Indexing.Resolved.Gather(idxs)) =>
         // pass the axis through untouched here; gather applies below
@@ -264,14 +260,13 @@ final case class DcaFrame(
         outPos += 1
       case (_, Indexing.Resolved.Slice(start, step, newLen)) =>
         val c = col(s"__idx$axis")
-        // offset along the slice direction; exact-integer-valued
-        val off = if (step > 0) c - lit(start) else lit(start) - c
-        val stepAbs = math.abs(step)
-        cur = cur.filter(off >= 0 && (off % lit(stepAbs) === 0) &&
-          off < lit(newLen * stepAbs))
+        // offset along the slice direction
+        val off = if (step > 0) c - Param.col(start) else Param.col(start) - c
+        val stepAbs = Param.col(math.abs(step))
+        cur = cur.filter(off >= 0 && (off % stepAbs === 0) &&
+          off < Param.col(newLen * math.abs(step)))
         // integral div (exact over the full long range)
-        val offSql = if (step > 0) s"(__idx$axis - $start)" else s"($start - __idx$axis)"
-        outIdx += expr(s"$offSql div $stepAbs").cast(LongType).as(s"__idx$outPos")
+        outIdx += call_function("div", off, stepAbs).as(s"__idx$outPos")
         axis += 1
         outPos += 1
     }
@@ -315,9 +310,12 @@ final case class DcaFrame(
   /** Diagonal (zipped) multi-axis gather: element k of the result takes
     * input index `lists(a)(k)` on each gathered axis `positions(a)` —
     * numpy's broadcast-and-zip semantics for multiple advanced indices.
-    * Executed as ONE broadcast equi-join on the composite key (never a
-    * chain of per-axis gathers, which would outer-product). Length-1
-    * lists broadcast to the common length.
+    * Executed as ONE generator over the frame: each row explodes the
+    * output positions its composite key is named at
+    * ([[graft.functions.GatherPositions]]), so repeats replicate the
+    * row and an unnamed key drops it — no join, no chain of per-axis
+    * gathers (which would outer-product). Length-1 lists broadcast to
+    * the common length.
     *
     * Placement: the zipped result dim replaces the gathered axes IN
     * PLACE (at the first gathered position — requires the positions be
@@ -327,7 +325,6 @@ final case class DcaFrame(
     */
   private def gatherZip(positions: Vector[Int], lists: Vector[Vector[Long]],
                         toFront: Boolean = false): DcaFrame = {
-    val m = positions.length
     // numpy broadcast rule per dim: all non-1 lengths must agree (so
     // (0,) broadcasts with (1,) to (0,) — max() would wrongly reject it)
     val non1 = lists.map(_.length).filter(_ != 1).distinct
@@ -337,7 +334,7 @@ final case class DcaFrame(
     val len = non1.headOption.getOrElse(1)
     // guard the resolved-input precondition (Indexing.resolve validates
     // bounds and folds negatives); an unresolved index reaching the
-    // equi-join below would silently DROP rows instead of raising the
+    // lookup below would silently DROP rows instead of raising the
     // numpy IndexError contract gatherAxis documents
     positions.zip(lists).foreach { case (ax, l) =>
       l.foreach(i => require(i >= 0 && i < shape(ax),
@@ -345,16 +342,10 @@ final case class DcaFrame(
           "(gatherZip requires resolved, in-bounds indices)"))
     }
     val expanded = lists.map(l => if (l.length == len) l else Vector.fill(len)(l.head))
-    val tableCols = (0 until m).map(a => s"__src$a") :+ "__pos"
-    tableCols.foreach { r =>
-      require(!df.columns.contains(r), s"$r is a reserved column name") }
-    // a local relation, not an RDD: broadcasting it launches no job
-    val rows = (0 until len).map(k => Row.fromSeq(expanded.map(_(k)) :+ k.toLong))
-    val idxDf = df.sparkSession.createDataFrame(rows.asJava,
-      StructType(tableCols.map(StructField(_, LongType, nullable = false))))
-    val cond = positions.zipWithIndex
-      .map { case (ax, a) => col(s"__idx$ax") === col(s"__src$a") }.reduce(_ && _)
-    val joined = df.join(broadcast(idxDf), cond)
+    require(!df.columns.contains("__pos"), "__pos is a reserved column name")
+    val table = GatherPositions.Table(positions.map(shape), expanded)
+    val gathered = df.select(col("*"),
+      explode(GatherPositions.col(positions.map(idx), table)).as("__pos"))
     val posSet = positions.toSet
     val kept = (0 until ndim).filterNot(posSet).toVector
     // in-place insertion point = number of kept axes before the first
@@ -371,29 +362,43 @@ final case class DcaFrame(
       Seq(col("__pos").as(s"__idx$insertAt")) ++
       keptAfter.zipWithIndex.map { case (ax, i) => col(s"__idx$ax").as(s"__idx${insertAt + 1 + i}") }
     val newShape = (keptBefore.map(shape) :+ len.toLong) ++ keptAfter.map(shape)
-    derived(df = joined.select(outIdx ++ arrayCols.map(col): _*), shape = newShape)
+    derived(df = gathered.select(outIdx ++ arrayCols.map(col): _*), shape = newShape)
   }
 
   /** Boolean-mask selection — THE canonical filter (S7,
     * `array_dataclass.py:382-390`, `README.md:53`). The mask predicate
     * is evaluated per row over the full batch; the result is 1-D with a
-    * dense re-index. Scale path: zipWithIndex (per-partition offsets),
-    * not a global window.
+    * dense re-index by per-partition offsets, never a global window.
+    *
+    * A staged 1-D frame whose view steps forward ([[fromDF]]'s, a mask
+    * result, or a `step > 0` slice of either) already yields its rows
+    * in dense-position order, partition by partition, so its surviving
+    * rows are staged as they come: one job counts them, and no range
+    * sort or shuffle runs. Any other frame is sorted by its linear
+    * index first.
     */
   def mask(pred: Column): DcaFrame = {
-    require(!df.columns.contains("__graft_lin"),
-      "__graft_lin is a reserved column name")
     val filtered = df.filter(pred)
-      .select(linearIndex.as("__graft_lin") +: arrayCols.map(col): _*)
-    // the staged (sorted, cached) frame is the SINGLE cached artifact;
-    // the re-indexed view is a narrow codegen'd projection over it
-    val (indexed, n, staged) = DcaFrame.denseIndex(filtered, Seq(col("__graft_lin")))
-    copy(df = indexed.drop("__graft_lin"), shape = Vector(n), staging = Some(staged))
+    val (indexed, n, staged) =
+      if (ndim == 1 && staging.exists(_.step > 0))
+        DcaFrame.denseIndex(filtered.select(arrayCols.map(col): _*), Nil)
+      else {
+        require(!df.columns.contains("__graft_lin"),
+          "__graft_lin is a reserved column name")
+        val (i, n, s) = DcaFrame.denseIndex(
+          filtered.select(linearIndex.as("__graft_lin") +: arrayCols.map(col): _*),
+          Seq(col("__graft_lin")))
+        (i.drop("__graft_lin"), n, s)
+      }
+    // the staged cache is the SINGLE cached artifact; the re-indexed
+    // view is a narrow codegen'd projection over it
+    copy(df = indexed, shape = Vector(n), staging = Some(staged))
   }
 
-  /** Integer-array gather along axis 0 (S8): `p[int_arr]` — a
-    * broadcast join against the (small) index list, preserving the
-    * gather order and allowing repeats.
+  /** Integer-array gather along axis 0 (S8): `p[int_arr]` — one
+    * generator over the frame that replicates each row to the
+    * positions naming it, preserving the gather order and allowing
+    * repeats.
     */
   def gather(indices: Seq[Long]): DcaFrame = gatherAxis(indices, 0)
 
@@ -596,8 +601,8 @@ final case class DcaFrame(
     * broadcast rules (`vectorization.py:246-300`): front-aligned dims
     * equal-or-1, arg may carry extra trailing dims. Returns the aligned
     * frame pair broadcast to the joint batch shape; caller then joins
-    * on `__idx*` (equi-join; the dim-1 side was replicated via
-    * broadcast crossJoin, i.e. a broadcast NLJ in Spark terms).
+    * on `__idx*` (equi-join; the dim-1 side was replicated by
+    * [[broadcastTo]]'s generator, no join).
     */
   def alignForVectorize(other: DcaFrame): (DcaFrame, DcaFrame, Shape) = {
     val (joint, extra) = Shape.vectorizeBatch(shape, other.shape)
@@ -700,11 +705,13 @@ object DcaFrame {
     }
   }
 
-  /** Construct from an (already ordered-by sortCols) DataFrame, adding a
-    * dense 1-D index. Ordering is established by a range-repartition +
+  /** Construct from a DataFrame, adding a dense 1-D index in `sortCols`
+    * order. Ordering is established by a range-repartition +
     * partition-local sort, then indices are assigned with per-partition
-    * offsets (zipWithIndex): two light jobs, no single-partition stage —
-    * scales to arbitrarily large inputs.
+    * offsets (zipWithIndex), no single-partition stage — scales to
+    * arbitrarily large inputs. Building runs the range sort's sampling
+    * job, its shuffle-map job and one job that fills the staged cache
+    * and counts each partition's rows (see [[denseIndex]]).
     *
     * `sortCols` MUST be a unique key: ties would make the assigned row
     * identity depend on partitioning, breaking the deterministic-order
@@ -714,10 +721,10 @@ object DcaFrame {
              statics: Map[String, Any] = Map.empty): DcaFrame = {
     val cols = if (arrayCols.nonEmpty) arrayCols.toVector else df.columns.toVector
     // ONE cached artifact (the staged sort, already materialized by the
-    // offsets job inside denseIndex), ONE job total. The indexed frame is
-    // a narrow codegen'd projection over that cache — re-deriving the
-    // dense index per downstream job is a literal-array lookup, far
-    // cheaper than a second persist + count of the projection was.
+    // counting job inside denseIndex). The indexed frame is a narrow
+    // codegen'd projection over that cache — re-deriving the dense
+    // index per downstream job is a literal-array lookup, far cheaper
+    // than a second persist + count of the projection was.
     val (indexed, n, staged) = denseIndex(df.select(cols.map(col): _*), sortCols)
     DcaFrame(indexed, Vector(n), cols, statics, staging = Some(staged))
   }
@@ -751,6 +758,20 @@ object DcaFrame {
     if (shape == null) base else base.reshapeTo(shape)
   }
 
+  /** The row-major indices of linear index `lin` over `dims`: axis i
+    * is `lin div strides(i) % dims(i)`, without the `div` on the last
+    * axis (stride 1) or the `%` on the first (its quotient is already
+    * below dims(0)). Integral `div`, exact over the full long range;
+    * every constant is a [[Param]].
+    */
+  private[core] def unravel(lin: Column, dims: Shape): Vector[Column] = {
+    val st = Shape.strides(dims)
+    dims.indices.map { i =>
+      val q = if (i == dims.length - 1) lin else call_function("div", lin, Param.col(st(i)))
+      if (i == 0) q else q % Param.col(dims(i))
+    }.toVector
+  }
+
   /** Load a frame saved with [[DcaFrame.saveParquet]]: shape comes from
     * the dense-index invariant (max+1 per `__idx*` column; one agg job).
     */
@@ -775,17 +796,21 @@ object DcaFrame {
     * offsets — the scalable replacement for `row_number()` over a
     * global window (SURVEY §7.5.1), kept entirely inside Tungsten:
     * `monotonically_increasing_id()` encodes (partitionId << 33 |
-    * position-in-partition); a tiny per-partition count job turns that
+    * position-in-partition); the per-partition row counts turn that
     * into dense indices via a literal offset array. No per-row Row
     * ser/deser (the old `rdd.zipWithIndex` exit), no codegen break.
+    * Empty `sortCols` keep `df`'s own partition order.
     *
-    * The sorted input is persisted so the offsets job and every
+    * The sorted input is persisted so the counting job and every
     * downstream job see ONE materialization (a re-executed range
     * shuffle could re-sample different partition bounds and silently
-    * mis-index). This staged cache is the frame's ONLY cache — it is
-    * returned as a [[Staging]] handle with the per-partition offsets,
-    * carried on [[DcaFrame.staging]], pinned through `CacheTracker`, and
-    * released via [[DcaFrame.unpersist]] or the session sweep.
+    * mis-index). One RDD job over the cache fills it and counts the
+    * rows of each partition — a `groupBy` count would be a map job
+    * plus a result job under AQE. This staged cache is the frame's
+    * ONLY cache — it is returned as a [[Staging]] handle with the
+    * per-partition offsets, carried on [[DcaFrame.staging]], pinned
+    * through `CacheTracker`, and released via [[DcaFrame.unpersist]] or
+    * the session sweep.
     *
     * @return (indexed frame with `__idx0` prepended, total row count,
     *         staging handle of the cache backing the indexed view)
@@ -796,18 +821,13 @@ object DcaFrame {
       if (sortCols.isEmpty) df
       else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
     val staged = CacheTracker.persist(sorted)
+    val counts = staged.sparkSession.sparkContext.runJob(staged.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => it.foldLeft(0L)((n, _) => n + 1))
+    // offsets(p) = first index of partition p; offsets(nPart) = total
+    val offsets = counts.toVector.scanLeft(0L)(_ + _)
     val withMid = staged.select(
       monotonically_increasing_id().as("__graft_mid") +: df.columns.map(col).toSeq: _*)
-    val counts = withMid
-      .select(shiftright(col("__graft_mid"), 33).cast("int").as("__pid"))
-      .groupBy("__pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nPart = if (counts.isEmpty) 0 else counts.keys.max + 1
-    // offsets(p) = first index of partition p; offsets(nPart) = total
-    val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).toVector
-    val offCol =
-      if (nPart == 0) lit(0L)
-      else element_at(typedlit(offsets.init), shiftright(col("__graft_mid"), 33).cast("int") + 1)
+    val offCol = element_at(typedlit(offsets.init), shiftright(col("__graft_mid"), 33).cast("int") + 1)
     val indexed = withMid.select(
       (offCol + col("__graft_mid").bitwiseAND(lit((1L << 33) - 1))).cast(LongType).as("__idx0")
         +: df.columns.map(col).toSeq: _*)
@@ -838,7 +858,8 @@ object DcaFrame {
   }
 
   /** Concatenate along an EXISTING axis (M2, `ops.py:109-121`):
-    * `unionByName` with a cumulative offset on that axis — narrow.
+    * `unionByName` with a cumulative [[Param]] offset on that axis —
+    * narrow.
     */
   def concat(frames: Seq[DcaFrame], axis: Int = 0): DcaFrame = {
     require(frames.nonEmpty, "concat of empty sequence")
@@ -853,7 +874,7 @@ object DcaFrame {
     val offsets = frames.map(_.shape(ax)).scanLeft(0L)(_ + _)
     val shifted = frames.zip(offsets).map { case (f, off) =>
       if (off == 0L) f.df
-      else f.df.withColumn(s"__idx$ax", col(s"__idx$ax") + lit(off))
+      else f.df.withColumn(s"__idx$ax", col(s"__idx$ax") + Param.col(off))
     }
     val newShape = h.shape.updated(ax, frames.map(_.shape(ax)).sum)
     DcaFrame(shifted.reduce(_ unionByName _), newShape, h.arrayCols, h.statics)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
@@ -45,4 +45,12 @@ object GraftSqlBridge {
     */
   def resolvedAgg(df: DataFrame, agg: Column): Expression =
     df.agg(agg).queryExecution.analyzed.expressions.last
+
+  /** A Catalyst expression as a Column, for the library's own
+    * expressions (`graft.functions`) that no SQL name can carry.
+    */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** A Column as the (unresolved) Catalyst expression it wraps. */
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }

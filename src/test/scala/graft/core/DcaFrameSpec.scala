@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -209,13 +209,16 @@ class DcaFrameSpec extends SparkTestBase {
       assert(got.shape == Vector(len.toLong), s"shape for $a0 / $a1")
       assert(idxAndX(got).map(_._2) == want, s"values for $a0 / $a1")
     }
-    // the zipped index table is a local relation, so broadcasting it
-    // launches no job: the only RDD leaves are the fromLocal source's
-    def leaves(f: DcaFrame): Seq[LogicalPlan] = f.df.queryExecution.optimizedPlan.collectLeaves()
-    def rddIds(ls: Seq[LogicalPlan]): Set[Int] = ls.collect { case r: LogicalRDD => r.rdd.id }.toSet
-    val zipped = leaves(p(Ix.A(Seq(3L, 0L)), Ix.A(Seq(2L, -3L))))
-    assert(zipped.count(_.isInstanceOf[LocalRelation]) == 1, zipped)
-    assert(rddIds(zipped) == rddIds(leaves(p)), zipped)
+    // the zipped gather is one generator over the source: no join, no
+    // leaf but the fromLocal source's RDD, and one job
+    def optimized(f: DcaFrame): LogicalPlan = f.df.queryExecution.optimizedPlan
+    def rddIds(l: LogicalPlan): Set[Int] = l.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val zipped = p(Ix.A(Seq(3L, 0L)), Ix.A(Seq(2L, -3L)))
+    val plan = optimized(zipped)
+    assert(plan.collectFirst { case j: Join => j }.isEmpty, plan)
+    assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]), plan)
+    assert(rddIds(plan) == rddIds(optimized(p)), plan)
+    assert(jobsOf { zipped.df.collect(); () } == 1L)
     // an Int between two advanced indices vanishes -> still adjacent
     val q = points(24).reshape(4, 2, 3)
     val mid = q(Ix.A(Seq(1L, 3L)), Ix.I(1L), Ix.A(Seq(0L, 2L)))

@@ -1,11 +1,9 @@
 package graft.core
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.WorkMetricsListener
 import Indexing.Ix
 
 /** Slices and int indexes of a STAGED 1-D frame (one built by `fromDF`
@@ -38,15 +36,6 @@ class StagedSliceSpec extends SparkTestBase {
 
   private def check(items: Ix*): Unit =
     same(staged(items: _*), twin(items: _*), items.mkString("[", ", ", "]"))
-
-  private def tasksOf(action: => Unit): Long = {
-    val wm = WorkMetricsListener.install(spark)
-    try {
-      val before = wm.snapshotAfterDrain(spark)
-      action
-      (wm.snapshotAfterDrain(spark) - before).tasks
-    } finally spark.sparkContext.removeSparkListener(wm)
-  }
 
   test("the staged frame has at least 4 non-empty cached partitions") {
     assert(offsets.length - 1 >= 4, offsets)
@@ -127,7 +116,6 @@ class StagedSliceSpec extends SparkTestBase {
   }
 
   test("windows at new offsets, their ±step slices and iterFirstDim compile no class") {
-    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val len = 60L
     def win(s: Long) = staged(Ix.S(Some(s), Some(s + len)))
     def run(f: DcaFrame): Unit = { f.collectOrdered(); () }
@@ -135,15 +123,15 @@ class StagedSliceSpec extends SparkTestBase {
     // 0-d shape iterFirstDim yields)
     val w0 = win(7)
     run(w0); run(w0(Ix.S(Some(1), None, 3))); run(w0(Ix.I(2)))
-    val before = compiles
-    (0 until 20).foreach { j =>
-      val w = win(40 + 45 * j) // 40..955: inside and across partitions
-      same(w, twin(Ix.S(Some(40 + 45 * j), Some(40 + 45 * j + len))), s"window $j")
-      run(w(Ix.S(Some(1), None, 3)))
-      run(w(Ix.S(None, None, -2)))
+    val added = compilesOf {
+      (0 until 20).foreach { j =>
+        val w = win(40 + 45 * j) // 40..955: inside and across partitions
+        same(w, twin(Ix.S(Some(40 + 45 * j), Some(40 + 45 * j + len))), s"window $j")
+        run(w(Ix.S(Some(1), None, 3)))
+        run(w(Ix.S(None, None, -2)))
+      }
+      win(503).iterFirstDim().take(20).foreach(run)
     }
-    win(503).iterFirstDim().take(20).foreach(run)
-    val added = compiles - before
     assert(added == 0, s"the sweep compiled $added classes: per-window values reach codegen")
   }
 

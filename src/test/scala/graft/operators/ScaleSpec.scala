@@ -317,9 +317,6 @@ class PlanShapeSpec extends SparkTestBase {
     val bnljAllowed = Set(
       "q22_range_join",    // non-equi range join; broadcast side = 3 bins
       "q23_theta_join",    // the labeled O(n²) capability demo (twin: q23b)
-      "dca_s5_broadcast",  // broadcast_to: crossJoin with the NEW-DIM range —
-      "dca_v1_vectorize",  //   dimension-sized by the op's semantics
-      "dca_v3_extradims",  //   (same broadcastTo path inside vectorize)
       "sim1_cosine_topk",  // brute-force ANN baseline: corpus × broadcast QUERY set
       "sim12_mmr_rerank",  // candidate stage: corpus × broadcast 1-row query
                            //   (sim1's class; greedy rerank is driver-side)
