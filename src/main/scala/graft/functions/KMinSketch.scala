@@ -2,12 +2,14 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Mutable KMV buffer: the k smallest DISTINCT hash values, kept in a
@@ -122,14 +124,14 @@ case class KMinSketch(
 }
 
 object KMinSketch {
+  /** The aggregate: sorted array<bigint> of the k smallest distinct
+    * values of integral column `h` in each group (see the class doc).
+    */
+  def col(h: Column, k: Int): Column =
+    GraftSqlBridge.column(KMinSketch(GraftSqlBridge.expression(h), k).toAggregateExpression())
+
   private[functions] val builder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 2, s"kmin_sketch takes (hash, k), got ${exprs.length}")
-    val k = exprs(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"kmin_sketch k must be an integer literal, got $other")
-    }
-    KMinSketch(exprs.head, k)
+    KMinSketch(exprs.head, VectorExpressions.longLiteral(exprs(1), "kmin_sketch", "k").toInt)
   }
 }

@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,6 +120,12 @@ object MinHashSignature {
     }
     if (seen) UnsafeArrayData.fromPrimitiveArray(sig) else null
   }
+
+  /** The k-entry signature of each row's shingle array `values` under
+    * hash `family` (see the class doc).
+    */
+  def col(values: Column, k: Int, family: String): Column =
+    GraftSqlBridge.column(MinHashSignature(GraftSqlBridge.expression(values), k, family))
 
   private[functions] val builder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 3,

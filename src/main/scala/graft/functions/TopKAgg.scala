@@ -3,18 +3,20 @@ package graft.functions
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Typed UDAF: single-pass bounded top-k by score within a group.
+/** Typed UDAF: single-pass bounded top-k by score within a group —
+  * the reference fold of the native `topk_sketch` aggregate
+  * ([[TopKSketch]]), which the specs pin equal to it. The library's
+  * re-ranks ([[graft.operators.Similarity.bruteForceTopK]] and the ANN
+  * paths) run `topk_sketch`, not this.
   *
   * `groupBy(key).agg(TopKAgg(k).toColumn)` keeps only k (score, id)
   * pairs per partition and merges k-sized buffers — O(k) state, one
-  * shuffle of k-row buffers per group. At scale this replaces the
+  * shuffle of k-row buffers per group, where a
   * `row_number().over(Window.partitionBy(key).orderBy(score))` + filter
-  * pattern, which must shuffle and SORT every candidate row; for
-  * top-k-of-millions-per-key the window sort is the bottleneck, the
-  * aggregator is linear.
+  * must shuffle and SORT every candidate row.
   *
   * Ordering: score DESC, id ASC tiebreak — identical to the window
-  * formulation used by [[graft.operators.Similarity.bruteForceTopK]].
+  * formulation.
   */
 final case class ScoredId(id: Long, score: Double)
 

@@ -3,11 +3,13 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.PriorityQueue
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types._
 
 /** Mutable bounded top-k buffer: a worst-first binary heap of
@@ -175,14 +177,15 @@ case class TopKSketch(
 }
 
 object TopKSketch {
+  /** The aggregate: the k best (id, score) pairs of each group,
+    * best-first (see the class doc).
+    */
+  def col(id: Column, score: Column, k: Int): Column =
+    GraftSqlBridge.column(TopKSketch(GraftSqlBridge.expression(id), GraftSqlBridge.expression(score), k)
+      .toAggregateExpression())
+
   private[functions] val builder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 3, s"topk_sketch takes (id, score, k), got ${exprs.length}")
-    val k = exprs(2) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"topk_sketch k must be an integer literal, got $other")
-    }
-    TopKSketch(exprs.head, exprs(1), k)
+    TopKSketch(exprs.head, exprs(1), VectorExpressions.longLiteral(exprs(2), "topk_sketch", "k").toInt)
   }
 }

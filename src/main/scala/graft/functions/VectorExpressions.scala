@@ -1,14 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the embedding hot path: fused
   * float-array dot product in DOUBLE, left-to-right accumulation.
+  * Either side may also be an array<double> (a dequantized vector):
+  * its elements enter the products as they are, float elements are
+  * widened to double first.
   *
   * Why not `aggregate(zip_with(...))`: the higher-order-function chain
   * allocates an intermediate array per row and evaluates a lambda per
@@ -25,15 +29,20 @@ case class DotF32(left: Expression, right: Expression) extends BinaryExpression 
   override def dataType: DataType = DoubleType
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
+      case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case _ =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot_f32 needs two array<float> args, got ${left.dataType} / ${right.dataType}")
+          s"dot_f32 needs two array<float> or array<double> args, got ${left.dataType} / ${right.dataType}")
     }
   }
 
   override def nullable: Boolean = true
+
+  private def doubles(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == DoubleType
+  @transient private lazy val leftDoubles = doubles(left)
+  @transient private lazy val rightDoubles = doubles(right)
 
   /** NULL on length mismatch OR any NULL element — identical to the
     * HOF formulation (`aggregate(zip_with(a, b, ...))`): zip_with
@@ -51,7 +60,8 @@ case class DotF32(left: Expression, right: Expression) extends BinaryExpression 
       var i = 0
       while (i < n) {
         if (x.isNullAt(i) || y.isNullAt(i)) return null
-        s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+        s += (if (leftDoubles) x.getDouble(i) else x.getFloat(i).toDouble) *
+          (if (rightDoubles) y.getDouble(i) else y.getFloat(i).toDouble)
         i += 1
       }
       s
@@ -63,6 +73,8 @@ case class DotF32(left: Expression, right: Expression) extends BinaryExpression 
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      def elem(arr: String, isDouble: Boolean) =
+        if (isDouble) s"$arr.getDouble($i)" else s"(double) $arr.getFloat($i)"
       s"""
          |int $n = $a.numElements();
          |if ($n != $b.numElements()) {
@@ -71,7 +83,7 @@ case class DotF32(left: Expression, right: Expression) extends BinaryExpression 
          |  double $s = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
          |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
+         |    $s += ${elem(a, leftDoubles)} * ${elem(b, rightDoubles)};
          |  }
          |  if (!${ev.isNull}) { ${ev.value} = $s; }
          |}
@@ -82,6 +94,17 @@ case class DotF32(left: Expression, right: Expression) extends BinaryExpression 
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "dot_f32"
+}
+
+object DotF32 {
+  /** `a · b` of two array<float> (or array<double>) columns, in DOUBLE. */
+  def col(a: Column, b: Column): Column =
+    GraftSqlBridge.column(DotF32(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  private[functions] val builder: Seq[Expression] => Expression = exprs => {
+    require(exprs.length == 2, s"dot_f32 takes 2 args, got ${exprs.length}")
+    DotF32(exprs.head, exprs(1))
+  }
 }
 
 /** Native codegen'd integer squared-L2 distance between two
@@ -155,6 +178,17 @@ case class SqDistI64(left: Expression, right: Expression) extends BinaryExpressi
   override def prettyName: String = "sq_dist_i64"
 }
 
+object SqDistI64 {
+  /** Squared L2 distance of two array<bigint> columns (see the class doc). */
+  def col(a: Column, b: Column): Column =
+    GraftSqlBridge.column(SqDistI64(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  private[functions] val builder: Seq[Expression] => Expression = exprs => {
+    require(exprs.length == 2, s"sq_dist_i64 takes 2 args, got ${exprs.length}")
+    SqDistI64(exprs.head, exprs(1))
+  }
+}
+
 /** Native codegen'd polynomial rolling hash over a string's characters:
   * acc = (acc * base + codepoint) mod `mod`, left-to-right
   * (defaults base=31, mod=1e9+7).
@@ -197,6 +231,18 @@ case class PolyHash(child: Expression, base: Long = 31L, mod: Long = 1000000007L
 }
 
 object PolyHash {
+  /** The rolling hash of string column `s` (see the class doc). */
+  def col(s: Column, base: Long = 31L, mod: Long = 1000000007L): Column =
+    GraftSqlBridge.column(PolyHash(GraftSqlBridge.expression(s), base, mod))
+
+  private[functions] val builder: Seq[Expression] => Expression = exprs => {
+    require(exprs.length == 1 || exprs.length == 3,
+      s"poly_hash takes 1 arg or (str, base, mod), got ${exprs.length}")
+    if (exprs.length == 1) PolyHash(exprs.head)
+    else PolyHash(exprs.head, VectorExpressions.longLiteral(exprs(1), "poly_hash", "base"),
+      VectorExpressions.longLiteral(exprs(2), "poly_hash", "mod"))
+  }
+
   /** O(n) over bytes for pure-ASCII strings; codepoint loop otherwise. */
   def hash(s: org.apache.spark.unsafe.types.UTF8String, base: Long, mod: Long): Long = {
     val bytes = s.getBytes
@@ -219,47 +265,42 @@ object PolyHash {
 }
 
 object VectorExpressions {
-  private[functions] val dotF32Builder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 2, s"dot_f32 takes 2 args, got ${exprs.length}")
-    DotF32(exprs.head, exprs(1))
+  /** An integer-literal argument of a SQL call (k, base, mod): the SQL
+    * form of a plan-time constant that the Column constructors take as a
+    * Scala value.
+    */
+  private[functions] def longLiteral(e: Expression, fn: String, what: String): Long = e match {
+    case Literal(v: Long, _) => v
+    case Literal(v: Int, _) => v.toLong
+    case other => throw new IllegalArgumentException(s"$fn $what must be an integer literal, got $other")
   }
 
-  private[functions] val sqDistI64Builder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 2, s"sq_dist_i64 takes 2 args, got ${exprs.length}")
-    SqDistI64(exprs.head, exprs(1))
-  }
-
-  private[functions] val polyHashBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 1 || exprs.length == 3,
-      s"poly_hash takes 1 arg or (str, base, mod), got ${exprs.length}")
-    if (exprs.length == 1) PolyHash(exprs.head)
-    else {
-      def longLit(e: Expression, what: String): Long = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-        case other => throw new IllegalArgumentException(
-          s"poly_hash $what must be an integer literal, got $other")
-      }
-      PolyHash(exprs.head, longLit(exprs(1), "base"), longLit(exprs(2), "mod"))
+  /** The ONE table of the graft native functions' SQL names, classes and
+    * builders, read by both [[register]] and [[GraftExtensions]].
+    */
+  private[functions] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      ("dot_f32", classOf[DotF32], DotF32.builder),
+      ("sq_dist_i64", classOf[SqDistI64], SqDistI64.builder),
+      ("poly_hash", classOf[PolyHash], PolyHash.builder),
+      ("minhash_signature", classOf[MinHashSignature], MinHashSignature.builder),
+      ("kmin_sketch", classOf[KMinSketch], KMinSketch.builder),
+      ("topk_sketch", classOf[TopKSketch], TopKSketch.builder)
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
     }
-  }
 
   /** Register the graft native functions in the session's function
-    * registry so they are usable from `expr(...)` and SQL. Idempotent:
-    * a name already registered is left alone, so operators may call
-    * this per invocation.
+    * registry so SQL strings (`spark.sql`, `expr`, `selectExpr`) can
+    * name them. Only SQL clients need it: library code builds the
+    * kernels as Columns (`DotF32.col`, `PolyHash.col`, …), which resolve
+    * in any session. Idempotent: a name already registered is left alone.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    def add(name: String, cls: Class[_], builder: Seq[Expression] => Expression): Unit =
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.registerFunction(FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
-    add("dot_f32", classOf[DotF32], dotF32Builder)
-    add("sq_dist_i64", classOf[SqDistI64], sqDistI64Builder)
-    add("poly_hash", classOf[PolyHash], polyHashBuilder)
-    add("minhash_signature", classOf[MinHashSignature], MinHashSignature.builder)
-    add("kmin_sketch", classOf[KMinSketch], KMinSketch.builder)
-    add("topk_sketch", classOf[TopKSketch], TopKSketch.builder)
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 }
 
@@ -272,30 +313,7 @@ object VectorExpressions {
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      VectorExpressions.dotF32Builder))
-    e.injectFunction((
-      FunctionIdentifier("sq_dist_i64"),
-      new ExpressionInfo(classOf[SqDistI64].getName, "sq_dist_i64"),
-      VectorExpressions.sqDistI64Builder))
-    e.injectFunction((
-      FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      VectorExpressions.polyHashBuilder))
-    e.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      MinHashSignature.builder))
-    e.injectFunction((
-      FunctionIdentifier("kmin_sketch"),
-      new ExpressionInfo(classOf[KMinSketch].getName, "kmin_sketch"),
-      KMinSketch.builder))
-    e.injectFunction((
-      FunctionIdentifier("topk_sketch"),
-      new ExpressionInfo(classOf[TopKSketch].getName, "topk_sketch"),
-      TopKSketch.builder))
+    VectorExpressions.functions.foreach(e.injectFunction)
     e.injectCheckRule(s => graft.plans.ProductGuard.check(s))
     // whole-operator extension: the distributed prefix-sum planner
     // strategy (graft.plans.PrefixSumExec) — SQL-only clients get the

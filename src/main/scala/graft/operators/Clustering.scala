@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.SqDistI64
+
 /** Distributed k-means clustering (Lloyd 1957/1982, public) over an
   * embedding column — the
   * corpus-organization primitive of a training-data pipeline (topic
@@ -40,15 +42,6 @@ object Clustering {
   def quantize(vec: Column, scale: Int): Column =
     transform(vec, x => round(x.cast("double") * scale).cast("long"))
 
-  /** Integer squared L2 distance between two quantized vectors — the
-    * native codegen'd expression ([[graft.functions.SqDistI64]]); the
-    * HOF formulation `aggregate(zip_with(...))` allocates and boxes per
-    * element and is evaluated k times per row per iteration. Identical
-    * integer semantics, so the oracle is unaffected.
-    */
-  private def sqDist(a: Column, b: Column): Column =
-    call_function("sq_dist_i64", a, b)
-
   /** Literal array<struct<cell, cv>> of the centroids — ships with the
     * serialized plan (KBs even at 64k cells; the expression-level
     * analog of a broadcast variable, as in [[Similarity]]).
@@ -65,7 +58,7 @@ object Clustering {
     */
   private def nearest(qv: Column, cents: Seq[(Long, Array[Long])]): Column =
     array_min(transform(centArray(cents), c =>
-      struct(sqDist(qv, c.getField("cv")).as("dist"),
+      struct(SqDistI64.col(qv, c.getField("cv")).as("dist"),
         c.getField("cell").as("cell"))))
 
   /** Run `iters` Lloyd iterations from deterministic seeds (the k rows
@@ -78,7 +71,6 @@ object Clustering {
   def kmeansAssign(df: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int, quantScale: Int = 1000): DataFrame = {
     require(k > 0 && iters >= 0, s"need k>0, iters>=0; got k=$k iters=$iters")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val qdf = df.select(col(idCol), quantize(col(vecCol), quantScale).as("__qv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.MinHashSignature
+import graft.functions.{MinHashSignature, PolyHash}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH near-dup, SimHash near-dup. All distributed-first:
@@ -62,11 +62,10 @@ object Dedup {
     * exactly), unlike xxhash64. Mixing is weaker than xxhash64; prefer
     * the default family in production and this one (family
     * "portable60" of [[signatures]]) when cross-engine verification
-    * matters. Requires [[graft.functions.VectorExpressions.register]].
+    * matters.
     */
   def portableHash60(c: Column): Column =
-    call_function("poly_hash", c) +
-      call_function("poly_hash", c, lit(37L), lit(1073741789L)) * lit(1073741824L)
+    PolyHash.col(c) + PolyHash.col(c, 37L, 1073741789L) * lit(1073741824L)
 
   /** Per-(doc, shingle) rows with the RAW hash of each shingle
     * (default xxhash64): the exploded table SimHash sketches from.
@@ -88,13 +87,8 @@ object Dedup {
     */
   def signatures(docs: DataFrame, idCol: String, shinglesCol: String, k: Int,
                  family: String = "xxhash64"): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
-    docs.select(col(idCol).as("__id"), signature(col(shinglesCol), k, family).as("__sig"))
+    docs.select(col(idCol).as("__id"), MinHashSignature.col(col(shinglesCol), k, family).as("__sig"))
   }
-
-  /** The kernel call of [[signatures]] (VectorExpressions registered). */
-  private def signature(shingles: Column, k: Int, family: String = "xxhash64"): Column =
-    call_function("minhash_signature", shingles, lit(k), lit(family))
 
   /** Scala-side xxhash64 (seed 42) of one shingle — the SAME hash the
     * kernel's default family computes, for streaming rows that need a
@@ -471,10 +465,10 @@ object Dedup {
     // row (__id, __sig, __hs; both NULL without shingles): band rows
     // (three join sides), verify sets and the survivor list project it,
     // so neither the kernel nor the hash transform re-runs per scan
-    graft.functions.VectorExpressions.register(spark)
     val iDoc = CacheTracker.persist(incoming
       .select(col(idCol).as("__id"), TextOps.shingles(col(textCol), shingleN).as("__sh"))
-      .select(col("__id"), signature(col("__sh"), bands * rows).as("__sig"),
+      .select(col("__id"),
+        MinHashSignature.col(col("__sh"), bands * rows, "xxhash64").as("__sig"),
         when(size(col("__sh")) > 0, hashSet(col("__sh"))).as("__hs")))
     val iB = bandBuckets(iDoc, bands, rows)
     val crossCand = iB.as("i")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.{SqDistI64, TopKSketch}
+
 /** Product quantization ANN (Jégou, Douze, Schmid, "Product
   * Quantization for Nearest Neighbor Search", IEEE TPAMI 2011 — the
   * compression path behind IVF-PQ indexes): vectors are split into `m`
@@ -27,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
   *     keyed (sub, cell, dim) — ≤ m·ks·dims groups regardless of
   *     corpus size, ONE job per iteration (not one per subspace);
   *   - encoding is a narrow codegen'd projection (no shuffle);
-  *   - the ADC scan shuffles only bounded TopKAgg buffers per query;
+  *   - the ADC scan shuffles only bounded `topk_sketch` buffers per query;
   *     full vectors are joined for the C candidates alone.
   *
   * Reference analog: batched vector math over typed array fields
@@ -38,9 +40,6 @@ object ProductQuant {
 
   /** codebooks(sub)(cell) = quantized centroid subvector. */
   type Codebooks = IndexedSeq[IndexedSeq[(Long, Array[Long])]]
-
-  private def sqDist(a: Column, b: Column): Column =
-    call_function("sq_dist_i64", a, b)
 
   private def centArraySub(cb: Seq[(Long, Array[Long])]): Column =
     array(cb.sortBy(_._1).map { case (cell, cv) =>
@@ -53,7 +52,7 @@ object ProductQuant {
     */
   private def cellFor(sv: Column, cb: Seq[(Long, Array[Long])]): Column =
     array_min(transform(centArraySub(cb), c =>
-      struct(sqDist(sv, c.getField("cv")).as("dist"),
+      struct(SqDistI64.col(sv, c.getField("cv")).as("dist"),
         c.getField("cell").as("cell")))).getField("cell")
 
   /** 1-based slice of subspace `sub` from a quantized vector. `qv`
@@ -74,7 +73,6 @@ object ProductQuant {
                      quantScale: Int = 1000): Codebooks = {
     require(m > 0 && dims % m == 0, s"dims ($dims) must divide into m ($m) subspaces")
     require(ks > 0 && iters >= 0, s"need ks>0, iters>=0; got ks=$ks iters=$iters")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val sd = dims / m
     val qdf = df.select(col(idCol).as("__id"),
         Clustering.quantize(col(vecCol), quantScale).as("__qv"))
@@ -124,7 +122,6 @@ object ProductQuant {
   def encode(df: DataFrame, idCol: String, vecCol: String,
              dims: Int, m: Int, cbs: Codebooks,
              quantScale: Int = 1000): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val sd = dims / m
     df.select(col(idCol), Clustering.quantize(col(vecCol), quantScale).as("__qv"))
       .select(col(idCol), array((0 until m).map { s0 =>
@@ -135,7 +132,8 @@ object ProductQuant {
   /** ADC top-k: train codebooks, encode the corpus, scan CODES with a
     * per-query (m × ks) distance table (approximate distance = m
     * lookups/row, exact in integer), keep the `candC` best candidates
-    * per query via the bounded [[graft.functions.TopKAgg]], then
+    * per query via the bounded `topk_sketch` aggregate
+    * ([[graft.functions.TopKSketch]]), then
     * exact-cosine re-rank the candidates alone against full vectors.
     *
     * Output: (qidCol, rank, idCol, cos_micro) — the shared ANN result
@@ -147,7 +145,6 @@ object ProductQuant {
               idCol: String = "vec_id", vecCol: String = "embedding",
               qidCol: String = "qid", qvecCol: String = "qvec",
               quantScale: Int = 1000): DataFrame = {
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     val sd = dims / m
     val cbs = trainCodebooks(corpus, idCol, vecCol, dims, m, ks, iters, quantScale)
     val codes = encode(corpus, idCol, vecCol, dims, m, cbs, quantScale)
@@ -156,12 +153,12 @@ object ProductQuant {
       .select(col(qidCol), col(qvecCol),
         Clustering.quantize(col(qvecCol), quantScale).as("__qqv"))
       .select(col(qidCol), col(qvecCol), array((0 until m).map { s0 =>
-        transform(centArraySub(cbs(s0)), c => sqDist(subVec(col("__qqv"), s0, sd),
+        transform(centArraySub(cbs(s0)), c => SqDistI64.col(subVec(col("__qqv"), s0, sd),
           c.getField("cv")))
       }: _*).as("__qtab"))
     // ADC scan: approx distance = m static table lookups per code row.
     // Sums of m*sd squared quantized deltas stay far under 2^53, so the
-    // double-scored TopKAgg ordering is exact.
+    // double-scored topk_sketch ordering is exact.
     val approx = (0 until m).map { s0 =>
       element_at(element_at(col("__qtab"), s0 + 1),
         element_at(col("__codes"), s0 + 1).cast("int") + 1)
@@ -170,18 +167,17 @@ object ProductQuant {
       .filter(col(idCol) =!= col(qidCol))
       .select(col(qidCol).cast("long").as(qidCol), col(idCol).cast("long").as(idCol),
         (-approx).cast("double").as("__negapprox"))
-      // native bounded heap (functions/TopKSketch), negated distance ==
-      // TopKAgg's (score desc, id asc) == (distance asc, id asc)
+      // native bounded heap (functions/TopKSketch), negated distance:
+      // its (score desc, id asc) == (distance asc, id asc)
       .groupBy(qidCol)
-      .agg(call_function("topk_sketch", col(idCol), col("__negapprox"),
-        lit(candC)).as("__cand"))
+      .agg(TopKSketch.col(col(idCol), col("__negapprox"), candC).as("__cand"))
       .select(col(qidCol), explode(col("__cand.id")).as(idCol))
     // exact re-rank over candidates only: candC full-vector reads per
     // query, not a corpus scan
     val scored = cands
       .join(corpus.select(col(idCol), col(vecCol)), idCol)
       .join(broadcast(qtab.select(col(qidCol), col(qvecCol))), qidCol)
-      .withColumn("__cos", Similarity.cosineNative(col(vecCol), col(qvecCol)))
+      .withColumn("__cos", Similarity.cosine(col(vecCol), col(qvecCol)))
     Similarity.topKReRank(scored, k, qidCol, idCol, "__cos")
   }
 
@@ -205,7 +201,8 @@ object ProductQuant {
     * Cell + codes come from ONE narrow projection of the corpus scan
     * (no self-join); the query side broadcasts (probe cells × ADC
     * tables); candidates per query are bounded by the probed lists,
-    * then [[graft.functions.TopKAgg]] cuts to candC before the exact
+    * then `topk_sketch` ([[graft.functions.TopKSketch]]) cuts to candC
+    * before the exact
     * re-rank. Output: the shared ANN contract (qid, rank, id,
     * cos_micro).
     */
@@ -242,7 +239,6 @@ object ProductQuant {
                       m: Int = 8, ks: Int = 8, iters: Int = 1,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       quantScale: Int = 1000): IvfPqIndex = {
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     val sd = dims / m
     val cents = Similarity.bootstrapCentroids(corpus, nCells, idCol, vecCol)
     val cbs = trainCodebooks(corpus, idCol, vecCol, dims, m, ks, iters, quantScale)
@@ -269,7 +265,6 @@ object ProductQuant {
                  idCol: String = "vec_id", vecCol: String = "embedding",
                  qidCol: String = "qid", qvecCol: String = "qvec",
                  quantScale: Int = 1000): DataFrame = {
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     val IvfPqIndex(cents, cbs, sd, indexed) = index
     val m = cbs.length
     // query side: nProbe nearest cells + the per-query ADC table, one
@@ -279,7 +274,7 @@ object ProductQuant {
       .withColumn("__qqv", Clustering.quantize(col(qvecCol), quantScale))
       .select(col(qidCol),
         array((0 until m).map { s0 =>
-          transform(centArraySub(cbs(s0)), c => sqDist(subVec(col("__qqv"), s0, sd),
+          transform(centArraySub(cbs(s0)), c => SqDistI64.col(subVec(col("__qqv"), s0, sd),
             c.getField("cv")))
         }: _*).as("__qtab"),
         explode(Similarity.nearestCells(col(qvecCol), col("__vnorm"), cents, nProbe))
@@ -292,16 +287,15 @@ object ProductQuant {
       .filter(col(idCol) =!= col(qidCol))
       .select(col(qidCol).cast("long").as(qidCol), col(idCol).cast("long").as(idCol),
         (-approx).cast("double").as("__negapprox"))
-      // native bounded heap (functions/TopKSketch), negated distance ==
-      // TopKAgg's (score desc, id asc) == (distance asc, id asc)
+      // native bounded heap (functions/TopKSketch), negated distance:
+      // its (score desc, id asc) == (distance asc, id asc)
       .groupBy(qidCol)
-      .agg(call_function("topk_sketch", col(idCol), col("__negapprox"),
-        lit(candC)).as("__cand"))
+      .agg(TopKSketch.col(col(idCol), col("__negapprox"), candC).as("__cand"))
       .select(col(qidCol), explode(col("__cand.id")).as(idCol))
     val scored = cands
       .join(corpus.select(col(idCol), col(vecCol)), idCol)
       .join(broadcast(queries.select(col(qidCol), col(qvecCol))), qidCol)
-      .withColumn("__cos", Similarity.cosineNative(col(vecCol), col(qvecCol)))
+      .withColumn("__cos", Similarity.cosine(col(vecCol), col(qvecCol)))
     Similarity.topKReRank(scored, k, qidCol, idCol, "__cos")
   }
 }

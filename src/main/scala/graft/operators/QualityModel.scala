@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.PolyHash
+
 /** Model-based quality filtering: a fastText-style linear classifier
   * over hashed bag-of-ngram features, run as pure relational inference
   * — the "quality classifier" stage of a CCNet/C4-style curation
@@ -44,7 +46,7 @@ object QualityModel {
     val feats = docs.select(col(idCol).as("__id"),
       explode(concat(TextOps.words(text), TextOps.ngrams(text, 2))).as("__f"))
     val bucketed = feats.select(col("__id"),
-      pmod(call_function("poly_hash", col("__f")), lit(buckets.toLong)).as("bucket"))
+      pmod(PolyHash.col(col("__f")), lit(buckets.toLong)).as("bucket"))
     bucketed.join(broadcast(weights), "bucket")
       .groupBy("__id")
       .agg(count(lit(1)).as("n_feats"), sum("w").as("score"))

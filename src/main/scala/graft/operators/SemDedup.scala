@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.SqDistI64
+
 /** Semantic deduplication (SemDeDup, Abbas et al. 2023, arXiv:2303.09540,
   * public): k-means-cluster the embedding space, then prune
   * near-duplicates WITHIN each cluster only — the scalable middle ground
@@ -56,13 +58,12 @@ object SemDedup {
                kmScale: Int = 1000, cosScale: Int = 100): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       s"threshold must be in (0,1]: got $tauNum/$tauDen")
-    graft.functions.VectorExpressions.register(df.sparkSession)
 
     val assign = Clustering.kmeansAssign(df, idCol, vecCol, k, iters, kmScale)
     val zero = typedlit(Seq.fill(dims)(0L))
     val qn = df.select(col(idCol),
         Clustering.quantize(col(vecCol), cosScale).as("__qv"))
-      .withColumn("__n2", call_function("sq_dist_i64", col("__qv"), zero))
+      .withColumn("__n2", SqDistI64.col(col("__qv"), zero))
     // the assigned+quantized table feeds BOTH sides of the dominance
     // anti-join, and the assignment itself (k×dims argmin fold per row)
     // is the expensive projection — persist so it computes once.
@@ -77,7 +78,7 @@ object SemDedup {
 
     // twoDot = 2·dot(a,b); the whole predicate stays in LONGs
     val twoDot = col("na") + col("nb") -
-      call_function("sq_dist_i64", col("qa"), col("qb"))
+      SqDistI64.col(col("qa"), col("qb"))
     val similar = twoDot > 0 &&
       lit(tauDen.toLong * tauDen) * twoDot * twoDot >=
         lit(4L * tauNum * tauNum) * col("na") * col("nb")

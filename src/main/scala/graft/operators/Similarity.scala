@@ -3,13 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{DotF32, TopKSketch}
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Three paths, mirroring what a 100 TB pipeline needs:
   *   - [[bruteForceTopK]]: exact cosine top-k — the correctness
   *     baseline; broadcast the (small) query set, scan the corpus once,
-  *     keep top-k per query with the bounded [[graft.functions.TopKAgg]]
-  *     aggregator (O(k) state; never a per-key window sort).
+  *     keep top-k per query with the bounded native `topk_sketch`
+  *     aggregate ([[graft.functions.TopKSketch]]; O(k) state, never a
+  *     per-key window sort).
   *   - [[ivfTopK]]: inverted-file ANN — centroids live on the driver
   *     (k-means centroids are KBs even at 64k cells) and cell
   *     assignment is a NARROW per-row argmax fold over the broadcast
@@ -19,37 +22,30 @@ import org.apache.spark.sql.functions._
   *     exact re-rank on candidates.
   *
   * Arithmetic notes: floats are cast to double BEFORE multiplication and
-  * the dot product is a left-to-right `aggregate` fold, so results are
-  * bit-reproducible across engines (the DuckDB oracle mirrors the fold).
+  * the dot product ([[graft.functions.DotF32]]) accumulates left to
+  * right, so results are bit-reproducible across engines (the DuckDB
+  * oracle mirrors the fold).
   */
 object Similarity {
 
-  /** Left-fold dot product of two array<float> columns in double. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Same accumulation via the native codegen'd expression
-    * [[graft.functions.DotF32]] (register it first:
-    * `VectorExpressions.register(spark)`). Bit-identical result, no
-    * per-row intermediate array.
+  /** Left-fold dot product of two array<float> columns in double: the
+    * native kernel [[graft.functions.DotF32]].
     */
-  def dotNative(a: Column, b: Column): Column = call_function("dot_f32", a, b)
+  def dot(a: Column, b: Column): Column = DotF32.col(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  def cosineNative(a: Column, b: Column): Column =
-    dotNative(a, b) / (sqrt(dotNative(a, a)) * sqrt(dotNative(b, b)))
-
   /** Shared exact re-rank: bounded single-pass top-k per query key via
-    * [[graft.functions.TopKAgg]] — partial aggregation keeps only k
-    * (score, id) pairs per partition, the shuffle carries k-row buffers
-    * per (qid, partition), and no task ever sorts the full candidate
-    * set. This is the plan that survives a 100× corpus; the
-    * `row_number().over(Window.partitionBy(qid))` formulation it
-    * replaces funnels EVERY scored row into one sort task per query.
+    * the native `topk_sketch` aggregate ([[graft.functions.TopKSketch]],
+    * spec-pinned equal to the [[graft.functions.TopKAgg]] fold) —
+    * partial aggregation keeps only k (score, id) pairs per partition,
+    * the shuffle carries k-row buffers per (qid, partition), and no
+    * task ever sorts the full candidate set. This is the plan that
+    * survives a 100× corpus; the `row_number().over(Window.partitionBy(qid))`
+    * formulation it replaces funnels EVERY scored row into one sort task
+    * per query.
     *
     * Ordering: score DESC, id ASC tiebreak (same as the window form).
     * Output: (qidCol, rank, idCol, cos_micro) with
@@ -57,7 +53,6 @@ object Similarity {
     */
   private[graft] def topKReRank(scored: DataFrame, k: Int, qidCol: String,
                                 idCol: String, scoreCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(scored.sparkSession)
     // the bounded aggregator keys on Long ids; a non-integral id column
     // would cast to NULL and be silently skipped — reject it eagerly
     // with a usable message instead
@@ -73,12 +68,12 @@ object Similarity {
     // native bounded heap aggregate (functions/TopKSketch) — the typed
     // groupByKey path deserialized every scored candidate into a case
     // class per row; topk_sketch reads (id, score) off the Tungsten row
-    // and ships k-entry buffers. Spec-pinned equal to the TopKAgg fold.
+    // and ships k-entry buffers.
     scored
       .select(col(qidCol).cast("long").as(qidCol),
         col(idCol).cast("long").as(idCol), col(scoreCol).cast("double").as("__s"))
       .groupBy(qidCol)
-      .agg(call_function("topk_sketch", col(idCol), col("__s"), lit(k)).as("__topk"))
+      .agg(TopKSketch.col(col(idCol), col("__s"), k).as("__topk"))
       .select(col(qidCol), posexplode(col("__topk")).as(Seq("__pos", "__e")))
       .select(col(qidCol), (col("__pos") + 1).cast("long").as("rank"),
         col("__e.id").as(idCol),
@@ -94,12 +89,10 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     qidCol: String = "qid", qvecCol: String = "qvec",
-                     native: Boolean = false): DataFrame = {
-    val cos: (Column, Column) => Column = if (native) cosineNative else cosine
+                     qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col(idCol) =!= col(qidCol))
-      .withColumn("__cos", cos(col(vecCol), col(qvecCol)))
+      .withColumn("__cos", cosine(col(vecCol), col(qvecCol)))
     topKReRank(scored, k, qidCol, idCol, "__cos")
   }
 
@@ -123,13 +116,12 @@ object Similarity {
   def mmrRerank(corpus: DataFrame, queryVecId: Long, nCand: Int, k: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val q = corpus.filter(col(idCol) === queryVecId)
       .select(col(vecCol).as("__qvec"))
     val cands = corpus.crossJoin(broadcast(q))
       .filter(col(idCol) =!= queryVecId)
       .select(col(idCol), col(vecCol),
-        cosineNative(col(vecCol), col("__qvec")).as("__rel"))
+        cosine(col(vecCol), col("__qvec")).as("__rel"))
       .orderBy(col("__rel").desc, col(idCol))
       .limit(nCand)
       .collect()
@@ -538,7 +530,7 @@ object Similarity {
     * shuffle join on (band, bits) — no broadcast — and per-bucket
     * fanout is bucketSize², the knob being the banding geometry (the
     * d2 discipline: PROBES.md measures bucket-collision growth).
-    * Exact cosine re-rank via the bounded TopKAgg: no task ever sorts
+    * Exact cosine re-rank via the bounded `topk_sketch`: no task ever sorts
     * a full candidate set. Recall < 1 by construction, same
     * planes/rowsPerBand trade as lshTopK.
     */
@@ -605,18 +597,16 @@ object Similarity {
       .select(col("qid"), col(idCol))
       .distinct()
     // norms computed ONCE per corpus vector (not once per candidate)
-    // and carried through the attach joins; native codegen'd dot —
-    // both bit-identical to the HOF cosine (same left-to-right double
-    // accumulation), so the oracle sees the same micros.
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
-    val withNorm = corpus.select(col(idCol), col(vecCol),
-      sqrt(dotNative(col(vecCol), col(vecCol))).as("__norm"))
+    // and carried through the attach joins — the same left-to-right
+    // double accumulation as [[cosine]], so the oracle sees the same
+    // micros.
+    val withNorm = corpus.select(col(idCol), col(vecCol), norm(col(vecCol)).as("__norm"))
     val cands = pairs
       .join(withNorm.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
         col("__norm").as("__qnorm")), "qid")
       .join(withNorm, idCol)
     val scored = cands.withColumn("__cos",
-      dotNative(col(vecCol), col("qvec")) / (col("__qnorm") * col("__norm")))
+      dot(col(vecCol), col("qvec")) / (col("__qnorm") * col("__norm")))
     topKReRank(scored, k, "qid", idCol, "__cos")
   }
 
@@ -677,7 +667,7 @@ object Similarity {
     val qcoded = queries.select(col(qidCol), col(qvecCol),
       binaryCode(col(qvecCol), dims).as("__qcode"))
     // candidate cut on CODES ONLY against the broadcast query codes;
-    // −hamming maps (hamming asc, id asc) onto TopKAgg's (score desc,
+    // −hamming maps (hamming asc, id asc) onto topk_sketch's (score desc,
     // id asc) contract — exact small integers, no double rounding
     val cands = coded
       .crossJoin(broadcast(qcoded.select(col(qidCol), col("__qcode"))))
@@ -784,7 +774,7 @@ object Similarity {
     val approx = cp.crossJoin(broadcast(qp))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("__negd", -sqDistD(col("__p"), col("__qp")))
-    // TopKAgg orders score DESC, id ASC == distance ASC, id ASC
+    // topk_sketch orders score DESC, id ASC == distance ASC, id ASC
     val cands = topKReRank(approx, candC, qidCol, idCol, "__negd")
       .select(col(qidCol), col(idCol))
     val scored = cands

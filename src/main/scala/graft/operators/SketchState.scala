@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.PolyHash
+
 /** Mergeable per-key distinct-count sketch state (portable HLL —
   * Flajolet et al. 2007 HyperLogLog with the Heule et al. 2013
   * small-range linear-counting correction), maintained as a plain
@@ -58,10 +60,8 @@ object SketchState {
     */
   def cmsCells(terms: DataFrame, termCol: String,
                bases: Seq[Int], w: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(terms.sparkSession)
     val bucketExprs = array(bases.map(b =>
-      pmod(call_function("poly_hash", col(termCol), lit(b.toLong),
-        lit(1000000007L)), lit(w.toLong))): _*)
+      pmod(PolyHash.col(col(termCol), b.toLong), lit(w.toLong))): _*)
     terms.select(posexplode(bucketExprs))
       .toDF("r", "bucket")
       .groupBy("r", "bucket").agg(count(lit(1)).as("c"))

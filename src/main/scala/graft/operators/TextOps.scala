@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline:
-  * tokenization, quality scoring, language ID, fingerprinting, shingles.
+  * tokenization, quality scoring, language ID, shingles.
   *
   * All pure Column expressions (whole-stage codegen, no UDFs): at 100 TB
   * these run inside the scan's codegen stage with nothing but a parquet
@@ -111,18 +111,6 @@ object TextOps {
       concat_ws(".", element_at(parts, -2), element_at(parts, -1)))
       .otherwise(host)
   }
-
-  /** Polynomial rolling-hash document fingerprint over characters:
-    * acc = (acc * 31 + codepoint) mod 1e9+7. Deterministic, exact-int,
-    * reproducible in any engine (the oracle recomputes it in SQL), and
-    * identical to the native [[graft.functions.PolyHash]] expression
-    * (spec-asserted). `split(text, "")` emits a trailing empty token
-    * (ascii('') = 0 would fold in one extra `acc*31 % p` step), so
-    * empties are filtered before the fold.
-    */
-  def fingerprint(text: Column): Column =
-    aggregate(filter(split(text, ""), c => length(c) > 0), lit(0L),
-      (acc, c) => (acc * 31 + ascii(c)) % 1000000007L)
 
   /** Overlapping word n-grams, occurrence-preserving (NOT distinct) —
     * the input to repetition-quality signals, where duplicate grams are

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.PolyHash
 import graft.operators.{Dedup, TextOps}
 import QueryDef.table
 
@@ -688,7 +689,6 @@ object DedupQueries {
     // hashes, first-occurrence rule, span cover, and reassembly.
     "d13_substring_dedup" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         Dedup.substringDedupFromGrams(table(s, dir, "documents"),
             Staged.substrGrams(s, dir, 8), "doc_id", "text", k = 8)
           .orderBy("doc_id")
@@ -1005,7 +1005,6 @@ object DedupQueries {
     "d20_semantic_contamination" -> QueryDef(
       (s, dir) => {
         import graft.operators.Similarity
-        graft.functions.VectorExpressions.register(s)
         val emb = table(s, dir, "embeddings")
         // the eval set is a CONSTANT-SIZE artifact (benchmark suites do
         // not grow with the training corpus): the id < 5000 cap pins it
@@ -1022,9 +1021,7 @@ object DedupQueries {
             .select((col("vec_id") + 10000000L).as("vec_id"),
               transform(col("embedding"), x => x * lit(2.0f)).as("embedding")))
         train.crossJoin(broadcast(eval_))
-          // native codegen'd dot_f32 — bit-identical to the HOF fold
-          // (sim1's proven pairing), so the oracle rendering is unchanged
-          .withColumn("cos", Similarity.cosineNative(col("embedding"), col("evec")))
+          .withColumn("cos", Similarity.cosine(col("embedding"), col("evec")))
           .filter(col("cos") >= 0.95)
           .withColumn("cm", floor(col("cos") * 1e6).cast("long"))
           .groupBy(col("vec_id").as("train_id"))
@@ -1190,11 +1187,10 @@ object DedupQueries {
     // certifies the estimator's bias on this corpus.
     "d28_duprate_estimate" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val docs = table(s, dir, "documents")
           .select(col("doc_id"), xxhash64(col("text")).as("__h"),
             graft.functions.KMinAgg.scramble(
-              call_function("poly_hash", col("doc_id").cast("string")))
+              PolyHash.col(col("doc_id").cast("string")))
               .as("__sh"))
         def dupPpm(d: org.apache.spark.sql.DataFrame) = d
           .groupBy("__h").agg(count(lit(1)).as("n"))

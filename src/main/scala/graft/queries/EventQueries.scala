@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.{KMinSketch, PolyHash}
 import graft.operators.AsOfJoin
 import QueryDef.{table, cents}
 
@@ -1073,16 +1074,15 @@ object EventQueries {
     "q97_rolling_distinct_sketch" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorExpressions.register(s)
         val k = 64
         // native kmin_sketch (q33's aggregate) — same sorted-distinct
         // <= k buffer the typed KMinListAgg fold produces
         val perDay = Relational.eventsRaw(s, dir)
           .select(expr("ts div 86400000000000").as("day"),
             graft.functions.KMinAgg.scramble(
-              call_function("poly_hash", col("user_id").cast("string"))).as("hv"))
+              PolyHash.col(col("user_id").cast("string"))).as("hv"))
           .groupBy("day")
-          .agg(call_function("kmin_sketch", col("hv"), lit(k)).as("mins"))
+          .agg(KMinSketch.col(col("hv"), k).as("mins"))
         val realDays = perDay.select(col("day").as("tday"))
         perDay
           .withColumn("tday", explode(sequence(col("day"), col("day") + 6)))

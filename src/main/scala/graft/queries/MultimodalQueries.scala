@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.PolyHash
+
 import QueryDef.table
 import graft.queries.Staged
 
@@ -664,7 +666,6 @@ object MultimodalQueries {
     // CTE rendering.
     "mm10_video_neardup" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
         val twins = docs.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 500000).as("doc_id"),
@@ -683,7 +684,7 @@ object MultimodalQueries {
         val fhs = docs.unionByName(twins).select(col("doc_id"),
           array_distinct(array_compact(array((0 until nF).map { i =>
             when(length(col("text")) >= i * 997 % 1000 + 16,
-              call_function("poly_hash",
+              PolyHash.col(
                 col("text").substr(lit(i * 997 % 1000 + 1), lit(16))).cast("string"))
           }: _*))).as("__sh"))
         graft.operators.Dedup.ngramJaccardPairs(fhs, "doc_id", "__sh",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.{KMinSketch, PolyHash, TopKSketch}
+
 import QueryDef.{table, cents}
 
 /** Classic relational operator suite (SURVEY §2.6) over the TPC-H-ish
@@ -639,13 +641,12 @@ object Relational {
     "q33_kmv_distinct" -> QueryDef(
       (s, dir) => {
         import graft.functions.KMinAgg
-        graft.functions.VectorExpressions.register(s)
         val k = KmvK
         table(s, dir, "lineitem")
           .select(col("l_returnflag"),
-            KMinAgg.scramble(call_function("poly_hash", col("l_partkey").cast("string"))).as("h"))
+            KMinAgg.scramble(PolyHash.col(col("l_partkey").cast("string"))).as("h"))
           .groupBy("l_returnflag")
-          .agg(call_function("kmin_sketch", col("h"), lit(k)).as("mins"))
+          .agg(KMinSketch.col(col("h"), k).as("mins"))
           .select(col("l_returnflag"),
             when(size(col("mins")) < k, size(col("mins")).cast("long"))
               .otherwise(expr(
@@ -683,7 +684,6 @@ object Relational {
     "q69_kmv_setops" -> QueryDef(
       (s, dir) => {
         import graft.functions.KMinAgg
-        graft.functions.VectorExpressions.register(s)
         val k = KmvK
         val li = table(s, dir, "lineitem")
           .filter(col("l_returnflag").isin("A", "R"))
@@ -691,10 +691,10 @@ object Relational {
         // native kmin_sketch (see q33) — same sorted-distinct <= k buffer
         // the typed KMinListAgg reference fold produces
         val sketches = li.select(col("side"),
-            KMinAgg.scramble(call_function("poly_hash",
+            KMinAgg.scramble(PolyHash.col(
               col("l_partkey").cast("string"))).as("h"))
           .groupBy("side")
-          .agg(call_function("kmin_sketch", col("h"), lit(k)).as("mins"))
+          .agg(KMinSketch.col(col("h"), k).as("mins"))
         val a = sketches.filter(col("side") === "A")
           .select(col("mins").as("mins_a"))
         val r = sketches.filter(col("side") === "R")
@@ -781,14 +781,13 @@ object Relational {
     // at 1e-13 relative — checked by the gate at both SFs).
     "q37_hll_portable" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         import graft.functions.KMinAgg
         // register build + estimator live in operators/SketchState (the
         // ONE Scala rendering, shared with q51's incremental merge);
         // this oracle predates the extraction and pins it bit-for-bit
         val li = table(s, dir, "lineitem")
         val hashed = li.select(col("l_returnflag"),
-          KMinAgg.scramble(call_function("poly_hash",
+          KMinAgg.scramble(PolyHash.col(
             col("l_partkey").cast("string"))).as("hv"))
         val regs = graft.operators.SketchState.hllRegisters(
           hashed, Seq("l_returnflag"), "hv", HllP, HllMaxRho)
@@ -819,7 +818,6 @@ object Relational {
     // table against today's delta without rescanning history.
     "q51_incremental_stats" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         import graft.functions.KMinAgg
         import graft.operators.{SketchState, TextOps}
         val keys = Seq("source", "lang")
@@ -831,7 +829,7 @@ object Relational {
             explode(TextOps.words(col("text"))).as("term"))
           .filter(length(col("term")) > 0)
           .select(col("source"), col("lang"),
-            KMinAgg.scramble(call_function("poly_hash", col("term"))).as("hv"))
+            KMinAgg.scramble(PolyHash.col(col("term"))).as("hv"))
         def stats(df: org.apache.spark.sql.DataFrame) = df
           .groupBy(keys.map(col): _*)
           .agg(count(lit(1)).as("n_docs"),
@@ -875,11 +873,10 @@ object Relational {
     // integer arithmetic, so the oracle reproduces it bit-for-bit.
     "q38_stratified_sample" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         import graft.functions.KMinAgg
         val rates = StratRatesPm // permille per l_returnflag stratum
         val thr = element_at(typedLit(rates), col("l_returnflag")).cast("long")
-        val hv = KMinAgg.scramble(call_function("poly_hash",
+        val hv = KMinAgg.scramble(PolyHash.col(
           concat_ws("_", col("l_orderkey"), col("l_linenumber"))))
         table(s, dir, "lineitem")
           .select(col("l_returnflag"), hv.as("__hv"),
@@ -974,16 +971,15 @@ object Relational {
     "q34_sample_quantile" -> QueryDef(
       (s, dir) => {
         import graft.functions.KMinAgg
-        graft.functions.VectorExpressions.register(s)
         val k = SampleK
         table(s, dir, "lineitem")
           .select(col("l_returnflag"),
-            KMinAgg.scramble(call_function("poly_hash",
+            KMinAgg.scramble(PolyHash.col(
               concat_ws("_", col("l_orderkey"), col("l_linenumber")))).as("h"),
             cents(col("l_quantity")).as("qty_c"))
           .groupBy("l_returnflag")
-          .agg(call_function("topk_sketch", col("qty_c"),
-            (-col("h")).cast("double"), lit(k)).as("sample"))
+          .agg(TopKSketch.col(col("qty_c"),
+            (-col("h")).cast("double"), k).as("sample"))
           .withColumn("vals", array_sort(col("sample.id")))
           .select(col("l_returnflag"),
             expr("element_at(vals, CAST((size(vals) + 1) DIV 2 AS INT))")
@@ -2839,14 +2835,13 @@ object Relational {
     "q93_rrf_fusion" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        graft.functions.VectorExpressions.register(s)
         val B = 100 // prune bound proven above for K=20, rrf constant 60
         val agg = Staged.custSpendAgg(s, dir)
         val topsRow = agg.agg(
-          call_function("topk_sketch",
-            col("o_custkey"), col("spend_c").cast("double"), lit(B)).as("sp"),
-          call_function("topk_sketch",
-            col("o_custkey"), col("n_orders").cast("double"), lit(B)).as("ct"))
+          TopKSketch.col(
+            col("o_custkey"), col("spend_c").cast("double"), B).as("sp"),
+          TopKSketch.col(
+            col("o_custkey"), col("n_orders").cast("double"), B).as("ct"))
           .head()
         def ranksOf(i: Int): Map[Long, Long] =
           topsRow.getSeq[org.apache.spark.sql.Row](i).zipWithIndex

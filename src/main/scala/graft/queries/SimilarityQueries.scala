@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.{PolyHash, SqDistI64, TopKSketch}
 import graft.operators.Similarity
 import QueryDef.table
 
@@ -62,7 +63,7 @@ object SimilarityQueries {
 
   /** The ONE DuckDB rendering of [[Similarity.dot]]'s left fold:
     * prepend-0.0 list_reduce over per-index double products — the same
-    * accumulation order as Spark's `aggregate(zip_with(...))`, so the
+    * accumulation order as [[graft.functions.DotF32]]'s loop, so the
     * result is bit-identical. `n` defaults to the full dimension;
     * sim15's coarse stage folds a prefix.
     */
@@ -487,26 +488,25 @@ object SimilarityQueries {
 
     // Cluster-balanced corpus sampling: k-means assignment + a fixed
     // per-cluster quota taken in deterministic pseudo-random order
-    // (scrambled-hash bottom-m via the bounded-state TopKAgg — O(m)
+    // (scrambled-hash bottom-m via the bounded-state topk_sketch — O(m)
     // mergeable state per cluster, skew-safe where a per-cluster window
     // sort is not). The mixture-construction primitive: equal topical
     // representation regardless of cluster size skew.
     "t16_cluster_balanced_sample" -> QueryDef(
       (s, dir) => {
         import graft.functions.KMinAgg
-        graft.functions.VectorExpressions.register(s)
         val assign = graft.operators.Clustering.kmeansAssign(
           table(s, dir, "embeddings"), "vec_id", "embedding",
           k = KmK, iters = KmIters, quantScale = KmScale)
         assign.select(col("vec_id"), col("cluster"),
-            KMinAgg.scramble(call_function("poly_hash",
+            KMinAgg.scramble(PolyHash.col(
               col("vec_id").cast("string"))).as("h"))
           // score = -hash: topk_sketch's (score desc, id asc) = (hash
           // asc, id asc) — hashes < 2^30 are exact in double (q34
           // pattern); native bounded heap, O(m) state per cluster
           .groupBy("cluster")
-          .agg(call_function("topk_sketch", col("vec_id"),
-            (-col("h")).cast("double"), lit(QuotaM)).as("sample"))
+          .agg(TopKSketch.col(col("vec_id"),
+            (-col("h")).cast("double"), QuotaM).as("sample"))
           .select(col("cluster"),
             posexplode(col("sample.id")).as(Seq("__p", "vec_id")))
           .select(col("cluster"), (col("__p") + 1).cast("long").as("rk"),
@@ -813,13 +813,10 @@ object SimilarityQueries {
 
     "sim1_cosine_topk" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val emb = table(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id").isInCollection(QueryIds))
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        // native codegen'd dot product; bit-identical to the HOF path
-        // (same accumulation order), so the DuckDB oracle is unchanged
-        Similarity.bruteForceTopK(emb, queries, K, native = true)
+        Similarity.bruteForceTopK(emb, queries, K)
           .orderBy("qid", "rank")
       },
       Some(s"""WITH q AS (
@@ -918,12 +915,11 @@ object SimilarityQueries {
     // filtered-IVF path row-equal to this at nProbe = nCells).
     "sim13_filtered_ann" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val emb = table(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id").isInCollection(QueryIds))
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
         Similarity.bruteForceTopK(emb.filter(col("label") === 3),
-          queries, K, native = true)
+          queries, K)
           .orderBy("qid", "rank")
       },
       Some(s"""WITH q AS (
@@ -1022,7 +1018,6 @@ object SimilarityQueries {
     // f32) and full vectors are read for candC·|queries| rows.
     "sim17_int8_ann" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val emb = table(s, dir, "embeddings")
         val gmax = emb.agg(max(Similarity.int8AbsMax(col("embedding"))).as("gmax"))
         val qt = emb.crossJoin(broadcast(gmax))
@@ -1038,7 +1033,7 @@ object SimilarityQueries {
           // dist <= 64·254² ≈ 4.1e6 — exactly representable as the
           // negated double the bounded top-k aggregator ranks on
           .withColumn("__negd",
-            -call_function("sq_dist_i64", col("qcodes"), col("qq")).cast("double"))
+            -SqDistI64.col(col("qcodes"), col("qq")).cast("double"))
         val topC = Similarity.topKReRank(cands, IntC, "qid", "vec_id", "__negd")
           .select(col("qid"), col("vec_id"))
         val scored = topC

@@ -308,7 +308,6 @@ object Staged {
     */
   def substrGrams(s: SparkSession, dir: String, k: Int): DataFrame =
     staged(s, s"sgrams:$dir:$k") {
-      graft.functions.VectorExpressions.register(s)
       CacheTracker.persist(graft.operators.Dedup.windowHashTable(
           table(s, dir, "documents"), "doc_id", "text", k))
     }
@@ -332,7 +331,6 @@ object Staged {
     */
   def docSimhash60(s: SparkSession, dir: String): DataFrame =
     staged(s, s"sim60:$dir") {
-      graft.functions.VectorExpressions.register(s)
       // truncated (r14): the 64 per-bit vote aggregations give this
       // table a plan both band-join sides would each re-analyze
       CacheTracker.truncate(graft.operators.Dedup.simhashColsFromHashes(

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.{PolyHash, TopKSketch}
 import graft.operators.TextOps
 import QueryDef.table
 
@@ -72,7 +73,6 @@ object TextQueries {
 
   private def winnowFpsBuild(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val W = 4 // hashes per winnowing window
     val P = 1048576L // pos encoding radix (2^20)
     val wspec = org.apache.spark.sql.expressions.Window
@@ -83,7 +83,7 @@ object TextQueries {
         posexplode(col("grams")).as(Seq("pos", "g")))
     grams
       .withColumn("key",
-        call_function("poly_hash", col("g")) * P + (lit(P - 1) - col("pos")))
+        PolyHash.col(col("g")) * P + (lit(P - 1) - col("pos")))
       .withColumn("mkey", min("key").over(wspec))
       .withColumn("wcnt", count(lit(1)).over(wspec))
       .filter(col("wcnt") === W)
@@ -299,14 +299,13 @@ object TextQueries {
     // sketch: est ≥ true always, overestimates only from collisions.
     "t7_cms_heavy_hitters" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val toks = Staged.docTerms(s, dir).select("term")
         // probe-side bucket exprs; the CELL build is delegated to the
         // ONE rendering shared with the streaming sketch path
         // (SketchState.cmsCells) — this oracle predates the extraction
         // and pins it bit-for-bit
         def bucketExprs = array(CmsBases.map(b =>
-          pmod(call_function("poly_hash", col("term"), lit(b.toLong), lit(1000000007L)),
+          pmod(PolyHash.col(col("term"), b.toLong),
             lit(CmsW.toLong))): _*)
         val cells = graft.operators.SketchState.cmsCells(
           toks, "term", CmsBases, CmsW)
@@ -687,7 +686,6 @@ object TextQueries {
     // same exact-integer ratio.
     "t21_temperature_mix" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         import graft.functions.KMinAgg
         // testdata sources are uniform (nothing to temper) — remap 3/4
         // of the corpus onto one dominant 'web' source so the rule has
@@ -701,7 +699,7 @@ object TextQueries {
           .select(col("source"), col("n_src"),
             floor(lit(1e6) * sqrt(col("n_min").cast("double") /
               col("n_src").cast("double"))).cast("long").as("ppm"))
-        val hv = KMinAgg.scramble(call_function("poly_hash",
+        val hv = KMinAgg.scramble(PolyHash.col(
           col("doc_id").cast("string")))
         docs.select(col("source"), col("doc_id"),
             TextOps.tokenCount(col("text")).as("__tok"))
@@ -747,7 +745,6 @@ object TextQueries {
     // the plan.
     "t20_quality_classifier" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         graft.operators.QualityModel.score(
           table(s, dir, "documents"), "doc_id", "text",
           graft.operators.QualityModel.syntheticWeights(s, 4096), buckets = 4096)
@@ -939,8 +936,7 @@ object TextQueries {
     // same shuffle shape as t11.
     "t22_group_split" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
-        val hv = TextOps.knuthMix(call_function("poly_hash", col("source")))
+        val hv = TextOps.knuthMix(PolyHash.col(col("source")))
         table(s, dir, "documents")
           .select(col("lang"), col("source"),
             TextOps.tokenCount(col("text")).as("n_tokens"),
@@ -1028,7 +1024,6 @@ object TextQueries {
     // downstream embedder/indexer would key on.
     "t24_rag_chunk" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val W = 32
         val S = 24
         table(s, dir, "documents")
@@ -1043,7 +1038,7 @@ object TextQueries {
               lit(W))).as("chunk"))
           .select(col("doc_id"), col("chunk_ix"), col("start_tok"),
             size(split(col("chunk"), " ")).cast("long").as("n_tok"),
-            call_function("poly_hash", col("chunk")).as("fp"))
+            PolyHash.col(col("chunk")).as("fp"))
       },
       Some(s"""WITH words AS (
              |  SELECT doc_id, string_split(text, ' ') AS w,
@@ -1686,9 +1681,8 @@ object TextQueries {
     // so a rule change cannot desynchronize policy and audit.
     "t40_split_leak_audit" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val dv = TextOps.knuthMix(col("doc_id")) % 10
-        val gv = TextOps.knuthMix(call_function("poly_hash", col("source"))) % 10
+        val gv = TextOps.knuthMix(PolyHash.col(col("source"))) % 10
         def splitOf(v: org.apache.spark.sql.Column) =
           when(v < 8, "train").when(v === 8, "val").otherwise("test")
         val assign = table(s, dir, "documents")
@@ -1850,9 +1844,8 @@ object TextQueries {
 
     "t4_fingerprint" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         table(s, dir, "documents")
-          .select(col("doc_id"), call_function("poly_hash", col("text")).as("fp"))
+          .select(col("doc_id"), PolyHash.col(col("text")).as("fp"))
       },
       Some(s"""SELECT doc_id,
              |  CAST(${QueryDef.polyHashSql("text")} AS BIGINT) AS fp
@@ -1864,7 +1857,7 @@ object TextQueries {
     // selection within a source is a deterministic simple random
     // sample: bottom-budget docs by scrambled content-key hash (q34's
     // consistent-sampling pattern). Shape: per-source O(kMax)
-    // MERGEABLE TopKAgg state — no global sort and no per-source
+    // MERGEABLE topk_sketch state — no global sort and no per-source
     // window over the corpus, so at 100 TB the manifest costs one
     // map-side-combining agg over (source) regardless of corpus size,
     // and re-running on a grown corpus keeps previously-sampled docs
@@ -1874,19 +1867,18 @@ object TextQueries {
     "t45_mixture_sample" -> QueryDef(
       (s, dir) => {
         import graft.functions.KMinAgg
-        graft.functions.VectorExpressions.register(s)
         val kMax = 15 // = max budget: 5 * max weight 3
         table(s, dir, "documents")
           .select(col("source"), col("doc_id"),
-            KMinAgg.scramble(call_function("poly_hash",
+            KMinAgg.scramble(PolyHash.col(
               col("doc_id").cast("string"))).as("h"))
           // score = -hash: topk_sketch's (score desc, id asc) = (hash
           // asc, doc asc); scrambled hashes < 2^30 are exact in double;
           // the buffer comes back best-first, so slice(1, budget) IS
           // the per-source quota cut
           .groupBy("source")
-          .agg(call_function("topk_sketch", col("doc_id"),
-            (-col("h")).cast("double"), lit(kMax)).as("picked"))
+          .agg(TopKSketch.col(col("doc_id"),
+            (-col("h")).cast("double"), kMax).as("picked"))
           .withColumn("budget",
             expr("5 * (1 + CAST(substring(source, 4) AS INT) % 3)"))
           .select(col("source"),
@@ -1963,7 +1955,7 @@ object TextQueries {
     // operator itself: quality gate (t5's rule) → exact dedup over the
     // gated pool (d1) → eval holdout + d8 4-gram decontamination
     // (broadcast eval grams, train side scan-filtered) → per-source
-    // weighted budget sampling (t45's bounded TopKAgg state) →
+    // weighted budget sampling (t45's bounded topk_sketch state) →
     // per-source manifest (pool size, selected docs, token/char mass).
     // The "switch your whole pipeline to this engine" flagship one
     // step beyond t5: t5 stops at corpus stats, this emits the actual
@@ -1976,7 +1968,6 @@ object TextQueries {
       (s, dir) => {
         import s.implicits._
         import graft.functions.KMinAgg
-        graft.functions.VectorExpressions.register(s)
         val docs = table(s, dir, "documents")
         val pooled = Staged.cached(s, s"t47pool:$dir") {
           val gated = docs.filter(TextOps.qualityPass(col("text"), col("n_chars")))
@@ -1991,11 +1982,11 @@ object TextQueries {
         val kMax = 15
         val picked = pooled
           .select(col("source"), col("doc_id"),
-            KMinAgg.scramble(call_function("poly_hash",
+            KMinAgg.scramble(PolyHash.col(
               col("doc_id").cast("string"))).as("h"))
           .groupBy("source")
-          .agg(call_function("topk_sketch", col("doc_id"),
-            (-col("h")).cast("double"), lit(kMax)).as("picked"))
+          .agg(TopKSketch.col(col("doc_id"),
+            (-col("h")).cast("double"), kMax).as("picked"))
           .withColumn("budget",
             expr("5 * (1 + CAST(substring(source, 4) AS INT) % 3)"))
           .select(col("source"),
@@ -2205,7 +2196,6 @@ object TextQueries {
     // — maps r to the identical decile. Rates are exact permille.
     "t51_calibration" -> QueryDef(
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
         val docs = table(s, dir, "documents")
         val score = graft.operators.QualityModel.score(
           docs, "doc_id", "text",

@@ -25,6 +25,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Spark's private SQL surface (the classic session and Dataset,
   *    `Dataset.ofRows`, `LogicalRDD` construction) is reached only
   *    through `GraftSqlBridge`, so that dependency stays in one file.
+  *  - Native kernels: the SQL names of the six `graft.functions`
+  *    kernels appear in string literals only under `graft/functions`.
+  *    Everywhere else a kernel is its Column constructor
+  *    (`DotF32.col`, `PolyHash.col`, …), which resolves in any session;
+  *    a `call_function("poly_hash", …)` resolves only where something
+  *    registered the name first.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private def sources: Seq[java.io.File] = {
@@ -54,6 +60,28 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(own.exists(hits(_, banned).nonEmpty), s"guard pattern $banned matches nothing in $owners")
     val found = rest.flatMap(hits(_, banned))
     assert(found.isEmpty, s"$advice instead of:\n" + found.mkString("\n"))
+  }
+
+  /** The string literals of `f`: triple-quoted ones (which may span
+    * lines), then one-line ones.
+    */
+  private def literals(f: java.io.File): Seq[String] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val text = try src.mkString finally src.close()
+    val triple = "\"{3}(?s:.*?)\"{3}".r
+    val single = "\"(?:[^\"\\\\\\n]|\\\\.)*\"".r
+    triple.findAllIn(text).toList ++ single.findAllIn(triple.replaceAllIn(text, "")).toList
+  }
+
+  test("native kernels are named in string literals only in graft/functions") {
+    val kernel = """\b(dot_f32|sq_dist_i64|poly_hash|minhash_signature|kmin_sketch|topk_sketch)\b""".r
+    val (own, rest) = sources.partition(_.getPath.contains("/graft/functions/"))
+    def named(f: java.io.File): Seq[String] = literals(f).filter(kernel.findFirstIn(_).isDefined)
+    assert(own.exists(named(_).nonEmpty), s"guard pattern $kernel matches no literal in graft/functions")
+    val found = rest.flatMap(f => named(f).map(l => s"${f.getPath}: $l"))
+    assert(found.isEmpty,
+      "build the kernel with its Column constructor (DotF32.col, PolyHash.col, …) instead of:\n" +
+        found.mkString("\n"))
   }
 
   test("truncation and session registries appear only in CacheTracker") {

@@ -3,11 +3,15 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The extensions class must be instantiable by Spark's
-  * `spark.sql.extensions` loader (no-arg constructor, applies cleanly
-  * to a fresh SparkSessionExtensions). Full end-to-end function use is
-  * covered by DedupSpec/SimilaritySpec via
-  * [[VectorExpressions.register]] on the live session.
+/** The SQL surface of the graft native functions, for clients that
+  * name a kernel in a SQL string: the one function table that
+  * [[VectorExpressions.register]] and [[GraftExtensions]] both read,
+  * the builders behind it, plain SQL on a registered session, and the
+  * extension's analysis check. The extensions class must be
+  * instantiable by Spark's `spark.sql.extensions` loader (no-arg
+  * constructor, applies cleanly to a fresh SparkSessionExtensions).
+  * Library code builds the kernels as Columns and needs none of this
+  * (FreshSessionSpec).
   */
 class GraftExtensionsSpec extends AnyFunSuite {
   test("GraftExtensions applies its injections to a fresh extensions instance") {
@@ -15,8 +19,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
     new GraftExtensions().apply(ext) // must not throw; registers dot_f32
   }
 
+  test("register adds every function of the one table to a session that lacks them") {
+    val s = graft.core.SparkTestBase.session.newSession()
+    val names = VectorExpressions.functions.map(_._1)
+    assert(names.map(_.funcName) == Seq("dot_f32", "sq_dist_i64", "poly_hash",
+      "minhash_signature", "kmin_sketch", "topk_sketch"))
+    val registry = s.sessionState.functionRegistry
+    assert(names.forall(n => !registry.functionExists(n)))
+    VectorExpressions.register(s)
+    assert(names.forall(registry.functionExists))
+  }
+
   test("builder rejects wrong arity") {
-    intercept[IllegalArgumentException](VectorExpressions.dotF32Builder(Seq.empty))
+    intercept[IllegalArgumentException](DotF32.builder(Seq.empty))
     intercept[IllegalArgumentException](KMinSketch.builder(Seq.empty))
     intercept[IllegalArgumentException](TopKSketch.builder(Seq.empty))
     intercept[IllegalArgumentException](MinHashSignature.builder(Seq.empty))

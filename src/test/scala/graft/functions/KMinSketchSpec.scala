@@ -12,7 +12,6 @@ class KMinSketchSpec extends SparkTestBase {
   import spark.implicits._
 
   test("kmin_sketch == the KMinAgg.insert reference fold (dups, groups, k cutoffs)") {
-    VectorExpressions.register(spark)
     val rnd = new scala.util.Random(7)
     // heavy duplication + values straddling the k-th min
     val rows = (1 to 5000).map { i =>
@@ -21,7 +20,7 @@ class KMinSketchSpec extends SparkTestBase {
     for (k <- Seq(1, 16, 64)) {
       val got = rows.toDF("g", "h")
         .groupBy("g")
-        .agg(call_function("kmin_sketch", col("h"), lit(k)).as("mins"))
+        .agg(KMinSketch.col(col("h"), k).as("mins"))
         .as[(String, Seq[Long])].collect().toMap
       val want = rows.groupBy(_._1).map { case (g, vs) =>
         g -> vs.map(_._2).foldLeft(List.empty[Long])(
@@ -33,25 +32,23 @@ class KMinSketchSpec extends SparkTestBase {
   }
 
   test("kmin_sketch survives a shuffle merge (repartitioned input, one group)") {
-    VectorExpressions.register(spark)
     val k = 32
     val vals = (1L to 1000L).map(i => (i * 37) % 211)
     val got = vals.toDF("h").repartition(13)
-      .agg(call_function("kmin_sketch", col("h"), lit(k)).as("mins"))
+      .agg(KMinSketch.col(col("h"), k).as("mins"))
       .as[Seq[Long]].head()
     val want = vals.distinct.sorted.take(k)
     assert(got == want)
   }
 
   test("nulls are ignored; empty input yields an empty buffer") {
-    VectorExpressions.register(spark)
     val got = Seq[Option[Long]](None, Some(5L), None, Some(3L))
       .toDF("h")
-      .agg(call_function("kmin_sketch", col("h"), lit(8)).as("mins"))
+      .agg(KMinSketch.col(col("h"), 8).as("mins"))
       .as[Seq[Long]].head()
     assert(got == Seq(3L, 5L))
     val empty = Seq.empty[Long].toDF("h")
-      .agg(call_function("kmin_sketch", col("h"), lit(8)).as("mins"))
+      .agg(KMinSketch.col(col("h"), 8).as("mins"))
       .as[Seq[Long]].head()
     assert(empty == Seq.empty[Long])
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import graft.core.SparkTestBase
+import graft.functions.{DotF32, PolyHash, SqDistI64}
 
 /** Semantics tests for the operators whose queries have no SQL oracle
   * (xxhash64 / approximate paths), plus as-of join edge cases.
@@ -258,7 +259,6 @@ class DedupSpec extends SparkTestBase {
     * candidate path equals the per-document one.
     */
   private def assertSignatureParity(texts: Seq[(Long, String)], k: Int, rows: Int): Unit = {
-    graft.functions.VectorExpressions.register(spark)
     val d = texts.toDF("doc_id", "text")
       .select(col("doc_id"), TextOps.shingles(col("text"), 3).as("__sh"))
     val families = Seq[(String, Column => Column)](
@@ -661,11 +661,10 @@ class FunnelSpec extends SparkTestBase {
 
 class SketchStateSpec extends SparkTestBase {
   import spark.implicits._
-  graft.functions.VectorExpressions.register(spark)
 
   private def hashed(ids: Range) = ids.map(i => ("g", i.toLong)).toDF("k", "v")
     .select(col("k"), graft.functions.KMinAgg.scramble(
-      call_function("poly_hash", col("v").cast("string"))).as("hv"))
+      PolyHash.col(col("v").cast("string"))).as("hv"))
 
   test("HLL merge law: merge(build(A), build(B)) == build(A union B); merge idempotent") {
     val (p, maxRho) = (8, 23)
@@ -756,7 +755,6 @@ class ProductQuantSpec extends SparkTestBase {
 
 class SubstringDedupSpec extends SparkTestBase {
   import spark.implicits._
-  graft.functions.VectorExpressions.register(spark)
 
   test("substringDedup: overlapping dup windows merge their cover; first occurrence survives") {
     val docs = Seq(
@@ -846,33 +844,46 @@ class SimilaritySpec extends SparkTestBase {
     assert(top.forall(_ % 10 == 0), s"got ${top.toSeq}")
   }
 
+  /** The HOF left fold [[DotF32]] replaces: the reference its tests
+    * check it against.
+    */
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
   test("dot_f32 returns NULL on length mismatch and NULL elements, matching the HOF path") {
-    graft.functions.VectorExpressions.register(spark)
     val df = Seq((Seq(1f, 2f, 3f), Seq(1f, 2f))).toDF("a", "b")
-    val hof = df.select(Similarity.dot(col("a"), col("b"))).collect().head
-    val native = df.select(Similarity.dotNative(col("a"), col("b"))).collect().head
+    val hof = df.select(hofDot(col("a"), col("b"))).collect().head
+    val native = df.select(DotF32.col(col("a"), col("b"))).collect().head
     assert(hof.isNullAt(0) && native.isNullAt(0),
       s"length-mismatch must be NULL on both paths: hof=$hof native=$native")
     // NULL element poisons the sum on both paths
     val dfn = Seq((Seq(Some(1f), None, Some(3f)), Seq(Some(1f), Some(2f), Some(3f))))
       .toDF("a", "b")
-    val hofN = dfn.select(Similarity.dot(col("a"), col("b"))).collect().head
-    val natN = dfn.select(Similarity.dotNative(col("a"), col("b"))).collect().head
+    val hofN = dfn.select(hofDot(col("a"), col("b"))).collect().head
+    val natN = dfn.select(DotF32.col(col("a"), col("b"))).collect().head
     assert(hofN.isNullAt(0) && natN.isNullAt(0),
       s"null element must be NULL on both paths: hof=$hofN native=$natN")
   }
 
   test("native dot_f32 expression is bit-identical to the HOF fold") {
-    graft.functions.VectorExpressions.register(spark)
     val c = corpus()
     val pairs = c.as("a").crossJoin(c.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id")).limit(500)
     val diff = pairs.select(
-      (Similarity.dot(col("a.embedding"), col("b.embedding")) -
-        Similarity.dotNative(col("a.embedding"), col("b.embedding"))).as("d"))
+      (hofDot(col("a.embedding"), col("b.embedding")) -
+        DotF32.col(col("a.embedding"), col("b.embedding"))).as("d"))
       .filter(col("d") =!= 0.0).count()
     assert(diff == 0L)
+    // an array<double> side (a dequantized vector) enters as it is
+    val deq = transform(col("b.embedding"), x => x.cast("double") / 3.0)
+    val diffD = pairs.select((hofDot(col("a.embedding"), deq) -
+        DotF32.col(col("a.embedding"), deq)).as("d"), hofDot(deq, deq).as("h"),
+        DotF32.col(deq, deq).as("n"))
+      .filter(col("d") =!= 0.0 || col("h") =!= col("n")).count()
+    assert(diffD == 0L)
     // and usable straight from SQL
+    graft.functions.VectorExpressions.register(spark)
     c.createOrReplaceTempView("emb_v")
     val viaSql = spark.sql(
       "SELECT dot_f32(embedding, embedding) FROM emb_v WHERE vec_id = 0")
@@ -881,7 +892,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("native sq_dist_i64 equals the HOF fold; NULL semantics match dot_f32") {
-    graft.functions.VectorExpressions.register(spark)
     def hof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
     val df = Seq(
@@ -889,15 +899,15 @@ class SimilaritySpec extends SparkTestBase {
       (Seq(0L, 0L, 0L), Seq(0L, 0L, 0L)),
       (Seq(1000L, -1000L, 7L), Seq(-1000L, 1000L, 7L))).toDF("a", "b")
     val rows = df.select(hof(col("a"), col("b")).as("h"),
-      call_function("sq_dist_i64", col("a"), col("b")).as("n")).collect()
+      SqDistI64.col(col("a"), col("b")).as("n")).collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
     assert(rows.head.getLong(1) == 9L + 25L + 0L)
     // length mismatch and NULL elements -> NULL, like dot_f32
     val bad = Seq((Seq(1L, 2L), Seq(1L))).toDF("a", "b")
-      .select(call_function("sq_dist_i64", col("a"), col("b"))).collect().head
+      .select(SqDistI64.col(col("a"), col("b"))).collect().head
     assert(bad.isNullAt(0))
     val withNull = Seq((Seq(Some(1L), None), Seq(Some(1L), Some(2L)))).toDF("a", "b")
-      .select(call_function("sq_dist_i64", col("a"), col("b"))).collect().head
+      .select(SqDistI64.col(col("a"), col("b"))).collect().head
     assert(withNull.isNullAt(0))
   }
 
@@ -1061,13 +1071,12 @@ class ApproxAggSpec extends SparkTestBase {
   test("KMV sketch estimates distinct within ~2/sqrt(k); exact below k") {
     import spark.implicits._
     import graft.functions.{KMinAgg, KmvSummary}
-    graft.functions.VectorExpressions.register(spark)
     val k = 64
     // group "big": 5000 distinct values; group "small": 10 distinct
     val rows = (0 until 5000).map(i => ("big", s"val_$i")) ++
       (0 until 200).map(i => ("small", s"s_${i % 10}"))
     val hashed = rows.toDF("g", "v")
-      .select(col("g"), KMinAgg.scramble(call_function("poly_hash", col("v"))).as("h"))
+      .select(col("g"), KMinAgg.scramble(PolyHash.col(col("v"))).as("h"))
       .as[(String, Long)]
     val est = hashed.groupByKey(_._1).mapValues(_._2)
       .agg(new KMinAgg(k).toColumn.name("s"))
@@ -1087,11 +1096,10 @@ class ApproxAggSpec extends SparkTestBase {
   test("bottom-k hash sample estimates the median within sampling error") {
     import spark.implicits._
     import graft.functions.{KMinAgg, ScoredId, TopKAgg}
-    graft.functions.VectorExpressions.register(spark)
     val k = 101
     // 10k rows, values 0..9999 (true median 4999/5000)
     val rows = (0 until 10000).map(i => (s"row_$i", i.toLong)).toDF("rk", "v")
-      .select(KMinAgg.scramble(call_function("poly_hash", col("rk"))).as("h"), col("v"))
+      .select(KMinAgg.scramble(PolyHash.col(col("rk"))).as("h"), col("v"))
       .as[(Long, Long)]
     val med = rows.map { case (h, v) => ("g", h, v) }
       .groupByKey(_._1)
@@ -1713,7 +1721,6 @@ class TextOpsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("quality classifier: bag semantics, exact score under a 1-bucket model") {
-    graft.functions.VectorExpressions.register(spark)
     // buckets=1 pins every feature to bucket 0, whose synthetic weight
     // is knuthMix(0) % 2001 - 1000 = -1000 — so score = -1000 * n_feats
     // exactly, and n_feats = unigrams + bigrams = 2*words - 1.
@@ -1728,7 +1735,6 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("quality classifier: synthetic weights bounded and keep tracks score sign") {
-    graft.functions.VectorExpressions.register(spark)
     val w = graft.operators.QualityModel.syntheticWeights(spark, 4096)
     val (lo, hi, n) = w.agg(min("w"), max("w"), count(lit(1)))
       .as[(Long, Long, Long)].head()
@@ -1778,18 +1784,11 @@ class TextOpsSpec extends SparkTestBase {
         lit(0L), (acc, c) => (acc * 31 + c) % 1000000007L)).as[Long].head()
     assert(got == want)
     // and the native codegen'd poly_hash computes the identical value
-    graft.functions.VectorExpressions.register(spark)
     val native = Seq(s, "", "another longer string with more text").toDF("text")
-      .select(call_function("poly_hash", col("text"))).as[Long].collect().toSeq
+      .select(PolyHash.col(col("text"))).as[Long].collect().toSeq
     val model = Seq(s, "", "another longer string with more text")
       .map(_.foldLeft(0L)((acc, c) => (acc * 31 + c.toInt) % 1000000007L))
     assert(native == model)
-    // TextOps.fingerprint (the HOF form) agrees with poly_hash — the
-    // trailing empty token from split(text, '') must not fold in an
-    // extra acc*31 step
-    val hof = Seq(s, "", "another longer string with more text").toDF("text")
-      .select(TextOps.fingerprint(col("text"))).as[Long].collect().toSeq
-    assert(hof == model)
   }
 
   test("ngrams preserve duplicate occurrences; shingles dedup them") {

@@ -484,14 +484,13 @@ class EventStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import EventStream.{SampleDoc, SampleRow}
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val docs = (1L to 40L).map(i => SampleDoc(s"src${i % 3}", i * 7 + 1))
     val budget = (src: String) => 3 + src.stripPrefix("src").toInt // 3..5
     // batch expectation through the SQL chain t45 uses — also pins the
     // JVM sampleHash replica bit-identical to poly_hash + scramble
     val expected = docs.toDF("source", "docId")
       .select(col("source"), col("docId"),
-        graft.functions.KMinAgg.scramble(call_function("poly_hash",
+        graft.functions.KMinAgg.scramble(graft.functions.PolyHash.col(
           col("docId").cast("string"))).as("h"))
       .as[(String, Long, Long)].collect()
       .groupBy(_._1).flatMap { case (src, rs) =>
