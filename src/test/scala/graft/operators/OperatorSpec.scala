@@ -891,6 +891,53 @@ class SimilaritySpec extends SparkTestBase {
     assert(viaSql > 0.0)
   }
 
+  test("dot_f32 interpreted eval matches the HOF fold on array<float> and array<double> sides") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    def fl(xs: java.lang.Float*) = Literal.create(xs, ArrayType(FloatType))
+    def db(xs: java.lang.Double*) = Literal.create(xs, ArrayType(DoubleType))
+    // eval outside any plan: the path a HOF lambda or a codegen fallback takes
+    val f = Seq(0.1f, 0.2f, 0.3f)
+    val d = Seq(1.0 / 3, 2.0 / 7, 5.0 / 11)
+    def fold(x: Seq[Double], y: Seq[Double]) =
+      x.zip(y).foldLeft(0.0) { case (s, (a, b)) => s + a * b }
+    val fd = f.map(_.toDouble)
+    val fs = f.map(x => x: java.lang.Float)
+    val ds = d.map(x => x: java.lang.Double)
+    assert(DotF32(fl(fs: _*), db(ds: _*)).eval() == fold(fd, d))
+    assert(DotF32(db(ds: _*), fl(fs: _*)).eval() == fold(d, fd))
+    assert(DotF32(db(ds: _*), db(ds: _*)).eval() == fold(d, d))
+    assert(DotF32(fl(fs: _*), db(1.0, null, 2.0)).eval() == null)
+    assert(DotF32(db(ds: _*), db(1.0, 2.0)).eval() == null)
+    // the same pairs query, whole-stage codegen on and off: every
+    // projection and filter of the second run evaluates through eval
+    val c = corpus()
+    val pairs = c.as("a").crossJoin(c.as("b"))
+      .filter(col("a.vec_id") < 20 && col("a.vec_id") < col("b.vec_id"))
+    val deq = transform(col("b.embedding"), x => x.cast("double") / 3.0)
+    def dots() = pairs.select(col("a.vec_id"), col("b.vec_id"),
+        DotF32.col(col("a.embedding"), deq), hofDot(col("a.embedding"), deq),
+        DotF32.col(deq, deq), hofDot(deq, deq))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
+    val generated = dots()
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val interpreted =
+      try {
+        spark.conf.set(keys(0), "false")
+        spark.conf.set(keys(1), "NO_CODEGEN")
+        dots()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    assert(interpreted.size == generated.size && interpreted.nonEmpty)
+    interpreted.foreach { case (k, r) =>
+      assert(r.getDouble(2) == r.getDouble(3) && r.getDouble(4) == r.getDouble(5), r.toString)
+      assert(r == generated(k), s"interpreted $r, generated ${generated(k)}")
+    }
+  }
+
   test("native sq_dist_i64 equals the HOF fold; NULL semantics match dot_f32") {
     def hof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
