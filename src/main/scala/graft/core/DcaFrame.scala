@@ -1,9 +1,9 @@
 package graft.core
 
-import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRowWithSchema}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -31,9 +31,11 @@ import Shape.Shape
   * output `__idx*` column under its final name. A literal
   * integer-array gather explodes each row to the positions its key is
   * named at ([[graft.functions.GatherPositions]]) and [[broadcastTo]]
-  * explodes a literal `[0, n)` per expanded axis, so neither joins;
-  * only [[zipJoin]] (on the shared batch index) and the distributed
-  * [[gatherAxis]] (on the index frame's values) join. Shape constants —
+  * explodes a literal `[0, n)` per expanded axis, so neither joins.
+  * [[zipJoin]] (on the shared batch index) and the distributed
+  * [[gatherAxis]] (on the index frame's values) hash their smaller side
+  * inside the other side's stage while it is small, and join in SQL
+  * only at scale. Shape constants —
   * strides, dims, slice bounds, int indices, concat offsets — enter
   * generated code as [[graft.functions.Param]]s, read from the
   * compiled class's references, so an operation at a new shape reuses
@@ -98,16 +100,32 @@ final case class DcaFrame(
     }
 
   /** Row-major driver-side materialization (small data / tests only):
-    * one collect of `__idx*` + payload, ordered on the driver by the
-    * linear index — a collect holds every row on the driver anyway, so
-    * a distributed sort would only add a sampling job and a shuffle.
+    * one collect of `__idx*` + payload, each row placed at its linear
+    * index — a collect holds every row on the driver anyway, so a
+    * distributed sort would only add a sampling job and a shuffle.
+    * Enforces the dense-index contract: exactly [[size]] rows, each at a
+    * distinct in-range index.
     */
   def collectOrdered(): Array[Row] = {
     val payload = payloadSchema
     val st = Shape.strides(shape)
-    df.select((idxCols ++ arrayCols).map(col): _*).collect()
-      .sortBy(r => st.indices.map(i => r.getLong(i) * st(i)).sum)
-      .map(r => new GenericRowWithSchema(r.toSeq.drop(ndim).toArray, payload): Row)
+    require(size <= Int.MaxValue, s"collectOrdered of $size rows")
+    val rows = GraftSqlBridge.collectRows(df.select((idxCols ++ arrayCols).map(col): _*))
+    require(rows.length == size, s"dense index broken: ${rows.length} rows for shape $shape")
+    val out = new Array[Row](size.toInt)
+    rows.foreach { r =>
+      var (lin, inBounds, i) = (0L, true, 0)
+      while (i < ndim) {
+        val v = r.getLong(i)
+        inBounds &&= v >= 0 && v < shape(i)
+        lin += v * st(i)
+        i += 1
+      }
+      require(inBounds && out(lin.toInt) == null, "dense index broken: index " +
+        s"${r.toSeq.take(ndim).mkString("(", ", ", ")")} repeated or out of bounds for shape $shape")
+      out(lin.toInt) = new GenericRowWithSchema(r.toSeq.drop(ndim).toArray, payload)
+    }
+    out
   }
 
   private def payloadSchema: StructType = StructType(arrayCols.map(n => df.schema(n)).toArray)
@@ -432,9 +450,9 @@ final case class DcaFrame(
     * `limit`) may never evaluate the offending index rows.
     *
     * Result shape = `shape[:axis] ++ indices.shape ++ shape[axis+1:]`
-    * — numpy's single-advanced-index rule `p[:, ..., arr, ...]`. The
-    * join is declarative — Catalyst broadcasts the small side, or
-    * sort-merges on the key when both sides are big (the 100-TB plan).
+    * — numpy's single-advanced-index rule `p[:, ..., arr, ...]`. A small
+    * side is hashed inside the other side's stage; at scale the join is
+    * SQL, broadcast or sort-merged on the key (see [[DcaFrame.keyJoin]]).
     *
     * @param indices frame whose single payload column (or `valueCol`)
     *                holds the gather indices
@@ -472,14 +490,20 @@ final case class DcaFrame(
       .cast(LongType).as("__gsrc")
     val idxSide = indices.df.select(
       (0 until m).map(i => col(s"__idx$i").as(s"__gpos$i")) :+ checkedSrc: _*)
-    val joined = df.join(idxSide, col(s"__idx$ax") === col("__gsrc"))
+    val self = df.select((idxCols ++ arrayCols).map(col): _*)
+    val w = self.columns.length
     // axes before ax unchanged; the index frame's m axes land at
     // ax..ax+m-1; self's axes after ax shift by m-1
-    val outIdx = (0 until ax).map(j => col(s"__idx$j").as(s"__idx$j")) ++
-      (0 until m).map(i => col(s"__gpos$i").as(s"__idx${ax + i}")) ++
-      ((ax + 1) until ndim).map(j => col(s"__idx$j").as(s"__idx${j + m - 1}"))
+    val out = (0 until ax).map(j => (s"__idx$j", j)) ++
+      (0 until m).map(i => (s"__idx${ax + i}", w + i)) ++
+      ((ax + 1) until ndim).map(j => (s"__idx${j + m - 1}", j)) ++
+      arrayCols.indices.map(i => (arrayCols(i), ndim + i))
     val newShape = shape.take(ax) ++ indices.shape ++ shape.drop(ax + 1)
-    derived(df = joined.select(outIdx ++ arrayCols.map(col): _*), shape = newShape)
+    val joined = DcaFrame.keyJoin(
+      DcaFrame.JoinSide(self, HashProbeRDD.Key(Array(ax), Array(1L)), size),
+      DcaFrame.JoinSide(idxSide, HashProbeRDD.Key(Array(m), Array(1L)), indices.size),
+      out, Shape.size(newShape))(_.join(_, col(s"__idx$ax") === col("__gsrc")))
+    derived(df = joined, shape = newShape)
   }
 
   /** Per-first-dim decomposition (S9) — a driver-boundary op. */
@@ -600,8 +624,8 @@ final case class DcaFrame(
   /** Align `other` against this frame per the reference's vectorize
     * broadcast rules (`vectorization.py:246-300`): front-aligned dims
     * equal-or-1, arg may carry extra trailing dims. Returns the aligned
-    * frame pair broadcast to the joint batch shape; caller then joins
-    * on `__idx*` (equi-join; the dim-1 side was replicated by
+    * frame pair broadcast to the joint batch shape; caller then zips
+    * them with [[zipJoin]] (the dim-1 side was replicated by
     * [[broadcastTo]]'s generator, no join).
     */
   def alignForVectorize(other: DcaFrame): (DcaFrame, DcaFrame, Shape) = {
@@ -616,18 +640,27 @@ final case class DcaFrame(
     * shared leading batch index — the executed form of V2 arg alignment
     * (`vectorization.py:246-300`): each self element is replicated
     * across its arg element's `extra` dims. Inner equi-join on the
-    * shared `__idx*` prefix; the result has `other.shape` and carries
+    * shared `__idx*` prefix, keyed by its linear index (see
+    * [[DcaFrame.keyJoin]]); the result has `other.shape` and carries
     * `other`'s payload after this frame's, a clashing name suffixed.
     */
   def zipJoin(other: DcaFrame, suffix: String = "_r"): DcaFrame = {
     require(other.shape.take(ndim) == shape && other.ndim >= ndim,
       s"zipJoin: ${other.shape} does not extend $shape")
     val rCols = other.arrayCols.map(n => if (arrayCols.contains(n)) n + suffix else n)
+    val self = df.select((idxCols ++ arrayCols).map(col): _*)
     val rdf = other.df.select(other.idxCols.map(col) ++
       other.arrayCols.zip(rCols).map { case (o, n) => col(o).as(n) }: _*)
-    val joined = df.join(rdf, idxCols) // the right side keeps __idx{ndim..}
-    derived(df = joined.select((other.idxCols ++ arrayCols ++ rCols).map(col): _*),
-      shape = other.shape, arrayCols = arrayCols ++ rCols, statics = statics ++ other.statics)
+    val w = self.columns.length
+    // the right side keeps __idx{ndim..}
+    val out = other.idxCols.indices.map(j => (s"__idx$j", w + j)) ++
+      arrayCols.indices.map(i => (arrayCols(i), ndim + i)) ++
+      rCols.indices.map(i => (rCols(i), w + other.ndim + i))
+    val key = HashProbeRDD.Key(Array.range(0, ndim), Shape.strides(shape).toArray)
+    val joined = DcaFrame.keyJoin(DcaFrame.JoinSide(self, key, size),
+      DcaFrame.JoinSide(rdf, key, other.size), out, other.size)(_.join(_, idxCols))
+    derived(df = joined, shape = other.shape, arrayCols = arrayCols ++ rCols,
+      statics = statics ++ other.statics)
   }
 
   /** V2 end-to-end: align `other` per the reference's vectorize
@@ -676,32 +709,56 @@ object DcaFrame {
       * [[DcaFrame.unpersist]] / the session sweep like any view.
       */
     def window(schema: StructType, len: Long): DataFrame = {
-      val (f, s) = (first, step) // locals: the task closure must not capture the handle
-      val last = f + (len - 1) * s
-      val (lo, hi) = if (len <= 0) (0L, -1L) else (math.min(f, last), math.max(f, last))
+      val last = first + (len - 1) * step
+      val (lo, hi) = if (len <= 0) (0L, -1L) else (math.min(first, last), math.max(first, last))
       val kept = (0 until offsets.length - 1)
-        .filter(p => offsets(p) <= hi && offsets(p + 1) > lo && offsets(p + 1) > offsets(p))
-      val starts = kept.map(offsets).toArray
-      val keptSet = kept.toSet
+        .filter(p => offsets(p) <= hi && offsets(p + 1) > lo && offsets(p + 1) > offsets(p)).toArray
       val ords = schema.fieldNames.tail.map(frame.schema.fieldIndex)
-      val types = ords.map(frame.schema(_).dataType)
-      val rows = PartitionPruningRDD.create(cached, keptSet).mapPartitionsWithIndex { (i, it) =>
-        var pos = starts(i)
-        while (pos < lo && it.hasNext) { it.next(); pos += 1 }
-        it.takeWhile(_ => pos <= hi).flatMap { r =>
-          val off = pos - f
-          pos += 1
-          if (off % s != 0) None
-          else {
-            val out = new GenericInternalRow(ords.length + 1)
-            out.setLong(0, off / s)
-            var k = 0
-            while (k < ords.length) { out.update(k + 1, r.get(ords(k), types(k))); k += 1 }
-            Some(out: InternalRow)
-          }
-        }
-      }
+      val rows = new WindowRDD(cached, kept, kept.map(offsets), lo, hi, first, step,
+        ords, ords.map(frame.schema(_).dataType))
       GraftSqlBridge.sizedRddFrame(frame.sparkSession, schema, rows, math.max(0L, len))
+    }
+  }
+
+  /** One side of a [[keyJoin]]: `rows` rows of `df`, each joined on `key`. */
+  private final case class JoinSide(df: DataFrame, key: HashProbeRDD.Key, rows: Long) {
+    def bytes: Long = rows * GraftSqlBridge.rowBytes(df.schema)
+  }
+
+  /** The equi-join of two frames on their sides' keys, `rows` rows of
+    * the columns `out` names, each with its ordinal in the joined row
+    * (the left side's fields, then the right side's). `sqlJoin`'s output
+    * must carry each picked field under its own name, once.
+    *
+    * The side smaller by exact bytes is the build side. When shipping it
+    * to every probe partition costs no more than one broadcast may
+    * (`spark.sql.autoBroadcastJoinThreshold`) and building either side's
+    * RDD runs no job, the join runs in the probe side's own stage
+    * ([[HashProbeRDD]]) under a leaf that knows its exact row count: one
+    * job, one stage, no exchange. Otherwise `sqlJoin` plans it in SQL —
+    * the scale path — with the build side broadcast when it alone fits
+    * in one broadcast, else sort-merged; the exact sizes choose, not
+    * Catalyst's estimates, which do not scale a replicating generator.
+    */
+  private def keyJoin(left: JoinSide, right: JoinSide, out: Seq[(String, Int)], rows: Long)(
+      sqlJoin: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val spark = left.df.sparkSession
+    val threshold = GraftSqlBridge.broadcastThreshold(spark)
+    val buildLeft = left.bytes <= right.bytes
+    val (build, probe) = if (buildLeft) (left, right) else (right, left)
+    val inStage = Seq(left, right).forall(s =>
+      GraftSqlBridge.buildsWithoutJobs(s.df.queryExecution.executedPlan))
+    lazy val probeRdd = probe.df.queryExecution.toRdd
+    val joined = StructType(left.df.schema.fields ++ right.df.schema.fields)
+    if (inStage && build.bytes * math.max(1, probeRdd.getNumPartitions) <= threshold) {
+      val rdd = new HashProbeRDD(probeRdd, build.df.queryExecution.toRdd, probe.key, build.key,
+        buildLeft, joined, out.map(_._2).toArray)
+      val schema = StructType(out.map { case (n, i) => joined(i).copy(name = n) })
+      GraftSqlBridge.sizedRddFrame(spark, schema, rdd, rows)
+    } else {
+      val fits = build.bytes <= threshold
+      def hinted(s: JoinSide) = if (!fits) s.df.hint("merge") else if (s eq build) broadcast(s.df) else s.df
+      sqlJoin(hinted(left), hinted(right)).select(out.map { case (n, i) => col(joined(i).name).as(n) }: _*)
     }
   }
 
@@ -821,8 +878,8 @@ object DcaFrame {
       if (sortCols.isEmpty) df
       else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
     val staged = CacheTracker.persist(sorted)
-    val counts = staged.sparkSession.sparkContext.runJob(staged.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) => it.foldLeft(0L)((n, _) => n + 1))
+    val cached = staged.queryExecution.toRdd
+    val counts = staged.sparkSession.sparkContext.runJob(cached, CountRows, 0 until cached.getNumPartitions)
     // offsets(p) = first index of partition p; offsets(nPart) = total
     val offsets = counts.toVector.scanLeft(0L)(_ + _)
     val withMid = staged.select(
@@ -832,6 +889,14 @@ object DcaFrame {
       (offCol + col("__graft_mid").bitwiseAND(lit((1L << 33) - 1))).cast(LongType).as("__idx0")
         +: df.columns.map(col).toSeq: _*)
     (indexed, offsets.last, new Staging(staged, offsets))
+  }
+
+  /** A partition's row count, as a named function: Spark's closure
+    * cleaner parses the class of every lambda a job is handed, and
+    * skips a named function's.
+    */
+  private object CountRows extends ((TaskContext, Iterator[InternalRow]) => Long) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Long = rows.foldLeft(0L)((n, _) => n + 1)
   }
 
   /** Stack k same-shape frames along a NEW axis (M1, `ops.py:90-106`):

@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types.StructType
 
 /** The ONE access point this library takes into Spark's `private[sql]`
@@ -32,10 +35,48 @@ object GraftSqlBridge {
                     rdd: RDD[InternalRow], rowCount: Long): DataFrame = {
     val session = spark.asInstanceOf[ClassicSession]
     val output = DataTypeUtils.toAttributes(schema)
-    val stats = Statistics(
-      sizeInBytes = EstimationUtils.getSizePerRow(output) * rowCount,
-      rowCount = Some(BigInt(rowCount)))
+    val stats = Statistics(sizeInBytes = rowBytes(schema) * rowCount, rowCount = Some(BigInt(rowCount)))
     ofRows(session, LogicalRDD(output, rdd)(session, Some(stats)))
+  }
+
+  /** The bytes the optimizer sizes one row of `schema` at: exact for
+    * fixed-width fields, the type's default size for the others.
+    */
+  def rowBytes(schema: StructType): Long =
+    EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema)).toLong
+
+  /** `spark.sql.autoBroadcastJoinThreshold`: the bytes one broadcast may ship. */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[ClassicSession].sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Whether building the RDD of `plan` runs no job: it holds no
+    * exchange, adaptive plan or subquery.
+    */
+  def buildsWithoutJobs(plan: SparkPlan): Boolean = !plan.exists {
+    case _: Exchange | _: AdaptiveSparkPlanExec => true
+    case p => p.subqueries.nonEmpty
+  }
+
+  /** The rows of `df`, as `Dataset.collect` returns them, from one job
+    * billed to its own SQL execution like any action. The job's
+    * function is a named object: Spark's closure cleaner parses the
+    * class file of every lambda it is handed (for `collect`, the whole
+    * of `RDD`), and skips a named function's.
+    */
+  def collectRows(df: DataFrame): Array[Row] = {
+    val qe = df.queryExecution
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    val parts = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = qe.executedPlan.execute()
+      df.sparkSession.sparkContext.runJob(rdd, CopyRows, 0 until rdd.getNumPartitions)
+    }
+    parts.flatMap(_.map(r => toRow(r).asInstanceOf[Row]))
+  }
+
+  private object CopyRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      rows.map(_.copy()).toArray
   }
 
   /** The aggregate column `agg` as a Catalyst expression resolved

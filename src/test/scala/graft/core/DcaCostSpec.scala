@@ -8,9 +8,10 @@ import Indexing.Ix
 
 /** What a local DcaFrame operation costs, as numpy's views cost index
   * arithmetic only: over a staged frame, once one operation of a kind
-  * has run, the same kind at new indices, shape, offset or target runs
-  * exactly one job and compiles no class — no broadcast job, no join,
-  * no shape constant in generated code. A mask of a staged forward view
+  * has run, the same kind at new indices, shape, offset or target
+  * builds without a job, runs exactly one job and compiles no class —
+  * no broadcast job, no shape constant in generated code; a zip or a
+  * frame gather joins inside its probe side's stage. A mask of a staged forward view
   * stages its rows without a sort: one counting job plus the action's.
   * Every result is checked against its `LocalDca` twin.
   */
@@ -31,13 +32,16 @@ class DcaCostSpec extends SparkTestBase {
     assert(got.collectOrdered().toSeq.map(_.toSeq) == want.rows.map(_.toSeq), s"$what: rows")
   }
 
-  /** `op(0)` warms the kind up; then `op(k)` at fresh values runs one
-    * job, compiles nothing and equals its twin.
+  /** `op(0)` warms the kind up; then `op(k)` at fresh values builds
+    * without a job, runs one job, compiles nothing and equals its twin.
     */
   private def oneJobNoCompile(what: String)(op: Int => (DcaFrame, LocalDca)): Unit = {
     op(0)._1.df.collect()
     (1 to 3).foreach { k =>
-      val (f, want) = op(k)
+      var built: (DcaFrame, LocalDca) = null
+      val buildJobs = jobsOf { built = op(k); () }
+      assert(buildJobs == 0L, s"building $what #$k ran $buildJobs jobs")
+      val (f, want) = built
       var jobs = -1L
       val compiled = compilesOf { jobs = jobsOf { f.df.collect(); () } }
       assert(jobs == 1L, s"$what #$k ran $jobs jobs")
@@ -85,6 +89,26 @@ class DcaCostSpec extends SparkTestBase {
       val slice = Ix.S(Some(300L + k), Some(300L + k + q))
       (staged(slice).reshape(1, q).broadcastTo(Seq(k + 2L, q)),
         twin(slice).reshape(1, q).broadcastTo(Seq(k + 2L, q)))
+    }
+  }
+
+  test("a frame gather at fresh indices: one job, no compile") {
+    val ixSchema = StructType(Seq(StructField("i", LongType)))
+    oneJobNoCompile("frame gather") { k =>
+      val ix = DcaFrame.fromLocal(spark, idxs(k).map(Row(_)), ixSchema)
+      (staged(win(k)).gather(ix), twin(win(k)).gather(idxs(k)))
+    }
+  }
+
+  test("a zip of a window with a broadcast window: one job, no compile") {
+    val a = Vector(2L, 3L, 4L, 8L)
+    oneJobNoCompile("zip") { k =>
+      val (other, q) = (Ix.S(Some(1200L + k), Some(1200L + k + len / a(k))), len / a(k))
+      val (l, r, _) = staged(win(k)).reshape(a(k), -1).alignForVectorize(staged(other).reshape(1, -1))
+      val x = twin(win(k)).reshape(a(k), -1)
+      val y = twin(other).reshape(1, q).broadcastTo(x.shape)
+      (l.zipJoin(r), LocalDca(x.rows.zip(y.rows).map { case (p, v) => Row.fromSeq(p.toSeq ++ v.toSeq) },
+        StructType(schema.fields ++ schema.fields.map(f => f.copy(name = f.name + "_r"))), x.shape))
     }
   }
 

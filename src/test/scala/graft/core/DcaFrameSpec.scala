@@ -406,6 +406,17 @@ class DcaFrameSpec extends SparkTestBase {
     intercept[IllegalArgumentException](points(3).zipJoin(points(6).reshape(2, 3)))
   }
 
+  test("collectOrdered enforces the dense index: a repeated or a missing index throws") {
+    val s = StructType(Seq(StructField("__idx0", LongType), StructField("x", DoubleType)))
+    def frame(idx: Long*) = DcaFrame(spark.createDataFrame(
+      spark.sparkContext.parallelize(idx.map(i => Row(i, i.toDouble)), 2), s), Vector(3L), Vector("x"))
+    assert(xs(frame(2, 0, 1)) == Seq(0.0, 1.0, 2.0))
+    Seq(Seq(0L, 1L, 1L), Seq(0L, 2L), Seq(0L, 1L, 3L), Seq(0L, 1L, 2L, 2L)).foreach { idx =>
+      val e = intercept[IllegalArgumentException](frame(idx: _*).collectOrdered())
+      assert(e.getMessage.contains("dense index broken"), s"$idx: $e")
+    }
+  }
+
   test("mapRows: arbitrary scalar fn over payload (V1 general path)") {
     val p = points(4)
     val out = p.mapRows(
