@@ -97,7 +97,7 @@ class StagedSliceSpec extends SparkTestBase {
     assert(tasksOf { staged(Ix.S(Some(3), Some(3))).df.collect(); () } == 0L)
   }
 
-  test("zipping two windows runs one job with no join and no Exchange, and pins nothing new") {
+  test("zipping two windows: one job, no join or Exchange, pins nothing new") {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val a = staged(Ix.S(Some(offsets(1) - 20), Some(offsets(1) + 20))).reshape(4, -1)
     val b = staged(Ix.S(Some(100), Some(110))).reshape(1, -1)
