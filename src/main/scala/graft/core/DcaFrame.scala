@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 import graft.functions.{GatherPositions, Param}
@@ -22,9 +22,9 @@ import Shape.Shape
   * `__idx0..__idxN: LongType`, because DataFrames are unordered.
   * Reshape / flatten / slice / newaxis are pure index arithmetic —
   * narrow transformations, no shuffle. Filter (boolean mask) is the one
-  * op that needs a global re-index; it uses per-partition offsets
-  * (zipWithIndex), never a single-partition window, so it survives
-  * 100-TB inputs (SURVEY §7.5.1).
+  * op that needs a global re-index; it stages its rows and counts each
+  * staged partition ([[DcaFrame.Staging]]), never a single-partition
+  * window, so it survives 100-TB inputs (SURVEY §7.5.1).
   *
   * Each operation is one pass over the fields, as the reference's is one
   * numpy view or `tree_map`: a single projection that computes each
@@ -43,11 +43,13 @@ import Shape.Shape
   * compile.
   *
   * A 1-D frame built by [[DcaFrame.fromDF]] or [[mask]] carries the
-  * [[DcaFrame.Staging]] handle of its staged sort cache, which knows the
-  * dense-index range each cached partition holds. A slice or int index
-  * of such a frame reads only the cached partitions its index range
-  * overlaps, so its cost follows the window, not the frame; a 1-D slice
-  * carries a borrowed view of the same cache, so it slices the same way.
+  * [[DcaFrame.Staging]] handle of its staged cache, which knows the
+  * dense-index range each cached partition holds, and its `df` is that
+  * handle's identity window: the one read path from a cache position to
+  * a dense index. A slice or int index of such a frame reads only the
+  * cached partitions its index range overlaps, so its cost follows the
+  * window, not the frame; a 1-D slice carries a borrowed view of the
+  * same cache, so it slices the same way.
   *
   * Static fields (constant across the batch, untouched by every op —
   * `array_dataclass.py:192-198`) live in [[statics]].
@@ -254,7 +256,7 @@ final case class DcaFrame(
         case (_, Indexing.Resolved.Slice(start, step, len)) => (st.view(start, step), len)
       }
     }
-    var cur = viewed.fold(df) { case (v, len) => v.window(df.schema, len) }
+    var cur = viewed.fold(df) { case (v, len) => v.window(len) }
     var axis = 0          // input axis being consumed
     var outPos = 0        // output axis position
     val outIdx = Vector.newBuilder[Column]
@@ -385,32 +387,24 @@ final case class DcaFrame(
 
   /** Boolean-mask selection — THE canonical filter (S7,
     * `array_dataclass.py:382-390`, `README.md:53`). The mask predicate
-    * is evaluated per row over the full batch; the result is 1-D with a
-    * dense re-index by per-partition offsets, never a global window.
+    * is evaluated per row over the full batch; the surviving payload is
+    * staged in linear-index order ([[DcaFrame.denseIndex]]), and the
+    * result is the 1-D identity window over that cache, never a global
+    * window.
     *
     * A staged 1-D frame whose view steps forward ([[fromDF]]'s, a mask
     * result, or a `step > 0` slice of either) already yields its rows
     * in dense-position order, partition by partition, so its surviving
     * rows are staged as they come: one job counts them, and no range
     * sort or shuffle runs. Any other frame is sorted by its linear
-    * index first.
+    * index first; the sort key reads the index columns below the
+    * payload projection, so the cache holds the payload alone.
     */
   def mask(pred: Column): DcaFrame = {
-    val filtered = df.filter(pred)
-    val (indexed, n, staged) =
-      if (ndim == 1 && staging.exists(_.step > 0))
-        DcaFrame.denseIndex(filtered.select(arrayCols.map(col): _*), Nil)
-      else {
-        require(!df.columns.contains("__graft_lin"),
-          "__graft_lin is a reserved column name")
-        val (i, n, s) = DcaFrame.denseIndex(
-          filtered.select(linearIndex.as("__graft_lin") +: arrayCols.map(col): _*),
-          Seq(col("__graft_lin")))
-        (i.drop("__graft_lin"), n, s)
-      }
-    // the staged cache is the SINGLE cached artifact; the re-indexed
-    // view is a narrow codegen'd projection over it
-    copy(df = indexed, shape = Vector(n), staging = Some(staged))
+    val inOrder = ndim == 1 && staging.exists(_.step > 0)
+    val (staged, n) = DcaFrame.denseIndex(df.filter(pred).select(arrayCols.map(col): _*),
+      if (inOrder) Nil else Seq(linearIndex))
+    copy(df = staged.window(n), shape = Vector(n), staging = Some(staged))
   }
 
   /** Integer-array gather along axis 0 (S8): `p[int_arr]` — one
@@ -602,14 +596,16 @@ final case class DcaFrame(
     df.sparkSession.createDataFrame(collectOrdered().toSeq.asJava, payloadSchema).as[T]
       .collect().toSeq
 
-  /** Release the staged dense-index sort this frame owns (the frame
+  /** Release the staged cache this frame owns (the frame
     * [[DcaFrame.fromDF]]/[[mask]] built); a slice of it only borrows
     * the cache, and freeing the slice frees nothing. Pinning is
     * [[CacheTracker]]'s job, so this is the only cache a frame holds.
-    * After the owner's release neither it NOR any frame derived from it
-    * may be used — downstream jobs would re-execute the range shuffle
-    * with fresh sampled bounds and could silently mis-index. Windows
-    * cut by [[apply]] read the cache directly, so they die with it too.
+    * Every staged frame's `df`, the owner's included, is a window that
+    * reads the cache directly, so after the owner's release neither it
+    * NOR any frame derived from it may be used — a recomputed cache
+    * could re-sample the range sort's bounds and mis-index, which the
+    * window's per-partition size check turns into an error where it
+    * reads a partition to its end.
     */
   def unpersist(): DcaFrame = {
     staging.filter(_.owned).foreach(s => CacheTracker.free(s.frame))
@@ -677,16 +673,17 @@ final case class DcaFrame(
 object DcaFrame {
   def idxColNames(ndim: Int): Vector[String] = (0 until ndim).map(i => s"__idx$i").toVector
 
-  /** The staged sort cache behind a [[fromDF]]/[[DcaFrame.mask]] frame,
+  /** The staged cache behind a [[fromDF]]/[[DcaFrame.mask]] frame,
     * seen as an affine view: element `k` of the view is the cached row
     * at dense position `first + k * step`. `frame` is the persisted
-    * sorted frame and `offsets` the dense-position range of each cached
-    * partition — partition p holds positions `[offsets(p), offsets(p + 1))`,
-    * in cache order. The constructing frame's handle is the identity
-    * view (`first = 0, step = 1`) and [[owned]]: only it frees the
-    * cache. [[view]] composes a slice into a borrowed handle over the
-    * same cache, the way a numpy slice is an offset and stride over the
-    * same buffer.
+    * payload in dense order and `offsets` the dense-position range of
+    * each cached partition — partition p holds positions
+    * `[offsets(p), offsets(p + 1))`, in cache order. The constructing
+    * frame's handle is the identity view (`first = 0, step = 1`) and
+    * [[owned]]: only it frees the cache, and its frame's `df` is
+    * `window(n)`. [[view]] composes a slice into a borrowed handle over
+    * the same cache, the way a numpy slice is an offset and stride over
+    * the same buffer.
     */
   final class Staging(val frame: DataFrame, val offsets: Vector[Long],
       val first: Long = 0L, val step: Long = 1L, val owned: Boolean = true) {
@@ -698,24 +695,23 @@ object DcaFrame {
     def view(start: Long, s: Long): Staging =
       new Staging(frame, offsets, first + start * step, step * s, owned = false)
 
-    /** The first `len` elements of this view as a frame whose schema is
-      * `schema` (`__idx0`, then columns of `frame`), read from only the
-      * cached partitions that overlap their positions and, within each,
-      * only the positions in range and on the step; `__idx0` is the
-      * element number `(pos - first) / step`. No per-call value enters
-      * a generated expression. A lazy leaf whose statistics carry the
+    /** The first `len` elements of this view as a frame of `__idx0`
+      * followed by the columns of `frame`, read from only the cached
+      * partitions that overlap their positions and, within each, only
+      * the positions in range and on the step; `__idx0` is the element
+      * number `(pos - first) / step`. No per-call value enters a
+      * generated expression. A lazy leaf whose statistics carry the
       * exact row count `len`: building it runs no job and pins nothing;
       * it reads the staged cache, so it dies with the owner's
       * [[DcaFrame.unpersist]] / the session sweep like any view.
       */
-    def window(schema: StructType, len: Long): DataFrame = {
+    def window(len: Long): DataFrame = {
       val last = first + (len - 1) * step
       val (lo, hi) = if (len <= 0) (0L, -1L) else (math.min(first, last), math.max(first, last))
       val kept = (0 until offsets.length - 1)
         .filter(p => offsets(p) <= hi && offsets(p + 1) > lo && offsets(p + 1) > offsets(p)).toArray
-      val ords = schema.fieldNames.tail.map(frame.schema.fieldIndex)
-      val rows = new WindowRDD(cached, kept, kept.map(offsets), lo, hi, first, step,
-        ords, ords.map(frame.schema(_).dataType))
+      val schema = StructType(StructField("__idx0", LongType, nullable = false) +: frame.schema.fields)
+      val rows = new WindowRDD(cached, kept, offsets.toArray, lo, hi, first, step, schema)
       GraftSqlBridge.sizedRddFrame(frame.sparkSession, schema, rows, math.max(0L, len))
     }
   }
@@ -764,11 +760,12 @@ object DcaFrame {
 
   /** Construct from a DataFrame, adding a dense 1-D index in `sortCols`
     * order. Ordering is established by a range-repartition +
-    * partition-local sort, then indices are assigned with per-partition
-    * offsets (zipWithIndex), no single-partition stage — scales to
-    * arbitrarily large inputs. Building runs the range sort's sampling
-    * job, its shuffle-map job and one job that fills the staged cache
-    * and counts each partition's rows (see [[denseIndex]]).
+    * partition-local sort into a staged cache ([[denseIndex]]); the
+    * frame's `df` is that cache's identity window, whose `__idx0` is
+    * each row's cache position — no single-partition stage, so it
+    * scales to arbitrarily large inputs. Building runs the range sort's
+    * sampling job, its shuffle-map job and one job that fills the staged
+    * cache and counts each partition's rows.
     *
     * `sortCols` MUST be a unique key: ties would make the assigned row
     * identity depend on partitioning, breaking the deterministic-order
@@ -777,13 +774,8 @@ object DcaFrame {
   def fromDF(df: DataFrame, sortCols: Seq[Column], arrayCols: Seq[String] = Nil,
              statics: Map[String, Any] = Map.empty): DcaFrame = {
     val cols = if (arrayCols.nonEmpty) arrayCols.toVector else df.columns.toVector
-    // ONE cached artifact (the staged sort, already materialized by the
-    // counting job inside denseIndex). The indexed frame is a narrow
-    // codegen'd projection over that cache — re-deriving the dense
-    // index per downstream job is a literal-array lookup, far cheaper
-    // than a second persist + count of the projection was.
-    val (indexed, n, staged) = denseIndex(df.select(cols.map(col): _*), sortCols)
-    DcaFrame(indexed, Vector(n), cols, statics, staging = Some(staged))
+    val (staged, n) = denseIndex(df.select(cols.map(col): _*), sortCols)
+    DcaFrame(staged.window(n), Vector(n), cols, statics, staging = Some(staged))
   }
 
   /** Build a 1-D frame from a typed Dataset; row identity comes from
@@ -849,14 +841,13 @@ object DcaFrame {
     DcaFrame(df, shape, payload)
   }
 
-  /** Dense 0..n-1 index via range-partitioned sort + per-partition
-    * offsets — the scalable replacement for `row_number()` over a
-    * global window (SURVEY §7.5.1), kept entirely inside Tungsten:
-    * `monotonically_increasing_id()` encodes (partitionId << 33 |
-    * position-in-partition); the per-partition row counts turn that
-    * into dense indices via a literal offset array. No per-row Row
-    * ser/deser (the old `rdd.zipWithIndex` exit), no codegen break.
-    * Empty `sortCols` keep `df`'s own partition order.
+  /** Stages `df` behind a dense 0..n-1 index: `df`'s rows,
+    * range-partitioned and sorted within partitions by `sortCols`
+    * (empty `sortCols` keep `df`'s own partition order), are
+    * persisted, and their dense index is their position in the cache —
+    * the scalable replacement for `row_number()` over a global window
+    * (SURVEY §7.5.1). `sortCols` may read columns `df`'s final
+    * projection dropped; the cache holds exactly `df`'s columns.
     *
     * The sorted input is persisted so the counting job and every
     * downstream job see ONE materialization (a re-executed range
@@ -867,13 +858,11 @@ object DcaFrame {
     * ONLY cache — it is returned as a [[Staging]] handle with the
     * per-partition offsets, carried on [[DcaFrame.staging]], pinned
     * through `CacheTracker`, and released via [[DcaFrame.unpersist]] or
-    * the session sweep.
+    * the session sweep; [[Staging.window]] reads it.
     *
-    * @return (indexed frame with `__idx0` prepended, total row count,
-    *         staging handle of the cache backing the indexed view)
+    * @return (the owned identity handle of the cache, total row count)
     */
-  private[core] def denseIndex(df: DataFrame, sortCols: Seq[Column]): (DataFrame, Long, Staging) = {
-    require(!df.columns.contains("__graft_mid"), "__graft_mid is a reserved column name")
+  private[core] def denseIndex(df: DataFrame, sortCols: Seq[Column]): (Staging, Long) = {
     val sorted =
       if (sortCols.isEmpty) df
       else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
@@ -882,13 +871,7 @@ object DcaFrame {
     val counts = staged.sparkSession.sparkContext.runJob(cached, CountRows, 0 until cached.getNumPartitions)
     // offsets(p) = first index of partition p; offsets(nPart) = total
     val offsets = counts.toVector.scanLeft(0L)(_ + _)
-    val withMid = staged.select(
-      monotonically_increasing_id().as("__graft_mid") +: df.columns.map(col).toSeq: _*)
-    val offCol = element_at(typedlit(offsets.init), shiftright(col("__graft_mid"), 33).cast("int") + 1)
-    val indexed = withMid.select(
-      (offCol + col("__graft_mid").bitwiseAND(lit((1L << 33) - 1))).cast(LongType).as("__idx0")
-        +: df.columns.map(col).toSeq: _*)
-    (indexed, offsets.last, new Staging(staged, offsets))
+    (new Staging(staged, offsets), offsets.last)
   }
 
   /** A partition's row count, as a named function: Spark's closure

@@ -3,20 +3,23 @@ package graft.core
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.types.{LongType, StructType}
 import scala.collection.mutable.{ArrayBuffer, LongMap}
 
 /** The rows of a staged window ([[DcaFrame.Staging.window]]): partition
-  * `i` reads cached partition `kept(i)`, whose first row sits at dense
-  * position `starts(i)`, and keeps the positions in `[lo, hi]` that lie
-  * on the view's step from `first`, each as the row `(element number,
-  * the cached row's columns at ords)`. One RDD over the kept partitions
-  * only, so a window inside one partition is one task.
+  * `i` reads cached partition `p = kept(i)`, which holds dense positions
+  * `[offsets(p), offsets(p + 1))`, and keeps the positions in `[lo, hi]`
+  * that lie on the view's step from `first`, each as the row of `schema`
+  * `(element number, the cached row)` through one `UnsafeProjection`.
+  * One RDD over the kept partitions only, so a window inside one
+  * partition is one task. A partition the window reads to its end must
+  * hold exactly the rows its offsets say: a recomputed block of another
+  * size would shift every position after it.
   */
 private[core] final class WindowRDD(
-    private var cached: RDD[InternalRow], kept: Array[Int], starts: Array[Long],
-    lo: Long, hi: Long, first: Long, step: Long, ords: Array[Int], types: Array[DataType])
+    private var cached: RDD[InternalRow], kept: Array[Int], offsets: Array[Long],
+    lo: Long, hi: Long, first: Long, step: Long, schema: StructType)
     extends RDD[InternalRow](cached.context, Nil) {
 
   override protected def getPartitions: Array[Partition] = {
@@ -29,20 +32,33 @@ private[core] final class WindowRDD(
   })
 
   override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
-    val part = split.asInstanceOf[WindowRDD.Part]
-    val it = cached.iterator(part.parent, context)
-    var pos = starts(part.index)
-    while (pos < lo && it.hasNext) { it.next(); pos += 1 }
-    it.takeWhile(_ => pos <= hi).flatMap { r =>
-      val off = pos - first
+    val parent = split.asInstanceOf[WindowRDD.Part].parent
+    val (start, end) = (offsets(parent.index), offsets(parent.index + 1))
+    val in = cached.iterator(parent, context)
+    def wrongSize(held: String) = new IllegalStateException(s"staged partition ${parent.index} " +
+      s"holds $held rows, not the ${end - start} its offsets say: its cache was recomputed")
+    val last = math.min(hi, end - 1)
+    var pos = start // the position of the next cached row
+    def read(): InternalRow = {
+      if (!in.hasNext) throw wrongSize(s"${pos - start}")
       pos += 1
-      if (off % step != 0) None
-      else {
-        val out = new GenericInternalRow(ords.length + 1)
-        out.setLong(0, off / step)
-        var k = 0
-        while (k < ords.length) { out.update(k + 1, r.get(ords(k), types(k))); k += 1 }
-        Some(out: InternalRow)
+      in.next()
+    }
+    while (pos < lo) read()
+    val idx = new SpecificInternalRow(Seq(LongType))
+    val joined = new JoinedRow
+    val proj = UnsafeProjection.create(schema)
+    new Iterator[InternalRow] {
+      def hasNext: Boolean = {
+        while (pos <= last && (pos - first) % step != 0) read()
+        if (pos <= last) true
+        else if (last == end - 1 && in.hasNext) throw wrongSize("more than")
+        else false
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("end of the window")
+        idx.setLong(0, (pos - first) / step)
+        proj(joined(idx, read()))
       }
     }
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.{DcaFrame, Indexing}
 import graft.functions.{DotF32, TopKSketch}
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -233,9 +234,9 @@ object Similarity {
     * where every id ≡ 3 mod 10) the value stride can select fewer
     * rows than cells — then fall back to a rank stride (every
     * (n/nCells)-th row in id order), which cannot under-fill. The
-    * fallback range-sorts only the (id, vec) projection and derives
-    * ranks with the repo's per-partition dense-index idiom
-    * (DcaFrame.denseIndex) — NO single-partition global window. It
+    * fallback stages the (id, vec) projection as a DcaFrame in id order
+    * and collects its strided slice — a read of the cached partitions
+    * the slice overlaps, NO single-partition global window. It
     * never fires on the dense registered tables (SimilaritySpec pins
     * this), so the sim3/sim6/sim18 oracles, which replay the id-value
     * stride in SQL, stay exact.
@@ -252,35 +253,9 @@ object Similarity {
     val picked =
       if (byValue.length >= want) byValue
       else {
-        // per-partition dense ranks from monotonically_increasing_id +
-        // a partition-offset literal (one tiny counts job) — the range
-        // shuffle is persisted so the offsets job and the filtered
-        // collect see the SAME partition bounds (a re-executed range
-        // exchange could re-sample and mis-rank).
-        val proj = corpus.select(col(idCol), col(vecCol))
-          .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val withMid = proj.withColumn("__mid", monotonically_increasing_id())
-          val counts = withMid
-            .select(shiftright(col("__mid"), 33).cast("int").as("__pid"))
-            .groupBy("__pid").count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val nPart = if (counts.isEmpty) 0 else counts.keys.max + 1
-          val offsets = new Array[Long](nPart)
-          var acc = 0L
-          for (p <- 0 until nPart) { offsets(p) = acc; acc += counts.getOrElse(p, 0L) }
-          val offCol =
-            if (nPart == 0) lit(0L)
-            else element_at(typedlit(offsets.toSeq),
-              shiftright(col("__mid"), 33).cast("int") + 1)
-          withMid
-            .withColumn("__rn", offCol + col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-            .filter(col("__rn") % stride === 0)
-            .orderBy(idCol).limit(nCells)
-            .select(col(idCol), col(vecCol))
-            .collect()
-        } finally proj.unpersist()
+        val ranked = DcaFrame.fromDF(corpus.select(col(idCol), col(vecCol)), Seq(col(idCol)))
+        try ranked(Indexing.Ix.S(Some(0L), Some(nCells * stride), stride)).collectOrdered()
+        finally ranked.unpersist()
       }
     picked.map(r => Centroid(r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
   }

@@ -25,6 +25,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Spark's private SQL surface (the classic session and Dataset,
   *    `Dataset.ofRows`, `LogicalRDD` construction) is reached only
   *    through `GraftSqlBridge`, so that dependency stays in one file.
+  *  - Dense positions: a row's dense index is its position in a
+  *    staged cache, read through `DcaFrame.Staging`'s windows. No file
+  *    under `src/main` derives one from `monotonically_increasing_id`,
+  *    whose partition-id encoding needs a per-partition offset literal
+  *    that changes from run to run.
   *  - Native kernels: the SQL names of the six `graft.functions`
   *    kernels appear in string literals only under `graft/functions`.
   *    Everywhere else a kernel is its Column constructor
@@ -102,6 +107,12 @@ class SourceGuardSpec extends AnyFunSuite {
   test("WorkMetricsListener is the only SparkListener registered") {
     guard("""addSparkListener\(""".r, Set("WorkMetrics.scala"),
       "collect task and stage counters through graft.WorkMetricsListener")
+  }
+
+  test("dense positions come only from Staging, never monotonically_increasing_id") {
+    val found = sources.flatMap(hits(_, """monotonically_increasing_id""".r))
+    assert(found.isEmpty, "index rows by their position in a staged cache " +
+      "(DcaFrame.fromDF, Staging.window) instead of:\n" + found.mkString("\n"))
   }
 
   test("Spark's private SQL surface is reached only through GraftSqlBridge") {

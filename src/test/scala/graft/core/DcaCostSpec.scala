@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -118,7 +119,12 @@ class DcaCostSpec extends SparkTestBase {
     val jobs = jobsOf { m = staged(w).mask(col("v") % 3 === 1); m.df.collect(); () }
     assert(jobs == 2L, s"mask ran $jobs jobs")
     val plan = m.df.queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryRelation") && !plan.contains("Exchange"), plan)
+    val cache = m.staging.get.frame.queryExecution.toRdd
+    val readsCache = m.df.queryExecution.optimizedPlan.collectLeaves() match {
+      case Seq(l: LogicalRDD) => l.rdd.dependencies.map(_.rdd) == Seq(cache)
+      case _                  => false
+    }
+    assert(readsCache && !plan.contains("Exchange"), plan)
     same(m, twin(w).mask(_.getLong(1) % 3 == 1), "mask of a window")
     m.unpersist()
   }

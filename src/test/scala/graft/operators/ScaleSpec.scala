@@ -597,8 +597,9 @@ class BucketingSpec extends SparkTestBase {
 
 final case class PtRow(k: Long, x: Double)
 
-/** Guards the Tungsten dense-index scheme (mid = pid<<33 | pos +
-  * literal offsets) across MANY partitions — the partition-boundary
+/** Guards the staged dense index (a row's index is its position in the
+  * staged cache: its partition's offset plus its place in the
+  * partition) across MANY partitions — the partition-boundary
   * arithmetic is exactly where a silent mis-index would hide.
   */
 class DenseIndexScaleSpec extends SparkTestBase {
