@@ -711,7 +711,7 @@ object DcaFrame {
       val kept = (0 until offsets.length - 1)
         .filter(p => offsets(p) <= hi && offsets(p + 1) > lo && offsets(p + 1) > offsets(p)).toArray
       val schema = StructType(StructField("__idx0", LongType, nullable = false) +: frame.schema.fields)
-      val rows = new WindowRDD(cached, kept, offsets.toArray, lo, hi, first, step, schema)
+      val rows = new WindowRDD(cached, kept, offsets.toArray, lo, hi, first, step)
       GraftSqlBridge.sizedRddFrame(frame.sparkSession, schema, rows, math.max(0L, len))
     }
   }
@@ -719,6 +719,15 @@ object DcaFrame {
   /** One side of a [[keyJoin]]: `rows` rows of `df`, each joined on `key`. */
   private final case class JoinSide(df: DataFrame, key: HashProbeRDD.Key, rows: Long) {
     def bytes: Long = rows * GraftSqlBridge.rowBytes(df.schema)
+
+    /** The bytes one scan of `df` reads: more than [[bytes]] when it
+      * reads staged windows, which read each cached partition they keep
+      * from its start, however few of its rows they emit.
+      */
+    def scanBytes: Long = {
+      val read = GraftSqlBridge.leafRdds(df).collect { case w: WindowRDD => w.rowsRead }.sum
+      math.max(rows, read) * GraftSqlBridge.rowBytes(df.schema)
+    }
   }
 
   /** The equi-join of two frames on their sides' keys, `rows` rows of
@@ -726,9 +735,10 @@ object DcaFrame {
     * (the left side's fields, then the right side's). `sqlJoin`'s output
     * must carry each picked field under its own name, once.
     *
-    * The side smaller by exact bytes is the build side. When shipping it
-    * to every probe partition costs no more than one broadcast may
-    * (`spark.sql.autoBroadcastJoinThreshold`) and building either side's
+    * The side smaller by exact bytes is the build side. When reading it
+    * in every probe partition costs no more than one broadcast may ship
+    * (`spark.sql.autoBroadcastJoinThreshold`; a staged window is charged
+    * the cached rows it reads, not the rows it emits) and building either side's
     * RDD runs no job, the join runs in the probe side's own stage
     * ([[HashProbeRDD]]) under a leaf that knows its exact row count: one
     * job, one stage, no exchange. Otherwise `sqlJoin` plans it in SQL —
@@ -746,7 +756,7 @@ object DcaFrame {
       GraftSqlBridge.buildsWithoutJobs(s.df.queryExecution.executedPlan))
     lazy val probeRdd = probe.df.queryExecution.toRdd
     val joined = StructType(left.df.schema.fields ++ right.df.schema.fields)
-    if (inStage && build.bytes * math.max(1, probeRdd.getNumPartitions) <= threshold) {
+    if (inStage && build.scanBytes * math.max(1, probeRdd.getNumPartitions) <= threshold) {
       val rdd = new HashProbeRDD(probeRdd, build.df.queryExecution.toRdd, probe.key, build.key,
         buildLeft, joined, out.map(_._2).toArray)
       val schema = StructType(out.map { case (n, i) => joined(i).copy(name = n) })

@@ -10,17 +10,22 @@ import scala.collection.mutable.{ArrayBuffer, LongMap}
 /** The rows of a staged window ([[DcaFrame.Staging.window]]): partition
   * `i` reads cached partition `p = kept(i)`, which holds dense positions
   * `[offsets(p), offsets(p + 1))`, and keeps the positions in `[lo, hi]`
-  * that lie on the view's step from `first`, each as the row of `schema`
-  * `(element number, the cached row)` through one `UnsafeProjection`.
-  * One RDD over the kept partitions only, so a window inside one
-  * partition is one task. A partition the window reads to its end must
-  * hold exactly the rows its offsets say: a recomputed block of another
-  * size would shift every position after it.
+  * that lie on the view's step from `first`, each as the row
+  * `(element number, the cached row)`; the scan over this RDD projects
+  * it into an `UnsafeRow`. One RDD over the kept partitions only, so a
+  * window inside one partition is one task. A partition the window
+  * reads to its end must hold exactly the rows its offsets say: a
+  * recomputed block of another size would shift every position after it.
   */
 private[core] final class WindowRDD(
     private var cached: RDD[InternalRow], kept: Array[Int], offsets: Array[Long],
-    lo: Long, hi: Long, first: Long, step: Long, schema: StructType)
+    lo: Long, hi: Long, first: Long, step: Long)
     extends RDD[InternalRow](cached.context, Nil) {
+
+  /** The cached rows a scan reads: each kept partition from its start
+    * (a window skips the rows before `lo` by reading them) up to `hi`.
+    */
+  def rowsRead: Long = if (kept.isEmpty) 0L else hi + 1 - offsets(kept.head)
 
   override protected def getPartitions: Array[Partition] = {
     val parent = cached.partitions
@@ -47,18 +52,17 @@ private[core] final class WindowRDD(
     while (pos < lo) read()
     val idx = new SpecificInternalRow(Seq(LongType))
     val joined = new JoinedRow
-    val proj = UnsafeProjection.create(schema)
     new Iterator[InternalRow] {
       def hasNext: Boolean = {
         while (pos <= last && (pos - first) % step != 0) read()
         if (pos <= last) true
-        else if (last == end - 1 && in.hasNext) throw wrongSize("more than")
+        else if (last == end - 1 && in.hasNext) throw wrongSize(s"more than ${end - start}")
         else false
       }
       def next(): InternalRow = {
         if (!hasNext) throw new NoSuchElementException("end of the window")
         idx.setLong(0, (pos - first) / step)
-        proj(joined(idx, read()))
+        joined(idx, read())
       }
     }
   }

@@ -39,6 +39,10 @@ object GraftSqlBridge {
     ofRows(session, LogicalRDD(output, rdd)(session, Some(stats)))
   }
 
+  /** The RDDs that the leaves built by [[sizedRddFrame]] read in `df`'s optimized plan. */
+  def leafRdds(df: DataFrame): Seq[RDD[InternalRow]] =
+    df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd }
+
   /** The bytes the optimizer sizes one row of `schema` at: exact for
     * fixed-width fields, the type's default size for the others.
     */

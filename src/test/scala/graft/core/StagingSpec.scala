@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
+import Indexing.Ix
+
 /** A staged frame's dense index comes from its `Staging` alone: the
   * frame reads its cache through its identity window, so no plan over
   * it carries the cache's partition offsets, and a window that reads a
@@ -39,6 +41,29 @@ class StagingSpec extends SparkTestBase {
     Seq(m, sorted).foreach(_.unpersist())
   }
 
+  test("a join charges a staged window the cached rows it reads, not the rows it emits") {
+    assert(offsets(1) > 100, offsets)
+    // ten rows at the head of partition 0, and its last ten: the second
+    // window reads the whole partition to emit them
+    val head = Ix.S(Some(0L), Some(10L))
+    val deep = Ix.S(Some(offsets(1) - 10), Some(offsets(1)))
+    def plan(f: DcaFrame) = f.df.queryExecution.executedPlan.toString
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    // 20 rows of (__idx0, id, v) fit; the rows before the deep window do not
+    spark.conf.set(key, (20 * 32).toString)
+    try {
+      // equal sizes: the left side is the build side
+      val deepBuild = staged(deep).zipJoin(staged(head))
+      val headBuild = staged(head).zipJoin(staged(deep))
+      assert(plan(deepBuild).contains("Join"), plan(deepBuild))
+      assert(!plan(headBuild).contains("Join"), plan(headBuild))
+      val pairs = (0L until 10L).map(i => (Seq(offsets(1) - 10 + i, (offsets(1) - 10 + i) * 10 + 7), Seq(i, i * 10 + 7)))
+      assert(deepBuild.collectOrdered().toSeq.map(_.toSeq) == pairs.map { case (d, h) => d ++ h })
+      assert(headBuild.collectOrdered().toSeq.map(_.toSeq) == pairs.map { case (d, h) => h ++ d })
+    } finally spark.conf.set(key, old)
+  }
+
   test("a window reading a partition to its end checks its size") {
     val st = staged.staging.get
     assert(offsets.length - 1 >= 2, offsets)
@@ -55,6 +80,9 @@ class StagingSpec extends SparkTestBase {
       val err = intercept[SparkException](wrong.view(wrongOffsets(p + 1) - 1, 1).window(1).collect())
       assert(err.getMessage.contains(s"staged partition $p holds"), err.getMessage)
     }
+    // partition 1 holds a row past its end, and the error counts the rows it expected
+    val more = intercept[SparkException](wrong.view(wrongOffsets(1), 1).window(wrongOffsets(2) - wrongOffsets(1)).collect())
+    assert(more.getMessage.contains(s"holds more than ${wrongOffsets(2) - wrongOffsets(1)} rows"), more.getMessage)
     // the true offsets read every row at its position
     assert(st.window(n).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
       (0L until n).map(i => (i, i)))
