@@ -198,29 +198,22 @@ final case class DcaFrame(
   }
 
   /** Expand the batch shape (dim-1/new-leading axes up), every payload
-    * row replicated (`array_dataclass.py:375-380`): each expanded axis
-    * of size n explodes the literal array `[0, n)` into its index — a
-    * generator in the frame's own stage, no join.
+    * row replicated (`array_dataclass.py:375-380`), per
+    * [[Shape.broadcastTo]]'s alignment: a target axis keeps its source
+    * axis's index, and each other axis of size n > 1 explodes the
+    * literal array `[0, n)` into its index — a generator in the frame's
+    * own stage, no join.
     */
   def broadcastTo(target: Seq[Long]): DcaFrame = {
     val t = target.toVector
-    require(t.length >= ndim, s"broadcast_to target rank ${t.length} < current $ndim")
-    val pad = t.length - ndim
-    val padded = Vector.fill[Long](pad)(1L) ++ shape
-    padded.zip(t).zipWithIndex.foreach { case ((o, n), i) =>
-      require(o == n || o == 1L, s"cannot broadcast dim $i: $o -> $n")
-    }
+    val src = Shape.broadcastTo(shape, t)
     if (t == shape) this
     else {
-      // target axis i >= pad keeps old axis i - pad when its size is
-      // unchanged; any other axis of size n != 1 is a replicating range
-      def kept(i: Int) = i >= pad && padded(i) == t(i)
-      val ranges = t.indices.filter(i => !kept(i) && t(i) != 1L)
+      val ranges = t.indices.filter(i => src(i).isEmpty && t(i) != 1L)
       val crossed = ranges.foldLeft(df)((d, i) =>
         d.select(col("*"), explode(typedlit((0L until t(i)).toArray)).as(s"__tidx$i")))
       val newIdx = t.indices.map { i =>
-        (if (kept(i)) col(s"__idx${i - pad}") else if (t(i) == 1L) lit(0L) else col(s"__tidx$i"))
-          .as(s"__idx$i")
+        src(i).fold(if (t(i) == 1L) lit(0L) else col(s"__tidx$i"))(idx).as(s"__idx$i")
       }
       derived(df = crossed.select(newIdx ++ arrayCols.map(col): _*), shape = t)
     }
@@ -232,10 +225,10 @@ final case class DcaFrame(
 
   /** numpy indexing on the batch dims: int / slice / ellipsis /
     * newaxis / integer-array (`array_dataclass.py:382-390`,
-    * `:1006-1035`). Basic items are narrow (predicates + index remap,
-    * no shuffle); integer-array items gather on their output axes
-    * AFTER the basic items, as one [[gatherZip]] — numpy's
-    * advanced-index semantics (`p[idx_arr, 2:5]` == `p[:, 2:5][idx_arr]`).
+    * `:1006-1035`), executing [[Indexing.plan]]. The basic stage is
+    * narrow: a [[Param]] predicate per int and slice, then one `__idx`
+    * remap, no shuffle. The plan's zipped gather then runs as one
+    * [[gatherZip]].
     *
     * On a staged 1-D frame (one carrying [[staging]]) a slice or int
     * item is served by the staged view alone, like numpy's basic
@@ -248,141 +241,58 @@ final case class DcaFrame(
     * [[iterFirstDim]] stay on this path.
     */
   def apply(items: Indexing.Ix*): DcaFrame = {
-    val resolved = Indexing.resolve(items, shape)
+    import Indexing.Axis
+    val plan = Indexing.plan(items, shape)
     // (view, output length) when the staged view serves the one real item
     val viewed = staging.filter(_ => ndim == 1).flatMap { st =>
-      resolved.collectFirst {
-        case (_, Indexing.Resolved.Int(i))                  => (st.view(i, 1L), 1L)
-        case (_, Indexing.Resolved.Slice(start, step, len)) => (st.view(start, step), len)
-      }
+      plan.ints.headOption.map { case (_, i) => (st.view(i, 1L), 1L) }.orElse(
+        plan.axes.collectFirst { case Axis.Slice(_, start, step, len) => (st.view(start, step), len) })
     }
-    var cur = viewed.fold(df) { case (v, len) => v.window(len) }
-    var axis = 0          // input axis being consumed
-    var outPos = 0        // output axis position
-    val outIdx = Vector.newBuilder[Column]
-    val gathers = Vector.newBuilder[(Int, Vector[Long])] // (output axis, indices)
-    resolved.foreach {
-      case (_, Indexing.Resolved.New) =>
-        outIdx += lit(0L).as(s"__idx$outPos")
-        outPos += 1
-      case (_, Indexing.Resolved.Int(i)) =>
-        if (viewed.isEmpty) cur = cur.filter(col(s"__idx$axis") === Param.col(i))
-        axis += 1
-      case (_, Indexing.Resolved.Gather(idxs)) =>
-        // pass the axis through untouched here; gather applies below
-        outIdx += col(s"__idx$axis").as(s"__idx$outPos")
-        gathers += ((outPos, idxs))
-        axis += 1
-        outPos += 1
-      case (_, Indexing.Resolved.Slice(_, _, _)) if viewed.isDefined =>
-        outIdx += col(s"__idx$axis").as(s"__idx$outPos")
-        axis += 1
-        outPos += 1
-      case (_, Indexing.Resolved.Slice(start, step, newLen)) =>
-        val c = col(s"__idx$axis")
-        // offset along the slice direction
-        val off = if (step > 0) c - Param.col(start) else Param.col(start) - c
-        val stepAbs = Param.col(math.abs(step))
-        cur = cur.filter(off >= 0 && (off % stepAbs === 0) &&
-          off < Param.col(newLen * math.abs(step)))
-        // integral div (exact over the full long range)
-        outIdx += call_function("div", off, stepAbs).as(s"__idx$outPos")
-        axis += 1
-        outPos += 1
-    }
-    // shape BEFORE the gathers apply: gather axes keep their full dim
-    val interShape = Indexing.resultShape(resolved, gatherKeepsDim = true)
+    // a slice keeps element k at offset k * |step| from start, along its direction
+    def offset(a: Axis.Slice): Column =
+      if (a.step > 0) idx(a.src) - Param.col(a.start) else Param.col(a.start) - idx(a.src)
     val basic = viewed match {
       // one 1-D slice: the window is the result, its view the result's staging
-      case Some((v, _)) if resolved.size == 1 && interShape.length == 1 =>
-        copy(df = cur, shape = interShape, staging = Some(v))
+      case Some((v, len)) if plan.ints.isEmpty && plan.axes.length == 1 =>
+        copy(df = v.window(len), shape = plan.interShape, staging = Some(v))
       case _ =>
-        derived(df = cur.select(outIdx.result() ++ arrayCols.map(col): _*), shape = interShape)
-    }
-    val gs = gathers.result()
-    // numpy multi-advanced-index semantics: the index arrays broadcast
-    // together and are applied DIAGONALLY (p[[a,b],[c,d]] picks
-    // (a,c),(b,d) — array_dataclass_test.py:459-494). PLACEMENT follows
-    // numpy's two-case rule: when the advanced items — bare ints COUNT
-    // as advanced here — are separated by a slice/newaxis, the broadcast
-    // result dims move to the FRONT of the result (p[arr, :, arr] and
-    // even p[2, :, arr]); when they are all adjacent (an Int between two
-    // arrays does not separate), the dims are inserted in place at the
-    // first advanced position. An Int participates in the zip as a
-    // scalar — already applied as a filter above, it contributes no
-    // result dim, exactly numpy's () broadcast.
-    if (gs.isEmpty) basic
-    else {
-      val advancedAt = resolved.zipWithIndex.collect {
-        case ((_, Indexing.Resolved.Int(_)), i)    => i
-        case ((_, Indexing.Resolved.Gather(_)), i) => i
-      }
-      val separated = advancedAt.size >= 2 &&
-        resolved.slice(advancedAt.head + 1, advancedAt.last).exists {
-          case (_, Indexing.Resolved.Slice(_, _, _)) => true
-          case (_, Indexing.Resolved.New)            => true
-          case _                                     => false
+        // one predicate per selected input axis, in axis order
+        val preds = plan.ints.map { case (a, i) => (a, idx(a) === Param.col(i)) } ++
+          plan.axes.collect { case a: Axis.Slice =>
+            val (off, stepAbs) = (offset(a), Param.col(math.abs(a.step)))
+            (a.src, off >= 0 && (off % stepAbs === 0) && off < Param.col(a.len * math.abs(a.step)))
+          }
+        val cur = viewed.fold(preds.sortBy(_._1).foldLeft(df)((d, p) => d.filter(p._2))) {
+          case (v, len) => v.window(len)
         }
-      basic.gatherZip(gs.map(_._1), gs.map(_._2), toFront = separated)
+        val outIdx = plan.axes.zipWithIndex.map { case (axis, j) =>
+          (axis match {
+            case Axis.New                        => lit(0L)
+            case a: Axis.Slice if viewed.isEmpty => // integral div, exact over the long range
+              call_function("div", offset(a), Param.col(math.abs(a.step)))
+            case Axis.Slice(src, _, _, _)        => idx(src)
+            case Axis.Whole(src, _)              => idx(src)
+          }).as(s"__idx$j")
+        }
+        derived(df = cur.select(outIdx ++ arrayCols.map(col): _*), shape = plan.interShape)
     }
+    plan.zip.fold(basic)(basic.gatherZip)
   }
 
-  /** Diagonal (zipped) multi-axis gather: element k of the result takes
-    * input index `lists(a)(k)` on each gathered axis `positions(a)` —
-    * numpy's broadcast-and-zip semantics for multiple advanced indices.
-    * Executed as ONE generator over the frame: each row explodes the
-    * output positions its composite key is named at
-    * ([[graft.functions.GatherPositions]]), so repeats replicate the
-    * row and an unnamed key drops it — no join, no chain of per-axis
-    * gathers (which would outer-product). Length-1 lists broadcast to
-    * the common length.
-    *
-    * Placement: the zipped result dim replaces the gathered axes IN
-    * PLACE (at the first gathered position — requires the positions be
-    * adjacent) or, with `toFront`, lands at axis 0 with every
-    * non-gathered axis following in order — numpy's rule for advanced
-    * indices separated by a slice/newaxis.
+  /** Executes an [[Indexing.Zip]] over this frame's axes as ONE
+    * generator: each row explodes the zipped positions its composite key
+    * is named at ([[graft.functions.GatherPositions]]), so repeats
+    * replicate the row and an unnamed key drops it — no join, no chain
+    * of per-axis gathers (which would outer-product). The zipped dim
+    * lands where the plan placed it.
     */
-  private def gatherZip(positions: Vector[Int], lists: Vector[Vector[Long]],
-                        toFront: Boolean = false): DcaFrame = {
-    // numpy broadcast rule per dim: all non-1 lengths must agree (so
-    // (0,) broadcasts with (1,) to (0,) — max() would wrongly reject it)
-    val non1 = lists.map(_.length).filter(_ != 1).distinct
-    require(non1.size <= 1,
-      "shape mismatch: indexing arrays could not be broadcast together " +
-        s"with lengths ${lists.map(_.length).mkString(", ")}")
-    val len = non1.headOption.getOrElse(1)
-    // guard the resolved-input precondition (Indexing.resolve validates
-    // bounds and folds negatives); an unresolved index reaching the
-    // lookup below would silently DROP rows instead of raising the
-    // numpy IndexError contract gatherAxis documents
-    positions.zip(lists).foreach { case (ax, l) =>
-      l.foreach(i => require(i >= 0 && i < shape(ax),
-        s"index $i is out of bounds for axis $ax with size ${shape(ax)} " +
-          "(gatherZip requires resolved, in-bounds indices)"))
-    }
-    val expanded = lists.map(l => if (l.length == len) l else Vector.fill(len)(l.head))
+  private def gatherZip(z: Indexing.Zip): DcaFrame = {
     require(!df.columns.contains("__pos"), "__pos is a reserved column name")
-    val table = GatherPositions.Table(positions.map(shape), expanded)
+    val table = GatherPositions.Table(z.positions.map(shape), z.lists)
     val gathered = df.select(col("*"),
-      explode(GatherPositions.col(positions.map(idx), table)).as("__pos"))
-    val posSet = positions.toSet
-    val kept = (0 until ndim).filterNot(posSet).toVector
-    // in-place insertion point = number of kept axes before the first
-    // gathered axis (with adjacent positions that is exactly
-    // positions.head); toFront pins the zipped dim at axis 0
-    val insertAt = if (toFront) 0 else {
-      require(positions.zip(positions.tail).forall { case (a, b) => b == a + 1 },
-        s"in-place gatherZip requires adjacent axes, got $positions")
-      kept.count(_ < positions.head)
-    }
-    val keptBefore = kept.take(insertAt)
-    val keptAfter = kept.drop(insertAt)
-    val outIdx = keptBefore.zipWithIndex.map { case (ax, i) => col(s"__idx$ax").as(s"__idx$i") } ++
-      Seq(col("__pos").as(s"__idx$insertAt")) ++
-      keptAfter.zipWithIndex.map { case (ax, i) => col(s"__idx$ax").as(s"__idx${insertAt + 1 + i}") }
-    val newShape = (keptBefore.map(shape) :+ len.toLong) ++ keptAfter.map(shape)
-    derived(df = gathered.select(outIdx ++ arrayCols.map(col): _*), shape = newShape)
+      explode(GatherPositions.col(z.positions.map(idx), table)).as("__pos"))
+    val outIdx = z.shape.indices.map(j => z.source(j).fold(col("__pos"))(idx).as(s"__idx$j"))
+    derived(df = gathered.select(outIdx ++ arrayCols.map(col): _*), shape = z.shape)
   }
 
   /** Boolean-mask selection — THE canonical filter (S7,
@@ -415,17 +325,11 @@ final case class DcaFrame(
   def gather(indices: Seq[Long]): DcaFrame = gatherAxis(indices, 0)
 
   /** Driver-side integer-array gather along any axis: the one-axis,
-    * in-place case of [[gatherZip]] after negative indices resolve, so
-    * `p.gatherAxis(idxs, ax)` plans exactly like `p[..., idxs, ...]`.
+    * in-place [[Indexing.gatherZip]], so `p.gatherAxis(idxs, ax)` gathers
+    * like `p[..., idxs, ...]` without the full slices' predicates.
     */
-  def gatherAxis(indices: Seq[Long], axis: Int): DcaFrame = {
-    require(ndim >= 1, "gather needs ndim >= 1")
-    val ax = Shape.toAbsoluteAxis(axis, ndim)
-    val dim = shape(ax)
-    indices.zipWithIndex.foreach { case (i, k) =>
-      require(i >= -dim && i < dim, s"gather index $i (pos $k) out of bounds for dim $dim") }
-    gatherZip(Vector(ax), Vector(indices.map(i => if (i < 0) i + dim else i).toVector))
-  }
+  def gatherAxis(indices: Seq[Long], axis: Int): DcaFrame =
+    gatherZip(Indexing.gatherZip(indices, axis, shape))
 
   /** DISTRIBUTED integer-array gather along axis 0 (S8 at scale,
     * `array_dataclass_test.py:459-494` with arbitrary-size index
@@ -898,20 +802,16 @@ object DcaFrame {
     * element (matching the reference).
     */
   def stack(frames: Seq[DcaFrame], axis: Int = 0): DcaFrame = {
-    require(frames.nonEmpty, "stack of empty sequence")
-    val s0 = frames.head.shape
-    require(frames.forall(_.shape == s0), s"stack shape mismatch: ${frames.map(_.shape)}")
+    val (ax, newShape) = Shape.stack(frames.map(_.shape), axis)
     require(frames.forall(_.arrayCols == frames.head.arrayCols),
       "stack field mismatch (schema equality check, ops.py:63-71)")
-    val ax = Shape.toAbsoluteAxisInsert(axis, s0.length)
     val tagged = frames.zipWithIndex.map { case (f, k) =>
       // new axis ax = k; old axis j -> new axis (j < ax ? j : j+1)
-      val newIdx = (0 to s0.length).map { i =>
+      val newIdx = newShape.indices.map { i =>
         (if (i == ax) lit(k.toLong) else col(s"__idx${if (i < ax) i else i - 1}")).as(s"__idx$i")
       }
       f.df.select(newIdx ++ f.arrayCols.map(col): _*)
     }
-    val newShape = (s0.take(ax) :+ frames.size.toLong) ++ s0.drop(ax)
     DcaFrame(tagged.reduce(_ unionByName _), newShape, frames.head.arrayCols, frames.head.statics)
   }
 
@@ -920,21 +820,14 @@ object DcaFrame {
     * narrow.
     */
   def concat(frames: Seq[DcaFrame], axis: Int = 0): DcaFrame = {
-    require(frames.nonEmpty, "concat of empty sequence")
+    val (ax, newShape) = Shape.concat(frames.map(_.shape), axis)
     val h = frames.head
-    val ax = Shape.toAbsoluteAxis(axis, h.shape.length)
-    frames.foreach { f =>
-      require(f.shape.length == h.shape.length &&
-        f.shape.zipWithIndex.forall { case (d, i) => i == ax || d == h.shape(i) },
-        s"concat shape mismatch on non-concat axis: ${frames.map(_.shape)}")
-      require(f.arrayCols == h.arrayCols, "concat field mismatch")
-    }
+    require(frames.forall(_.arrayCols == h.arrayCols), "concat field mismatch")
     val offsets = frames.map(_.shape(ax)).scanLeft(0L)(_ + _)
     val shifted = frames.zip(offsets).map { case (f, off) =>
       if (off == 0L) f.df
       else f.df.withColumn(s"__idx$ax", col(s"__idx$ax") + Param.col(off))
     }
-    val newShape = h.shape.updated(ax, frames.map(_.shape(ax)).sum)
     DcaFrame(shifted.reduce(_ unionByName _), newShape, h.arrayCols, h.statics)
   }
 }

@@ -16,10 +16,10 @@ import Shape.Shape
   * O(1) metadata, slice/gather/mask are array walks), then re-enters
   * the distributed world via [[toFrame]] when the data grows.
   *
-  * Semantics parity is BY CONSTRUCTION where it matters: indexing goes
-  * through the same [[Indexing.resolve]] resolver and the same
-  * advanced-index placement rule as `DcaFrame.apply`
-  * (array_dataclass_test.py:459-494 numpy semantics), and einops
+  * Semantics parity is BY CONSTRUCTION where it matters: indexing
+  * executes [[Indexing.plan]], the plan `DcaFrame.apply` executes
+  * (array_dataclass_test.py:459-494 numpy semantics); broadcast_to,
+  * stack and concat take their shapes from [[Shape]]; and einops
   * reshape goes through the same [[Einops]] parser/resolver.
   * LocalDcaSpec fuzzes the two paths cell-by-cell against each other.
   *
@@ -103,141 +103,57 @@ final case class LocalDca(
     LocalDca(out.toVector, schema, newShape, statics)
   }
 
-  /** broadcast_to — same alignment rule as [[DcaFrame.broadcastTo]]
-    * (new LEADING axes, dim-1 axes replicate).
+  /** broadcast_to, per [[Shape.broadcastTo]]'s alignment: new LEADING
+    * axes and dim-1 axes replicate.
     */
   def broadcastTo(target: Seq[Long]): LocalDca = {
     val t = target.toVector
-    require(t.length >= ndim, s"broadcast_to target rank ${t.length} < current $ndim")
-    val pad = t.length - ndim
-    val padded = Vector.fill[Long](pad)(1L) ++ shape
-    padded.zip(t).zipWithIndex.foreach { case ((o, n), i) =>
-      require(o == n || o == 1L, s"cannot broadcast dim $i: $o -> $n")
-    }
+    val src = Shape.broadcastTo(shape, t)
     if (t == shape) this
     else {
       val srcStrides = Shape.strides(shape)
-      val n = Shape.size(t)
-      require(n <= Int.MaxValue,
-        s"broadcastTo refused: $n rows exceed the local 2^31 array bound — " +
-          "use the distributed DcaFrame path for frames this size")
-      val dstStrides = Shape.strides(t)
-      val out = new Array[Row](n.toInt)
-      var lin = 0L
-      while (lin < n) {
-        var src = 0L
-        var i = pad
-        while (i < t.length) {
-          if (padded(i) != 1L)
-            src += ((lin / dstStrides(i)) % t(i)) * srcStrides(i - pad)
-          i += 1
-        }
-        out(lin.toInt) = rows(src.toInt)
-        lin += 1
-      }
-      LocalDca(out.toVector, schema, t, statics)
+      walk("broadcastTo", t)(coords => t.indices.map(i => src(i).fold(0L)(coords(i) * srcStrides(_))).sum)
     }
   }
 
   // -------------------------------------------------------------------
-  // Indexing (S6/S8): same resolver, same placement rule as
-  // DcaFrame.apply — eager coordinate walk instead of filters + joins.
+  // Indexing (S6/S8): executes Indexing's plan as a coordinate walk
+  // where DcaFrame.apply runs it as filters and one generator.
   // -------------------------------------------------------------------
 
   def apply(items: Indexing.Ix*): LocalDca = {
-    val resolved = Indexing.resolve(items, shape)
+    import Indexing.Axis
+    val plan = Indexing.plan(items, shape)
     val srcStrides = Shape.strides(shape)
-    // basic stage over INTER axes (gather axes keep their full dim,
-    // exactly like DcaFrame.apply's first pass); Ints fold into `base`.
-    final case class InterAxis(len: Long, srcAxis: Int, start: Long, step: Long)
-    var axis = 0
-    var base = 0L
-    val interB = Vector.newBuilder[InterAxis]
-    val gathersB = Vector.newBuilder[(Int, Vector[Long])]
-    var outPos = 0
-    resolved.foreach {
-      case (_, Indexing.Resolved.New) =>
-        interB += InterAxis(1L, -1, 0L, 0L); outPos += 1
-      case (_, Indexing.Resolved.Int(i)) =>
-        base += i * srcStrides(axis); axis += 1
-      case (_, Indexing.Resolved.Gather(idxs)) =>
-        interB += InterAxis(shape(axis), axis, 0L, 1L)
-        gathersB += ((outPos, idxs))
-        axis += 1; outPos += 1
-      case (_, Indexing.Resolved.Slice(start, step, len)) =>
-        interB += InterAxis(len, axis, start, step)
-        axis += 1; outPos += 1
-    }
-    val inter = interB.result()
-    val gs = gathersB.result()
-    def srcLinear(coords: IndexedSeq[Long]): Long = {
-      var s = base
-      var i = 0
-      while (i < inter.length) {
-        val a = inter(i)
-        if (a.srcAxis >= 0) s += (a.start + coords(i) * a.step) * srcStrides(a.srcAxis)
-        i += 1
+    val base = plan.ints.map { case (a, i) => i * srcStrides(a) }.sum
+    // intermediate axis i adds offset(i) + coord * stride(i) to the source position
+    val (offset, stride) = plan.axes.map {
+      case Axis.New                        => (0L, 0L)
+      case Axis.Slice(src, start, step, _) => (start * srcStrides(src), step * srcStrides(src))
+      case Axis.Whole(src, _)              => (0L, srcStrides(src))
+    }.unzip
+    walk("apply", plan.shape) { coords =>
+      val inter = plan.zip.fold(coords) { z =>
+        val c = new Array[Long](plan.axes.length)
+        coords.indices.foreach(j => z.source(j).foreach(c(_) = coords(j)))
+        z.positions.zip(z.lists).foreach { case (a, l) => c(a) = l(coords(z.insertAt).toInt) }
+        c.toIndexedSeq
       }
-      s
+      base + inter.indices.map(i => offset(i) + inter(i) * stride(i)).sum
     }
-    def enumerate(outShape: Shape, toInter: IndexedSeq[Long] => IndexedSeq[Long]): LocalDca = {
-      val n = Shape.size(outShape)
-      require(n <= Int.MaxValue,
-        s"apply refused: gather/slice output of $n rows exceeds the local " +
-          "2^31 array bound — use the distributed DcaFrame path for frames this size")
-      val dstStrides = Shape.strides(outShape)
-      val out = new Array[Row](n.toInt)
-      var lin = 0L
-      while (lin < n) {
-        val coords = outShape.indices.map(i => (lin / dstStrides(i)) % outShape(i))
-        out(lin.toInt) = rows(srcLinear(toInter(coords)).toInt)
-        lin += 1
-      }
-      LocalDca(out.toVector, schema, outShape, statics)
-    }
-    if (gs.isEmpty)
-      enumerate(inter.map(_.len).toVector, identity)
-    else {
-      // numpy placement rule — IDENTICAL decision to DcaFrame.apply:
-      // advanced items (ints count) separated by a slice/newaxis send
-      // the zipped dim to the FRONT; adjacent ones insert in place.
-      val advancedAt = resolved.zipWithIndex.collect {
-        case ((_, Indexing.Resolved.Int(_)), i)    => i
-        case ((_, Indexing.Resolved.Gather(_)), i) => i
-      }
-      val separated = advancedAt.size >= 2 &&
-        resolved.slice(advancedAt.head + 1, advancedAt.last).exists {
-          case (_, Indexing.Resolved.Slice(_, _, _)) => true
-          case (_, Indexing.Resolved.New)            => true
-          case _                                     => false
-        }
-      val positions = gs.map(_._1)
-      val lists = gs.map(_._2)
-      val non1 = lists.map(_.length).filter(_ != 1).distinct
-      require(non1.size <= 1,
-        "shape mismatch: indexing arrays could not be broadcast together " +
-          s"with lengths ${lists.map(_.length).mkString(", ")}")
-      val len = non1.headOption.getOrElse(1)
-      val expanded = lists.map(l => if (l.length == len) l else Vector.fill(len)(l.head))
-      if (!separated)
-        require(positions.zip(positions.tail).forall { case (a, b) => b == a + 1 },
-          s"internal: non-separated advanced indices must be adjacent, got $positions")
-      val posSet = positions.toSet
-      val kept = inter.indices.filterNot(posSet).toVector
-      val insertAt = if (separated) 0 else kept.count(_ < positions.head)
-      val keptBefore = kept.take(insertAt)
-      val keptAfter = kept.drop(insertAt)
-      val outShape: Shape =
-        (keptBefore.map(i => inter(i).len) :+ len.toLong) ++ keptAfter.map(i => inter(i).len)
-      enumerate(outShape, coords => {
-        val interCoords = new Array[Long](inter.length)
-        keptBefore.zipWithIndex.foreach { case (ax, i) => interCoords(ax) = coords(i) }
-        val z = coords(insertAt)
-        positions.zip(expanded).foreach { case (ax, l) => interCoords(ax) = l(z.toInt) }
-        keptAfter.zipWithIndex.foreach { case (ax, i) => interCoords(ax) = coords(insertAt + 1 + i) }
-        interCoords.toIndexedSeq
-      })
-    }
+  }
+
+  /** The frame of shape `out` whose element at each coordinate is the
+    * row at source position `src(coords)`.
+    */
+  private def walk(op: String, out: Shape)(src: IndexedSeq[Long] => Long): LocalDca = {
+    val n = Shape.size(out)
+    require(n <= Int.MaxValue,
+      s"$op refused: $n rows exceed the local 2^31 array bound — " +
+        "use the distributed DcaFrame path for frames this size")
+    val dst = Shape.strides(out)
+    val picked = Vector.tabulate(n.toInt)(lin => rows(src(out.indices.map(i => (lin / dst(i)) % out(i))).toInt))
+    LocalDca(picked, schema, out, statics)
   }
 
   /** Boolean mask (S7): per-row predicate over the FLATTENED batch,
@@ -288,17 +204,10 @@ object LocalDca {
 
   /** Eager twin of [[DcaFrame.stack]] (M1): new axis at `axis`. */
   def stack(frames: Seq[LocalDca], axis: Int = 0): LocalDca = {
-    require(frames.nonEmpty, "stack of zero frames")
+    val (ax, newShape) = Shape.stack(frames.map(_.shape), axis)
     val h = frames.head
-    frames.tail.foreach { f =>
-      require(f.shape == h.shape,
-        s"stack shapes differ: ${h.shape} vs ${f.shape}")
-      require(f.schema == h.schema,
-        s"stack field schemas differ: ${h.schema} vs ${f.schema}")
-    }
-    val ax = Shape.toAbsoluteAxisInsert(axis, h.ndim)
-    val newShape: Shape =
-      (h.shape.take(ax) :+ frames.length.toLong) ++ h.shape.drop(ax)
+    frames.tail.foreach(f => require(f.schema == h.schema,
+      s"stack field schemas differ: ${h.schema} vs ${f.schema}"))
     // row-major walk: outer = dims before ax, then frame id, then rest
     val outerN = Shape.size(h.shape.take(ax))
     val innerN = Shape.size(h.shape.drop(ax)).toInt
@@ -317,17 +226,10 @@ object LocalDca {
 
   /** Eager twin of [[DcaFrame.concat]] (M2): along existing `axis`. */
   def concat(frames: Seq[LocalDca], axis: Int = 0): LocalDca = {
-    require(frames.nonEmpty, "concat of zero frames")
+    val (ax, newShape) = Shape.concat(frames.map(_.shape), axis)
     val h = frames.head
-    val ax = Shape.toAbsoluteAxis(axis, h.ndim)
-    frames.tail.foreach { f =>
-      require(f.ndim == h.ndim &&
-        f.shape.zipWithIndex.forall { case (d, i) => i == ax || d == h.shape(i) },
-        s"concat shapes differ off-axis: ${h.shape} vs ${f.shape}")
-      require(f.schema == h.schema,
-        s"concat field schemas differ: ${h.schema} vs ${f.schema}")
-    }
-    val newShape: Shape = h.shape.updated(ax, frames.map(_.shape(ax)).sum)
+    frames.tail.foreach(f => require(f.schema == h.schema,
+      s"concat field schemas differ: ${h.schema} vs ${f.schema}"))
     val outerN = Shape.size(h.shape.take(ax))
     val innerN = Shape.size(h.shape.drop(ax + 1)).toInt
     val out = Vector.newBuilder[Row]

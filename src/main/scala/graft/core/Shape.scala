@@ -71,6 +71,41 @@ object Shape {
     }
   }
 
+  /** broadcast_to's alignment of `from` onto `to`
+    * (`array_dataclass.py:375-380`): trailing-aligned, each source dim
+    * equal to its target's or 1. For each target axis, the source axis
+    * it keeps (same size), or None where the axis is new or replicates a
+    * dim-1 source axis.
+    */
+  def broadcastTo(from: Shape, to: Shape): Vector[Option[Int]] = {
+    val pad = to.length - from.length
+    require(pad >= 0 && broadcast(from, to) == to,
+      s"cannot broadcast ${from.mkString("(", ",", ")")} to ${to.mkString("(", ",", ")")}")
+    to.indices.map(i => Some(i - pad).filter(j => j >= 0 && from(j) == to(i))).toVector
+  }
+
+  /** stack's result (`ops.py:90-106`): equal shapes gain a new axis,
+    * one element per input, at `axis`. Returns (absolute axis, shape).
+    */
+  def stack(shapes: Seq[Shape], axis: Int): (Int, Shape) = {
+    require(shapes.nonEmpty, "stack of empty sequence")
+    require(shapes.forall(_ == shapes.head), s"stack shape mismatch: $shapes")
+    val ax = toAbsoluteAxisInsert(axis, shapes.head.length)
+    (ax, shapes.head.patch(ax, Seq(shapes.length.toLong), 0))
+  }
+
+  /** concatenate's result (`ops.py:109-121`): shapes equal off `axis`
+    * join along it. Returns (absolute axis, shape).
+    */
+  def concat(shapes: Seq[Shape], axis: Int): (Int, Shape) = {
+    require(shapes.nonEmpty, "concat of empty sequence")
+    val h = shapes.head
+    val ax = toAbsoluteAxis(axis, h.length)
+    require(shapes.forall(s => s.length == h.length && s.indices.forall(i => i == ax || s(i) == h(i))),
+      s"concat shape mismatch on non-concat axis: $shapes")
+    (ax, h.updated(ax, shapes.map(_(ax)).sum))
+  }
+
   /** The vectorize-method batch-shape fold: the ARG's LEADING
     * `self.ndim` dims broadcast against self's shape (front-aligned,
     * each dim equal or one side 1); the arg may have MORE dims than

@@ -123,24 +123,7 @@ object AsOfJoin {
     val leftCols = left.columns.toSeq
     val unioned = tagAndUnion(left, right, leftKey, rightKey, leftTime, rightTime,
       valueCols, rightTag = 0, dedupRightBy)
-    val back = last(col("__rv"), ignoreNulls = true)
-      .over(Window.partitionBy("__k").orderBy(col("__t"), col("__tag"))
-        .rowsBetween(Window.unboundedPreceding, 0))
-    // descending pass; the strict __tag ordering (right tag 0 sorts
-    // AFTER left tag 1 descending) keeps an equal-time right row
-    // forward-invisible — it is already the zero-distance backward match
-    val fwd = last(col("__rv"), ignoreNulls = true)
-      .over(Window.partitionBy("__k").orderBy(col("__t").desc, col("__tag").desc)
-        .rowsBetween(Window.unboundedPreceding, 0))
-    def us(c: Column): Column = unix_micros(c.cast("timestamp"))
-    val filled = unioned.withColumn("__b", back).withColumn("__f", fwd)
-      .withColumn("__rv",
-        when(col("__b").isNull, col("__f"))
-          .when(col("__f").isNull, col("__b"))
-          .when(us(col("__t")) - us(col("__b.asof_time")) <=
-            us(col("__f.asof_time")) - us(col("__t")), col("__b"))
-          .otherwise(col("__f")))
-    selectMatched(filled, leftCols, valueCols, inner, toleranceUs)
+    selectMatched(fillNearest(unioned), leftCols, valueCols, inner, toleranceUs)
   }
 
   // ---- aggregated-right variants ----------------------------------
@@ -211,7 +194,7 @@ object AsOfJoin {
     val leftCols = left.columns.toSeq
     val (unioned0, valueNames) = tagAndUnionRaw(left, rightRaw, leftKey, rightKey,
       leftTime, rightTime, aggs)
-    val unioned = unioned0.withColumn("__s", -unix_micros(col("__t").cast("timestamp")))
+    val unioned = unioned0.withColumn("__s", -us(col("__t")))
     val wg = Window.partitionBy(col("__k"), col("__s")).orderBy(col("__tag"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val withRv = packRv(unioned, aggs, wg)
@@ -240,24 +223,7 @@ object AsOfJoin {
       leftTime, rightTime, aggs)
     val wg = Window.partitionBy(col("__k"), col("__t")).orderBy(col("__tag"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val withRv = packRv(unioned, aggs, wg)
-    val back = last(col("__rv"), ignoreNulls = true)
-      .over(Window.partitionBy("__k").orderBy(col("__t"), col("__tag"))
-        .rowsBetween(Window.unboundedPreceding, 0))
-    // descending pass; right tag 0 sorts AFTER left tag 1 descending,
-    // keeping an equal-time right row forward-invisible (same as nearest)
-    val fwd = last(col("__rv"), ignoreNulls = true)
-      .over(Window.partitionBy("__k").orderBy(col("__t").desc, col("__tag").desc)
-        .rowsBetween(Window.unboundedPreceding, 0))
-    def us(c: Column): Column = unix_micros(c.cast("timestamp"))
-    val filled = withRv.withColumn("__b", back).withColumn("__f", fwd)
-      .withColumn("__rv",
-        when(col("__b").isNull, col("__f"))
-          .when(col("__f").isNull, col("__b"))
-          .when(us(col("__t")) - us(col("__b.asof_time")) <=
-            us(col("__f.asof_time")) - us(col("__t")), col("__b"))
-          .otherwise(col("__f")))
-    selectMatched(filled, leftCols, valueNames, inner, toleranceUs)
+    selectMatched(fillNearest(packRv(unioned, aggs, wg)), leftCols, valueNames, inner, toleranceUs)
   }
 
   /** Union left (tag 1, full payload) with RAW right rows (tag 0): key,
@@ -308,6 +274,31 @@ object AsOfJoin {
       valueNames)
   }
 
+  /** Time in integer microseconds: as-of distances compare exactly. */
+  private def us(c: Column): Column = unix_micros(c.cast("timestamp"))
+
+  /** Set `__rv` to the nearer of its backward and forward fills; an
+    * exact distance tie resolves backward. In the descending pass the
+    * strict `__tag` ordering (right tag 0 sorts AFTER left tag 1) keeps
+    * an equal-time right row forward-invisible — it is already the
+    * zero-distance backward match.
+    */
+  private def fillNearest(unioned: DataFrame): DataFrame = {
+    val back = last(col("__rv"), ignoreNulls = true)
+      .over(Window.partitionBy("__k").orderBy(col("__t"), col("__tag"))
+        .rowsBetween(Window.unboundedPreceding, 0))
+    val fwd = last(col("__rv"), ignoreNulls = true)
+      .over(Window.partitionBy("__k").orderBy(col("__t").desc, col("__tag").desc)
+        .rowsBetween(Window.unboundedPreceding, 0))
+    unioned.withColumn("__b", back).withColumn("__f", fwd)
+      .withColumn("__rv",
+        when(col("__b").isNull, col("__f"))
+          .when(col("__f").isNull, col("__b"))
+          .when(us(col("__t")) - us(col("__b.asof_time")) <=
+            us(col("__f.asof_time")) - us(col("__t")), col("__b"))
+          .otherwise(col("__f")))
+  }
+
   /** Evaluate the per-(key, time) aggs over the group window and pack
     * them into the atomic `__rv` struct on right rows only.
     */
@@ -334,7 +325,6 @@ object AsOfJoin {
   private def selectMatched(filled0: DataFrame, leftCols: Seq[String],
       valueCols: Seq[String], inner: Boolean,
       toleranceUs: Option[Long] = None): DataFrame = {
-    def us(c: Column): Column = unix_micros(c.cast("timestamp"))
     val filled = toleranceUs match {
       case None => filled0
       case Some(tol) => filled0.withColumn("__rv",

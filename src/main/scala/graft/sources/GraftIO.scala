@@ -4,15 +4,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Sources & sinks (SURVEY §2.6 scans row — absent in the reference,
-  * first-class here): parquet / csv / json readers and writers with the
-  * options a pipeline actually needs. Thin by design — the point is
-  * that every format goes through the same DataFrame boundary, so every
-  * operator upstream is format-agnostic.
+  * first-class here): the readers and writers that add something to
+  * `spark.read` / `df.write` — schema evolution, FAILFAST csv, bucketed,
+  * z-ordered and manifested layouts, compaction, binary blobs. Plain
+  * parquet, json, orc and text go through Spark's own reader and writer,
+  * the same DataFrame boundary, so every operator upstream is
+  * format-agnostic.
   */
 object GraftIO {
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Schema-evolution read: union the schemas of every file footer
     * (columns added by newer producers surface as NULL in older files).
@@ -34,16 +33,6 @@ object GraftIO {
       .option("mode", "FAILFAST")
       .schema(schema)
       .csv(path)
-
-  /** Schema-explicit JSON-lines read. */
-  def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("mode", "FAILFAST").schema(schema).json(path)
-
-  def writeParquet(df: DataFrame, path: String,
-                   partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
 
   /** Bucketed parquet table write — the shuffle-elimination primitive
     * for RECURRING joins at scale: write both sides of a repeated join
@@ -185,35 +174,6 @@ object GraftIO {
 
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", header.toString).csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  /** ORC read/write — the other columnar format Spark ships natively;
-    * same pushdown/pruning machinery as parquet (predicate pushdown
-    * via ORC search arguments, column pruning, partition pruning).
-    */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String,
-               partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-  }
-
-  /** Raw text read — the entry point for line-oriented corpora
-    * (one row per line, column `value`) or whole-file documents
-    * (`wholeFile = true`: one row per FILE — right for doc-per-file
-    * corpora, wrong for multi-GB files, which should be line-split
-    * upstream).
-    */
-  def readText(spark: SparkSession, path: String,
-               wholeFile: Boolean = false): DataFrame =
-    spark.read.option("wholetext", wholeFile.toString).text(path)
-
-  def writeText(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).text(path)
 
   /** Binary-file read — the ingestion entry point for MULTIMODAL blobs
     * (`path`, `modificationTime`, `length`, `content`): feed `content`

@@ -30,6 +30,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    under `src/main` derives one from `monotonically_increasing_id`,
   *    whose partition-id encoding needs a per-partition offset literal
   *    that changes from run to run.
+  *  - numpy index semantics: `Indexing.plan` is the one place that
+  *    turns resolved index items into int selections, intermediate axes
+  *    and the zipped gather's placement. `DcaFrame` and `LocalDca` only
+  *    execute the plan; an engine that matched on `Indexing.Resolved`
+  *    itself could drift from the other.
   *  - Native kernels: the SQL names of the six `graft.functions`
   *    kernels appear in string literals only under `graft/functions`.
   *    Everywhere else a kernel is its Column constructor
@@ -113,6 +118,11 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = sources.flatMap(hits(_, """monotonically_increasing_id""".r))
     assert(found.isEmpty, "index rows by their position in a staged cache " +
       "(DcaFrame.fromDF, Staging.window) instead of:\n" + found.mkString("\n"))
+  }
+
+  test("Indexing.Resolved is matched only in Indexing") {
+    guard("""\bResolved\b""".r, Set("Indexing.scala"),
+      "take the decision from Indexing.plan (graft/core/Indexing.scala)")
   }
 
   test("Spark's private SQL surface is reached only through GraftSqlBridge") {

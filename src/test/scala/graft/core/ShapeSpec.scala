@@ -114,4 +114,78 @@ class IndexingSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](resolve(Seq(Ix.I(0), Ix.I(0)), Vector(3)))
     intercept[IllegalArgumentException](resolve(Seq(Ix.I(7)), Vector(3)))
   }
+
+  // ---- the index plan both engines execute ----
+
+  private val A = Ix.A(_: Seq[Long])
+  private val S = Ix.S(_: Option[Long], _: Option[Long], _: Long)
+
+  test("plan: adjacent arrays zip in place") {
+    // p[:, [0,2], [1,1]] on (4,3,5): the zipped dim replaces axes 1-2
+    val p = plan(Seq(Ix.All, A(Seq(0, 2)), A(Seq(1, -4))), Vector(4, 3, 5))
+    assert(p.ints.isEmpty)
+    assert(p.axes == Vector(Axis.Slice(0, 0, 1, 4), Axis.Whole(1, 3), Axis.Whole(2, 5)))
+    assert(p.interShape == Vector(4L, 3L, 5L))
+    val Some(z) = p.zip
+    assert(z.positions == Vector(1, 2) && z.lists == Vector(Vector(0L, 2L), Vector(1L, 1L)))
+    assert(z.insertAt == 1 && z.kept == Vector(0) && p.shape == Vector(4L, 2L))
+    assert((0 until 2).map(z.source) == Seq(Some(0), None))
+  }
+
+  test("plan: an Int between two arrays does not separate them") {
+    // p[[0,1], 2, [3,4], :] on (2,3,5,6): numpy keeps the zipped dim in place
+    val p = plan(Seq(A(Seq(0, 1)), Ix.I(2), A(Seq(3, 4)), Ix.All), Vector(2, 3, 5, 6))
+    assert(p.ints == Vector((1, 2L)))
+    assert(p.axes == Vector(Axis.Whole(0, 2), Axis.Whole(2, 5), Axis.Slice(3, 0, 1, 6)))
+    val Some(z) = p.zip
+    assert(z.positions == Vector(0, 1) && z.insertAt == 0 && z.kept == Vector(2))
+    assert(p.shape == Vector(2L, 6L))
+    // an Int next to one array on a later axis: in place, not the front
+    val q = plan(Seq(Ix.All, Ix.I(1), A(Seq(0, 4, 4))), Vector(2, 3, 5))
+    assert(q.zip.get.insertAt == 1 && q.shape == Vector(2L, 3L))
+  }
+
+  test("plan: a slice or newaxis between advanced items sends the zipped dim to the front") {
+    // p[:, [0,1], :, [2,3]] on (7,3,4,5) -> (2, 7, 4)
+    val p = plan(Seq(Ix.All, A(Seq(0, 1)), Ix.All, A(Seq(2, 3))), Vector(7, 3, 4, 5))
+    val Some(z) = p.zip
+    assert(z.insertAt == 0 && z.positions == Vector(1, 3) && z.kept == Vector(0, 2))
+    assert(p.shape == Vector(2L, 7L, 4L))
+    assert((0 until 3).map(z.source) == Seq(None, Some(0), Some(2)))
+    // p[2, 1:3, [0,1,1]] on (3,4,5): the Int counts as advanced -> (3, 2)
+    val q = plan(Seq(Ix.I(2), S(Some(1), Some(3), 1), A(Seq(0, 1, 1))), Vector(3, 4, 5))
+    assert(q.ints == Vector((0, 2L)) && q.zip.get.insertAt == 0 && q.shape == Vector(3L, 2L))
+    // p[[0,1], None, [1,2]] on (3,4): the newaxis separates -> (2, 1)
+    val r = plan(Seq(A(Seq(0, 1)), Ix.NewAxis, A(Seq(1, 2))), Vector(3, 4))
+    assert(r.axes == Vector(Axis.Whole(0, 3), Axis.New, Axis.Whole(1, 4)))
+    assert(r.zip.get.insertAt == 0 && r.shape == Vector(2L, 1L))
+  }
+
+  test("plan: length-1 lists broadcast, mismatched lengths raise") {
+    val p = plan(Seq(A(Seq(2)), A(Seq(0, 1, 3))), Vector(3, 4))
+    assert(p.zip.get.lists == Vector(Vector(2L, 2L, 2L), Vector(0L, 1L, 3L)))
+    assert(p.shape == Vector(3L))
+    // (0,) broadcasts with (1,) to (0,)
+    assert(plan(Seq(A(Seq()), A(Seq(1))), Vector(3, 4)).shape == Vector(0L))
+    val e = intercept[IllegalArgumentException](plan(Seq(A(Seq(0, 1)), A(Seq(0, 1, 2))), Vector(3, 4)))
+    assert(e.getMessage.contains("could not be broadcast together with lengths 2, 3"))
+    // gatherAxis's zip: one list resolved in place, other axes kept
+    val g = gatherZip(Seq(-1, 0), 1, Vector(2, 3, 4))
+    assert(g.lists == Vector(Vector(2L, 0L)) && g.insertAt == 1 && g.kept == Vector(0, 2))
+    assert(g.shape == Vector(2L, 2L, 4L))
+    intercept[IllegalArgumentException](gatherZip(Seq(3), 1, Vector(2, 3)))
+  }
+
+  test("broadcast_to: padded leading axes, dim-1 replication, and a bad dim raises") {
+    // (3,) -> (2,3): a new leading axis, the old axis kept
+    assert(Shape.broadcastTo(Vector(3), Vector(2, 3)) == Vector(None, Some(0)))
+    // (1,3) -> (4,3): the dim-1 axis replicates
+    assert(Shape.broadcastTo(Vector(1, 3), Vector(4, 3)) == Vector(None, Some(1)))
+    // a dim-1 axis that stays 1 keeps its source axis
+    assert(Shape.broadcastTo(Vector(1, 3), Vector(5, 1, 3)) == Vector(None, Some(0), Some(1)))
+    assert(Shape.broadcastTo(Vector(), Vector(2)) == Vector(None))
+    intercept[IllegalArgumentException](Shape.broadcastTo(Vector(3), Vector(4)))
+    intercept[IllegalArgumentException](Shape.broadcastTo(Vector(3), Vector(3, 1)))
+    intercept[IllegalArgumentException](Shape.broadcastTo(Vector(2, 3), Vector(3)))
+  }
 }

@@ -46,12 +46,12 @@ class GraftIOSpec extends SparkTestBase {
     assert(csv.as[(Long, String, Double)].collect().toSet ==
       Set((1L, "a", 1.5), (2L, "b", 2.5), (3L, "a", 3.5)))
 
-    GraftIO.writeJson(df, s"$base/json")
-    val json = GraftIO.readJson(spark, s"$base/json", schema)
+    df.write.json(s"$base/json")
+    val json = spark.read.option("mode", "FAILFAST").schema(schema).json(s"$base/json")
     assert(json.count() == 3)
 
-    GraftIO.writeParquet(df, s"$base/pq", partitionBy = Seq("name"))
-    val pruned = GraftIO.readParquet(spark, s"$base/pq").filter($"name" === "a")
+    df.write.partitionBy("name").parquet(s"$base/pq")
+    val pruned = spark.read.parquet(s"$base/pq").filter($"name" === "a")
     assert(pruned.count() == 2)
     // partition pruning visible in the scan (PartitionFilters on name)
     val plan = pruned.queryExecution.executedPlan.toString()
@@ -128,8 +128,8 @@ class GraftIOSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val base = Files.createTempDirectory("graft_io_orc").toFile.getAbsolutePath
     val df = spark.range(100).selectExpr("id", "CAST(id % 4 AS INT) AS part")
-    GraftIO.writeOrc(df, s"$base/t", partitionBy = Seq("part"))
-    val back = GraftIO.readOrc(spark, s"$base/t")
+    df.write.partitionBy("part").orc(s"$base/t")
+    val back = spark.read.orc(s"$base/t")
     assert(back.count() == 100)
     val pruned = back.filter(col("part") === 2)
     assert(pruned.count() == 25)
@@ -139,12 +139,12 @@ class GraftIOSpec extends SparkTestBase {
 
   test("text source: line mode and whole-file mode round-trip") {
     val dir = Files.createTempDirectory("graft_text").toFile.getAbsolutePath
-    GraftIO.writeText(Seq("line one", "line two", "line three").toDF("value"), dir)
-    assert(GraftIO.readText(spark, dir).as[String].collect().sorted.toSeq ==
+    Seq("line one", "line two", "line three").toDF("value").write.mode("overwrite").text(dir)
+    assert(spark.read.text(dir).as[String].collect().sorted.toSeq ==
       Seq("line one", "line three", "line two"))
     // whole-file: every written part becomes ONE document row whose
     // text contains its lines (doc-per-file corpus ingestion)
-    val whole = GraftIO.readText(spark, dir, wholeFile = true).as[String].collect()
+    val whole = spark.read.option("wholetext", "true").text(dir).as[String].collect()
     assert(whole.mkString("\n").split("\n").count(_.nonEmpty) == 3)
   }
 

@@ -4,7 +4,7 @@ import graft.core.DcaFrame
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Public frame-assertion API — the Spark analog of the reference's
+/** The test suite's frame assertions — the Spark analog of the reference's
   * test utilities (`testing.py:38-85`: `assert_trees`,
   * `assert_allclose`, `assert_array_equal`).
   *
